@@ -3063,7 +3063,12 @@ object TableCommit {
     try {
       val dummy = spark.createDataFrame(
         spark.sparkContext.emptyRDD[Row], schema)
-      val cond = dummy.filter(predicate).queryExecution.analyzed
+      // a SQL statement's resolved predicate carries type coercion's
+      // casts (`CAST(k AS BIGINT) IN (CAST(1 AS BIGINT), …)`): drop the
+      // identity casts and fold the constants, as the optimizer would
+      import org.apache.spark.sql.catalyst.optimizer.{ConstantFolding, SimplifyCasts}
+      val cond = ConstantFolding(SimplifyCasts(
+          dummy.filter(predicate).queryExecution.analyzed))
         .collectFirst {
           case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
             f.condition

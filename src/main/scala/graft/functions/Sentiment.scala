@@ -1,7 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim
+import org.apache.spark.sql.types.{ArrayType, StringType}
 
 /** The reference's enrichment stage as pure Column expressions (no UDFs —
   * everything stays inside whole-stage codegen).
@@ -23,10 +26,18 @@ import org.apache.spark.sql.functions._
   * mechanism with words present in the harness `documents` vocabulary so the
   * oracle exercises non-zero counts.
   *
-  * Scale: each lexicon word unrolls to one codegen'd `contains` — a 15-word
-  * lexicon is 15 branch-free byte scans per row, fully pipelined; no shuffle,
-  * no UDF serialization. For lexicons of thousands of words switch to an
-  * Aho-Corasick custom Expression; not needed at reference scale.
+  * Scale: per-row cost was never the problem at reference scale; plan size
+  * and cold start were. One `contains` per lexicon word, summed, put a
+  * copy of the text subtree per word into every plan (30 for the two
+  * counts; 60 in the medallion, whose decision table reads each count
+  * twice), and Spark's `lower` initializes ICU's case-mapping tables on
+  * first use — a one-time single-thread stall of over a second, a
+  * quarter of a cold daily load's fact stage. So the count is one
+  * Aho-Corasick pass per row ([[MultiContainsCount]]), which stays
+  * O(|text|) for lexicons of any size, and the lower-casing takes an
+  * ASCII fast path ([[StringExprs.AsciiFastLower]]) that never touches
+  * ICU on all-ASCII rows and hands every other row to Spark's own
+  * `lower`.
   */
 object Sentiment {
 
@@ -50,17 +61,25 @@ object Sentiment {
     negativeCategories = Seq(20, 23, 24, 25),
     mixedCategories = Seq(1, 2, 10, 15, 17, 22))
 
+  /** Spark's `lower`, bit for bit, without ICU's start-up cost on
+    * all-ASCII rows (see [[StringExprs.AsciiFastLower]]). */
+  def lowerText(text: Column): Column =
+    Shim.column(StringExprs.AsciiFastLower(Shim.expression(text)))
+
   /** Lower-cased combined text: title + ' ' + description + ' ' + tags joined
     * by space, with the reference's missing-field defaults ('' / []). */
   def combinedText(title: Column, description: Column, tags: Column): Column =
-    lower(concat_ws(" ", title,
+    lowerText(concat_ws(" ", title,
       coalesce(description, lit("")),
       array_join(coalesce(tags, array()), " ")))
 
-  /** Count of lexicon words contained as substrings; each word ≤ 1. */
+  /** Count of lexicon words contained as substrings; each word ≤ 1, and a
+    * NULL text counts 0 — exactly Σ (contains(text, w) ? 1 : 0), in one
+    * automaton pass over the text. */
   def keywordCount(text: Column, lexicon: Seq[String]): Column =
-    lexicon.map(w => when(text.contains(w), 1).otherwise(0))
-      .reduce(_ + _)
+    coalesce(Shim.column(MultiContainsCount(Shim.expression(text),
+      Literal.create(lexicon, ArrayType(StringType, containsNull = false)))),
+      lit(0))
 
   /** The decision table producing final_sentiment. */
   def finalSentiment(categoryId: Column, posCount: Column, negCount: Column,

@@ -3,10 +3,13 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.CollationSupport
 import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Native string-distance expression for the entity-resolution hot path
   * (X118 fuzzy join). Hamming distance is evaluated candidate-pair times —
@@ -75,6 +78,48 @@ object StringExprs {
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): HammingDist =
       copy(left = newLeft, right = newRight)
+  }
+
+  /** Spark's `lower` with an ASCII fast path in front of it. Every
+    * branch of Spark's case mapping (plain JDK or ICU, any collation)
+    * lower-cases an all-ASCII string byte by byte, but its ICU branch
+    * first builds ICU's case-mapping tables — a one-time single-thread
+    * stall of over a second, paid by the first `lower` call of a process.
+    * Here an all-ASCII row goes straight to `toLowerCaseAscii`, and every
+    * other row to exactly Spark's `lower` (`CollationSupport.Lower.exec`
+    * under the session's `spark.sql.icu.caseMappings.enabled`, read as
+    * `Lower` reads it), so the result is bit-identical and ASCII-only
+    * input never initializes ICU. */
+  case class AsciiFastLower(child: Expression) extends UnaryExpression {
+
+    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+      case _: StringType => TypeCheckResult.TypeCheckSuccess
+      case other => TypeCheckResult.TypeCheckFailure(
+        s"lower expects a string, got $other")
+    }
+    override def dataType: DataType = child.dataType
+    override def nullIntolerant: Boolean = true
+    override def prettyName: String = "lower"
+
+    private lazy val collationId: Int =
+      child.dataType.asInstanceOf[StringType].collationId
+    private lazy val useICU: Boolean =
+      SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+
+    override protected def nullSafeEval(v: Any): Any = {
+      val s = v.asInstanceOf[UTF8String]
+      if (s.isFullAscii) s.toLowerCaseAscii
+      else CollationSupport.Lower.exec(s, collationId, useICU)
+    }
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev, c =>
+        s"($c.isFullAscii() ? $c.toLowerCaseAscii() : " +
+          "org.apache.spark.sql.catalyst.util.CollationSupport.Lower" +
+          s".exec($c, $collationId, $useICU))")
+
+    override protected def withNewChildInternal(
+        newChild: Expression): AsciiFastLower = copy(child = newChild)
   }
 
   val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(

@@ -306,8 +306,9 @@ object VectorExprs {
     call_function("graft_l2sq", a.cast("array<double>"), b.cast("array<double>"))
   def simhash32(tokenHashes: Column): Column =
     call_function("graft_simhash32", tokenHashes)
-  /** Aho-Corasick lexicon containment count (see graft.functions.AhoCorasick);
-    * semantics identical to Sentiment.keywordCount. */
+  /** Aho-Corasick lexicon containment count (see graft.functions.AhoCorasick)
+    * through the function registry: Sentiment.keywordCount's kernel, except
+    * that a NULL text gives NULL. */
   def multiContainsCount(text: Column, words: Seq[String]): Column =
     call_function("graft_multi_contains_count", text,
       org.apache.spark.sql.functions.array(

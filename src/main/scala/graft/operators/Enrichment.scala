@@ -21,7 +21,7 @@ object Enrichment {
   /** P8 `q_keyword_count`: per-document lexicon containment counts. */
   def keywordCountQ(spark: SparkSession, sfDir: String): DataFrame = {
     val lex = Sentiment.Default
-    val txt = lower(col("text"))
+    val txt = Sentiment.lowerText(col("text"))
     Tables.documents(spark, sfDir)
       .select(col("doc_id"),
         Sentiment.keywordCount(txt, lex.positive).as("positive_keyword_count"),
@@ -37,13 +37,12 @@ object Enrichment {
        |FROM documents ORDER BY doc_id""".stripMargin
   }
 
-  /** `q_keyword_count_ac`: the LARGE-LEXICON scale path for P8 — identical
-    * results to q_keyword_count, but both counts come from one Aho-Corasick
-    * automaton pass per row (graft.functions.AhoCorasick) instead of one
-    * `contains` scan per lexicon word: O(|text|) per row regardless of
-    * lexicon size, which is what a 10k-word blocklist/PII lexicon needs at
-    * 100 TB. The oracle is the SAME per-word SQL as q_keyword_count, so the
-    * gate proves automaton ≡ unrolled-contains. */
+  /** `q_keyword_count_ac`: q_keyword_count through the SQL surface — Spark's
+    * own `lower` and the registered `graft_multi_contains_count` — so the
+    * Column kernel that q_keyword_count, q_sentiment and the medallion share
+    * is cross-checked against the function-registry route on real
+    * documents. The oracle is the SAME per-word SQL as q_keyword_count, so
+    * the gate proves automaton ≡ one `contains` per word. */
   def keywordCountAcQ(spark: SparkSession, sfDir: String): DataFrame = {
     graft.functions.VectorExprs.ensureRegistered(spark)
     val lex = Sentiment.Default
@@ -63,7 +62,7 @@ object Enrichment {
     * → UNKNOWN) with the classification method. */
   def sentimentQ(spark: SparkSession, sfDir: String): DataFrame = {
     val lex = Sentiment.Default
-    val txt = lower(col("text"))
+    val txt = Sentiment.lowerText(col("text"))
     val pos = Sentiment.keywordCount(txt, lex.positive)
     val neg = Sentiment.keywordCount(txt, lex.negative)
     Tables.documents(spark, sfDir)

@@ -59,6 +59,13 @@ object Medallion {
       StructField("commentCount", StringType)))),
     StructField("_corrupt", StringType)))
 
+  /** The staging table: the raw video record plus its provenance. Declared,
+    * so reading staging back is a file listing — no schema-inference job
+    * and no footer reads on every load. */
+  val stagingSchema: StructType = videoSchema
+    .add("file_name", StringType)
+    .add("collected_date", StringType)
+
   val channelSchema: StructType = StructType(Seq(
     StructField("channel_id", StringType),
     StructField("channel_title", StringType),
@@ -179,10 +186,13 @@ object Medallion {
     val cat = col("snippet.categoryId").cast("int")
     val txt = Sentiment.combinedText(
       col("snippet.title"), col("snippet.description"), col("snippet.tags"))
-    val pos = Sentiment.keywordCount(txt, Sentiment.Default.positive)
-    val neg = Sentiment.keywordCount(txt, Sentiment.Default.negative)
     staged
       .filter(col("_corrupt").isNull && col("id").isNotNull) // P3 gate
+      // the two counts read the combined text; the decision table reads
+      // each count twice, so it reads them as columns, not subtrees
+      .select(col("*"),
+        Sentiment.keywordCount(txt, Sentiment.Default.positive).as("pos_count"),
+        Sentiment.keywordCount(txt, Sentiment.Default.negative).as("neg_count"))
       .select(
         col("id").as("video_id"),
         col("snippet.channelId").as("channel_id"),
@@ -191,14 +201,16 @@ object Medallion {
         views.as("view_count"), likes.as("like_count"),
         comments.as("comment_count"),
         Sentiment.engagementRate(views, likes, comments).as("engagement_rate"),
-        Sentiment.finalSentiment(cat, pos, neg).as("final_sentiment"),
+        Sentiment.finalSentiment(cat, col("pos_count"), col("neg_count"))
+          .as("final_sentiment"),
         Sentiment.classificationMethod(cat).as("classification_method"),
         col("collected_date").as("collection_date"), col("file_name"))
   }
 
   def loadFacts(spark: SparkSession, warehouse: String): Unit = {
     val factPath = s"$warehouse/core/fact_videos"
-    val staged = spark.read.parquet(s"$warehouse/staging/videos")
+    val staged = spark.read.schema(stagingSchema)
+      .parquet(s"$warehouse/staging/videos")
     // A2 DISTINCT removes exact duplicate rows; then FIRST file wins per
     // video_id (facts never refresh — function_app.py:465-481).
     val w = Window.partitionBy(col("video_id")).orderBy(col("file_name").asc)
@@ -252,11 +264,10 @@ object Medallion {
 
   def cleanupStaging(spark: SparkSession, warehouse: String): Unit = {
     val path = s"$warehouse/staging/videos"
-    // The empty frame has no lineage into `path` (only its schema is read),
-    // so a direct overwrite is legal — no tmp-dir hop needed.
+    // The empty frame has no lineage into `path`, so a direct overwrite
+    // is legal — no tmp-dir hop needed.
     val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row],
-      spark.read.parquet(path).schema)
+      spark.sparkContext.emptyRDD[Row], stagingSchema)
       .repartition(1) // ensure one schema-bearing (empty) part file
     empty.write.mode("overwrite").parquet(path)
   }

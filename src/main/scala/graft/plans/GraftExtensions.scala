@@ -22,7 +22,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // X307: SQL maintenance verbs — graft_melt / graft_compact /
     // graft_vacuum, each a deferred one-row-report command
     GraftMaintenanceTvf.functions.foreach(ext.injectTableFunction)
-    // X297: SQL UPDATE / MERGE INTO on graft-catalog tables → the
+    // X297: SQL DELETE / UPDATE / MERGE INTO on graft-catalog tables → the
     // engine's merge-on-read DV commits (post-hoc: after resolution,
     // before Spark's row-level-operation check would refuse them)
     ext.injectPostHocResolutionRule(s => GraftSqlDml(s))

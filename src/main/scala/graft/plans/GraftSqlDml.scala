@@ -11,10 +11,9 @@ import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types.StructType
 import graft.engine.TableCommit
 
-/** X297 (VERDICT r13 task 2): SQL `UPDATE` and `MERGE INTO` for
-  * graft-catalog tables — the missing half of the SQL DML surface
-  * (X292 wired CREATE/INSERT/DELETE FROM/TRUNCATE; a SQL-only user
-  * still had to drop to the Scala API for updates and upserts).
+/** X297 (VERDICT r13 task 2): SQL `DELETE FROM`, `UPDATE` and
+  * `MERGE INTO` for graft-catalog tables (X292 wired
+  * CREATE/INSERT/TRUNCATE).
   *
   * Spark's own path for these statements requires
   * `SupportsRowLevelOperations` (a scan-build-replace protocol sized
@@ -26,6 +25,12 @@ import graft.engine.TableCommit
   * `UpdateTable`/`MergeIntoTable` over a graft table for an eager
   * command that drives the engine's native commit:
   *
+  *   - `DELETE FROM t WHERE pred` → one DV commit marking the rows
+  *     `pred` holds for dead. The resolved predicate goes to the
+  *     engine whole (subqueries refused), so any side of an `OR` or a
+  *     `NOT` is kept (Spark's own route for `SupportsDelete` tables
+  *     hands over data-source filters, which cannot express
+  *     `u % 7 = 1`, and lost such a side of an `OR`);
   *   - `UPDATE t SET c = expr, … WHERE pred` → one DV commit marking
   *     the victims dead beside their updated images (zero target
   *     files rewritten; on a row-id-TRACKED table the images keep
@@ -80,7 +85,30 @@ case class GraftSqlDml(session: SparkSession) extends Rule[LogicalPlan]
     }.sql
   }
 
+  /** A resolved DELETE predicate as a [[org.apache.spark.sql.Column]]
+    * that re-resolves by (physical) name against the engine's own scan —
+    * the exact predicate, without a round trip through SQL text. */
+  private def byName(e: Expression,
+      phys: String => String): org.apache.spark.sql.Column = {
+    if (e.exists(_.isInstanceOf[SubqueryExpression]))
+      refuse("DELETE FROM", "subqueries in DML expressions are not supported",
+        "commitDeleteRows with a pre-joined predicate")
+    Shim.column(e.transform {
+      case a: AttributeReference => UnresolvedAttribute(Seq(phys(a.name)))
+    })
+  }
+
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
+    case d @ DeleteFromTable(target, condition)
+        if d.resolved && graftTable(target).isDefined =>
+      val (t, rel) = graftTable(target).get
+      t.requireHeadForDml("DELETE FROM")
+      GraftDeleteCommand(t.tableRoot, t.physicalSchema, t.tableRetain,
+        byName(condition, t.physicalName),
+        t.tableConflictRetries,
+        rel.catalog.map(_.name()).toSeq ++ rel.identifier.toSeq.flatMap(
+          id => id.namespace().toSeq :+ id.name()))
+
     case u @ UpdateTable(target, assignments, condition)
         if u.resolved && graftTable(target).isDefined =>
       val (t, _) = graftTable(target).get
@@ -250,6 +278,22 @@ case class GraftSqlDml(session: SparkSession) extends Rule[LogicalPlan]
         projected, keyCols, t.tableConflictRetries,
         nmbsKind = nmbs.map(_._1), nmbsCond = nmbs.flatMap(_._2),
         nmbsAssigns = nmbs.map(_._3).getOrElse(Seq.empty))
+  }
+}
+
+/** `DELETE FROM cat.t WHERE …` → [[TableCommit.commitDeleteRows]]:
+  * one merge-on-read DV commit (zero data bytes move). Cached reads of
+  * the table, found by its name, are refreshed so they see the delete. */
+case class GraftDeleteCommand(root: String, tableSchema: StructType,
+    retain: Int, condition: org.apache.spark.sql.Column,
+    conflictRetries: Int, tableName: Seq[String])
+    extends LeafRunnableCommand {
+  override def run(spark: SparkSession): Seq[Row] = {
+    TableCommit.commitDeleteRows(spark, root, tableSchema, condition,
+      retain = retain, conflictRetries = conflictRetries)
+    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    classic.sharedState.cacheManager.recacheTableOrView(classic, tableName)
+    Seq.empty
   }
 }
 

@@ -3,12 +3,9 @@ package graft.sources
 import java.nio.file.{Files, Path, Paths}
 import java.util
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlreadyExistsException}
-import org.apache.spark.sql.connector.catalog.{Identifier, SupportsDelete, Table, TableCatalog, TableChange}
+import org.apache.spark.sql.connector.catalog.{Identifier, Table, TableCatalog, TableChange, TruncatableTable}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.{DataType, DateType, IntegerType, LongType, MetadataBuilder, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.engine.TableCommit
@@ -631,17 +628,17 @@ class GraftCatalog extends TableCatalog
 }
 
 /** A catalog-resolved graft table: the full connector surface
-  * (read/write/stream facets) plus SQL `DELETE FROM` via
-  * merge-on-read deletion vectors. `private[graft]` (not just
-  * `[sources]`): the X297 DML rule in graft.plans pattern-matches it
-  * to route SQL UPDATE/MERGE INTO onto the commit layer. */
+  * (read/write/stream facets) plus `TRUNCATE TABLE`. `private[graft]`
+  * (not just `[sources]`): the X297 DML rule in graft.plans
+  * pattern-matches it to route SQL DELETE FROM/UPDATE/MERGE INTO onto
+  * the commit layer's merge-on-read deletion vectors. */
 private[graft] class GraftCatalogTable(schema0: StructType,
     properties: util.Map[String, String], root: String,
     displayName: String, asOf: Option[Long] = None, retain: Int = 64,
     mapping: Map[String, String] = Map.empty,
     conflictRetries: Int = 20, partCols: Seq[String] = Nil,
     rotate: GraftRotate = GraftRotate.Identity)
-    extends GraftWriteTable(schema0, properties) with SupportsDelete {
+    extends GraftWriteTable(schema0, properties) with TruncatableTable {
   override def name(): String = displayName
 
   /** X316/X320: a `PARTITIONED BY` table declares its layout to Spark
@@ -717,31 +714,6 @@ private[graft] class GraftCatalogTable(schema0: StructType,
   override def truncateTable(): Boolean = {
     TableCommit.publish(root, Seq.empty, retain = retain)
     true
-  }
-
-  /** `DELETE FROM … WHERE …`: only predicates with an exact
-    * [[Filter]] → [[org.apache.spark.sql.Column]] translation are
-    * accepted (Spark fails the statement otherwise — a partial
-    * translation would delete the wrong rows). The delete itself is
-    * the X265 DV commit: zero data bytes move. */
-  override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    filters.forall(f =>
-      GraftCatalogTable.filterCol(identity)(f).isDefined)
-
-  override def deleteWhere(filters: Array[Filter]): Unit = {
-    // X298: the engine scan runs under PHYSICAL names — translate the
-    // predicate's column references and the scan schema through the
-    // mapping (identity when unmapped)
-    val pred = filters.toSeq
-      .map(f => GraftCatalogTable.filterCol(
-        c => mapping.getOrElse(c, c))(f).getOrElse(
-        throw new UnsupportedOperationException(
-          s"DELETE predicate not translatable: $f")))
-      .reduceOption(_ && _).getOrElse(lit(true))
-    TableCommit.commitDeleteRows(SparkSession.active, root,
-      physicalSchema, pred, retain = retain,
-      conflictRetries = conflictRetries)
-    ()
   }
 }
 
@@ -857,33 +829,3 @@ private[graft] object GraftCatalog {
   private[sources] val editMonitors =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 }
-
-private[sources] object GraftCatalogTable {
-  /** Exact V1-Filter → Column translation under a column-name map
-    * (None = refuse, never approximate). */
-  def filterCol(m: String => String)(
-      f: Filter): Option[org.apache.spark.sql.Column] =
-    f match {
-      case EqualTo(c, v)            => Some(col(m(c)) === lit(v))
-      case EqualNullSafe(c, v)      => Some(col(m(c)) <=> lit(v))
-      case GreaterThan(c, v)        => Some(col(m(c)) > lit(v))
-      case GreaterThanOrEqual(c, v) => Some(col(m(c)) >= lit(v))
-      case LessThan(c, v)           => Some(col(m(c)) < lit(v))
-      case LessThanOrEqual(c, v)    => Some(col(m(c)) <= lit(v))
-      case In(c, vs)                => Some(col(m(c)).isin(vs.toSeq: _*))
-      case IsNull(c)                => Some(col(m(c)).isNull)
-      case IsNotNull(c)             => Some(col(m(c)).isNotNull)
-      case StringStartsWith(c, v)   => Some(col(m(c)).startsWith(v))
-      case StringEndsWith(c, v)     => Some(col(m(c)).endsWith(v))
-      case StringContains(c, v)     => Some(col(m(c)).contains(v))
-      case And(l, r) =>
-        for { a <- filterCol(m)(l); b <- filterCol(m)(r) } yield a && b
-      case Or(l, r) =>
-        for { a <- filterCol(m)(l); b <- filterCol(m)(r) } yield a || b
-      case Not(x)        => filterCol(m)(x).map(!_)
-      case AlwaysTrue()  => Some(lit(true))
-      case AlwaysFalse() => Some(lit(false))
-      case _             => None
-    }
-}
-

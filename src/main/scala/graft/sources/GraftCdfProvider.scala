@@ -429,8 +429,10 @@ private class GraftCdfFileReader(p: CdfFilePartition)
   private val reader: ParquetReader[Group] = {
     val path = new org.apache.hadoop.fs.Path(
       java.nio.file.Paths.get(p.absPath).toUri)
+    // the writers' shared read-only Configuration: a fresh one re-parses
+    // the Hadoop XML defaults for every feed partition
     val b = ParquetReader.builder(new GroupReadSupport(), path)
-      .withConf(new org.apache.hadoop.conf.Configuration())
+      .withConf(GraftDataWriter.sharedConf)
     // X309: honor a row-group split if one was planned (the
     // vectorized-open-failed fallback must read the same range)
     (if (p.splitEnd >= 0L) b.withFileRange(p.splitStart, p.splitEnd)

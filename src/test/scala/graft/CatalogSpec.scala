@@ -568,12 +568,55 @@ class CatalogSpec extends AnyFunSuite {
     spark.range(20L).select(col("id").as("k"), lit("x").as("v"))
       .createOrReplaceTempView("cat_spec_src2")
     spark.sql(s"INSERT INTO $cat.t SELECT * FROM cat_spec_src2")
-    intercept[Exception] {
-      spark.sql(s"DELETE FROM $cat.t WHERE k % 2 = 0") // no V1 Filter
+    // a subquery carries a whole plan inside the predicate: refused
+    intercept[UnsupportedOperationException] {
+      spark.sql(s"DELETE FROM $cat.t WHERE k IN " +
+        "(SELECT k FROM cat_spec_src2 WHERE k % 2 = 0)")
     }
     assert(spark.sql(s"SELECT COUNT(*) FROM $cat.t").collect()(0)
       .getLong(0) === 20L, "a refused DELETE must change nothing")
     spark.catalog.dropTempView("cat_spec_src2")
+  }
+
+  test("DELETE with OR, NOT and arithmetic predicates removes exactly the rows they hold for") {
+    // Spark's data-source filters have no form for `u % 7 = 1`; the
+    // engine takes the resolved predicate whole, so no side is lost
+    val (cat, wh) = freshCatalog()
+    spark.sql(s"CREATE TABLE $cat.t (u BIGINT, et STRING)")
+    val src = spark.range(60L).select(col("id").as("u"),
+      when(col("id") % 5 === 0, lit("error"))
+        .when(col("id") % 5 === 1, lit(null).cast("string"))
+        .otherwise(lit("ok")).as("et"))
+    src.createOrReplaceTempView("cat_spec_or")
+    spark.sql(s"INSERT INTO $cat.t SELECT * FROM cat_spec_or")
+    // a cached read of the table must see every DELETE
+    val cached = spark.table(s"$cat.t").cache()
+    assert(cached.count() === 60L)
+    var expected = src.collect().map(r =>
+      (r.getLong(0), Option(r.getString(1)))).toSet
+    def rows(): Set[(Long, Option[String])] =
+      spark.sql(s"SELECT u, et FROM $cat.t").collect()
+        .map(r => (r.getLong(0), Option(r.getString(1)))).toSet
+    def deleteAndCheck(pred: String,
+        holds: ((Long, Option[String])) => Boolean): Unit = {
+      val before = dataFingerprint(s"$wh/t")
+      spark.sql(s"DELETE FROM $cat.t WHERE $pred")
+      assert(dataFingerprint(s"$wh/t") === before,
+        s"DELETE WHERE $pred must not touch a data byte")
+      expected = expected.filterNot(holds)
+      assert(rows() === expected, s"after DELETE WHERE $pred")
+    }
+    deleteAndCheck("u % 7 = 1 OR et = 'error'",
+      { case (u, et) => u % 7 == 1 || et.contains("error") })
+    // NULL et: NOT (NULL = 'ok') is NULL, so those rows stay
+    deleteAndCheck("NOT (et = 'ok') AND u < 40",
+      { case (u, et) => et.exists(_ != "ok") && u < 40 })
+    deleteAndCheck("u * 3 - 1 > 150 OR NOT (u >= 2)",
+      { case (u, _) => u * 3 - 1 > 150 || u < 2 })
+    assert(expected.nonEmpty && expected.size < 40)
+    assert(cached.count() === expected.size.toLong)
+    cached.unpersist()
+    spark.catalog.dropTempView("cat_spec_or")
   }
 
   test("PARTITIONED BY tables: rotated single-valued files, SQL SPJ with zero shuffle, guarded column (X316)") { noBroadcast {

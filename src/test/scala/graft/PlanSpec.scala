@@ -18,6 +18,28 @@ class PlanSpec extends AnyFunSuite {
     SparkEntry.queries(q)(spark, sfDir).queryExecution.executedPlan.toString
   }
 
+  test("medallion enrichment plans the combined text once per keyword count") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.{ConcatWs, Contains, Expression}
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import graft.functions.MultiContainsCount
+    import graft.pipeline.Medallion
+    val staged = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[Row], Medallion.stagingSchema)
+    val qe = Medallion.enrich(staged).queryExecution
+    def count(p: LogicalPlan)(f: PartialFunction[Expression, Unit]): Int =
+      p.collect { case n => n.expressions.map(_.collect(f).size).sum }.sum
+    for ((name, p) <- Seq("analyzed" -> qe.analyzed,
+        "optimized" -> qe.optimizedPlan)) {
+      // one automaton per count (positive, negative), each over one copy
+      // of the combined text; the unrolled form had 60 copies and 60
+      // `contains`
+      assert(count(p) { case _: MultiContainsCount => } === 2, name)
+      assert(count(p) { case _: ConcatWs => } === 2, name)
+      assert(count(p) { case _: Contains => } === 0, name)
+    }
+  }
+
   test("q_agg_pricing pushes the date filter into the parquet scan") {
     val p = plan("q_agg_pricing")
     assert(p.contains("PushedFilters"))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
@@ -39,6 +40,68 @@ class PropertySpec extends AnyFunSuite {
           out.values.sum == rows.length
       }
     })
+  }
+
+  test("sentiment kernel equals lower() plus one contains per word, ICU on and off") {
+    // Fragments chosen where case mapping is not byte-local: İ (U+0130)
+    // lowers to two code points, the Kelvin sign (U+212A) to ASCII k, a
+    // final Σ is context-sensitive, and 0xC3 / 0xFF are invalid UTF-8.
+    def utf8(x: String): Array[Byte] = x.getBytes("UTF-8")
+    val frags: Seq[Array[Byte]] = Seq("Good", "WIN", "fAiL", "bad", " ",
+      "", "\u0130", "\u212A", "ΟΔΟΣ", "σ", "Caf\u00C9", "MERGE")
+      .map(utf8) ++ Seq(Array(0xC3.toByte), Array(0xFF.toByte, 'K'.toByte))
+    val bytesGen = Gen.listOfN(4, Gen.oneOf(frags)).map(_.toArray.flatten)
+    val fieldGen = Gen.frequency(5 -> bytesGen.map(Option(_)), 1 -> Gen.const(None))
+    val tagsGen = Gen.frequency(
+      4 -> Gen.listOfN(2, fieldGen).map(Option(_)), 1 -> Gen.const(None))
+    val rowGen = Gen.zip(fieldGen, fieldGen, tagsGen)
+    val lex = Sentiment.Lexicons(Seq("good", "win", "k", "i\u0307"),
+      Seq("fail", "\u03C2", "\u03C3", "caf\u00E9"), Seq(19), Seq(20), Seq(10))
+    def unrolled(text: Column, words: Seq[String]): Column =
+      words.map(w => when(text.contains(w), 1).otherwise(0)).reduce(_ + _)
+    def agrees(rows: List[(Option[Array[Byte]], Option[Array[Byte]],
+        Option[List[Option[Array[Byte]]]])]): Boolean = {
+      val df = rows.zipWithIndex.map { case ((t, d, g), i) =>
+        (i, t.orNull, d.orNull, g.map(_.map(_.orNull)).orNull)
+      }.toDF("id", "tb", "db", "gb")
+        .select(col("id"), col("tb").cast("string").as("title"),
+          col("db").cast("string").as("description"),
+          col("gb").cast("array<string>").as("tags"))
+      val oldTxt = lower(concat_ws(" ", col("title"),
+        coalesce(col("description"), lit("")),
+        array_join(coalesce(col("tags"), array()), " ")))
+      val newTxt = Sentiment.combinedText(
+        col("title"), col("description"), col("tags"))
+      val checks = Seq(
+        oldTxt <=> newTxt,
+        unrolled(oldTxt, lex.positive) === Sentiment.keywordCount(newTxt, lex.positive),
+        unrolled(oldTxt, lex.negative) === Sentiment.keywordCount(newTxt, lex.negative),
+        // a bare (possibly NULL) column: NULL counts 0 in both forms
+        lower(col("title")) <=> Sentiment.lowerText(col("title")),
+        unrolled(lower(col("title")), lex.positive) ===
+          Sentiment.keywordCount(Sentiment.lowerText(col("title")), lex.positive))
+      df.select(checks.zipWithIndex.map { case (c, i) => c.as(s"c$i") }: _*)
+        .collect().forall(r => (0 until r.length).forall(r.getBoolean))
+    }
+    // the binary -> string cast keeps invalid bytes invalid
+    assert(Seq(Array(0xC3.toByte)).toDF("b")
+      .select(is_valid_utf8(col("b").cast("string"))).head().getBoolean(0) === false)
+    val keys = Seq("spark.sql.icu.caseMappings.enabled",
+      "spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    try for (icu <- Seq("true", "false");
+             (mode, wholeStage) <- Seq(("CODEGEN_ONLY", "true"),
+               ("NO_CODEGEN", "false"))) {
+      spark.conf.set(keys(0), icu)
+      spark.conf.set(keys(1), mode)
+      spark.conf.set(keys(2), wholeStage)
+      withClue(s"icu=$icu codegen=$mode: ") {
+        check(Prop.forAll(Gen.listOfN(20, rowGen))(agrees))
+      }
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   test("engagement rate is finite, >= 0, and 0 exactly when views == 0") {
