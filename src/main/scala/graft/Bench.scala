@@ -1,46 +1,21 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
+  /** One timed run of a query: wall seconds to count its rows, and the
+    * failure that ended the run if it did not finish. A failed run still
+    * reports its elapsed time; the caller counts it in `n_failed`. */
+  private[graft] def timeRun(spark: SparkSession, sfDir: String,
+      fn: (SparkSession, String) => DataFrame): (Double, Option[Throwable]) = {
+    val t0 = System.nanoTime()
+    val err = try { fn(spark, sfDir).count(); None }
+      catch { case NonFatal(e) => Some(e) }
+    ((System.nanoTime() - t0) / 1e9, err)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // X314: honor KeyGroupedPartitioning from V2 scans (mirrors Verify)
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // X314: accept co-partitioning on a subset of the join keys (the
-      // fact-to-fact SPJ shape: grouped by bucket, joined on bucket+id)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // STATIC conf, default 100: the generated-class cache. 115 plans ×
-      // several codegen stages each ≈ 400+ classes, so at the default the
-      // warmup sweep evicts early entries and the timed run itself
-      // thrashes — queries re-pay Janino compilation mid-bench (r5: four
-      // unchanged queries regressed 2-3×; TimeQuery isolation matched r4).
-      // A long-lived cluster job holds its handful of plans resident; the
-      // bench should model that steady state, not cache-eviction churn.
-      .config("spark.sql.codegen.cache.maxEntries", "20000")
-      // The app-status store retains per-task/stage/job rows for ALL prior
-      // executions (defaults: 100k tasks, 1000 stages/jobs) even with the
-      // UI off, and its eviction scans run synchronously with event
-      // processing — after ~700 executions the churn taxes every new job
-      // launch, hardest on many-job queries (r7: the 30-job pipeline ran
-      // 1.6 s isolated but 3.9 s median late in the bench session). A
-      // long-lived production driver caps these the same way.
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "2000")
-      .config("spark.sql.ui.retainedExecutions", "50")
-      .config("spark.sql.warehouse.dir",
-        graft.engine.TempWarehouse.createManaged())
-      .getOrCreate()
-    // ERROR: log noise (WARN stack traces from benign probes) lands in the
-    // driver's captured tail and can crowd out the JSON result line.
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.engine.Session()
     // STREAM-FAILURE ACCOUNTING (VERDICT r10/r11: the bench tail carried
     // an unexplained MicroBatchExecution stack on rc=0 runs — it was the
     // X206 resume gate's INTENTIONAL mid-drain kill, logged by the dying
@@ -97,7 +72,7 @@ object Bench {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       sq.awaitTermination()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     // FIXED-WORK load barometer, timed before the suite-sized warmup.
     // The old barometer was the per-plan warmup sweep itself, whose
     // "identical work every round" premise silently broke as the suite
@@ -125,7 +100,7 @@ object Bench {
       spark.range(2000000L).selectExpr("id", "id % 97 as p")
         .write.mode("overwrite").parquet(s"$bTmp/bar")
       spark.read.parquet(s"$bTmp/bar").selectExpr("sum(p)").collect()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     val barometerSec = (System.nanoTime() - barT0) / 1e9
     // Per-PLAN warmup: run every query once at sf0.01 (different input
     // files, so none of the benchmarked sf0.1 data pages are touched) to
@@ -147,9 +122,9 @@ object Bench {
     val warmT0 = System.nanoTime()
     if (new java.io.File(warmSf).isDirectory && warmSf != sfDir) {
       SparkEntry.queries.foreach { case (_, fn) =>
-        try fn(spark, warmSf).count() catch { case _: Throwable => () }
+        try fn(spark, warmSf).count() catch { case NonFatal(_) => () }
       }
-      try spark.catalog.clearCache() catch { case _: Throwable => () }
+      try spark.catalog.clearCache() catch { case NonFatal(_) => () }
     }
     // Fixture-heavy gates whose one-shots ran 9-27× their own
     // same-process medians (r13 watch 3: q_srm 13.2 s vs 0.48 s —
@@ -160,18 +135,28 @@ object Bench {
     // so the timed one-shot measures the plan like every rep after it.
     Seq("q_srm", "q_hits", "q_table_history").foreach { n =>
       SparkEntry.queries.get(n).foreach { fn =>
-        try fn(spark, sfDir).count() catch { case _: Throwable => () }
+        try fn(spark, sfDir).count() catch { case NonFatal(_) => () }
       }
     }
-    try spark.catalog.clearCache() catch { case _: Throwable => () }
+    try spark.catalog.clearCache() catch { case NonFatal(_) => () }
     val warmupSec = (System.nanoTime() - warmT0) / 1e9
-    val results = SparkEntry.queries.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      val dt = (System.nanoTime() - t0) / 1e9
+    // Every timed run goes through timeRun. A run that throws keeps its
+    // elapsed time (no existing field changes meaning), but its query is
+    // named in n_failed / failed, so a failure never reads as a success.
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def timed(name: String): Double = {
+      val (dt, err) = timeRun(spark, sfDir, SparkEntry.queries(name))
+      err.foreach { e =>
+        if (failed.add(name))
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      }
+      dt
+    }
+    val results = SparkEntry.queries.map { case (name, _) =>
+      val dt = timed(name)
       // Drop this query's disk-backed materializations (graft.engine.
       // Materialize) so 59 queries don't accumulate cached blocks.
-      try { spark.catalog.clearCache() } catch { case _: Throwable => () }
+      try { spark.catalog.clearCache() } catch { case NonFatal(_) => () }
       name -> dt
     }
     // Re-time the slowest 5 queries 3× and report the MEDIAN next to the
@@ -179,11 +164,10 @@ object Bench {
     // machine, and a median taken in the same process makes one-shot
     // inflation self-documenting (no isolated re-run needed to adjudicate).
     val medians = results.toSeq.sortBy(-_._2).take(5).map { case (name, _) =>
-      val fn = SparkEntry.queries(name)
       val ts = (1 to 3).map { _ =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        try { spark.catalog.clearCache() } catch { case _: Throwable => () }
+        timed(name)
+        try { spark.catalog.clearCache() } catch { case NonFatal(_) => () }
         (System.nanoTime() - t0) / 1e9
       }.sorted
       name -> ts(1)
@@ -232,13 +216,8 @@ object Bench {
     // rep totals ride in the artifact so a drifting machine is visible in
     // the spread, not just suspected.
     val subsetReps = (1 to 3).map { _ =>
-      val t = baselineMatched.map { name =>
-        val fn = SparkEntry.queries(name)
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).count() catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
-      }.sum
-      try spark.catalog.clearCache() catch { case _: Throwable => () }
+      val t = baselineMatched.map(timed).sum
+      try spark.catalog.clearCache() catch { case NonFatal(_) => () }
       t
     }
     val baselineSubsetMedian = subsetReps.sorted.apply(subsetReps.size / 2)
@@ -271,12 +250,17 @@ object Bench {
     unexpectedF.foreach(ex => System.err.println(
       "[bench] UNEXPECTED stream failure: " + ex.linesIterator.take(4)
         .mkString(" | ")))
+    // stdout names at most 10 failures (its tail is capped at 2000 chars);
+    // BENCH_FULL.json names them all
+    def failedJson(names: Iterable[String]): String =
+      s""""n_failed":${failed.size},"failed":""" +
+        names.map("\"" + _ + "\"").mkString("[", ",", "]")
     val fullJson =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","sf":"$sfDir","n_queries":${results.size},"barometer_sec":${f2(barometerSec)},"warmup_sec":${f2(warmupSec)},"norm_total":${f3(normTotal)},"baseline_subset_total":${f3(baselineSubsetTotal)},"baseline_subset_median":${f3(baselineSubsetMedian)},"baseline_subset_reps":$repsJson,"baseline_subset_n":${baselineMatched.size},"stream_failures_expected":${expectedF.size},"stream_failures_unexpected":${unexpectedF.size},"queries":${jmap(results.toSeq, f3)},"slowest5_median":${jmap(medians, f3)}}"""
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","sf":"$sfDir","n_queries":${results.size},"barometer_sec":${f2(barometerSec)},"warmup_sec":${f2(warmupSec)},"norm_total":${f3(normTotal)},"baseline_subset_total":${f3(baselineSubsetTotal)},"baseline_subset_median":${f3(baselineSubsetMedian)},"baseline_subset_reps":$repsJson,"baseline_subset_n":${baselineMatched.size},"stream_failures_expected":${expectedF.size},"stream_failures_unexpected":${unexpectedF.size},${failedJson(failed)},"queries":${jmap(results.toSeq, f3)},"slowest5_median":${jmap(medians, f3)}}"""
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(fullPath), fullJson + "\n")
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     val slowest10 = results.toSeq.sortBy(-_._2).take(10)
-    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","sf":"$sfDir","n_queries":${results.size},"barometer_sec":${f2(barometerSec)},"warmup_sec":${f2(warmupSec)},"norm_total":${f3(normTotal)},"baseline_subset_total":${f3(baselineSubsetTotal)},"baseline_subset_median":${f3(baselineSubsetMedian)},"baseline_subset_reps":$repsJson,"baseline_subset_n":${baselineMatched.size},"stream_failures_expected":${expectedF.size},"stream_failures_unexpected":${unexpectedF.size},"full_map":"$fullPath","queries":${jmap(slowest10, f2)},"slowest5_median":${jmap(medians, f3)}}""")
+    println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","sf":"$sfDir","n_queries":${results.size},"barometer_sec":${f2(barometerSec)},"warmup_sec":${f2(warmupSec)},"norm_total":${f3(normTotal)},"baseline_subset_total":${f3(baselineSubsetTotal)},"baseline_subset_median":${f3(baselineSubsetMedian)},"baseline_subset_reps":$repsJson,"baseline_subset_n":${baselineMatched.size},"stream_failures_expected":${expectedF.size},"stream_failures_unexpected":${unexpectedF.size},${failedJson(failed.take(10))},"full_map":"$fullPath","queries":${jmap(slowest10, f2)},"slowest5_median":${jmap(medians, f3)}}""")
     spark.stop()
     if (unexpectedF.nonEmpty) sys.exit(1)
   }

@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -11,37 +11,17 @@ object Verify {
       case Array(s, o)    => (s, o, Set.empty[String])
       case Array(s, o, f) => (s, o, f.split(",").map(_.trim).toSet)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // X314: honor KeyGroupedPartitioning from V2 scans (off by
-      // default; only affects scans that report it — ours do so only
-      // under an explicit clusterby read option)
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // X314: accept co-partitioning on a subset of the join keys (the
-      // fact-to-fact SPJ shape: grouped by bucket, joined on bucket+id)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // generated-class cache sized for 120+ distinct plans (see Bench)
-      .config("spark.sql.codegen.cache.maxEntries", "20000")
-      .config("spark.sql.warehouse.dir",
-        graft.engine.TempWarehouse.createManaged())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.engine.Session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      finally { try spark.catalog.clearCache() catch { case _: Throwable => () } }
+      finally { try spark.catalog.clearCache() catch { case NonFatal(_) => () } }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -24,14 +24,6 @@ object Num {
   def sumMoney(c: Column): Column =
     sum(c.cast(DecimalType(18, 2))).cast("double")
 
-  /** Deterministic mean of a 2-decimal money column (exact sum / count).
-    * Oracle: CAST(SUM(CAST(x AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*). */
-  def avgMoney(c: Column): Column =
-    sumMoney(c) / count(lit(1))
-
-  /** Sum of an integer-valued double column (exact at any order). */
-  def sumIntValued(c: Column): Column = sum(c)
-
   /** COUNT(*) as long — matches DuckDB BIGINT count. */
   def countStar: Column = count(lit(1))
 

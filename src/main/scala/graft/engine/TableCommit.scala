@@ -2651,11 +2651,6 @@ object TableCommit {
     }
   }
 
-  /** Live row positions deleted from `e`'s file (empty = none);
-    * `root` resolves a sidecar-backed vector. */
-  def deletedPositions(root: String, e: Entry): Seq[Long] =
-    e.stats.get(DvKey).map(dvDecode(root, _)).getOrElse(Seq.empty)
-
   private def existingDvByLeaf(es: Seq[Entry]): Map[String, ColStats] =
     es.flatMap(e => e.stats.get(DvKey).map(pathLeaf(e.path) -> _)).toMap
 

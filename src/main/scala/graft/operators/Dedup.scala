@@ -403,9 +403,7 @@ object Dedup {
     *  - above the threshold: alternating large-star/small-star
     *    contraction (r17) — O(log²) distributed rounds regardless of
     *    component diameter, each round one min-aggregate + one join on
-    *    the edge set. (The r16 min-label propagation, O(diameter)
-    *    rounds, is retained as [[distributedCcPropagation]] and
-    *    spec-pinned equivalent.)
+    *    the edge set.
     *
     * The adaptive switch matters because the fixpoint's floor cost is
     * multiple scheduled jobs: on the small graphs near-dup detection
@@ -493,8 +491,8 @@ object Dedup {
     // star operators are defined on loop-free neighborhoods. Self-loop
     // ONLY nodes (a caller may feed (x, x) witnesses — the incremental
     // CC's committed label table does for star centers) are re-attached
-    // as singletons at the end, preserving the propagation path's
-    // contract that every input endpoint comes back labeled.
+    // as singletons at the end, keeping the contract (shared with
+    // localCc) that every input endpoint comes back labeled.
     val canon0 = pairs
       .select(greatest(col("doc_a"), col("doc_b")).as("hi"),
         least(col("doc_a"), col("doc_b")).as("lo"))
@@ -512,8 +510,9 @@ object Dedup {
       (p, p.count())
     }
     var (cur, curCnt) = persisted(canon0)
-    // Parallelism sized to the EDGE COUNT, same doctrine as the r16
-    // propagation loop: ~1M edges/partition, capped at the session width.
+    // Parallelism sized to the EDGE COUNT, not the corpus-scale session
+    // default (the near-dup graph is orders of magnitude smaller than
+    // the corpus): ~1M edges/partition, capped at the session width.
     val nParts = math.max(1L,
       math.min(sessParts.toLong, curCnt / 1000000L + 1L)).toInt
     def rep(df: DataFrame, k: String): DataFrame =
@@ -577,91 +576,6 @@ object Dedup {
     labels.unionByName(
       loops.join(labels.select(col("node")), Seq("node"), "left_anti")
         .withColumn("label", col("node")))
-  }
-
-  /** r16 min-label fixpoint CC, retained for the equivalence spec (the
-    * two distributed variants must agree with each other and with the
-    * single-task union-find on any input). */
-  private[graft] def distributedCcPropagation(
-      spark: SparkSession, pairs: DataFrame): DataFrame = {
-    // Symmetric closure PLUS self-loops: with (n, n) in the edge set, one
-    // propagation step is a SINGLE join+aggregate over the edges — the
-    // labels frame is consumed exactly once per step. (The union-with-self
-    // form consumed it twice, and Spark recomputes a subtree per consuming
-    // branch, so chaining two unmaterialized steps squared the work.)
-    val sym = pairs
-      .unionByName(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    // The near-dup graph is orders of magnitude smaller than the corpus,
-    // so the loop's parallelism is sized to the EDGE COUNT, not inherited
-    // from the corpus-scale session default: persisted plans bypass AQE
-    // coalescing (canChangeCachedPlanOutputPartitioning=false), and a
-    // 32-way shuffle of a ~1k-row frame per propagation step turns the
-    // whole fixpoint into task-scheduling overhead. ~1M edges/partition,
-    // capped at the session default for genuinely large graphs.
-    val sessParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val (edgesRaw, nEdges) = graft.engine.Materialize.diskBackedWithCount(
-      sym.unionByName(
-        sym.select(col("src")).distinct()
-          .select(col("src"), col("src").as("dst"))))
-    val nParts = math.max(1L,
-      math.min(sessParts.toLong, nEdges / 1000000L + 1L)).toInt
-    val edges = edgesRaw.repartition(nParts, col("dst"))
-    // Convergence witness: labels are component-min candidates and only
-    // ever DECREASE, so Σ labels (exact, as decimal — a long Σ could
-    // overflow at 1e9 nodes × 1e12 ids) is strictly monotone until the
-    // fixpoint; an unchanged sum ⇒ every label unchanged. The sum is also
-    // the action that materializes each round's persist — one distributed
-    // pass per round instead of count + change-detection join.
-    def sumLabels(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      (p, p.agg(sum(col("label").cast("decimal(38,0)"))).head().getDecimal(0))
-    }
-    // One min-label propagation step (lazy — no action, no materialization):
-    // node's next label = min over {label(m) : (node, m) ∈ edges}, which
-    // includes its own thanks to the self-loops.
-    // The explicit repartition pins the aggregate's exchange to nParts
-    // (HashPartitioning(src, nParts) satisfies the agg's clustering, so no
-    // second corpus-width exchange is inserted).
-    def step(ls: DataFrame): DataFrame =
-      edges
-        .join(ls.select(col("node").as("dst"), col("label")), Seq("dst"))
-        .repartition(nParts, col("src"))
-        .groupBy(col("src").as("node")).agg(min(col("label")).as("label"))
-    // Each driver round is overhead-dominated at harness scale (job launch
-    // + tiny shuffles), so THREE propagation steps run per materialized
-    // action — label distance to the component minimum shrinks 3 hops per
-    // job (diameter/3 actions instead of diameter), and the initial labels
-    // carry no separate action at all (the first round's sum doubles as
-    // the baseline; a second unchanged sum is the fixpoint proof, since
-    // labels are monotone across every individual step).
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-    var persisted: DataFrame = null
-    var prevSum: java.math.BigDecimal = null
-    var converged = false
-    var rounds = 0
-    val maxRounds = 15 // 45 propagation hops ≫ any expected near-dup diameter
-    while (!converged && rounds < maxRounds) {
-      val (next, s) = sumLabels(step(step(step(labels))))
-      if (persisted != null) persisted.unpersist()
-      persisted = next
-      labels = next
-      converged = prevSum != null && s.compareTo(prevSum) == 0
-      prevSum = s
-      rounds += 1
-    }
-    ccLastRounds.set(rounds)
-    // A silent cap-exit would return labels that are NOT component minima
-    // (possible on a >45-hop duplicate chain) and quietly canonicalize to
-    // the wrong representative — fail loudly instead; the caller raises
-    // the cap or switches to large-star/small-star.
-    if (!converged)
-      throw new IllegalStateException(
-        s"connected components did not converge within $maxRounds rounds " +
-          s"(${3 * maxRounds} hops) — component diameter exceeds the cap")
-    // same (node, label) contract as localCc — the caller renames/orders
-    labels
   }
 
   val dedupClustersOracle: String =

@@ -462,7 +462,7 @@ object Relational {
     * directory into tmpdir on every correctness/bench iteration. The sf
     * token keeps concurrent-sf runs (warmup at sf0.001 vs timed sf0.1)
     * from clobbering each other's fixtures. */
-  private def fixturePath(tag: String, sfDir: String): String = {
+  private[graft] def fixturePath(tag: String, sfDir: String): String = {
     val sfTok = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
     s"${System.getProperty("java.io.tmpdir")}/graft_fix_${tag}_$sfTok"
   }
@@ -794,15 +794,6 @@ object Relational {
       |    AS total_price,
       |  MIN(o_orderkey) AS min_key, MAX(o_orderkey) AS max_key
       |FROM orders""".stripMargin
-
-  /** Parquet data file listing for a written dataset (spec support). */
-  def parquetDataFiles(dir: String): Seq[java.io.File] =
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.endsWith(".parquet")).toSeq
-
-  /** Fixture paths for the spec's mechanical assertions. */
-  def compactPaths(sfDir: String): (String, String) =
-    (fixturePath("compact_frag", sfDir), fixturePath("compact_out", sfDir))
 
   /** Corruption rule for the permissive-read audit fixture. */
   val CorruptMod = 23

@@ -28,11 +28,6 @@ object Similarity {
   val QueryCount = 10
   val TopK = 5
 
-  /** Left-to-right fold sum of an array<double> — matches the oracle's
-    * list_reduce with a prepended 0.0. */
-  private def foldSum(arr: Column): Column =
-    aggregate(arr, lit(0.0), (acc, v) => acc + v)
-
   private def toDouble(arr: Column): Column =
     transform(arr, x => x.cast("double"))
 
@@ -1207,8 +1202,6 @@ object Similarity {
 
   /** MMR trade-off: λ·relevance − (1−λ)·max-similarity-to-selected. */
   val MmrLambda = 0.7
-  /** Diversified picks per query (out of the TopK candidate pool). */
-  val MmrPicks = 3
 
   /** `q_mmr` (X236): maximal marginal relevance — DIVERSIFIED top-k
     * selection over the exact-retrieval candidates: a RAG/context

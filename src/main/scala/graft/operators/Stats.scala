@@ -3618,7 +3618,7 @@ object Stats {
     // The C(days,2) fan-out is an inequality-only join → BNLJ, and its
     // task count is the STREAMED side's partition count — which for the
     // tiny cached daily frame is 1 after AQE coalescing, so the whole
-    // quadratic eval ran single-core (r16 JobBreak: one 2.3 s job).
+    // quadratic eval ran single-core (r16 per-job profile: one 2.3 s job).
     // Round-robin the streamed side across the session's cores first;
     // the pair count is calendar-bounded, the fix is pure parallelism.
     val pairs = daily.repartition(spark.sparkContext.defaultParallelism)

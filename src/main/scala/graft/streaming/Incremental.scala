@@ -62,8 +62,8 @@ object Incremental {
     * state sizes here (≤ tens of thousands of rows) store-count overhead
     * dominates long before compute parallelism matters. The count is
     * frozen into a checkpoint at first run in production, which is exactly
-    * why it must be chosen from state volume up front — profiled with
-    * ProfileStreamJoin on the real join plan (2 h horizon): 32 stores
+    * why it must be chosen from state volume up front — profiled on the
+    * real join plan (2 h horizon, r16): 32 stores
     * (8 partitions × 4 stores/partition) ≈ 2.9-3.2 s warm, 8 stores
     * ≈ 2.4-2.7 s, same answer. Batch queries in the same session keep the
     * session default. */
@@ -146,10 +146,9 @@ object Incremental {
     * key, not the payload. */
   def streamingDedupQ(spark: SparkSession, sfDir: String): DataFrame =
     withDrainParts(spark, 4) {
-    val deduped = eventsStream(spark, sfDir)
-      .select(col("ts"), col("user_id"), col("event_type"))
-      .withWatermark("ts", "1 hour")
-      .dropDuplicatesWithinWatermark("user_id", "event_type")
+    val deduped = streamingDedup(eventsStream(spark, sfDir)
+      .select(col("ts"), col("user_id"), col("event_type")),
+      Seq("user_id", "event_type"))
     drainToTable(deduped, "append", "graft_stream_dedup")
       .select(col("user_id"), col("event_type"))
       .orderBy(col("user_id"), col("event_type"))
@@ -158,19 +157,6 @@ object Incremental {
   val streamingDedupOracle: String =
     """SELECT DISTINCT user_id, event_type FROM events
       |ORDER BY user_id, event_type""".stripMargin
-
-  /** Watermarked tumbling-window rollup — the streaming twin of the daily
-    * agg (A1): late events beyond the watermark are dropped, windows close
-    * and emit exactly once in append mode. Works on a batch frame too
-    * (watermark is a no-op there), which is how the spec cross-checks it. */
-  def windowedEventCounts(events: DataFrame,
-      watermark: String = "1 hour", windowLen: String = "15 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLen), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"),
-        col("event_type"), col("n"))
 
   /** Streaming exact dedup — the streaming twin of X1/J3 first-write-wins:
     * only the first occurrence of each key within the watermark horizon is
@@ -246,10 +232,8 @@ object Incremental {
     // stores for ~40 k state rows (see withDrainParts).
     withDrainParts(spark, 2)(streamingJoinDrain(spark, sfDir))
 
-  /** The join's streaming plan pre-drain — ONE definition shared by the
-    * gated drain and the ProfileStreamJoin store-sizing profiler, so the
-    * partition-sizing numbers can never be derived from a drifted copy. */
-  private[graft] def streamingJoinPlan(spark: SparkSession, sfDir: String): DataFrame = {
+  /** The join's streaming plan pre-drain. */
+  private def streamingJoinPlan(spark: SparkSession, sfDir: String): DataFrame = {
     def src = eventsStream(spark, sfDir)
     val views = src.filter(col("event_type") === "view")
       .select(col("user_id").as("v_user"), col("event_id").as("view_id"),

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev profiler (r16): where does a table COMMIT's wall time go? Replays
@@ -13,18 +12,7 @@ import org.apache.spark.sql.functions._
 object ProfileCommit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        graft.engine.TempWarehouse.createManaged())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.engine.Session()
     spark.range(1000000).selectExpr("sum(id)").collect()
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     import graft.engine.TableCommit

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-evidence probes that measure INTERNAL volumes the wall-clock
@@ -33,25 +32,7 @@ import org.apache.spark.sql.functions._
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val mode = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // X314: honor KeyGroupedPartitioning from V2 scans (mirrors Verify)
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // X314: accept co-partitioning on a SUBSET of the join keys (both
-      // sides grouped by the same bucket column while joining on
-      // (bucket, id)) — the standard fact-to-fact SPJ shape; a planner
-      // heuristic, not a correctness gate
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.warehouse.dir",
-        graft.engine.TempWarehouse.createManaged())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.engine.Session()
     spark.range(1000000).selectExpr("sum(id)").collect()
     mode match {
       case "fuzzy" =>
@@ -819,48 +800,22 @@ object ScaleProbe {
           f"${(manyT - fewT) * 1000.0 / math.max(1, manyN - fewN)}%.1f ms")
 
       case "ccstars" =>
-        // r17 evidence (VERDICT r16 item 4): distributed-CC round counts,
-        // star contraction vs min-label propagation, on path graphs
-        // (worst-case diameter). Args: path lengths. Per length: star
-        // rounds + wall + label checksum; propagation rounds + wall where
-        // its 45-hop cap allows, else the loud-failure witness.
+        // r17 evidence (VERDICT r16 item 4): star-contraction round counts
+        // on path graphs (worst-case diameter). Args: path lengths. Per
+        // length: rounds, wall, and the label checksum (every node labels
+        // to 0 ⇒ label sum 0, node sum n(n-1)/2).
         args.drop(1).foreach { nStr =>
           val n = nStr.toLong
           val path = spark.range(n - 1)
             .select(col("id").as("doc_a"), (col("id") + 1L).as("doc_b"))
-          def sumCheck(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-            val r = df.agg(sum(col("node")), sum(col("label"))).head()
-            (r.getLong(0), r.getLong(1))
-          }
-          def timed[A](f: => A): (A, Double) = {
-            val t0 = System.nanoTime()
-            val r = f
-            (r, (System.nanoTime() - t0) / 1e9)
-          }
-          val (starSums, starWall) = timed(sumCheck(
-            graft.operators.Dedup.connectedComponents(spark, path, 0L)))
-          val starRounds = graft.operators.Dedup.ccLastRounds.get()
-          // every node labels to 0 ⇒ label sum 0, node sum n(n-1)/2
-          val ok = starSums == ((n - 1) * n / 2, 0L)
-          // The propagation comparison only runs where its 45-hop cap
-          // can converge (diameter ≤ ~120): past that it burns its full
-          // 15-round budget — with a per-round-growing plan — before
-          // failing loudly, which is the documented behaviour, not a
-          // measurement worth hours. n=200 in SCALING.md carries the
-          // loud-failure witness.
-          val prop = if (n > 46) "prop N/A (diameter > 45-hop cap)"
-          else try {
-            val (propSums, propWall) = timed(sumCheck(
-              graft.operators.Dedup.distributedCcPropagation(spark, path)))
-            val pr = graft.operators.Dedup.ccLastRounds.get()
-            s"prop rounds=$pr wall=${f"$propWall%.1f"}s " +
-              s"agree=${propSums == starSums}"
-          } catch {
-            case e: IllegalStateException =>
-              s"prop FAILS LOUDLY (${e.getMessage.take(60)}…)"
-          }
-          println(f"[ccstars] n=$n star rounds=$starRounds " +
-            f"wall=$starWall%.1fs labels-ok=$ok | $prop")
+          val t0 = System.nanoTime()
+          val r = graft.operators.Dedup.connectedComponents(spark, path, 0L)
+            .agg(sum(col("node")), sum(col("label"))).head()
+          val wall = (System.nanoTime() - t0) / 1e9
+          val rounds = graft.operators.Dedup.ccLastRounds.get()
+          val ok = (r.getLong(0), r.getLong(1)) == ((n - 1) * n / 2, 0L)
+          println(f"[ccstars] n=$n star rounds=$rounds wall=$wall%.1fs " +
+            f"labels-ok=$ok")
         }
 
       case "nestedparity" =>

@@ -13,9 +13,12 @@ class CompactionSpec extends AnyFunSuite {
 
   test("compaction: fragments in, target file count out, files key-disjoint") {
     Relational.compactQ(spark, sfDir).collect() // build both fixtures
-    val (fragPath, outPath) = Relational.compactPaths(sfDir)
-    val frags = Relational.parquetDataFiles(fragPath)
-    val outs = Relational.parquetDataFiles(outPath)
+    val fragPath = Relational.fixturePath("compact_frag", sfDir)
+    val outPath = Relational.fixturePath("compact_out", sfDir)
+    def parquetFiles(dir: String) =
+      new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+    val frags = parquetFiles(fragPath)
+    val outs = parquetFiles(outPath)
     assert(frags.size == Relational.CompactFragments,
       s"fixture should have ${Relational.CompactFragments} fragments, has ${frags.size}")
     assert(outs.size == Relational.CompactTarget,

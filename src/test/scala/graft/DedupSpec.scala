@@ -107,12 +107,11 @@ class DedupSpec extends AnyFunSuite {
     assert(dist === expected)
   }
 
-  test("star-contraction CC handles high-diameter paths the propagation " +
-      "cap rejects, and agrees with propagation inside the cap") {
+  test("star-contraction CC handles high-diameter paths and agrees with " +
+      "union-find") {
     import spark.implicits._
-    // a 200-node path: diameter 199 — far beyond the propagation loop's
-    // 45-hop cap, the exact shape the r17 large-star/small-star rewrite
-    // exists for. Expected: everything labels to node 0.
+    // a 200-node path: diameter 199, the shape large-star/small-star
+    // contraction exists for. Expected: everything labels to node 0.
     val longPath = (0L until 199L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val starLabels = Dedup.connectedComponents(spark, longPath, 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -120,15 +119,15 @@ class DedupSpec extends AnyFunSuite {
     val rounds = Dedup.ccLastRounds.get()
     assert(rounds <= 12, s"star contraction took $rounds rounds on a " +
       "200-node path — expected logarithmic convergence")
-    // inside the propagation cap the two distributed variants must agree
+    // star contraction must agree with the single-task union-find
     // (self-pair + redundant edge included to pin those contracts)
     val mixed = ((0L until 30L).map(i => (i, i + 1)) ++
       Seq((100L, 100L), (40L, 41L), (41L, 40L))).toDF("doc_a", "doc_b")
-    val viaStars = Dedup.connectedComponents(spark, mixed, 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaProp = Dedup.distributedCcPropagation(spark, mixed)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaStars === viaProp)
+    def labels(localMaxEdges: Long) =
+      Dedup.connectedComponents(spark, mixed, localMaxEdges)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val viaStars = labels(0L)
+    assert(viaStars === labels(Long.MaxValue))
     assert(viaStars(100L) === 100L) // self-pair-only node kept
     assert(viaStars(30L) === 0L)
   }

@@ -302,6 +302,33 @@ class PropertySpec extends AnyFunSuite {
     })
   }
 
+  test("connected components: star contraction equals union-find on long paths") {
+    // 60 random ids in random order, cut into two paths (diameters up to
+    // 58, far past one contraction round), plus random chords, self-pairs
+    // and repeated edges in both directions
+    val graphGen = for {
+      picked <- Gen.pick(60, 1L to 400L)
+      keys <- Gen.listOfN(60, Gen.chooseNum(0, Int.MaxValue))
+      cut <- Gen.chooseNum(1, 59)
+      chords <- Gen.listOfN(6, Gen.zip(Gen.oneOf(picked), Gen.oneOf(picked)))
+      loops <- Gen.listOfN(2, Gen.chooseNum(401L, 405L))
+    } yield {
+      val ids = picked.toList.zip(keys).sortBy(_._2).map(_._1)
+      val (p1, p2) = ids.splitAt(cut)
+      val path = Seq(p1, p2).flatMap(p => p.zip(p.drop(1)))
+      path ++ path.take(3).map(_.swap) ++ chords ++ loops.map(n => (n, n))
+    }
+    check(Prop.forAll(graphGen) { es =>
+      val pairs = es.toDF("doc_a", "doc_b")
+      def run(localMax: Long) =
+        Dedup.connectedComponents(spark, pairs, localMax)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val local = run(Long.MaxValue)
+      local.keySet == es.flatMap(e => Seq(e._1, e._2)).toSet &&
+        run(0L) == local
+    })
+  }
+
   test("pagerank: paths bit-identical and mass-conserving on random graphs") {
     val pairGen = Gen.listOfN(8,
       Gen.zip(Gen.chooseNum(1L, 7L), Gen.chooseNum(8L, 14L)))

@@ -1,0 +1,58 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+import graft.engine.Session
+
+/** The session profile every entry point builds through: its conf set is
+  * the one the bench has always run with, and it stays the only builder. */
+class SessionSpec extends AnyFunSuite {
+  private val spark = TestSpark.spark
+
+  // Bench's conf set before the profile existed, warehouse dir aside
+  private def benchConfs(cpus: String) = Map(
+    "spark.master" -> s"local[$cpus]",
+    "spark.sql.shuffle.partitions" -> cpus,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.extensions" -> "graft.plans.GraftExtensions",
+    "spark.ui.enabled" -> "false",
+    "spark.sql.sources.v2.bucketing.enabled" -> "true",
+    "spark.sql.requireAllClusterKeysForCoPartition" -> "false",
+    "spark.sql.codegen.cache.maxEntries" -> "20000",
+    "spark.ui.retainedJobs" -> "100",
+    "spark.ui.retainedStages" -> "100",
+    "spark.ui.retainedTasks" -> "2000",
+    "spark.sql.ui.retainedExecutions" -> "50")
+
+  test("the profile's conf map is Bench's, key for key") {
+    Seq("4", "32").foreach { cpus =>
+      val confs = Session.confs(cpus)
+      assert(confs.map(_._1).distinct.size === confs.size, "duplicate key")
+      assert(confs.toMap === benchConfs(cpus))
+    }
+  }
+
+  test("a session built from the profile resolves every profile conf") {
+    val resolved = spark.sparkContext.getConf.getAll.toMap
+    benchConfs("4").foreach { case (k, v) =>
+      assert(resolved.get(k) === Some(v), k)
+    }
+    assert(spark.conf.get("spark.sql.warehouse.dir").nonEmpty)
+    assert(spark.sparkContext.getConf.get("spark.sql.extensions") ===
+      "graft.plans.GraftExtensions")
+  }
+
+  test("Session.scala holds the only SparkSession.builder in src/main") {
+    val main = Paths.get("src/main/scala")
+    assert(Files.isDirectory(main), s"run from the repo root: $main")
+    val walk = Files.walk(main)
+    val hits = try walk.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .filter(p => Files.readString(p).contains("SparkSession.builder"))
+      .map((p: Path) => main.relativize(p).toString).toSeq.sorted
+    finally walk.close()
+    assert(hits === Seq("graft/engine/Session.scala"))
+  }
+}

@@ -27,33 +27,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$wh/staging/videos").count() === afterFirst)
   }
 
-  test("streaming windowed counts equal the batch computation of the same frame") {
-    val rows = Seq(
-      (Timestamp.valueOf("2024-01-01 00:01:00"), "click"),
-      (Timestamp.valueOf("2024-01-01 00:05:00"), "click"),
-      (Timestamp.valueOf("2024-01-01 00:20:00"), "view"),
-      (Timestamp.valueOf("2024-01-01 00:31:00"), "click"))
-    val ms = MemoryStream[(Timestamp, String)](spark, 1)
-    ms.addData(rows: _*)
-    val streamed = Incremental.windowedEventCounts(
-      ms.toDF().toDF("ts", "event_type"))
-    val q = streamed.writeStream
-      .format("memory").queryName("win_counts").outputMode("complete")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val got = spark.table("win_counts")
-      .collect().map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2)))
-      .toSet
-    val batch = Incremental.windowedEventCounts(rows.toDF("ts", "event_type"))
-      .collect().map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2)))
-      .toSet
-    assert(got === batch)
-    assert(got === Set(
-      ("2024-01-01 00:00:00.0", "click", 2L),
-      ("2024-01-01 00:15:00.0", "view", 1L),
-      ("2024-01-01 00:30:00.0", "click", 1L)))
-  }
-
   test("q_streaming_window drain equals the batch tumbling window q_time_window") {
     val sfDir = "/root/testdata/sf0.001"
     val streamed = Incremental.streamingWindowQ(spark, sfDir).collect()

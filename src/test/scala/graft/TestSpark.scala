@@ -4,28 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole suite (Test / fork := true gives
   * the JVM the required --add-opens; building per-suite would dominate test
-  * wall time). Config mirrors Verify/Bench. */
+  * wall time), built from the same profile as Verify and Bench. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // X314: honor KeyGroupedPartitioning from V2 scans (mirrors Verify)
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // X314: accept co-partitioning on a subset of the join keys (the
-      // fact-to-fact SPJ shape: grouped by bucket, joined on bucket+id)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // generated-class cache sized for 120+ distinct plans (see Bench)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.warehouse.dir",
-        graft.engine.TempWarehouse.createManaged())
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = graft.engine.Session(cpus = "4")
 }
