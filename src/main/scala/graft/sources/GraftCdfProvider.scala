@@ -2,6 +2,7 @@ package graft.sources
 
 import java.util
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
@@ -54,13 +55,13 @@ import graft.engine.TableCommit
   * drain everything available). `TriggerAvailableNow` pins the
   * horizon at prepare time and drains to it.
   *
-  * Executor-side parquet reading uses parquet-hadoop's public Group
-  * API — the read-side mirror of [[GraftDataWriter]]'s writer leg, no
-  * private Spark machinery — covering the Spark-written table types
-  * long/int/short/byte/double/float/string/boolean/binary/date/
-  * timestamp (INT96 and annotated INT64 alike); decimals and nested
-  * types fail LOUDLY at the first row rather than decode wrong.
-  * Planning is manifest-only on the driver; row bytes never visit it.
+  * Executor-side parquet reading is Spark's own vectorized decode
+  * ([[GraftVectorized]]), the reader every `graft-table` scan uses, so
+  * the feed reads every type the batch feed and the facet read
+  * (primitives, dates, timestamps, decimals, arrays, structs, maps). A
+  * data column of any other type is refused when the stream starts,
+  * naming the column. Planning is manifest-only on the driver; row
+  * bytes never visit it.
   *
   * Scale: a batch plans one InputPartition per appended FILE, so read
   * parallelism tracks the change size, and a 100k-file table's feed
@@ -170,6 +171,7 @@ private class GraftCdfStream(root: String, fullSchema: StructType,
     fullFeed: Boolean, withIds: Boolean)
     extends MicroBatchStream with SupportsTriggerAvailableNow {
   private val dataSchema = GraftCdf.dataSchema(fullSchema, fullFeed, withIds)
+  GraftVectorized.requireSupported(dataSchema, s"graft-cdf($root)")
   /** AvailableNow horizon, pinned at prepare time so the drain is a
     * fixed target even while writers keep committing. */
   @volatile private var horizon: Option[Long] = None
@@ -314,11 +316,11 @@ private class GraftCdfStream(root: String, fullSchema: StructType,
   * `_change_type`; the partition is a LIVE-rows file scan, not a feed
   * leg. */
 /** `columnar = true` (X295, set at planning time only when EVERY
-  * partition of the scan is a DV-free bare read of vectorized-decode
-  * types): the reader factory serves raw `ColumnarBatch`es and Spark
-  * plans its codegen'd ColumnarToRow on top — the same physical shape
-  * as its own parquet scans. Spark requires all of a scan's partitions
-  * to agree on columnar-ness, so the flag is all-or-nothing per scan. */
+  * partition of the scan is a DV-free bare read): the reader factory
+  * serves raw `ColumnarBatch`es and Spark plans its codegen'd
+  * ColumnarToRow on top — the same physical shape as its own parquet
+  * scans. Spark requires all of a scan's partitions to agree on
+  * columnar-ness, so the flag is all-or-nothing per scan. */
 /** `splitStart/splitEnd` (X309, VERDICT r14 task 5): a ROW-GROUP
   * range — the partition decodes only the row groups whose bytes start
   * in `[splitStart, splitEnd)` (parquet's midpoint rule keys off the
@@ -369,179 +371,61 @@ private object GraftCdfReaderFactory extends PartitionReaderFactory {
     }
   }
 
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val part = unwrap(p)
-    // X295 row-view leg: a BARE scan (no feed tail, no identity
-    // column) decodes vectorized even when a DV forces row-granular
-    // skipping; anything the vectorized path can't serve — feed legs,
-    // exotic types, an unreadable-footer surprise — falls back to the
-    // Group reader, which remains the semantics reference.
-    if (part.bare && !part.withIds &&
-        GraftVectorized.supportedSchema(part.dataSchema)) {
-      try new GraftVectorizedRowReader(part)
-      catch { case scala.util.control.NonFatal(_) =>
-        new GraftCdfFileReader(part)
-      }
-    } else new GraftCdfFileReader(part)
-  }
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    new GraftVectorizedRowReader(unwrap(p))
 }
 
-/** X295: vectorized decode served row-by-row off the batch cursor —
-  * the DV'd-bare-scan path. Row position within the file is the
-  * sequential cursor index (batches arrive in file order), so the
-  * deletion-vector skip keys exactly as in the Group reader. */
+/** Every non-columnar partition — a DV'd bare scan and every feed leg —
+  * decodes vectorized and is served row by row off the batch cursor.
+  * Row position within the file is the cursor index (batches arrive in
+  * file order; a row-group split starts at its absolute `posBase`), and
+  * the marked set keys on it: `emitOnly = false` skips the marked
+  * positions (a deletion vector), `emitOnly = true` emits only them (a
+  * DV delta). A feed leg's row is the data row joined with one reused
+  * tail row: `_row_id` when `withIds` (`ridBase + position` for a born
+  * file; a rewritten file's materialized column is projected right
+  * after the data columns instead), then the constant
+  * `_commit_version` and `_change_type`. */
 private class GraftVectorizedRowReader(p: CdfFilePartition)
     extends PartitionReader[InternalRow] {
-  require(p.bare && !p.emitOnly && !p.withIds,
-    s"vectorized row view supports bare live scans only: ${p.absPath}")
-  // DV decode FIRST (review finding): if the sidecar read throws, no
-  // parquet reader has been opened yet — nothing leaks into the
-  // factory's Group-reader fallback
-  private val marked = GraftCdfFileReader.markedSet(p)
-  private val rdr = GraftVectorized.open(p.absPath, p.dataSchema,
+  // DV decode FIRST: if the sidecar read throws, no parquet reader has
+  // been opened yet
+  private val marked = GraftVectorizedRowReader.markedSet(p)
+  private val readRid = p.withIds && p.ridBase.isEmpty
+  private val rdr = GraftVectorized.open(p.absPath,
+    if (readRid) p.dataSchema.add(TableCommit.RowIdCol, LongType)
+    else p.dataSchema,
     p.splitStart, p.splitEnd)
-  // X309: a row-group split's cursor starts at the range's absolute
-  // base, so positions key the file's space exactly as an unsplit scan
+  private val bornRid = p.withIds && p.ridBase.isDefined
+  private val ridBase = p.ridBase.getOrElse(0L)
+  private val tail = {
+    val id = if (bornRid) Seq(0L) else Nil // set per row in get()
+    val feed = if (p.bare) Nil
+      else p.version +: p.changeType.map(UTF8String.fromString).toSeq
+    new GenericInternalRow((id ++ feed).toArray[Any])
+  }
+  private val joined = new JoinedRow
   private var pos = p.posBase - 1L
   override def next(): Boolean = {
     while (rdr.nextKeyValue()) {
       pos += 1
-      if (marked.isEmpty || !marked.contains(pos)) return true
+      if ((!marked.isEmpty && marked.contains(pos)) == p.emitOnly)
+        return true
     }
     false
   }
-  override def get(): InternalRow =
-    rdr.getCurrentValue.asInstanceOf[InternalRow]
+  override def get(): InternalRow = {
+    val row = rdr.getCurrentValue.asInstanceOf[InternalRow]
+    if (readRid) require(!row.isNullAt(p.dataSchema.length),
+      s"materialized ${TableCommit.RowIdCol} missing at position $pos " +
+        s"of ${p.absPath}")
+    if (bornRid) tail.setLong(0, ridBase + pos)
+    if (tail.numFields == 0) row else joined(row, tail)
+  }
   override def close(): Unit = rdr.close()
 }
 
-/** Executor-side parquet reader: parquet-hadoop's Group API (the
-  * read mirror of [[GraftDataWriter]]), emitting data columns + the
-  * partition's commit version. Row position within the file is the
-  * sequential read index — the same order `_metadata.row_index`
-  * exposes — which is what the deletion-vector skip keys on. */
-private class GraftCdfFileReader(p: CdfFilePartition)
-    extends PartitionReader[InternalRow] {
-  import org.apache.parquet.hadoop.ParquetReader
-  import org.apache.parquet.hadoop.example.GroupReadSupport
-  import org.apache.parquet.example.data.Group
-
-  private val reader: ParquetReader[Group] = {
-    val path = new org.apache.hadoop.fs.Path(
-      java.nio.file.Paths.get(p.absPath).toUri)
-    // the writers' shared read-only Configuration: a fresh one re-parses
-    // the Hadoop XML defaults for every feed partition
-    val b = ParquetReader.builder(new GroupReadSupport(), path)
-      .withConf(GraftDataWriter.sharedConf)
-    // X309: honor a row-group split if one was planned (the
-    // vectorized-open-failed fallback must read the same range)
-    (if (p.splitEnd >= 0L) b.withFileRange(p.splitStart, p.splitEnd)
-     else b).build()
-  }
-  private val marked: java.util.HashSet[Long] =
-    GraftCdfFileReader.markedSet(p)
-  private var pos = p.posBase - 1L
-  private var current: Group = _
-
-  override def next(): Boolean = {
-    var g = reader.read()
-    pos += 1
-    // emitOnly=false: positions are a deletion vector, skip them;
-    // emitOnly=true: positions are the payload, skip everything else
-    while (g != null && (marked.contains(pos) == !p.emitOnly)) {
-      g = reader.read(); pos += 1
-    }
-    current = g
-    g != null
-  }
-
-  override def get(): InternalRow = {
-    val n = p.dataSchema.fields.length
-    val extra = (if (p.withIds) 1 else 0) +
-      (if (p.bare) 0 else if (p.changeType.isDefined) 2 else 1)
-    val vals = new Array[Any](n + extra)
-    var i = 0
-    while (i < n) {
-      val f = p.dataSchema.fields(i)
-      vals(i) =
-        if (current.getFieldRepetitionCount(f.name) == 0) null
-        else f.dataType match {
-          case LongType    => current.getLong(f.name, 0)
-          case IntegerType => current.getInteger(f.name, 0)
-          case DoubleType  => current.getDouble(f.name, 0)
-          case StringType  => UTF8String.fromString(
-            current.getBinary(f.name, 0).toStringUsingUTF8)
-          case BooleanType => current.getBoolean(f.name, 0)
-          case FloatType   => current.getFloat(f.name, 0)
-          case ShortType   => current.getInteger(f.name, 0).toShort
-          case ByteType    => current.getInteger(f.name, 0).toByte
-          case BinaryType  => current.getBinary(f.name, 0).getBytes
-          case DateType    => current.getInteger(f.name, 0) // days
-          case TimestampType =>
-            // InternalRow wants epoch MICROS; the file carries either
-            // Spark's default INT96 (julian day + nanos-of-day, both
-            // little-endian) or INT64 with a millis/micros/nanos
-            // timestamp annotation
-            import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-            import org.apache.parquet.schema.LogicalTypeAnnotation
-            val pt = current.getType.getType(f.name).asPrimitiveType()
-            pt.getPrimitiveTypeName match {
-              case PrimitiveTypeName.INT96 =>
-                val buf = java.nio.ByteBuffer
-                  .wrap(current.getInt96(f.name, 0).getBytes)
-                  .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-                val nanosOfDay = buf.getLong
-                val julianDay = buf.getInt
-                (julianDay - 2440588).toLong * 86400000000L +
-                  nanosOfDay / 1000L
-              case PrimitiveTypeName.INT64 =>
-                val v = current.getLong(f.name, 0)
-                pt.getLogicalTypeAnnotation match {
-                  case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-                    t.getUnit match {
-                      case LogicalTypeAnnotation.TimeUnit.MILLIS => v * 1000L
-                      case LogicalTypeAnnotation.TimeUnit.NANOS  => v / 1000L
-                      case _                                     => v
-                    }
-                  case _ => v // unannotated: assume micros
-                }
-              case other => throw new IllegalArgumentException(
-                s"graft-cdf: timestamp column ${f.name} has physical " +
-                  s"type $other (expected INT96 or INT64)")
-            }
-          case other => throw new IllegalArgumentException(
-            s"graft-cdf: unsupported type $other for column ${f.name} " +
-              "(supported: long/int/short/byte/double/float/string/" +
-              "boolean/binary/date/timestamp)")
-        }
-      i += 1
-    }
-    var j = n
-    if (p.withIds) {
-      // X280: identity — birth arithmetic for files in birth layout,
-      // the materialized column for rewritten ones
-      vals(j) = p.ridBase match {
-        case Some(b) => b + pos
-        case None =>
-          require(
-            current.getFieldRepetitionCount(TableCommit.RowIdCol) > 0,
-            s"materialized ${TableCommit.RowIdCol} missing at " +
-              s"position $pos of ${p.absPath}")
-          current.getLong(TableCommit.RowIdCol, 0)
-      }
-      j += 1
-    }
-    if (!p.bare) {
-      vals(j) = p.version
-      p.changeType.foreach(t => vals(j + 1) = UTF8String.fromString(t))
-    }
-    InternalRow.fromSeq(vals.toIndexedSeq)
-  }
-
-  override def close(): Unit = reader.close()
-}
-
-private object GraftCdfFileReader {
+private object GraftVectorizedRowReader {
   /** The partition's marked position set, decoded EXECUTOR-side from
     * the DV encodings (inline text or a sidecar on the shared FS):
     * `decode(encA) − decode(encB)` — a deletion vector to skip

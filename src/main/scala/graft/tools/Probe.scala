@@ -26,10 +26,12 @@ import graft.SparkEntry
   * sbt "runMain graft.tools.Probe time <q1,q2,...> [sfDir] [reps]"
   *   — wall time and row count of each rep.
   * sbt "runMain graft.tools.Probe jobs <q1,q2,...> [sfDir] [reps]"
-  *   — as `time`, plus every Spark job's duration and description and
-  *     each streaming batch's durationMs split, so the slow job of a
-  *     composite query is visible. The gap between the rep's wall and the
-  *     sum of its jobs is driver/planning time.
+  *   — as `time`, plus every Spark job's duration and label (its SQL
+  *     execution id, then its description, or else its final stage's
+  *     operators and call site) and each streaming batch's durationMs
+  *     split, so the slow job of a composite query is visible. The gap
+  *     between the rep's wall and the sum of its jobs is driver/planning
+  *     time.
   * }}}
   *
   * sfDir defaults to /root/testdata/sf0.1 and reps to 3. Environment:
@@ -119,11 +121,18 @@ object Probe {
       val starts = new ConcurrentHashMap[Int, (Long, String)]()
       spark.sparkContext.addSparkListener(new SparkListener {
         override def onJobStart(e: SparkListenerJobStart): Unit = {
-          val desc = Option(e.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-          // else the result stage's name: the action's call site
-          val site = e.stageInfos.sortBy(_.stageId).lastOption.fold("")(_.name)
-          starts.put(e.jobId, (e.time, desc.getOrElse(site)))
+          val prop = (k: String) =>
+            Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+          // AQE submits its stage jobs from a pool thread, so their call
+          // site is the same CompletableFuture frame: name the final
+          // stage's operators (its RDD scopes) ahead of the call site
+          val site = e.stageInfos.sortBy(_.stageId).lastOption.fold("") {
+            st => st.rddInfos.sortBy(_.id).flatMap(_.scope.map(_.name.trim))
+              .distinct.mkString(" > ") + s" @ ${st.name}"
+          }
+          val label = prop("spark.job.description").getOrElse(site)
+          starts.put(e.jobId, (e.time,
+            prop("spark.sql.execution.id").fold("")(x => s"exec$x ") + label))
         }
         override def onJobEnd(e: SparkListenerJobEnd): Unit =
           Option(starts.remove(e.jobId)).foreach { case (t0, d) =>
@@ -177,7 +186,7 @@ object Probe {
         if (jobs) {
           val all = jobRows.asScala.toSeq.sortBy(_._1)
           all.foreach { case (id, s, d) =>
-            println(f"[jobs]   job$id%-4d $s%8.3f s  ${d.take(110)}")
+            println(f"[jobs]   job$id%-4d $s%8.3f s  ${d.take(140)}")
           }
           println(f"[jobs]   ${all.size} jobs, sum ${all.map(_._2).sum}%8.3f s " +
             "(gap to the rep's wall = driver/planning)")

@@ -175,8 +175,7 @@ object ScaleProbe {
         // VERDICT r14 task 4 evidence: the widened vectorized whitelist
         // — a DECIMAL-bearing schema must scan through the facet at the
         // same parity band as the primitive schema (clean columnar leg
-        // AND the DV'd row-view leg), instead of silently demoting to
-        // the row-at-a-time Group reader.
+        // AND the DV'd row-view leg).
         val dir = args(1)
         import org.apache.spark.sql.types._
         val schema = StructType(Seq(

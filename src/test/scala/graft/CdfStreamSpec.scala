@@ -324,6 +324,49 @@ class CdfStreamSpec extends AnyFunSuite {
       "resume must neither drop nor duplicate identity-feed rows")
   }
 
+  test("decimal, array, date and timestamp columns: mode=full and withrowids streams equal the batch feeds across DV deltas, a restore and compaction") {
+    val r = root()
+    def rows(lo: Long, hi: Long): DataFrame = spark.range(lo, hi).select(
+      col("id").as("k"),
+      when(col("id") % 7L === 3L, lit(null))
+        .otherwise(expr("cast(id * 1.25 as decimal(18,2))")).as("d"),
+      array(col("id"), col("id") * 2L).as("a"),
+      date_add(lit(java.sql.Date.valueOf("2024-01-01")),
+        col("id").cast("int")).as("dt"),
+      timestamp_seconds(lit(1700000000L) + col("id")).as("ts")
+    ).coalesce(1)
+    val sch = rows(0L, 1L).schema
+    TableCommit.commitAppendTracked(rows(0L, 30L), r, retain = 12)  // v1
+    val v2 = TableCommit.commitAppendTracked(rows(30L, 60L), r,
+      retain = 12)                                                  // v2
+    TableCommit.commitDeleteRows(spark, r, sch,                     // v3
+      pmod(col("k"), lit(4L)) === 1L, retain = 12)
+    TableCommit.commitRestore(r, v2, retain = 12)   // v4: DV shrink
+    TableCommit.commitDeleteRows(spark, r, sch,                     // v5
+      pmod(col("k"), lit(3L)) === 0L, retain = 12)
+    TableCommit.commitCompact(spark, r, targetFiles = 1,            // v6
+      sortCol = Some("k"), retain = 12, preserveRowIds = true)
+    val vLast = TableCommit.commitDeleteRows(spark, r, sch,         // v7
+      col("k") < 5L, retain = 12) // a DV delta on the rewritten file
+    def canon(rs: Seq[org.apache.spark.sql.Row]): Seq[String] =
+      rs.map(_.toString).sorted
+    val meta = Seq(StructField("_commit_version", LongType),
+      StructField("_change_type", StringType))
+    val full = drain(r, StructType(sch.fields ++ meta),
+      Map("mode" -> "full"))
+    assert(canon(full) === canon(TableCommit.readChangesFull(spark, r,
+      sch, 0L, vLast).collect().toIndexedSeq),
+      "the streamed full feed must equal readChangesFull")
+    assert(full.exists(x => x.getLong(5) == 4L &&
+      x.getString(6) == "insert"), "the restore's DV shrink streams")
+    val ids = drain(r, StructType(sch.fields ++
+      (StructField(TableCommit.RowIdCol, LongType) +: meta)),
+      Map("mode" -> "full", "withrowids" -> "true"))
+    assert(canon(ids) === canon(TableCommit.readChangesFullIds(spark, r,
+      sch, 0L, vLast).collect().toIndexedSeq),
+      "the streamed identity feed must equal readChangesFullIds")
+  }
+
   test("withrowids refuses append mode and untracked tables loudly") {
     val r = root()
     TableCommit.commitAppend(batch(0L, 5L), r, retain = 4) // untracked

@@ -619,7 +619,7 @@ class DeletionVectorSpec extends AnyFunSuite {
         s"a decimal projection must keep the facet row-view leg:\n$dPlan")
       // a GENUINELY unsupported type (TIMESTAMP_NTZ, outside the
       // whitelist) still routes the bitmap path — and the connector
-      // demote signal names it in the plan description
+      // refuses it when the scan is built, naming the column
       val r2 = root()
       val sch2 = StructType(Seq(StructField("k", LongType),
         StructField("tn", TimestampNTZType)))
@@ -635,11 +635,13 @@ class DeletionVectorSpec extends AnyFunSuite {
         .queryExecution.executedPlan.toString
       assert(!plan2.contains("graft-table"),
         s"an NTZ snapshot read must route the bitmap leg:\n$plan2")
-      val exotic = spark.read.format("graft-table").schema(sch2)
-        .option("root", r2).load()
-        .queryExecution.executedPlan.toString
-      assert(exotic.contains("type demote") && exotic.contains("tn"),
-        s"the Group-reader demote must be plan-visible:\n$exotic")
+      val exotic = intercept[IllegalArgumentException] {
+        spark.read.format("graft-table").schema(sch2)
+          .option("root", r2).load()
+          .queryExecution.executedPlan
+      }
+      assert(exotic.getMessage.contains("unsupported column type") &&
+        exotic.getMessage.contains("tn: timestamp_ntz"), exotic.getMessage)
     } finally TableCommit.dvBroadcastThreshold = orig
   }
 

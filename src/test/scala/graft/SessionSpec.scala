@@ -44,15 +44,25 @@ class SessionSpec extends AnyFunSuite {
       "graft.plans.GraftExtensions")
   }
 
-  test("Session.scala holds the only SparkSession.builder in src/main") {
+  /** The files under src/main/scala whose source contains `pattern`. */
+  private def mainFilesContaining(pattern: String): Seq[String] = {
     val main = Paths.get("src/main/scala")
     assert(Files.isDirectory(main), s"run from the repo root: $main")
     val walk = Files.walk(main)
-    val hits = try walk.iterator().asScala
+    try walk.iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
-      .filter(p => Files.readString(p).contains("SparkSession.builder"))
+      .filter(p => Files.readString(p).contains(pattern))
       .map((p: Path) => main.relativize(p).toString).toSeq.sorted
     finally walk.close()
-    assert(hits === Seq("graft/engine/Session.scala"))
+  }
+
+  test("Session.scala holds the only SparkSession.builder in src/main") {
+    assert(mainFilesContaining("SparkSession.builder") ===
+      Seq("graft/engine/Session.scala"))
+  }
+
+  test("no src/main file decodes parquet through its example Group API") {
+    // every parquet read goes through the one vectorized reader
+    assert(mainFilesContaining("org.apache.parquet.example") === Seq.empty)
   }
 }
