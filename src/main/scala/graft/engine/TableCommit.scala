@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, StructType}
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** Minimal copy-on-write table format: versioned file manifests + an
   * atomic-rename pointer swap, so multi-file table rewrites get the
@@ -640,20 +641,6 @@ object TableCommit {
       }.sortBy(_.path)
   }
 
-  /** Per-file min/max for `statsCols`, read from the parquet FOOTER the
-    * write just produced — metadata-only (no data pages touched), one
-    * footer per file, exactly what a write task would report to the
-    * driver on a cluster. Row-group stats merge per file; a column whose
-    * stats any row group lacks (nulls-only group, truncated binary stats,
-    * unsupported physical type) is simply omitted for that file — pruning
-    * then keeps the file, so stats collection can never lose rows.
-    *
-    * Canonical string forms (what [[ColStats]] promises): INT32 DATE →
-    * ISO `LocalDate` (lexical = chronological), other INT32/INT64 →
-    * decimal text (callers parse Long), BINARY UTF8 → the string itself,
-    * FLOAT/DOUBLE → `Double.toString`. INT64 timestamps are surfaced as
-    * raw micros/nanos decimal text — the epoch-scale compare callers do
-    * is numeric either way. */
   /** Exact row count from the parquet footer alone (one metadata open,
     * no data pages) — what row-id assignment (X275) needs when the
     * caller asked for no column stats. */
@@ -669,6 +656,20 @@ object TableCommit {
     } catch { case _: Throwable => None }
   }
 
+  /** Per-file min/max for `statsCols`, read from the parquet FOOTER the
+    * write just produced — metadata-only (no data pages touched), one
+    * footer per file, exactly what a write task would report to the
+    * driver on a cluster. Row-group stats merge per file; a column whose
+    * stats any row group lacks (nulls-only group, truncated binary stats,
+    * unsupported physical type) is simply omitted for that file — pruning
+    * then keeps the file, so stats collection can never lose rows.
+    *
+    * Canonical string forms (what [[ColStats]] promises): INT32 DATE →
+    * ISO `LocalDate` (lexical = chronological), other INT32/INT64 →
+    * decimal text (callers parse Long), BINARY UTF8 → the string itself,
+    * FLOAT/DOUBLE → `Double.toString`. INT64 timestamps are surfaced as
+    * raw micros/nanos decimal text — the epoch-scale compare callers do
+    * is numeric either way. */
   private def footerStats(conf: org.apache.hadoop.conf.Configuration,
       file: Path, statsCols: Seq[String]): (Map[String, ColStats], Option[Long]) = {
     import org.apache.parquet.hadoop.ParquetFileReader
@@ -1607,95 +1608,88 @@ object TableCommit {
   /** Insert-only append: new snapshot = predecessor's files + this batch.
     * Nothing is rewritten, so the J3 anti-join's build side can read the
     * live table while the batch stages — the files it reads are immutable
-    * and stay referenced.
+    * and stay referenced. Publishes through [[publishAppend]], so the
+    * manifest is batch-sized and a commit race rebases (X273) up to
+    * `conflictRetries` times.
     *
-    * MANIFEST COST (VERDICT r10 task 5): the committed manifest is a
-    * DELTA — a `{"base": prev}` header plus only this batch's entry
-    * lines — so appending to a 100k-file table writes a batch-sized
-    * manifest, not a 100k-line rewrite (which made N appends cost
-    * O(N²) cumulative manifest bytes). Every `checkpointEvery`-th
-    * chain link writes a FULL manifest instead, bounding the read-side
-    * chain walk; retention keeps a retained version's whole chain
-    * alive (see [[retire]]). Readers are unchanged — resolution is
-    * inside [[readManifest]] — so time-travel, diffs and the feeds see
-    * identical file lists.
+    * `txnId` makes the append EXACTLY-ONCE (X271): a no-op returning the
+    * current version if the log already carries a txn id ≥ this one.
+    * The id rides the SAME atomic manifest publish as the data, so a
+    * crash between "data applied" and "progress recorded" cannot exist
+    * — the two are one link(2). This is the `foreachBatch` sink
+    * contract: Spark replays a batch id after a crash-restart, and the
+    * replay must land zero rows. Ids must be monotone per table (which
+    * Spark's per-checkpoint batch ids are); two DIFFERENT streams
+    * writing one table need disjoint id spaces or separate tables. With
+    * `conflictRetries > 0` this also holds under DUAL writers of the
+    * SAME stream (zombie-executor failover): whichever writer publishes
+    * a batch id first wins and the other's staged copy is dropped.
     *
-    * Read-modify-write transaction: the predecessor version is read at
-    * START, and publish verifies it is still current — a concurrent
-    * committer would otherwise have its files dropped (the lost
-    * update); a delta additionally names that version as its base, so
-    * a stale delta can never splice onto the wrong predecessor. */
+    * `trackRowIds` (X275, the Delta row-tracking / Iceberg row-lineage
+    * idea): every row is born with a STABLE id — the table's id
+    * high-water plus the row's position in its file — recorded as one
+    * `brid` long per file in the manifest (metadata-sized; the files
+    * themselves are untouched). Ids survive row-level DELETE (positions
+    * don't move), and [[commitCompact]]`(preserveRowIds = true)`
+    * rewrites carry them forward materialized, so downstream feature
+    * pipelines can join on row identity across arbitrary OPTIMIZE
+    * passes. */
   def commitAppend(df: DataFrame, root: String, retain: Int = 1,
       statsCols: Seq[String] = Nil,
       partCol: Option[String] = None,
       checkpointEvery: Int = 16,
       txnId: Option[Long] = None,
-      conflictRetries: Int = 0): Long = {
+      conflictRetries: Int = 0,
+      trackRowIds: Boolean = false): Long = {
     require(checkpointEvery >= 1, s"bad checkpointEvery $checkpointEvery")
-    val staged = stageBatch(df, root, partCol, statsCols)
-    publishStagedAppend(root, staged, retain, checkpointEvery, txnId,
-      conflictRetries, alreadyApplied = () => false)
-      .getOrElse(throw new IllegalStateException(
-        "append retry loop returned without publishing"))
+    // a replay skips the stage; the publish loop re-checks per attempt
+    if (txnApplied(root, txnId, None))
+      return currentVersion(root).getOrElse(0L)
+    val staged = stageBatch(df, root, partCol, statsCols,
+      collectRows = trackRowIds)
+    publishAppend(root, staged, retain, checkpointEvery, txnId = txnId,
+      conflictRetries = conflictRetries, trackRowIds = trackRowIds)
+      .getOrElse {
+        dropStaged(root, stagedDirs(staged))
+        currentVersion(root).getOrElse(0L)
+      }
   }
 
-  /** Publish an already-staged batch on top of whatever the CURRENT
-    * version is, retrying on commit races (X273 optimistic
-    * concurrency). A blind append only ADDS files — it reads nothing —
-    * so it cannot logically conflict with ANY interleaved commit:
-    * append/append, append/delete, append/compact all rebase cleanly
-    * onto the new head (the Delta/Iceberg append rule). The data files
-    * were staged ONCE; a retry re-reads the current version and
-    * republishes the same entries — manifest-sized work, no data
-    * bytes rewritten. `alreadyApplied` is re-checked per attempt so a
-    * txn-stamped append whose id landed via a RACING writer of the
-    * same stream (dual-writer failover, X271) degrades to a no-op —
-    * then the never-published staged batch is deleted and None
-    * returned. */
-  /** One APPEND publish against a known base, in the delta-manifest
-    * shape [[commitAppend]] uses (X303, the crossfacet-soak finding):
-    * a pure delta manifest carrying only this batch's entries, folded
-    * into a full checkpoint every `checkpointEvery` links. The
-    * connector facets (DSv2 batch INSERT, the streaming sink) call
-    * this from their own CAS loops — before this they republished the
-    * FULL entry list per commit, which made every SQL INSERT pay
-    * O(table) manifest bytes and showed up as 17× per-commit latency
-    * growth over a 450-commit soak. Throws
-    * [[ConcurrentCommitException]] exactly like [[publish]]. */
-  private[graft] def publishAppendAt(root: String, base: Long,
-      entries: Seq[Entry], retain: Int, checkpointEvery: Int = 16,
-      txnId: Option[Long] = None,
-      txnApp: Option[(String, Long)] = None): Long =
-    if (base == 0L)
-      publish(root, entries, retain, expected = Some(base),
-        txnId = txnId, txnApp = txnApp)
-    else if (chainOf(root, base).size + 1 >= checkpointEvery)
-      publish(root, entriesAt(root, base) ++ entries, retain,
-        expected = Some(base), txnId = txnId, txnApp = txnApp)
-    else
-      publish(root, entries, retain, expected = Some(base),
-        deltaBase = Some(base), txnId = txnId, txnApp = txnApp)
-
-  private def publishStagedAppend(root: String, staged: Seq[Entry],
-      retain: Int, checkpointEvery: Int, txnId: Option[Long],
-      conflictRetries: Int, alreadyApplied: () => Boolean,
-      trackRowIds: Boolean = false): Option[Long] = {
-    var attempt = 0
-    while (true) {
-      // ORDER IS LOAD-BEARING: read the base BEFORE the applied check.
-      // publish succeeds only if NOTHING interleaved after this base
-      // read (expected-CAS + the link(2) on base+1), so an applied
-      // check that happens after it can never be stale at commit time
-      // — a racing writer landing the same txn in between forces a
-      // ConcurrentCommitException and the next attempt sees it. Checked
-      // the other way around there is a double-apply window.
-      val base = currentVersion(root).getOrElse(0L)
-      if (alreadyApplied()) { dropStagedBatch(root, staged); return None }
-      // X275: stable-row-id assignment derives from the SAME base
-      // snapshot the CAS publishes against, so a lost race re-derives
-      // and overlapping id ranges are impossible. The final `acc`
-      // becomes the durable {"rid"} header (monotone; never rewinds
-      // even if the max-id rows are later deleted and compacted away).
+  /** The ONE append publish: every append route — [[commitAppend]] and
+    * its mapped form, write–audit–publish, the bloom append and both
+    * connector facets — reaches the log here.
+    *
+    * MANIFEST COST (X303): the manifest is a DELTA — a `{"base": prev}`
+    * header plus only this batch's entries — so an append to a
+    * 100k-file table writes a batch-sized manifest, not a 100k-line
+    * rewrite (O(N²) cumulative bytes over N appends; 17× per-commit
+    * latency growth over a 450-commit soak). Every `checkpointEvery`-th
+    * chain link writes a FULL manifest instead, bounding the read-side
+    * chain walk; [[retire]] keeps a retained version's whole chain, and
+    * [[readManifest]] resolves it, so readers see identical file lists.
+    *
+    * RACES (X273): a blind append only ADDS files, so it cannot
+    * logically conflict with ANY interleaved commit (the Delta/Iceberg
+    * append rule): a lost race republishes the same staged entries onto
+    * the new head — manifest-sized work, no data bytes rewritten. Row
+    * ids (`trackRowIds`, X275) derive from the SAME base the attempt
+    * publishes against, so racing tracked appends never mint
+    * overlapping ranges.
+    *
+    * See [[publishLoop]] for `txnId`/`txnApp`, `pinnedBase` and the
+    * None result (the txn already landed: the caller drops its own
+    * staged files, whose layout only it knows). */
+  private[graft] def publishAppend(root: String, staged: Seq[Entry],
+      retain: Int, checkpointEvery: Int = 16,
+      txnId: Option[Long] = None, txnApp: Option[String] = None,
+      conflictRetries: Int = 0, trackRowIds: Boolean = false,
+      pinnedBase: Option[Long] = None): Option[Long] = {
+    if (trackRowIds) require(staged.forall(_.rows.isDefined),
+      "row-id tracking needs per-file row counts (unreadable footer?)")
+    publishLoop(root, txnId, txnApp, conflictRetries, pinnedBase) { base =>
+      // X275: the final `acc` becomes the durable {"rid"} header
+      // (monotone; never rewinds even if the max-id rows are later
+      // deleted and compacted away)
       var hw: Option[Long] = None
       val eff =
         if (!trackRowIds) staged
@@ -1708,30 +1702,75 @@ object TableCommit {
           hw = Some(acc)
           assigned
         }
+      val (body, deltaBase) =
+        if (base == 0L) (eff, None)
+        else if (chainOf(root, base).size + 1 >= checkpointEvery)
+          // checkpoint: fold the chain into one self-contained manifest
+          (entriesAt(root, base) ++ eff, None)
+        else (eff, Some(base))
+      publish(root, body, retain, expected = Some(base),
+        deltaBase = deltaBase,
+        txnId = if (txnApp.isEmpty) txnId else None,
+        txnApp = txnApp.flatMap(a => txnId.map(a -> _)),
+        ridHighWater = hw)
+    }
+  }
+
+  /** The optimistic publish loop of the commits that extend whatever
+    * base they find — appends and the dynamic partition overwrite. Each
+    * attempt reads its base, checks the txn, then runs `attempt(base)`,
+    * which must publish with `expected = Some(base)`; a lost race
+    * ([[ConcurrentCommitException]]) retries up to `conflictRetries`
+    * times after a jittered backoff.
+    *
+    * ORDER IS LOAD-BEARING: read the base BEFORE the applied check.
+    * publish succeeds only if NOTHING interleaved after this base read
+    * (expected-CAS + the link(2) on base+1), so an applied check that
+    * happens after it can never be stale at commit time — a racing
+    * writer landing the same txn in between forces a
+    * ConcurrentCommitException and the next attempt sees it. Checked the
+    * other way around there is a double-apply window.
+    *
+    * `txnId` is checked against the scalar `{"txn"}` high-water, or the
+    * `{"txna"}` one of app `txnApp` (X291); when it already landed — a
+    * replay, or a racing writer of the same stream — the result is None
+    * and nothing is published.
+    *
+    * `pinnedBase` fixes the FIRST attempt's base to the snapshot the
+    * caller's transaction started from. A commit that landed since
+    * fails fast, before anything reads the base chain — under retain=1
+    * the old base may already be retired, which would surface
+    * NoSuchFile instead of the conflict; retries rebase onto the
+    * then-current version. */
+  private def publishLoop(root: String, txnId: Option[Long],
+      txnApp: Option[String], conflictRetries: Int,
+      pinnedBase: Option[Long])(attempt: Long => Long): Option[Long] = {
+    var n = 0
+    while (true) {
       try {
-        return Some(
-          if (base == 0L)
-            publish(root, eff, retain, expected = Some(base),
-              txnId = txnId, ridHighWater = hw)
-          else if (chainOf(root, base).size + 1 >= checkpointEvery)
-            // checkpoint: fold the chain into one self-contained manifest
-            publish(root, entriesAt(root, base) ++ eff, retain,
-              expected = Some(base), txnId = txnId, ridHighWater = hw)
-          else
-            publish(root, eff, retain, expected = Some(base),
-              deltaBase = Some(base), txnId = txnId, ridHighWater = hw))
+        val cur = currentVersion(root).getOrElse(0L)
+        val base = pinnedBase.filter(_ => n == 0).getOrElse(cur)
+        if (base != cur) throw new ConcurrentCommitException(
+          s"concurrent commit detected at $root: transaction read v$base " +
+            s"but the table is at v$cur — re-read and retry")
+        if (txnApplied(root, txnId, txnApp)) return None
+        return Some(attempt(base))
       } catch {
         case e: ConcurrentCommitException =>
-          attempt += 1
-          if (attempt > conflictRetries) throw e
-          // jittered linear backoff: losers deschedule so the winner's
-          // retire pass and the next link(2) aren't contended
-          Thread.sleep(java.util.concurrent.ThreadLocalRandom.current()
-            .nextLong(2L, 20L) * attempt)
+          n += 1
+          if (n > conflictRetries) throw e
+          conflictBackoff(n)
       }
     }
     None // unreachable: the loop exits only via return/throw
   }
+
+  /** Jittered linear backoff after the `attempt`-th lost commit race:
+    * losers deschedule so the winner's retire pass and the next link(2)
+    * aren't contended. */
+  private def conflictBackoff(attempt: Int): Unit =
+    Thread.sleep(java.util.concurrent.ThreadLocalRandom.current()
+      .nextLong(2L, 20L) * attempt)
 
   /** Optimistic DML publish with LOGICAL conflict detection (X274) —
     * the Delta/Iceberg conflict-resolution model for commits that
@@ -1767,9 +1806,11 @@ object TableCommit {
           attempt += 1
           if (attempt > conflictRetries) throw e
           val newBase = currentVersion(root).getOrElse(0L)
+          // an undiffable race (the old base already retired) rethrows
+          // the conflict itself — never guess
           val interleaved =
             try changesBetween(root, base, newBase)
-            catch { case _: Throwable => throw e }
+            catch { case NonFatal(_) => throw e }
           interleaved.foreach { c =>
             conflictsWith(c).foreach { why =>
               throw new DmlConflictException(
@@ -1779,8 +1820,7 @@ object TableCommit {
             }
           }
           base = newBase
-          Thread.sleep(java.util.concurrent.ThreadLocalRandom.current()
-            .nextLong(2L, 20L) * attempt)
+          conflictBackoff(attempt)
       }
     }
     0L // unreachable: the loop exits only via return/throw
@@ -1805,23 +1845,31 @@ object TableCommit {
     else None
   }
 
-  /** Delete a staged-but-never-published batch's directories (refuses
-    * anything outside the table's `data/` staging area). Best-effort:
-    * a leftover is also covered by the aged orphan vacuum. */
-  private def dropStagedBatch(root: String, staged: Seq[Entry]): Unit =
-    staged.map(_.path.split('/').take(2).mkString("/")).distinct
-      .filter(_.startsWith("data/")).foreach { b =>
-        val dir = Paths.get(root, b)
-        try walkFiles(dir).sortBy(-_.getNameCount).foreach(
-          Files.deleteIfExists)
-        catch { case _: Throwable => () }
+  /** Root-relative batch directories (`data/<batch>`) the staged
+    * entries were written under. */
+  private def stagedDirs(staged: Seq[Entry]): Seq[String] =
+    staged.flatMap(_.path.split('/') match {
+      case arr if arr.length >= 2 && arr(0) == "data" =>
+        Some(s"data/${arr(1)}")
+      case _ => None
+    }).distinct
+
+  /** Delete staged-but-never-published directories (root-relative,
+    * inside `data/`; anything else is refused) with everything under
+    * them, deepest first. No manifest ever referenced them, so no age
+    * gate is needed. Best-effort: whatever a failed delete leaves is an
+    * orphan the aged [[vacuum]] sweep reclaims. */
+  private[graft] def dropStaged(root: String, dirs: Seq[String]): Unit =
+    dirs.distinct.filter(_.startsWith("data/")).map(Paths.get(root, _))
+      .filter(Files.isDirectory(_)).foreach { dir =>
+        // a concurrent delete of the same tree must not fail the caller,
+        // whose own outcome (abort, replay) is what surfaces
+        val ps = try walkFiles(dir) catch { case NonFatal(_) => Seq.empty }
+        ps.sortBy(-_.getNameCount).foreach(p =>
+          // one undeletable file must not keep the rest
+          try Files.deleteIfExists(p) catch { case NonFatal(_) => () })
       }
 
-  /** Highest txn id any still-present manifest carries (walking down
-    * from the newest) — the idempotence high-water an exactly-once
-    * sink checks before applying a batch. Bounded by the retention
-    * window; maintenance commits without a txn stamp are skipped over
-    * rather than erasing the high-water. */
   /** Retained version numbers, newest first — the watermark readers'
     * shared walk. */
   private def versionsDesc(root: String): Seq[Long] = {
@@ -1833,6 +1881,11 @@ object TableCommit {
     }).sorted.reverse
   }
 
+  /** Highest txn id any still-present manifest carries (walking down
+    * from the newest) — the idempotence high-water an exactly-once
+    * sink checks before applying a batch. Bounded by the retention
+    * window; maintenance commits without a txn stamp are skipped over
+    * rather than erasing the high-water. */
   def lastTxnId(root: String): Option[Long] =
     versionsDesc(root).iterator.map(v =>
       try readRawChecked(root, v).txn catch { case _: Throwable => None })
@@ -1853,36 +1906,12 @@ object TableCommit {
       .collectFirst { case Some(m) => m }
       .getOrElse(Map.empty)
 
-  /** EXACTLY-ONCE streaming append (X271): apply `df` as transaction
-    * `txnId` — a no-op if the log already carries a txn id ≥ this one.
-    * The id rides the SAME atomic manifest publish as the data, so a
-    * crash between "data applied" and "progress recorded" cannot exist
-    * — the two are one link(2). This is the `foreachBatch` sink
-    * contract: Spark replays a batch id after a crash-restart, and the
-    * replay must land zero rows. Ids must be monotone per table (which
-    * Spark's per-checkpoint batch ids are); two DIFFERENT streams
-    * writing one table need disjoint id spaces or separate tables.
-    *
-    * With `conflictRetries > 0` this is also safe under DUAL writers of
-    * the SAME stream (zombie-executor failover): the high-water is
-    * re-checked on every retry attempt, so whichever writer publishes a
-    * batch id first wins and the other's staged copy is dropped — the
-    * table sees the batch exactly once either way. */
-  def commitAppendTxn(df: DataFrame, root: String, txnId: Long,
-      retain: Int = 1, statsCols: Seq[String] = Nil,
-      checkpointEvery: Int = 16, conflictRetries: Int = 0,
-      trackRowIds: Boolean = false): Long = {
-    def applied = lastTxnId(root).exists(_ >= txnId)
-    if (applied) return currentVersion(root).getOrElse(0L)
-    val staged = stageBatch(df, root, None, statsCols,
-      collectRows = trackRowIds)
-    if (trackRowIds) require(staged.forall(_.rows.isDefined),
-      "row-id tracking needs per-file row counts (unreadable footer?)")
-    publishStagedAppend(root, staged, retain, checkpointEvery,
-      Some(txnId), conflictRetries, alreadyApplied = () => applied,
-      trackRowIds = trackRowIds)
-      .getOrElse(currentVersion(root).getOrElse(0L))
-  }
+  /** Whether transaction `txnId` already landed: against app `txnApp`'s
+    * namespaced high-water (X291) when given, else the scalar one. */
+  private[graft] def txnApplied(root: String, txnId: Option[Long],
+      txnApp: Option[String]): Boolean =
+    txnId.exists(t => txnApp.fold(lastTxnId(root))(lastTxnIdFor(root, _))
+      .exists(_ >= t))
 
   // ------------------------------------------------------------------
   // Row lineage (X275)
@@ -1943,35 +1972,12 @@ object TableCommit {
       e.baseRowId.isDefined || e.stats.contains(RidKey))
   }
 
-  /** TRACKED append (X275, the Delta row-tracking / Iceberg row-lineage
-    * idea): every row is born with a STABLE id — the table's id
-    * high-water plus the row's position in its file — recorded as one
-    * `brid` long per file in the manifest (metadata-sized; the files
-    * themselves are untouched). Ids survive row-level DELETE (positions
-    * don't move), and [[commitCompact]]`(preserveRowIds = true)`
-    * rewrites carry them forward materialized, so downstream feature
-    * pipelines can join on row identity across arbitrary OPTIMIZE
-    * passes. Assignment happens against the publish base INSIDE the
-    * CAS retry loop, so racing tracked appends (`conflictRetries`) can
-    * never mint overlapping id ranges. */
-  def commitAppendTracked(df: DataFrame, root: String, retain: Int = 1,
-      statsCols: Seq[String] = Nil, checkpointEvery: Int = 16,
-      conflictRetries: Int = 0): Long = {
-    val staged = stageBatch(df, root, None, statsCols, collectRows = true)
-    require(staged.forall(_.rows.isDefined),
-      "row-id tracking needs per-file row counts (unreadable footer?)")
-    publishStagedAppend(root, staged, retain, checkpointEvery, None,
-      conflictRetries, alreadyApplied = () => false, trackRowIds = true)
-      .getOrElse(throw new IllegalStateException(
-        "append retry loop returned without publishing"))
-  }
-
   /** Current LIVE rows with their stable `_row_id` — computed as
     * `brid + row_index` for files still in their birth position,
     * read from the materialized column for rewritten ones; deletion
     * vectors anti-apply either way. Loud on any file without lineage:
     * a tracked table must only be written through
-    * [[commitAppendTracked]] and id-preserving rewrites. */
+    * [[commitAppend]]`(trackRowIds = true)` and id-preserving rewrites. */
   def readWithRowIds(spark: SparkSession, root: String,
       schema: StructType): DataFrame = {
     val outCols = (schema.fieldNames.toSeq :+ RowIdCol).map(col)
@@ -2003,7 +2009,8 @@ object TableCommit {
     require(untracked.isEmpty,
       s"file(s) without row lineage at $root: " +
         s"${untracked.map(_.path).take(3)} — a tracked table must only " +
-        "be written through commitAppendTracked / preserveRowIds rewrites")
+        "be written through commitAppend(trackRowIds = true) / " +
+        "preserveRowIds rewrites")
     val cols = (schema.fieldNames.toSeq :+ RowIdCol
       :+ "_g_leaf" :+ "_g_pos").map(col)
     val bornDf =
@@ -2166,7 +2173,7 @@ object TableCommit {
     val physDf = df.select(df.columns.toIndexedSeq.map(c =>
       col(c).as(cm.physical(c))): _*)
     commitAppend(physDf, root, retain, statsCols.map(cm.physical),
-      None, checkpointEvery, None, conflictRetries)
+      checkpointEvery = checkpointEvery, conflictRetries = conflictRetries)
   }
 
   /** D1 partition-slice replace: slices present in `df` swap wholesale,
@@ -2247,51 +2254,21 @@ object TableCommit {
         .parquet(staged.entries.map(e => resolvePath(staged.root, e.path)): _*)
 
   /** PUBLISH: append the audited batch in one atomic pointer swap —
-    * the only moment the staged rows become visible, with the same
-    * optimistic-concurrency contract as [[commitAppend]]: a commit that
-    * landed between stage and publish aborts this transaction
-    * ([[ConcurrentCommitException]]) so an audit passed against a stale
-    * base can never silently publish over someone else's commit. */
-  def publishStaged(staged: StagedBatch, retain: Int = 1): Long = {
-    // Fast-fail BEFORE touching the base manifest: if another commit
-    // landed, the base may already be retired (retain=1 deletes it), so
-    // entriesAt would surface NoSuchFile instead of the conflict. The
-    // authoritative arbiter is still publish()'s own expected-version
-    // check at the create-exclusive commit point.
-    val cur = currentVersion(staged.root).getOrElse(0L)
-    if (cur != staged.baseVersion) throw new ConcurrentCommitException(
-      s"concurrent commit detected at ${staged.root}: batch staged at " +
-        s"v${staged.baseVersion} but the table is at v$cur — re-stage " +
-        "(or re-audit against the new base) and retry")
-    val prior = entriesAt(staged.root, staged.baseVersion)
-    publish(staged.root, prior ++ staged.entries, retain,
-      expected = Some(staged.baseVersion))
-  }
+    * the only moment the staged rows become visible, as a batch-sized
+    * [[publishAppend]] pinned to the staged base with no retries: a
+    * commit that landed between stage and publish aborts this
+    * transaction ([[ConcurrentCommitException]]) so an audit passed
+    * against a stale base can never silently publish over someone
+    * else's commit. */
+  def publishStaged(staged: StagedBatch, retain: Int = 1): Long =
+    publishAppend(staged.root, staged.entries, retain,
+      pinnedBase = Some(staged.baseVersion)).get // no txn: never None
 
-  /** ABORT: a failed audit deletes the staged BATCH DIRECTORIES
-    * outright — everything under them, including the `_SUCCESS` marker
-    * and any scaffolding the parquet write left beside the data files.
-    * Safe with no age gate precisely because no manifest ever
-    * referenced the batch (contrast [[vacuum]], which needs the age
-    * gate to tell a crash's orphans from someone ELSE's in-flight
-    * stage; here the handle proves ownership of exactly these dirs).
-    * Idempotent and best-effort: a crash mid-abort leaves orphans the
-    * aged vacuum sweep removes. */
-  def abortStaged(staged: StagedBatch): Unit = {
-    val batchDirs = staged.entries.flatMap(_.path.split('/') match {
-      case arr if arr.length >= 2 && arr(0) == "data" =>
-        Some(Paths.get(staged.root, arr(0), arr(1)))
-      case _ => None
-    }).distinct
-    batchDirs.foreach { dir =>
-      if (Files.isDirectory(dir)) {
-        // deepest-first so directories empty before their own delete
-        walkFiles(dir).sortBy(-_.getNameCount).foreach(p =>
-          try Files.deleteIfExists(p) catch { case _: Throwable => () })
-      }
-    }
-    pruneParentsOf(staged.root, batchDirs)
-  }
+  /** ABORT: a failed audit deletes the staged batch directories
+    * outright ([[dropStaged]]). Idempotent and best-effort: a crash
+    * mid-abort leaves orphans the aged vacuum sweep removes. */
+  def abortStaged(staged: StagedBatch): Unit =
+    dropStaged(staged.root, stagedDirs(staged.entries))
 
   /** Manifest of a RETAINED version, for version-to-version diff tooling
     * (which files a commit added/removed — the file-level half of a
@@ -2457,10 +2434,10 @@ object TableCommit {
       statsCols: Seq[String] = Nil): Long = {
     require(m % 8 == 0 && m > 0 && k > 0, s"bad bloom geometry $m/$k")
     val base = currentVersion(root).getOrElse(0L)
-    val prior = entriesAt(root, base)
     val staged = stageBatch(df, root, None, statsCols)
     val withBloom = withBloomStats(spark, root, staged, bloomCol, m, k)
-    publish(root, prior ++ withBloom, retain, expected = Some(base))
+    publishAppend(root, withBloom, retain, pinnedBase = Some(base))
+      .get // no txn: never None
   }
 
   /** REINDEX: rebuild the bloom on `bloomCol` for every file of the
@@ -3828,7 +3805,7 @@ object TableCommit {
     * one id, a compaction's whole-file delete+insert legs re-emit each
     * row under its unchanged id. Same plan as [[readChangesFull]]
     * (manifest-only diff, change-proportional reads); requires a
-    * TRACKED table ([[commitAppendTracked]] / preserveRowIds rewrites)
+    * TRACKED table ([[commitAppend]]`(trackRowIds = true)` / preserveRowIds rewrites)
     * and fails loudly on any file without lineage. */
   def readChangesFullIds(spark: SparkSession, root: String,
       schema: StructType, fromExclusive: Long, toInclusive: Long,
@@ -4728,9 +4705,15 @@ object TableCommit {
     * existing file refuses LOUDLY (replacing "around" a file whose
     * keys are unknown could silently keep rows of an overwritten
     * partition): compact the table once and the proof holds from then
-    * on. Returns the published version. */
+    * on. A commit race recomputes the keep-set against the new head
+    * ([[publishLoop]]: the overwrite's semantics are per-partition, so
+    * a racing commit to an UNTOUCHED partition composes cleanly).
+    * Returns the published version, or None when `txnId` already
+    * landed. */
   private[graft] def publishDynamicOverwrite(root: String,
-      expected: Long, staged: Seq[Entry], retain: Int): Long = {
+      pinnedBase: Long, staged: Seq[Entry], retain: Int,
+      conflictRetries: Int = 0, txnId: Option[Long] = None,
+      txnApp: Option[String] = None): Option[Long] = {
     import graft.sources.{GraftBucketPart, GraftRotate, GraftTimePart}
     val (pc, rot) = graft.sources.GraftCatalog.partitionLayoutOf(root)
       .getOrElse(throw new UnsupportedOperationException(
@@ -4749,20 +4732,23 @@ object TableCommit {
         e.stats.get(pc).filter(cs => cs.min == cs.max).map(_.min)
           .filter(_ => nullFree(e, pc)).map(Seq(_))
     }
-    val writtenKeys = staged.map(e => keyOf(e).getOrElse(
+    lazy val writtenKeys = staged.map(e => keyOf(e).getOrElse(
       throw new IllegalStateException(
         s"dynamic overwrite staged a file without a layout proof: $e")))
       .toSet
-    val current = entriesAt(root, expected)
-    val unproven = current.filter(e => keyOf(e).isEmpty)
-    require(unproven.isEmpty,
-      s"dynamic partition overwrite refused: ${unproven.size} existing " +
-        s"file(s) carry no layout proof (e.g. ${unproven.head.path}) — " +
-        "their partition keys are unknown, so replacing around them " +
-        "could silently keep rows of an overwritten partition. Run " +
-        "graft_compact('<root>', n) once to restore the proof")
-    val keep = current.filter(e => !keyOf(e).exists(writtenKeys))
-    publish(root, keep ++ staged, retain, expected = Some(expected))
+    publishLoop(root, txnId, txnApp, conflictRetries,
+        Some(pinnedBase)) { base =>
+      val current = entriesAt(root, base)
+      val unproven = current.filter(e => keyOf(e).isEmpty)
+      require(unproven.isEmpty,
+        s"dynamic partition overwrite refused: ${unproven.size} existing " +
+          s"file(s) carry no layout proof (e.g. ${unproven.head.path}) — " +
+          "their partition keys are unknown, so replacing around them " +
+          "could silently keep rows of an overwritten partition. Run " +
+          "graft_compact('<root>', n) once to restore the proof")
+      val keep = current.filter(e => !keyOf(e).exists(writtenKeys))
+      publish(root, keep ++ staged, retain, expected = Some(base))
+    }
   }
 
   /** Run `txn` (a full read-stage-publish transaction body) and, when it

@@ -3942,10 +3942,10 @@ object Relational {
       .select(col("event_id"), col("user_id"), col("event_type"))
     // one sorted single-file batch per slice → deterministic birth ids
     (0 to 2).foreach { g =>
-      TableCommit.commitAppendTracked(
+      TableCommit.commitAppend(
         src.filter(pmod(col("event_id"), lit(3L)) === g.toLong)
           .repartition(1).sortWithinPartitions("event_id"),
-        root, retain = 8)
+        root, retain = 8, trackRowIds = true)
     }
     TableCommit.commitDeleteRows(spark, root, schema,
       pmod(col("event_id"), lit(7L)) === 0L, retain = 8)
@@ -4053,10 +4053,10 @@ object Relational {
     val src = Tables.events(spark, sfDir)
       .select(col("event_id"), col("user_id"), col("event_type"))
     (0 to 2).foreach { g =>
-      TableCommit.commitAppendTracked(
+      TableCommit.commitAppend(
         src.filter(pmod(col("event_id"), lit(3L)) === g.toLong)
           .repartition(1).sortWithinPartitions("event_id"),
-        root, retain = 8)
+        root, retain = 8, trackRowIds = true)
     }
     TableCommit.commitDeleteRows(spark, root, schema,
       pmod(col("event_id"), lit(7L)) === 0L, retain = 8)
@@ -4165,10 +4165,10 @@ object Relational {
     val src = Tables.events(spark, sfDir)
       .select(col("event_id"), col("user_id"), col("event_type"))
     (0 to 2).foreach { g =>
-      TableCommit.commitAppendTracked(
+      TableCommit.commitAppend(
         src.filter(pmod(col("event_id"), lit(3L)) === g.toLong)
           .repartition(1).sortWithinPartitions("event_id"),
-        root, retain = 8)
+        root, retain = 8, trackRowIds = true)
     }
     val upserts = src.filter(pmod(col("event_id"), lit(7L)) === 1L)
       .select(col("event_id"), col("user_id"),
@@ -4263,10 +4263,10 @@ object Relational {
     val src = Tables.events(spark, sfDir)
       .select(col("event_id"), col("user_id"), col("event_type"))
     (0 to 2).foreach { g =>
-      TableCommit.commitAppendTracked(
+      TableCommit.commitAppend(
         src.filter(pmod(col("event_id"), lit(3L)) === g.toLong)
           .repartition(1).sortWithinPartitions("event_id"),
-        root, retain = 8)
+        root, retain = 8, trackRowIds = true)
     }
     TableCommit.commitDeleteRows(spark, root, schema,
       pmod(col("event_id"), lit(7L)) === 0L, retain = 8)
@@ -4472,9 +4472,9 @@ object Relational {
       .select(col("event_id"), col("user_id"), col("event_type"))
     def slice(g: Int) = src.filter(pmod(col("event_id"), lit(2L)) === g.toLong)
       .repartition(1).sortWithinPartitions("event_id")
-    TableCommit.commitAppendTxn(slice(0), root, txnId = 4L,
+    TableCommit.commitAppend(slice(0), root, txnId = Some(4L),
       retain = 16, trackRowIds = true)
-    TableCommit.commitAppendTxn(slice(1), root, txnId = 5L,
+    TableCommit.commitAppend(slice(1), root, txnId = Some(5L),
       retain = 16, trackRowIds = true)
     TableCommit.commitDeleteRows(spark, root, schema,
       pmod(col("event_id"), lit(5L)) === 0L, retain = 16)

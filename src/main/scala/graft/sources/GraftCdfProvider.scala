@@ -224,8 +224,8 @@ private class GraftCdfStream(root: String, fullSchema: StructType,
       else e.baseRowId.orElse {
         require(e.stats.contains(TableCommit.RidKey),
           s"file ${e.path} at $root has no row lineage — a tracked " +
-            "table must only be written through commitAppendTracked / " +
-            "preserveRowIds rewrites")
+            "table must only be written through " +
+            "commitAppend(trackRowIds = true) / preserveRowIds rewrites")
         None // materialized: the reader pulls the _row_id column
       }
     if (!fullFeed) {

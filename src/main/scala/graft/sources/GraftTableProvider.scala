@@ -238,7 +238,25 @@ private class GraftWrite(root: String, schema: StructType,
 private final case class GraftCommitMessage(relPath: String, rows: Long,
     stats: Map[String, (String, String)] = Map.empty,
     part: Option[String] = None)
-    extends WriterCommitMessage
+    extends WriterCommitMessage {
+  def entry: TableCommit.Entry =
+    TableCommit.Entry(relPath, part,
+      stats = stats.map { case (c, (mn, mx)) =>
+        c -> TableCommit.ColStats(mn, mx) },
+      rows = Some(rows))
+}
+
+private object GraftCommitMessage {
+  /** The manifest entries a job's (or epoch's) task messages carry,
+    * in path order. */
+  def entries(messages: Array[WriterCommitMessage]): Seq[TableCommit.Entry] =
+    messages.toSeq.flatMap {
+      case m: GraftCommitMessage => Seq(m.entry)
+      // X316/X323: a partitioned task commits one message per rotated file
+      case GraftMultiCommitMessage(fs) => fs.map(_.entry)
+      case _ => Seq.empty
+    }.sortBy(_.path)
+}
 
 /** X316: one partitioned task's handshake — one payload per file the
   * value rotation produced (each single-valued on the partition
@@ -278,65 +296,29 @@ private class GraftBatchWrite(root: String, schema: StructType,
     // legacy stream or a different pipeline that advanced it past this
     // job's id would silently swallow a genuinely fresh batch as a
     // replay. With an app id, only THIS app's own high-water gates.
-    def applied = txnId.exists(t => (txnApp match {
-      case Some(a) => TableCommit.lastTxnIdFor(root, a)
-      case None    => TableCommit.lastTxnId(root)
-    }).exists(_ >= t))
-    if (applied) { abort(messages); return }
-    def toEntry(m: GraftCommitMessage): TableCommit.Entry =
-      TableCommit.Entry(m.relPath, m.part,
-        stats = m.stats.map { case (c, (mn, mx)) =>
-          c -> TableCommit.ColStats(mn, mx) },
-        rows = Some(m.rows))
-    val entries = messages.flatMap {
-      case m: GraftCommitMessage => Seq(toEntry(m))
-      // X316: a partitioned task commits one message per rotated file
-      case GraftMultiCommitMessage(fs) => fs.map(toEntry)
-      case _ => Seq.empty
-    }.toSeq.sortBy(_.path)
-    // X273 extended to the connector: an APPEND-mode DSv2 write is a
-    // blind append — on a commit race (option("conflictretries", n))
-    // the already-written task files republish against the new head,
-    // manifest-sized work. mode("overwrite") stays strict: "the table
-    // becomes exactly this batch" read the old state by definition, a
-    // racing commit is a real conflict.
-    var expected = base
-    var attempt = 0
-    var done = false
-    while (!done) {
-      try {
-        // X303: appends publish DELTA manifests (checkpoint-folded),
-        // so a SQL INSERT costs O(batch) manifest bytes, not O(table);
-        // overwrite still swaps the whole list by definition
-        if (dynamicParts)
-          // X331: replace exactly the written layout keys; a commit
-          // race recomputes the keep-set against the new head (the
-          // overwrite's semantics are per-partition, so a racing
-          // commit to an UNTOUCHED partition composes cleanly)
-          TableCommit.publishDynamicOverwrite(root, expected, entries,
-            retain)
-        else if (replaceAll)
-          TableCommit.publish(root, entries, retain,
-            expected = Some(expected),
-            txnId = if (txnApp.isEmpty) txnId else None,
-            txnApp = for { a <- txnApp; t <- txnId } yield a -> t)
-        else
-          TableCommit.publishAppendAt(root, expected, entries, retain,
-            txnId = if (txnApp.isEmpty) txnId else None,
-            txnApp = for { a <- txnApp; t <- txnId } yield a -> t)
-        done = true
-      } catch {
-        case e: TableCommit.ConcurrentCommitException =>
-          attempt += 1
-          if (replaceAll || attempt > conflictRetries) throw e
-          expected = TableCommit.currentVersion(root).getOrElse(0L)
-          // the race may have BEEN this txn (a duplicate orchestrator
-          // retry): re-check before republishing
-          if (applied) { abort(messages); done = true }
-          else Thread.sleep(java.util.concurrent.ThreadLocalRandom
-            .current().nextLong(2L, 20L) * attempt)
-      }
-    }
+    val entries = GraftCommitMessage.entries(messages)
+    val published =
+      if (dynamicParts)
+        // X331: replace exactly the written layout keys
+        TableCommit.publishDynamicOverwrite(root, base, entries, retain,
+          conflictRetries, txnId, txnApp)
+      else if (replaceAll) {
+        // mode("overwrite") stays strict: "the table becomes exactly
+        // this batch" read the old state by definition, so a racing
+        // commit is a real conflict
+        if (TableCommit.txnApplied(root, txnId, txnApp)) None
+        else Some(TableCommit.publish(root, entries, retain,
+          expected = Some(base),
+          txnId = if (txnApp.isEmpty) txnId else None,
+          txnApp = txnApp.flatMap(a => txnId.map(a -> _))))
+      } else
+        // X273 extended to the connector: an APPEND-mode DSv2 write is a
+        // blind append — on a commit race (option("conflictretries", n))
+        // the already-written task files republish against the new head
+        TableCommit.publishAppend(root, entries, retain, txnId = txnId,
+          txnApp = txnApp, conflictRetries = conflictRetries,
+          pinnedBase = Some(base))
+    if (published.isEmpty) abort(messages)
   }
 
   /** Job-level abort sweeps the ENTIRE attempt-unique batch directory
@@ -348,31 +330,12 @@ private class GraftBatchWrite(root: String, schema: StructType,
     * a recursive delete can touch nobody else's files; readers never saw
     * the directory (nothing in it was published). */
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    GraftStagedDir.sweep(java.nio.file.Paths.get(root, batch))
-}
-
-/** Best-effort delete of one staged batch or epoch directory and the
-  * files in it. Nothing in it was published, so readers never see it,
-  * and whatever a failed delete leaves is an orphan the aged
-  * [[TableCommit.vacuum]] sweep reclaims. */
-private object GraftStagedDir {
-  def sweep(dir: java.nio.file.Path): Unit =
-    try {
-      if (java.nio.file.Files.isDirectory(dir)) {
-        val files = java.nio.file.Files.list(dir)
-        try files.forEach { f =>
-          // one undeletable file must not keep the rest
-          try java.nio.file.Files.deleteIfExists(f)
-          catch { case NonFatal(_) => () }
-        } finally files.close()
-        java.nio.file.Files.deleteIfExists(dir)
-      }
-    } catch { case NonFatal(_) => () } // the abort's cause is what surfaces
+    TableCommit.dropStaged(root, Seq(batch))
 }
 
 /** X285: the NATIVE exactly-once streaming sink —
   * `df.writeStream.format("graft-table").option("root", r)` — the
-  * X271 `foreachBatch` + `commitAppendTxn` pattern folded into the
+  * X271 `foreachBatch` + `commitAppend(txnId = …)` pattern folded into the
   * connector itself, through Spark's V2 streaming two-phase commit:
   *
   *   - one StreamingWrite serves the whole query run; each micro-batch
@@ -433,26 +396,6 @@ private class GraftStreamingWrite(root: String, schema: StructType,
 
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
-    def applied = txnApp match {
-      case Some(a) => TableCommit.lastTxnIdFor(root, a).exists(_ >= epochId)
-      case None    => TableCommit.lastTxnId(root).exists(_ >= epochId)
-    }
-    // ORDER IS LOAD-BEARING (the publishStagedAppend discipline): read
-    // the publish base BEFORE the applied check. Checked the other way
-    // around, a twin writer can publish this epoch between our check
-    // and our base read — our publish would then extend the POST-twin
-    // head with no conflict and the epoch lands twice. This way the
-    // CAS on `expected` forces any such race into the retry path,
-    // which re-checks `applied` per attempt.
-    var expected = TableCommit.currentVersion(root).getOrElse(0L)
-    // ONE watermark walk serves both the applied check and the
-    // migration guard on the happy path (the retry loop re-reads)
-    val hws = txnApp.map(_ => TableCommit.txnHighWaters(root))
-    val applied0 = txnApp match {
-      case Some(a) => hws.get.get(a).exists(_ >= epochId)
-      case None    => TableCommit.lastTxnId(root).exists(_ >= epochId)
-    }
-    if (applied0) { sweepEpoch(epochId); crashIfArmed(epochId); return }
     // Scalar→namespace MIGRATION ambiguity (review findings, two
     // rounds): a virgin namespace over a table whose legacy scalar
     // `{"txn"}` watermark covers this epoch is undecidable — this
@@ -465,11 +408,12 @@ private class GraftStreamingWrite(root: String, schema: StructType,
     // namespace at the scalar watermark (one metadata-only commit), so
     // a stale `txnmigrate` option left in the job config can never
     // silently swallow a later life's epochs.
-    for (a <- txnApp; if hws.get.isEmpty;
+    for (a <- txnApp; if TableCommit.txnHighWaters(root).isEmpty;
          scalarHw <- TableCommit.lastTxnId(root);
          if scalarHw >= epochId) {
       txnMigrate match {
         case Some("scalar") =>
+          var expected = TableCommit.currentVersion(root).getOrElse(0L)
           var seeded = false
           while (!seeded) {
             try {
@@ -482,12 +426,12 @@ private class GraftStreamingWrite(root: String, schema: StructType,
             } catch {
               case _: TableCommit.ConcurrentCommitException =>
                 expected = TableCommit.currentVersion(root).getOrElse(0L)
-                if (applied) { // a twin seeded/applied first
+                // a twin seeded/applied first
+                if (TableCommit.txnApplied(root, Some(epochId), txnApp)) {
                   sweepEpoch(epochId); crashIfArmed(epochId); return
                 }
             }
           }
-          expected = TableCommit.currentVersion(root).getOrElse(0L)
           // the namespace now carries the scalar watermark — this
           // epoch (≤ scalarHw by the guard) is a replay
           sweepEpoch(epochId); crashIfArmed(epochId); return
@@ -502,39 +446,15 @@ private class GraftStreamingWrite(root: String, schema: StructType,
             "option(\"txnmigrate\", \"fresh\")")
       }
     }
-    def toEntry(m: GraftCommitMessage): TableCommit.Entry =
-      TableCommit.Entry(m.relPath, m.part,
-        stats = m.stats.map { case (c, (mn, mx)) =>
-          c -> TableCommit.ColStats(mn, mx) },
-        rows = Some(m.rows))
-    val entries = messages.flatMap {
-      case m: GraftCommitMessage => Seq(toEntry(m))
-      // X323: a partitioned epoch commits one message per rotated file
-      case GraftMultiCommitMessage(fs) => fs.map(toEntry)
-      case _ => Seq.empty
-    }.toSeq.sortBy(_.path)
-    var attempt = 0
-    var done = false
-    while (!done) {
-      try {
-        // X303: each epoch publishes a DELTA manifest — O(epoch)
-        // manifest bytes per micro-batch, not O(table)
-        TableCommit.publishAppendAt(root, expected, entries, retain,
-          txnId = if (txnApp.isEmpty) Some(epochId) else None,
-          txnApp = txnApp.map(_ -> epochId))
-        published.add(epochId)
-        done = true
-      } catch {
-        case e: TableCommit.ConcurrentCommitException =>
-          attempt += 1
-          if (attempt > conflictRetries) throw e
-          expected = TableCommit.currentVersion(root).getOrElse(0L)
-          // the race may have BEEN this epoch (dual zombie writers of
-          // one checkpoint): re-check before republishing
-          if (applied) { sweepEpoch(epochId); done = true }
-          else Thread.sleep(java.util.concurrent.ThreadLocalRandom
-            .current().nextLong(2L, 20L) * attempt)
-      }
+    // X303: each epoch is a DELTA manifest — O(epoch) manifest bytes
+    // per micro-batch, not O(table). The epoch id is the txn, so a
+    // replayed epoch (or one a twin writer published first) lands
+    // nothing and its staged files are swept as debris.
+    TableCommit.publishAppend(root, GraftCommitMessage.entries(messages),
+        retain, txnId = Some(epochId), txnApp = txnApp,
+        conflictRetries = conflictRetries) match {
+      case Some(_) => published.add(epochId)
+      case None    => sweepEpoch(epochId)
     }
     crashIfArmed(epochId)
   }
@@ -558,7 +478,7 @@ private class GraftStreamingWrite(root: String, schema: StructType,
     * epoch-unique by construction, so neighbors and published files
     * are untouchable from here. */
   private def sweepEpoch(epochId: Long): Unit =
-    GraftStagedDir.sweep(java.nio.file.Paths.get(root, epochDir(epochId)))
+    TableCommit.dropStaged(root, Seq(epochDir(epochId)))
 }
 
 private final case class GraftStreamWriterFactory(root: String,

@@ -608,7 +608,7 @@ object Incremental {
 
   /** `q_stream_sink` (X271): EXACTLY-ONCE streaming append into the
     * commit log via `foreachBatch` + [[graft.engine.TableCommit
-    * .commitAppendTxn]] — the batch id rides the SAME atomic manifest
+    * .commitAppend]]`(txnId = …)` — the batch id rides the SAME atomic manifest
     * publish as the data (a `{"txn": id}` header), so the classic
     * foreachBatch failure ("Spark replays a batch the sink already
     * committed, the table double-counts") cannot happen: there is no
@@ -633,17 +633,17 @@ object Incremental {
       .writeStream
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.engine.TableCommit.commitAppendTxn(batch, root,
-          txnId = id, retain = 4)
+        graft.engine.TableCommit.commitAppend(batch, root,
+          txnId = Some(id), retain = 4)
         ()
       }
       .start()
     q.awaitTermination()
     // the replay: a crash-restarted stream re-delivers an
     // already-committed batch id — must land ZERO rows
-    graft.engine.TableCommit.commitAppendTxn(
+    graft.engine.TableCommit.commitAppend(
       proj(graft.engine.Tables.events(spark, sfDir)), root,
-      txnId = 0L, retain = 4)
+      txnId = Some(0L), retain = 4)
     graft.engine.TableCommit.readCurrent(spark, root)
       .groupBy(col("event_type"))
       .agg(graft.engine.Num.countStar.as("n_rows"),

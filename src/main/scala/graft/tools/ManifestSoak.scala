@@ -479,9 +479,9 @@ object ManifestSoak {
       import sess.implicits._
       val inserts = net.filter(_.getInt(2) == 1)
         .map(r => (r.getLong(0), r.getLong(3))).toIndexedSeq
-      TableCommit.commitAppendTxn(
+      TableCommit.commitAppend(
         sess.createDataset(inserts).toDF("k", "v").repartition(4),
-        dst, txnId = hi, retain = 128, conflictRetries = 50)
+        dst, txnId = Some(hi), retain = 128, conflictRetries = 50)
     }
     val replica = spark.readStream.format("graft-cdf")
       .schema(feedSchema).option("root", src).option("mode", "full")

@@ -36,10 +36,10 @@ object ProfileCommit {
       }
       (0 to 2).foreach { g =>
         t(s"append$g") {
-          TableCommit.commitAppendTracked(
+          TableCommit.commitAppend(
             src.filter(pmod(col("event_id"), lit(3L)) === g.toLong)
               .repartition(1).sortWithinPartitions("event_id"),
-            root, retain = 8)
+            root, retain = 8, trackRowIds = true)
         }
       }
       t("delete") {

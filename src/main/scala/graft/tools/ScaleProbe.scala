@@ -735,8 +735,8 @@ object ScaleProbe {
             spark.range(mult.toLong).select(col("id").as("rep")))
           .select((col("o_orderkey") * mult.toLong + col("rep")).as("k"),
             col("o_orderstatus").as("st"))
-        graft.engine.TableCommit.commitAppendTracked(
-          big.repartition(16), root, retain = 4)
+        graft.engine.TableCommit.commitAppend(
+          big.repartition(16), root, retain = 4, trackRowIds = true)
         val schema = StructType(Seq(StructField("k", LongType),
           StructField("st", StringType)))
         val nRows = spark.read.parquet(

@@ -236,9 +236,9 @@ class CatalogSpec extends AnyFunSuite {
     val schema = StructType(Seq(StructField("k", LongType),
       StructField("v", StringType)))
     // tracked bootstrap through the Scala API; SQL DML must keep ids
-    TableCommit.commitAppendTracked(
+    TableCommit.commitAppend(
       spark.range(10L).select(col("id").as("k"),
-        lit("x").as("v")), s"$wh/t", retain = 8)
+        lit("x").as("v")), s"$wh/t", retain = 8, trackRowIds = true)
     val born = TableCommit.readWithRowIds(spark, s"$wh/t", schema)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     spark.sql(s"UPDATE $cat.t SET v = 'upd' WHERE k < 3")

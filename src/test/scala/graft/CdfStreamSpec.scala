@@ -248,8 +248,8 @@ class CdfStreamSpec extends AnyFunSuite {
     val r = root()
     val schemaKV = StructType(Seq(
       StructField("k", LongType), StructField("v", LongType)))
-    TableCommit.commitAppendTracked(batch(0L, 10L), r, retain = 8)  // v1
-    TableCommit.commitAppendTracked(batch(10L, 20L), r, retain = 8) // v2
+    TableCommit.commitAppend(batch(0L, 10L), r, retain = 8, trackRowIds = true)  // v1
+    TableCommit.commitAppend(batch(10L, 20L), r, retain = 8, trackRowIds = true) // v2
     TableCommit.commitDeleteRows(spark, r, schemaKV,                // v3
       pmod(col("k"), lit(5L)) === 0L, retain = 8)
     TableCommit.commitUpdateRows(spark, r, schemaKV,                // v4
@@ -289,8 +289,8 @@ class CdfStreamSpec extends AnyFunSuite {
     val r = root()
     val schemaKV = StructType(Seq(
       StructField("k", LongType), StructField("v", LongType)))
-    TableCommit.commitAppendTracked(batch(0L, 10L), r, retain = 8)
-    TableCommit.commitAppendTracked(batch(10L, 20L), r, retain = 8)
+    TableCommit.commitAppend(batch(0L, 10L), r, retain = 8, trackRowIds = true)
+    TableCommit.commitAppend(batch(10L, 20L), r, retain = 8, trackRowIds = true)
     val v3 = TableCommit.commitDeleteRows(spark, r, schemaKV,
       col("k") < 5L, retain = 8)
     val work = Files.createTempDirectory("graft_cdfs_idck_").toString
@@ -336,9 +336,9 @@ class CdfStreamSpec extends AnyFunSuite {
       timestamp_seconds(lit(1700000000L) + col("id")).as("ts")
     ).coalesce(1)
     val sch = rows(0L, 1L).schema
-    TableCommit.commitAppendTracked(rows(0L, 30L), r, retain = 12)  // v1
-    val v2 = TableCommit.commitAppendTracked(rows(30L, 60L), r,
-      retain = 12)                                                  // v2
+    TableCommit.commitAppend(rows(0L, 30L), r, retain = 12, trackRowIds = true)  // v1
+    val v2 = TableCommit.commitAppend(rows(30L, 60L), r,
+      retain = 12, trackRowIds = true)                  // v2
     TableCommit.commitDeleteRows(spark, r, sch,                     // v3
       pmod(col("k"), lit(4L)) === 1L, retain = 12)
     TableCommit.commitRestore(r, v2, retain = 12)   // v4: DV shrink

@@ -74,8 +74,8 @@ class ClusterSpec extends AnyFunSuite {
 
   test("cluster melts DVs and can preserve stable row ids") {
     val r = root()
-    TableCommit.commitAppendTracked(grid(), r, retain = 6,
-      statsCols = Seq("x", "y"))
+    TableCommit.commitAppend(grid(), r, retain = 6,
+      statsCols = Seq("x", "y"), trackRowIds = true)
     val idsBefore = TableCommit.readWithRowIds(spark, r, schema)
       .select(col("v"), col(TableCommit.RowIdCol))
       .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap

@@ -507,8 +507,8 @@ class DeletionVectorSpec extends AnyFunSuite {
     // tracked twin: stable ids ride the targeted melt
     val r2 = root()
     def oneS(lo: Long, hi: Long) = one(lo, hi).sortWithinPartitions("k")
-    TableCommit.commitAppendTracked(oneS(0L, 10L), r2, retain = 8)
-    TableCommit.commitAppendTracked(oneS(10L, 20L), r2, retain = 8)
+    TableCommit.commitAppend(oneS(0L, 10L), r2, retain = 8, trackRowIds = true)
+    TableCommit.commitAppend(oneS(10L, 20L), r2, retain = 8, trackRowIds = true)
     TableCommit.commitDeleteRows(spark, r2, schema, col("k") < 4L,
       retain = 8)
     TableCommit.commitMeltDeleted(spark, r2, maxDeadRatio = 0.2,
@@ -524,10 +524,10 @@ class DeletionVectorSpec extends AnyFunSuite {
     val r = root()
     def one(lo: Long, hi: Long) = spark.range(lo, hi)
       .select(col("id").as("k"), (col("id") * 10L).as("v")).coalesce(1)
-    TableCommit.commitAppendTracked(
-      one(0L, 100L).sortWithinPartitions("k"), r, retain = 8)
-    TableCommit.commitAppendTracked(
-      one(100L, 200L).sortWithinPartitions("k"), r, retain = 8)
+    TableCommit.commitAppend(
+      one(0L, 100L).sortWithinPartitions("k"), r, retain = 8, trackRowIds = true)
+    TableCommit.commitAppend(
+      one(100L, 200L).sortWithinPartitions("k"), r, retain = 8, trackRowIds = true)
     // composes inline + sidecar vectors across two files
     TableCommit.commitDeleteRows(spark, r, schema,
       pmod(col("k"), lit(3L)) === 0L, retain = 8, inlineDvMax = 10)

@@ -67,28 +67,28 @@ class RestoreSpec extends AnyFunSuite {
 
   test("txn high-water survives restore: replayed batch id stays a no-op") {
     val r = root()
-    TableCommit.commitAppendTxn(df(0L, 30L), r, txnId = 1L, retain = 10)
+    TableCommit.commitAppend(df(0L, 30L), r, txnId = Some(1L), retain = 10)
     val v2 = TableCommit.currentVersion(r).get
-    TableCommit.commitAppendTxn(df(30L, 50L), r, txnId = 2L, retain = 10)
+    TableCommit.commitAppend(df(30L, 50L), r, txnId = Some(2L), retain = 10)
     TableCommit.commitRestore(r, v2, retain = 10)
     assert(TableCommit.lastTxnId(r) === Some(2L),
       "restore must not rewind the exactly-once high-water")
     // the crash-replay of batch 2 after the restore lands ZERO rows
-    TableCommit.commitAppendTxn(df(30L, 50L), r, txnId = 2L, retain = 10)
+    TableCommit.commitAppend(df(30L, 50L), r, txnId = Some(2L), retain = 10)
     assert(keys(r) === (0L until 30L).toSet)
   }
 
   test("rid high-water survives restore: rolled-back ids never re-mint") {
     val r = root()
-    TableCommit.commitAppendTracked(df(0L, 40L), r, retain = 10)
+    TableCommit.commitAppend(df(0L, 40L), r, retain = 10, trackRowIds = true)
     val v1 = TableCommit.currentVersion(r).get
-    TableCommit.commitAppendTracked(df(40L, 70L), r, retain = 10)
+    TableCommit.commitAppend(df(40L, 70L), r, retain = 10, trackRowIds = true)
     val hw = TableCommit.rowIdHighWater(r)
     assert(hw === 70L)
     TableCommit.commitRestore(r, v1, retain = 10)
     assert(TableCommit.rowIdHighWater(r) === hw,
       "restore must not rewind the row-id high-water")
-    TableCommit.commitAppendTracked(df(1000L, 1010L), r, retain = 10)
+    TableCommit.commitAppend(df(1000L, 1010L), r, retain = 10, trackRowIds = true)
     val ids = TableCommit.readWithRowIds(spark, r, schema)
       .select(col(TableCommit.RowIdCol)).collect().map(_.getLong(0))
     assert(ids.length === 50)
@@ -157,7 +157,7 @@ class RestoreSpec extends AnyFunSuite {
 
   test("identity CDC re-emits resurrected rows under their original ids") {
     val r = root()
-    TableCommit.commitAppendTracked(df(0L, 50L), r, retain = 12)
+    TableCommit.commitAppend(df(0L, 50L), r, retain = 12, trackRowIds = true)
     val v1 = TableCommit.currentVersion(r).get
     val v2 = TableCommit.commitDeleteRows(spark, r, schema,
       col("k") < 10L, retain = 12)

@@ -29,10 +29,10 @@ class RowLineageSpec extends AnyFunSuite {
 
   test("ids are birth positions, survive delete + id-preserving compaction, and the high-water never rewinds") {
     val r = root()
-    TableCommit.commitAppendTracked(
-      one(Seq((10L, "a"), (11L, "b"), (12L, "c"))), r, retain = 8)
-    TableCommit.commitAppendTracked(
-      one(Seq((20L, "d"), (21L, "e"))), r, retain = 8)
+    TableCommit.commitAppend(
+      one(Seq((10L, "a"), (11L, "b"), (12L, "c"))), r, retain = 8, trackRowIds = true)
+    TableCommit.commitAppend(
+      one(Seq((20L, "d"), (21L, "e"))), r, retain = 8, trackRowIds = true)
     assert(TableCommit.rowIdHighWater(r) === 5L)
     val born = idsOf(r)
     assert(born === Map(10L -> 0L, 11L -> 1L, 12L -> 2L,
@@ -51,7 +51,7 @@ class RowLineageSpec extends AnyFunSuite {
       && e.baseRowId.isEmpty))
     // the high-water survives the rewrite: new rows NEVER reuse id 1
     assert(TableCommit.rowIdHighWater(r) === 5L)
-    TableCommit.commitAppendTracked(one(Seq((30L, "f"))), r, retain = 8)
+    TableCommit.commitAppend(one(Seq((30L, "f"))), r, retain = 8, trackRowIds = true)
     assert(idsOf(r) === born - 11L + (30L -> 5L))
     // a second compaction composes (mixed materialized + born input)
     TableCommit.commitCompact(spark, r, targetFiles = 1,
@@ -61,8 +61,8 @@ class RowLineageSpec extends AnyFunSuite {
 
   test("an id-preserving UPDATE keeps the row's identity through the rewrite") {
     val r = root()
-    TableCommit.commitAppendTracked(
-      one(Seq((1L, "a"), (2L, "b"), (3L, "c"))), r, retain = 8)
+    TableCommit.commitAppend(
+      one(Seq((1L, "a"), (2L, "b"), (3L, "c"))), r, retain = 8, trackRowIds = true)
     val before = idsOf(r)
     TableCommit.commitUpdateRows(spark, r, schema, col("k") === 2L,
       Seq("v" -> lit("B")), retain = 8, preserveRowIds = true)
@@ -81,7 +81,7 @@ class RowLineageSpec extends AnyFunSuite {
 
   test("a tracked table refuses lineage reads over untracked files, loudly") {
     val r = root()
-    TableCommit.commitAppendTracked(one(Seq((1L, "a"))), r, retain = 8)
+    TableCommit.commitAppend(one(Seq((1L, "a"))), r, retain = 8, trackRowIds = true)
     TableCommit.commitAppend(one(Seq((2L, "b"))), r, retain = 8)
     val e = intercept[IllegalArgumentException] {
       TableCommit.readWithRowIds(spark, r, schema).collect()
@@ -91,22 +91,22 @@ class RowLineageSpec extends AnyFunSuite {
 
   test("exactly-once + lineage compose: a replayed tracked batch mints no ids") {
     val r = root()
-    TableCommit.commitAppendTxn(one(Seq((1L, "a"), (2L, "b"))), r,
-      txnId = 0L, retain = 8, trackRowIds = true)
-    TableCommit.commitAppendTxn(one(Seq((3L, "c"))), r,
-      txnId = 1L, retain = 8, trackRowIds = true)
+    TableCommit.commitAppend(one(Seq((1L, "a"), (2L, "b"))), r,
+      txnId = Some(0L), retain = 8, trackRowIds = true)
+    TableCommit.commitAppend(one(Seq((3L, "c"))), r,
+      txnId = Some(1L), retain = 8, trackRowIds = true)
     assert(TableCommit.rowIdHighWater(r) === 3L)
     // the crash-restart replay: a no-op that must not burn id space
-    TableCommit.commitAppendTxn(one(Seq((1L, "a"), (2L, "b"))), r,
-      txnId = 0L, retain = 8, trackRowIds = true)
+    TableCommit.commitAppend(one(Seq((1L, "a"), (2L, "b"))), r,
+      txnId = Some(0L), retain = 8, trackRowIds = true)
     assert(TableCommit.rowIdHighWater(r) === 3L)
     assert(idsOf(r) === Map(1L -> 0L, 2L -> 1L, 3L -> 2L))
   }
 
   test("the identity feed: an update is a delete+insert pair sharing one id; compaction re-emits unchanged ids (X277)") {
     val r = root()
-    val v1 = TableCommit.commitAppendTracked(
-      one(Seq((1L, "a"), (2L, "b"), (3L, "c"))), r, retain = 8)
+    val v1 = TableCommit.commitAppend(
+      one(Seq((1L, "a"), (2L, "b"), (3L, "c"))), r, retain = 8, trackRowIds = true)
     val v2 = TableCommit.commitUpdateRows(spark, r, schema,
       col("k") === 2L, Seq("v" -> lit("B")), retain = 8,
       preserveRowIds = true)
@@ -150,9 +150,9 @@ class RowLineageSpec extends AnyFunSuite {
       val ts = (0 until n).map { w =>
         val t = new Thread(() => {
           try {
-            TableCommit.commitAppendTracked(
+            TableCommit.commitAppend(
               one(Seq((w * 10L, s"w$w"), (w * 10L + 1L, s"w$w"))), r,
-              retain = 8, conflictRetries = n * 4)
+              retain = 8, conflictRetries = n * 4, trackRowIds = true)
             ()
           } catch { case e: Throwable => errs.add(e) }
         })
@@ -169,8 +169,8 @@ class RowLineageSpec extends AnyFunSuite {
 
   test("deleting the HIGHEST ids then compacting never re-mints them (ADVICE r12: the durable rid header)") {
     val r = root()
-    TableCommit.commitAppendTracked(
-      one(Seq((10L, "a"), (11L, "b"), (12L, "c"))), r, retain = 8)
+    TableCommit.commitAppend(
+      one(Seq((10L, "a"), (11L, "b"), (12L, "c"))), r, retain = 8, trackRowIds = true)
     // kill the max-id rows, then rewrite: the materialized output
     // carries only live ids, so a live-derived watermark would rewind
     // to 1 and the next append would re-mint ids 1 and 2
@@ -180,8 +180,8 @@ class RowLineageSpec extends AnyFunSuite {
       sortCol = Some("k"), retain = 8, preserveRowIds = true)
     assert(TableCommit.rowIdHighWater(r) === 3L,
       "the high-water must survive delete-the-max + compaction")
-    TableCommit.commitAppendTracked(one(Seq((20L, "d"), (21L, "e"))),
-      r, retain = 8)
+    TableCommit.commitAppend(one(Seq((20L, "d"), (21L, "e"))),
+      r, retain = 8, trackRowIds = true)
     assert(idsOf(r) === Map(10L -> 0L, 20L -> 3L, 21L -> 4L),
       "new rows must mint FRESH ids, never the deleted 1 and 2")
     // and the header keeps propagating through further maintenance
@@ -192,8 +192,8 @@ class RowLineageSpec extends AnyFunSuite {
 
   test("a lineage-preserving MERGE keeps matched ids and mints fresh ones at the high-water (X278)") {
     val r = root()
-    val v1 = TableCommit.commitAppendTracked(
-      one(Seq((1L, "a"), (2L, "b"), (3L, "c"))), r, retain = 8)
+    val v1 = TableCommit.commitAppend(
+      one(Seq((1L, "a"), (2L, "b"), (3L, "c"))), r, retain = 8, trackRowIds = true)
     // matched: k=2 gets a new image; fresh: k=99 inserts
     val src = Seq((2L, "B"), (99L, "z")).toDF("k", "v")
     val v2 = TableCommit.commitMergeRows(spark, r, schema, src,
@@ -227,8 +227,8 @@ class RowLineageSpec extends AnyFunSuite {
 
   test("the MERGE broadcast ceiling ROUTES to the shuffle path with lineage intact (X305; was a refusal until r14)") {
     val r = root()
-    TableCommit.commitAppendTracked(
-      one(Seq((1L, "a"), (2L, "b"))), r, retain = 8)
+    TableCommit.commitAppend(
+      one(Seq((1L, "a"), (2L, "b"))), r, retain = 8, trackRowIds = true)
     val src = Seq((1L, "A"), (2L, "B"), (3L, "C")).toDF("k", "v")
     // ABOVE the ceiling: same commit semantics through the shuffle
     // join — matched rows inherit their ids, fresh keys mint at the

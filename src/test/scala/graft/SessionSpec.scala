@@ -65,4 +65,11 @@ class SessionSpec extends AnyFunSuite {
     // every parquet read goes through the one vectorized reader
     assert(mainFilesContaining("org.apache.parquet.example") === Seq.empty)
   }
+
+  test("TableCommit.scala holds the only commit-retry backoff in src/main") {
+    // every append publishes through TableCommit's one retry loop; a
+    // connector growing its own loop again shows up as a second file
+    assert(mainFilesContaining("ThreadLocalRandom") ===
+      Seq("graft/engine/TableCommit.scala"))
+  }
 }

@@ -172,7 +172,7 @@ class StreamingSpec extends AnyFunSuite {
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-          TableCommit.commitAppendTxn(batch, tbl, txnId = id, retain = 8)
+          TableCommit.commitAppend(batch, tbl, txnId = Some(id), retain = 8)
           // die AFTER the table committed but BEFORE Spark records the
           // batch in its checkpoint — the exact window where a ledgered
           // sink double-applies on restart

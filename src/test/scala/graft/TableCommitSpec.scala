@@ -605,6 +605,55 @@ class TableCommitSpec extends AnyFunSuite {
     assert(feed.length === N && feed.forall(_.getLong(1) === 1L))
   }
 
+  test("every append route writes a batch-sized delta manifest (X303 on every route)") {
+    import org.apache.spark.sql.streaming.Trigger
+    import scala.jdk.CollectionConverters._
+    def batch(k: Long) = Seq((k, s"r$k")).toDF("k", "v").coalesce(1)
+    val routes: Seq[(String, String => Unit)] = Seq(
+      "commitAppend" -> (r => TableCommit.commitAppend(batch(10L), r, retain = 8)),
+      "commitAppend(txnId)" -> (r =>
+        TableCommit.commitAppend(batch(10L), r, retain = 8, txnId = Some(1L))),
+      "commitAppend(trackRowIds)" -> (r =>
+        TableCommit.commitAppend(batch(10L), r, retain = 8, trackRowIds = true)),
+      "commitAppendMapped" -> (r =>
+        TableCommit.commitAppendMapped(batch(10L), r, retain = 8)),
+      "publishStaged" -> (r => TableCommit.publishStaged(
+        TableCommit.stageForAudit(batch(10L), r), retain = 8)),
+      "commitAppendChecked" -> (r => TableCommit.commitAppendChecked(spark,
+        batch(10L), r, Seq("k_pos" -> (col("k") > 0L)), retain = 8)),
+      "commitAppendBloom" -> (r => TableCommit.commitAppendBloom(spark,
+        batch(10L), r, "v", retain = 8)),
+      "DSv2 append" -> (r => batch(10L).write.format("graft-table")
+        .option("root", r).option("retain", "8").mode("append").save()),
+      "streaming epoch" -> { r =>
+        val src = Files.createTempDirectory("graft_tc_src_").toString
+        batch(10L).write.mode("append").parquet(src)
+        spark.readStream.schema("k LONG, v STRING").parquet(src)
+          .writeStream.format("graft-table")
+          .option("root", r).option("retain", "8")
+          .option("checkpointLocation", s"$src/_ckpt")
+          .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      })
+    val bad = routes.flatMap { case (name, append) =>
+      val r = root()
+      (1L to 3L).foreach(i => TableCommit.commitAppend(batch(i), r, retain = 8))
+      append(r)
+      val top = TableCommit.currentVersion(r).get
+      val added = TableCommit.entries(r).map(_.path).toSet --
+        TableCommit.entriesAtVersion(r, 3L).map(_.path)
+      val lines = Files.readAllLines(
+        Paths.get(r, "_log", f"v$top%020d.json")).asScala.toSeq
+      val paths = lines.filter(_.startsWith("{\"path\"")).map(l =>
+        l.drop("{\"path\": \"".length).takeWhile(_ != '"'))
+      if (top == 4L && lines.contains("{\"base\": 3}") && added.nonEmpty &&
+          paths.toSet == added && paths.size == added.size) None
+      else Some(s"$name: v$top carries ${paths.size} entries " +
+        s"(batch ${added.size}), base header " +
+        s"${lines.exists(_.startsWith("{\"base\""))}")
+    }
+    assert(bad.isEmpty, bad.mkString("; "))
+  }
+
   test("retention keeps a retained delta's base chain readable and sweeps past it") {
     val r = root()
     (1 to 12).foreach { i =>
@@ -758,26 +807,26 @@ class TableCommitSpec extends AnyFunSuite {
     val r = root()
     val b0 = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
     val b1 = Seq((3L, "c")).toDF("k", "v")
-    TableCommit.commitAppendTxn(b0, r, txnId = 0L, retain = 8)
-    TableCommit.commitAppendTxn(b1, r, txnId = 1L, retain = 8)
+    TableCommit.commitAppend(b0, r, txnId = Some(0L), retain = 8)
+    TableCommit.commitAppend(b1, r, txnId = Some(1L), retain = 8)
     assert(TableCommit.read(spark, r, schema).count() === 3L)
     assert(TableCommit.lastTxnId(r) === Some(1L))
     // the foreachBatch replay: same ids re-delivered after a restart —
     // both must be version no-ops landing zero rows
     val cur = TableCommit.currentVersion(r).get
-    assert(TableCommit.commitAppendTxn(b0, r, txnId = 0L) === cur)
-    assert(TableCommit.commitAppendTxn(b1, r, txnId = 1L) === cur)
+    assert(TableCommit.commitAppend(b0, r, txnId = Some(0L)) === cur)
+    assert(TableCommit.commitAppend(b1, r, txnId = Some(1L)) === cur)
     assert(TableCommit.read(spark, r, schema).count() === 3L)
     // an interleaved maintenance commit WITHOUT a txn stamp must not
     // erase the high-water (the walk skips over it)
     TableCommit.commitCompact(spark, r, targetFiles = 1, retain = 8)
     assert(TableCommit.lastTxnId(r) === Some(1L))
-    assert(TableCommit.commitAppendTxn(b1, r, txnId = 1L) ===
+    assert(TableCommit.commitAppend(b1, r, txnId = Some(1L)) ===
       TableCommit.currentVersion(r).get)
     assert(TableCommit.read(spark, r, schema).count() === 3L)
     // the next id applies normally
-    TableCommit.commitAppendTxn(Seq((4L, "d")).toDF("k", "v"), r,
-      txnId = 2L, retain = 8)
+    TableCommit.commitAppend(Seq((4L, "d")).toDF("k", "v"), r,
+      txnId = Some(2L), retain = 8)
     assert(TableCommit.lastTxnId(r) === Some(2L))
     assert(TableCommit.read(spark, r, schema)
       .collect().map(_.getLong(0)).toSet === Set(1L, 2L, 3L, 4L))
@@ -786,7 +835,7 @@ class TableCommitSpec extends AnyFunSuite {
   test("the txn high-water survives retention retiring the stamped manifest (ADVICE r12: self-propagation)") {
     val r = root()
     val b0 = Seq((1L, "a")).toDF("k", "v")
-    TableCommit.commitAppendTxn(b0, r, txnId = 7L, retain = 1)
+    TableCommit.commitAppend(b0, r, txnId = Some(7L), retain = 1)
     // an unstamped maintenance commit under retain=1 retires the ONLY
     // manifest that carried the stamp — before the header
     // self-propagated, lastTxnId forgot the high-water here and a
@@ -795,7 +844,7 @@ class TableCommitSpec extends AnyFunSuite {
     assert(TableCommit.lastTxnId(r) === Some(7L),
       "the txn high-water must survive an unstamped maintenance commit")
     val cur = TableCommit.currentVersion(r).get
-    assert(TableCommit.commitAppendTxn(b0, r, txnId = 7L,
+    assert(TableCommit.commitAppend(b0, r, txnId = Some(7L),
       retain = 1) === cur, "the replayed id must stay a no-op")
     assert(TableCommit.read(spark, r, schema).count() === 1L)
     // several maintenance generations deep, still durable; a NEWER id
@@ -803,8 +852,8 @@ class TableCommitSpec extends AnyFunSuite {
     TableCommit.commitCompact(spark, r, targetFiles = 1, retain = 1)
     TableCommit.commitOverwrite(Seq((9L, "z")).toDF("k", "v"), r)
     assert(TableCommit.lastTxnId(r) === Some(7L))
-    TableCommit.commitAppendTxn(Seq((10L, "y")).toDF("k", "v"), r,
-      txnId = 8L, retain = 1)
+    TableCommit.commitAppend(Seq((10L, "y")).toDF("k", "v"), r,
+      txnId = Some(8L), retain = 1)
     assert(TableCommit.lastTxnId(r) === Some(8L))
   }
 
@@ -812,10 +861,10 @@ class TableCommitSpec extends AnyFunSuite {
     val r = root()
     def one(rows: Seq[(Long, String)]) =
       rows.toDF("k", "v").repartition(1).sortWithinPartitions("k")
-    TableCommit.commitAppendTxn(one(Seq((2L, "a"), (4L, "b"))), r,
-      txnId = 9L, retain = 16, trackRowIds = true)
-    TableCommit.commitAppendTxn(one(Seq((1L, "c"))), r,
-      txnId = 10L, retain = 16, trackRowIds = true)
+    TableCommit.commitAppend(one(Seq((2L, "a"), (4L, "b"))), r,
+      txnId = Some(9L), retain = 16, trackRowIds = true)
+    TableCommit.commitAppend(one(Seq((1L, "c"))), r,
+      txnId = Some(10L), retain = 16, trackRowIds = true)
     TableCommit.commitDeleteRows(spark, r, schema, col("k") === 2L,
       retain = 16)
     TableCommit.commitRenameColumn(r, "v", "label", retain = 16)
@@ -890,8 +939,8 @@ class TableCommitSpec extends AnyFunSuite {
 
   test("dual writers racing the SAME txn id: exactly one applies, loser drops its staged copy (X271+X273)") {
     val r = root()
-    TableCommit.commitAppendTxn(Seq((0L, "seed")).toDF("k", "v"), r,
-      txnId = 0L, retain = 8)
+    TableCommit.commitAppend(Seq((0L, "seed")).toDF("k", "v"), r,
+      txnId = Some(0L), retain = 8)
     val batch = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
     val barrier = new java.util.concurrent.CyclicBarrier(2)
     val first = ThreadLocal.withInitial[java.lang.Boolean](() => true)
@@ -910,7 +959,7 @@ class TableCommitSpec extends AnyFunSuite {
       val ts = (0 until 2).map { w =>
         val t = new Thread(() => {
           try {
-            TableCommit.commitAppendTxn(batch, r, txnId = 1L,
+            TableCommit.commitAppend(batch, r, txnId = Some(1L),
               retain = 8, conflictRetries = 8)
             ()
           }

@@ -304,8 +304,8 @@ class TableWriteSpec extends AnyFunSuite {
     val r = root()
     // another writer (a legacy stream epoch) advances the GLOBAL
     // scalar slot far past this pipeline's ids
-    TableCommit.commitAppendTxn(Seq((1L, "s")).toDF("k", "v"), r,
-      txnId = 100L, retain = 8)
+    TableCommit.commitAppend(Seq((1L, "s")).toDF("k", "v"), r,
+      txnId = Some(100L), retain = 8)
     // a namespaced batch with a SMALLER id is NOT a replay of that
     // foreign sequence — it must apply
     write(Seq((2L, "a")).toDF("k", "v"), r, "append",
@@ -428,8 +428,8 @@ class TableWriteSpec extends AnyFunSuite {
     Seq((1L, "a")).toDF("k", "v").coalesce(1)
       .write.mode("append").parquet(src)
     def legacy(tbl: String): Unit =
-      TableCommit.commitAppendTxn(
-        Seq((100L, "legacy")).toDF("k", "v"), tbl, txnId = 5L,
+      TableCommit.commitAppend(
+        Seq((100L, "legacy")).toDF("k", "v"), tbl, txnId = Some(5L),
         retain = 8)
     def run(tbl: String, ckpt: String, migrate: Option[String]): Unit = {
       val w = spark.readStream.schema("k LONG, v STRING").parquet(src)
