@@ -19,7 +19,7 @@ import scala.util.control.NonFatal
   * {{{
   *   _log/v<20-digit>.json   one manifest per committed version; each line
   *                           is {"path": "<root-relative file>", "part":
-  *                           "<partition dir segment>"|null}
+  *                           "<layout key tag>"|null}
   *   data/b_<uuid>/...       immutable data-file batches, one per commit
   * }}}
   *
@@ -38,10 +38,11 @@ import scala.util.control.NonFatal
   * retire predecessor), promoted to a reusable utility.
   *
   * Partitioned tables keep the partition column IN the data files and
-  * mirror it into the `_p=<value>` directory layout only to track which
-  * files belong to which slice — manifest pruning happens at file-LISTING
-  * time ([[readPruned]]), the table-format analogue of the S2 filename
-  * predicate, and reads never depend on Hive directory inference.
+  * tag each file's manifest entry with its slice's key (the rotating
+  * writer gives every file exactly one) — manifest pruning happens at
+  * file-LISTING time ([[readPruned]]), the table-format analogue of the
+  * S2 filename predicate, and reads never depend on Hive directory
+  * inference.
   *
   * Scale/portability notes (the 100 TB design point):
   *   - The manifest is one small line per FILE, listed once per commit —
@@ -105,7 +106,7 @@ object TableCommit {
       extends java.io.IOException(msg)
 
   /** Per-file column statistics carried in the manifest: min/max in a
-    * CANONICAL STRING form fixed at commit time from the parquet footer —
+    * CANONICAL STRING form fixed at commit time by the write tasks —
     * ISO dates for DATE columns (lexical order = date order), decimal
     * text for integer columns, the value itself for UTF8 strings,
     * `Double.toString` for floating point. The canonical form is what
@@ -123,16 +124,16 @@ object TableCommit {
     * stat-less files simply stay ineligible for the all-rows upgrades
     * (lossless: they fall back to the DV scan / unpartitioned plan).
     * DVs preserve the witness exactly (deletes cannot mint nulls);
-    * rewrites re-derive it from the fresh footers. */
+    * rewrites re-derive it as they write. */
   val NullFreePrefix = "nn:"
 
   /** True iff `e` carries the null-free witness for column `c`. */
   def nullFree(e: Entry, c: String): Boolean =
     e.stats.contains(NullFreePrefix + c)
 
-  /** One committed data file: root-relative path, the `_p=` directory
-    * segment it was written under (None for unpartitioned commits), and
-    * optional per-column min/max stats captured from the file footer at
+  /** One committed data file: root-relative path, the layout key tag
+    * of the slice it holds (None for unpartitioned commits), and
+    * optional per-column min/max stats tracked by the write task at
     * commit time — the micro-partition metadata that lets a predicate
     * skip files at PLANNING time without touching a single footer
     * (Snowflake's pruning, Delta's dataSkippingNumIndexedCols, Iceberg's
@@ -168,33 +169,6 @@ object TableCommit {
     val s = Files.walk(dir)
     try s.iterator().asScala.toSeq finally s.close()
   }
-
-  /** Driver-side bounded-parallel map over per-file footer work. Staging
-    * reads one parquet footer per written file; sequentially, a many-file
-    * rewrite (compact/melt at 100× file counts) pays file-count × footer
-    * open latency on the driver. Order of the result matches `ps` (and
-    * every caller still sorts by path afterward); the pool is bounded so
-    * a huge rewrite cannot fork unbounded threads. */
-  private def parFiles[A](ps: Seq[Path])(f: Path => A): Seq[A] =
-    if (ps.lengthCompare(2) < 0) ps.map(f)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(ps.size, 8))
-      // Unwrap ExecutionException so callers see the worker's own
-      // exception type, exactly as the sequential path throws it
-      // (ADVICE r16). Hadoop Configuration reads from these threads are
-      // safe: the shared conf is fully loaded before task use and only
-      // ever read here.
-      try ps.map(p => pool.submit(
-          new java.util.concurrent.Callable[A] { def call(): A = f(p) }))
-        .map(fut =>
-          try fut.get()
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              throw e.getCause
-          })
-      finally pool.shutdown()
-    }
 
   /** Highest committed version, or None for a never-committed root. */
   def currentVersion(root: String): Option[Long] = {
@@ -596,17 +570,24 @@ object TableCommit {
     withTornRetry(readRaw(root, v))
 
   /** Stage a new immutable batch directory for `df` WITHOUT publishing it
-    * — the first half of a commit. Returns the staged entries. Exposed
-    * `private[graft]` so the crash test can model "process died between
-    * the data write and the pointer swap".
+    * — the first half of a commit. Returns the staged entries, each with
+    * its row count. Exposed `private[graft]` so the crash test can model
+    * "process died between the data write and the pointer swap".
     *
-    * Partitioned staging duplicates `partCol` into a `_p` column consumed
-    * by `partitionBy`, so the real column survives inside the files and
-    * the directory layout still names each slice. */
+    * The rows go through the connector's task writers
+    * ([[graft.sources.GraftDataWriter.stage]]) as one SQL execution —
+    * the one writer of table data files, whose tasks report each file's
+    * rows and canonical stats. A `layout` (head column and rotation:
+    * identity, tuple, bucket or time) sorts each task's rows by the key
+    * and rotates a file per key; each entry's `part` is the key's tag —
+    * the raw value, `c0=v0/c1=v1`, `bucket=<id>` or `<unit>=<key>`, and
+    * `__HIVE_DEFAULT_PARTITION__` for a NULL key. Stats ride for
+    * `statsCols` plus the layout columns, so an identity file's
+    * min == max (with its `nn:` witness) proves its slice. */
   private[graft] def stageBatch(df: DataFrame, root: String,
-      partCol: Option[String] = None,
-      statsCols: Seq[String] = Nil,
-      collectRows: Boolean = false): Seq[Entry] = {
+      layout: Option[(String, graft.sources.GraftRotate)] = None,
+      statsCols: Seq[String] = Nil): Seq[Entry] = {
+    import graft.sources.GraftRotate
     // the stats channel is SHARED with engine metadata (`bloom:<col>`
     // X254, the `dv:` deletion vector X265) — colon-namespaced keys no
     // user column may claim, or a reader would decode its min/max as
@@ -615,35 +596,39 @@ object TableCommit {
       s"stats column names may not contain ':' (reserved for engine " +
         s"metadata channels): ${statsCols.filter(_.contains(":"))}")
     val batch = s"data/b_${UUID.randomUUID().toString.replace("-", "")}"
-    val dest = s"$root/$batch"
-    partCol match {
-      case Some(c) =>
-        df.withColumn("_p", col(c)).write.partitionBy("_p").parquet(dest)
-      case None =>
-        df.write.parquet(dest)
+    val (layoutCols, key) = layout match {
+      case None => (Nil, Nil)
+      case Some((c, GraftRotate.Bucket(n))) =>
+        (Seq(c), Seq(bucketExpr(df, c, n)))
+      case Some((c, GraftRotate.Tuple(rest))) =>
+        (c +: rest, (c +: rest).map(col))
+      // a time bin is monotone in its column: sorting on the column
+      // keeps every bin one contiguous run
+      case Some((c, _)) => (Seq(c), Seq(col(c)))
     }
-    val conf = df.sparkSession.sessionState.newHadoopConf()
-    val base = Paths.get(dest)
-    parFiles(walkFiles(base)
-      .filter(p => Files.isRegularFile(p) &&
-        p.getFileName.toString.endsWith(".parquet"))) { p =>
-        val rel = base.relativize(p).toString
-        // stored part value = the dir segment minus the "_p=" marker, still
-        // in Spark's escaped-dir-name form — both the replace set and the
-        // pruning predicate see the same encoding, so matching is exact.
-        val part = rel.split('/').find(_.startsWith("_p=")).map(_.drop(3))
-        val (stats, rows) =
-          if (statsCols.nonEmpty) footerStats(conf, p, statsCols)
-          else if (collectRows)
-            (Map.empty[String, ColStats], footerRowCount(conf, p))
-          else (Map.empty[String, ColStats], None)
-        Entry(s"$batch/$rel", part, stats, rows)
-      }.sortBy(_.path)
+    val sorted = if (key.isEmpty) df else df.sortWithinPartitions(key: _*)
+    try graft.sources.GraftDataWriter.stage(sorted, root, batch, layout,
+      (statsCols ++ layoutCols).toSet)
+    catch { case NonFatal(e) => dropStaged(root, Seq(batch)); throw e }
   }
 
+  /** The layout a rewrite stages under: the caller's bucket spec or
+    * partition column, else the root's declared catalog layout (X322:
+    * every rewrite preserves a declared layout, so an UPDATE, MERGE,
+    * compaction or melt on a partitioned table keeps the X314
+    * zero-shuffle-join proof). */
+  private def layoutOf(root: String, partCol: Option[String] = None,
+      bucketSpec: Option[(String, Int)] = None)
+      : Option[(String, graft.sources.GraftRotate)] =
+    bucketSpec.map { case (c, n) => c -> graft.sources.GraftRotate.Bucket(n) }
+      .orElse(partCol.map(_ -> graft.sources.GraftRotate.Identity))
+      .orElse(graft.sources.GraftCatalog.partitionLayoutOf(root))
+
   /** Exact row count from the parquet footer alone (one metadata open,
-    * no data pages) — what row-id assignment (X275) needs when the
-    * caller asked for no column stats. */
+    * no data pages) — [[commitMeltDeleted]]'s fallback for entries that
+    * carry no row count. An unreadable footer is None: the file then
+    * never counts as fat, so the melt skips it rather than failing the
+    * whole commit over one file. */
   private def footerRowCount(conf: org.apache.hadoop.conf.Configuration,
       file: Path): Option[Long] = {
     import org.apache.parquet.hadoop.ParquetFileReader
@@ -653,128 +638,7 @@ object TableCommit {
         HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(file.toUri), conf))
       try Some(rd.getFooter.getBlocks.asScala.map(_.getRowCount).sum)
       finally rd.close()
-    } catch { case _: Throwable => None }
-  }
-
-  /** Per-file min/max for `statsCols`, read from the parquet FOOTER the
-    * write just produced — metadata-only (no data pages touched), one
-    * footer per file, exactly what a write task would report to the
-    * driver on a cluster. Row-group stats merge per file; a column whose
-    * stats any row group lacks (nulls-only group, truncated binary stats,
-    * unsupported physical type) is simply omitted for that file — pruning
-    * then keeps the file, so stats collection can never lose rows.
-    *
-    * Canonical string forms (what [[ColStats]] promises): INT32 DATE →
-    * ISO `LocalDate` (lexical = chronological), other INT32/INT64 →
-    * decimal text (callers parse Long), BINARY UTF8 → the string itself,
-    * FLOAT/DOUBLE → `Double.toString`. INT64 timestamps are surfaced as
-    * raw micros/nanos decimal text — the epoch-scale compare callers do
-    * is numeric either way. */
-  private def footerStats(conf: org.apache.hadoop.conf.Configuration,
-      file: Path, statsCols: Seq[String]): (Map[String, ColStats], Option[Long]) = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    val want = statsCols.toSet
-    try {
-      val rd = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(file.toUri), conf))
-      try {
-        val blocks = rd.getFooter.getBlocks.asScala.toSeq
-        // exact per-file row count — the footer states it per row group,
-        // so metadata-only COUNT(*) needs no row pages ever again
-        val fileRows = Some(blocks.map(_.getRowCount).sum)
-        // col -> per-row-group (min, max, numericCompare) triples
-        val acc = scala.collection.mutable.Map
-          .empty[String, List[(String, String, Boolean)]]
-        var bad = Set.empty[String]
-        // ADVICE r15: min/max stats alone prove things about NON-NULL
-        // rows only — every consumer that turns "min == max" into "ALL
-        // rows" (X324 whole-file DML drops, X314 identity cluster
-        // proofs) needs a null WITNESS beside the envelope. The footer
-        // states the null count per row group; a column every group
-        // reports null-free earns the `nn:<col>` marker stat.
-        val nfSeen = scala.collection.mutable.Map.empty[String, Boolean]
-        for (b <- blocks; cc <- b.getColumns.asScala) {
-          val name = cc.getPath.toDotString
-          if (want(name) && !bad(name)) {
-            val st = cc.getStatistics
-            nfSeen(name) = nfSeen.getOrElse(name, true) &&
-              st != null && !st.isEmpty && st.isNumNullsSet &&
-              st.getNumNulls == 0L
-            val pt = cc.getPrimitiveType
-            val canon: Option[(String, String, Boolean)] =
-              if (st == null || st.isEmpty || !st.hasNonNullValue) None
-              else pt.getPrimitiveTypeName match {
-                case INT32 | INT64 =>
-                  val num = (mn: Any, mx: Any) =>
-                    Some((mn.toString, mx.toString, true))
-                  pt.getLogicalTypeAnnotation match {
-                    case _: LogicalTypeAnnotation.DateLogicalTypeAnnotation =>
-                      def d(v: Any) = java.time.LocalDate
-                        .ofEpochDay(v.asInstanceOf[Number].longValue()).toString
-                      Some((d(st.genericGetMin), d(st.genericGetMax), false))
-                    case _ => num(st.genericGetMin, st.genericGetMax)
-                  }
-                case BINARY =>
-                  pt.getLogicalTypeAnnotation match {
-                    case _: LogicalTypeAnnotation.StringLogicalTypeAnnotation =>
-                      def s(v: Any) = v
-                        .asInstanceOf[org.apache.parquet.io.api.Binary]
-                        .toStringUsingUTF8
-                      Some((s(st.genericGetMin), s(st.genericGetMax), false))
-                    case _ => None
-                  }
-                case FLOAT =>
-                  // Widen to double BEFORE canonicalizing: callers compare
-                  // via toDouble, and Float.toString("0.1") parses to the
-                  // double 0.1 while the file's actual max is
-                  // (double)0.1f = 0.10000000149… — a boundary predicate
-                  // would prune a file containing matching rows (ADVICE
-                  // r10). float→double widening is exact, so the double's
-                  // shortest-round-trip string preserves the true bound.
-                  def w(v: Any) =
-                    v.asInstanceOf[Number].floatValue.toDouble.toString
-                  Some((w(st.genericGetMin), w(st.genericGetMax), true))
-                case DOUBLE =>
-                  Some((st.genericGetMin.toString, st.genericGetMax.toString,
-                    true))
-                case _ => None
-              }
-            canon match {
-              case Some(t) => acc(name) = t :: acc.getOrElse(name, Nil)
-              case None    => bad += name; acc -= name
-            }
-          }
-        }
-        val witnessed: Map[String, ColStats] = acc.keysIterator
-          .filter(nfSeen.getOrElse(_, false))
-          .map(c => (NullFreePrefix + c) -> ColStats("0", "0")).toMap
-        (witnessed ++ acc.view.mapValues { ts =>
-          def lt(a: String, b: String, num: Boolean): Boolean =
-            if (num) {
-              // integer text compares exactly as Long; doubles via toDouble
-              if (a.exists(c => c == '.' || c == 'E' || c == 'e') ||
-                  b.exists(c => c == '.' || c == 'E' || c == 'e'))
-                a.toDouble < b.toDouble
-              else a.toLong < b.toLong
-            } else
-              // UTF-8 BYTE order for the string/date fold across row
-              // groups, matching the prune side and parquet's own stat
-              // order — Java's UTF-16 `<` would pick the wrong file
-              // envelope when row-group extremes straddle the
-              // surrogate block (review finding, the one producer the
-              // ADVICE r14 fix missed; ISO dates are ASCII where the
-              // orders coincide)
-              graft.sources.GraftBatchScan.utf8Lt(a, b)
-          val num = ts.head._3
-          val mn = ts.map(_._1).reduce((a, b) => if (lt(a, b, num)) a else b)
-          val mx = ts.map(_._2).reduce((a, b) => if (lt(a, b, num)) b else a)
-          ColStats(mn, mx)
-        }.toMap, fileRows)
-      } finally rd.close()
-    } catch { case _: Throwable => (Map.empty, None) } // stats are an optimization
+    } catch { case NonFatal(_) => None }
   }
 
   /** METADATA-ONLY aggregate over the current version: exact total row
@@ -873,7 +737,7 @@ object TableCommit {
     val next = base + 1L
     Files.createDirectories(logDir(root))
     // Minimal JSON writer. Escaping is LOAD-BEARING, not hygiene: stat
-    // strings come verbatim from parquet footer UTF8 min/max, and a raw
+    // strings come verbatim from written UTF8 min/max values, and a raw
     // \n or \r in one would split this line-delimited manifest — publish
     // would report success while every subsequent read throws
     // TornManifestException, and with retain=1 the aged vacuum would then
@@ -1645,8 +1509,8 @@ object TableCommit {
     // a replay skips the stage; the publish loop re-checks per attempt
     if (txnApplied(root, txnId, None))
       return currentVersion(root).getOrElse(0L)
-    val staged = stageBatch(df, root, partCol, statsCols,
-      collectRows = trackRowIds)
+    val staged = stageBatch(df, root,
+      partCol.map(_ -> graft.sources.GraftRotate.Identity), statsCols)
     publishAppend(root, staged, retain, checkpointEvery, txnId = txnId,
       conflictRetries = conflictRetries, trackRowIds = trackRowIds)
       .getOrElse {
@@ -1685,7 +1549,7 @@ object TableCommit {
       conflictRetries: Int = 0, trackRowIds: Boolean = false,
       pinnedBase: Option[Long] = None): Option[Long] = {
     if (trackRowIds) require(staged.forall(_.rows.isDefined),
-      "row-id tracking needs per-file row counts (unreadable footer?)")
+      "row-id tracking needs per-file row counts")
     publishLoop(root, txnId, txnApp, conflictRetries, pinnedBase) { base =>
       // X275: the final `acc` becomes the durable {"rid"} header
       // (monotone; never rewinds even if the max-id rows are later
@@ -1742,7 +1606,7 @@ object TableCommit {
     * the old base may already be retired, which would surface
     * NoSuchFile instead of the conflict; retries rebase onto the
     * then-current version. */
-  private def publishLoop(root: String, txnId: Option[Long],
+  private[graft] def publishLoop(root: String, txnId: Option[Long],
       txnApp: Option[String], conflictRetries: Int,
       pinnedBase: Option[Long])(attempt: Long => Long): Option[Long] = {
     var n = 0
@@ -1927,15 +1791,15 @@ object TableCommit {
     * files carry. */
   val RowIdCol = "_row_id"
 
-  /** Move a staged file's `_row_id` footer min/max under the `rid:`
-    * key. A ZERO-ROW file (a write task whose range held no rows — it
-    * happens at scale) has no row groups and so no footer stats at
-    * all: it gets the degenerate empty range rather than an error. */
+  /** Move a staged file's `_row_id` min/max under the `rid:` key. A
+    * ZERO-ROW file (the one file an all-empty write leaves) has no
+    * stats at all: it gets the degenerate empty range rather than an
+    * error. */
   private def markRidStats(e: Entry): Entry = {
     val rid = e.stats.get(RowIdCol).getOrElse {
       if (e.rows.contains(0L)) ColStats("0", "-1")
       else throw new IllegalStateException(
-        s"parquet footer carried no $RowIdCol stats for ${e.path}")
+        s"staged file carried no $RowIdCol stats for ${e.path}")
     }
     e.copy(stats = e.stats - RowIdCol + (RidKey -> rid))
   }
@@ -2178,8 +2042,10 @@ object TableCommit {
 
   /** D1 partition-slice replace: slices present in `df` swap wholesale,
     * untouched slices carry their existing files forward. The replaced
-    * set is derived from the staged batch's own `_p=` directories, so
-    * "which slices does this load touch" is data-driven, never guessed.
+    * set is the staged batch's own layout key tags (the raw `partCol`
+    * values, ISO for DATE, `__HIVE_DEFAULT_PARTITION__` for NULL — the
+    * same tags a SQL INSERT writes), so "which slices does this load
+    * touch" is data-driven, never guessed.
     * Same read-modify-write discipline as [[commitAppend]]: the carried-
     * forward files come from the transaction-start version, verified
     * still current at publish. */
@@ -2187,7 +2053,8 @@ object TableCommit {
       partCol: String, statsCols: Seq[String] = Nil,
       retain: Int = 1, conflictRetries: Int = 0): Long = {
     val base = currentVersion(root).getOrElse(0L)
-    val staged = stageBatch(df, root, Some(partCol), statsCols)
+    val staged = stageBatch(df, root,
+      Some(partCol -> graft.sources.GraftRotate.Identity), statsCols)
     val replaced = staged.flatMap(_.part).toSet
     // X274: racing commits compose iff they never touch a replaced
     // slice — a racing write INTO one (append, delete, or another
@@ -2236,7 +2103,8 @@ object TableCommit {
       partCol: Option[String] = None,
       statsCols: Seq[String] = Nil): StagedBatch = {
     val base = currentVersion(root).getOrElse(0L)
-    StagedBatch(root, base, stageBatch(df, root, partCol, statsCols))
+    StagedBatch(root, base, stageBatch(df, root,
+      partCol.map(_ -> graft.sources.GraftRotate.Identity), statsCols))
   }
 
   /** AUDIT input: a DataFrame over ONLY the staged files — the exact
@@ -2426,7 +2294,7 @@ object TableCommit {
     * pass over the staged files computes each file's k bit positions
     * (executor-side, grouped by input file), the driver folds them into
     * m-bit maps (metadata-sized: ≤ m positions per file), and the
-    * entries publish with the bloom beside any footer stats. The pass
+    * entries publish with the bloom beside any column stats. The pass
     * costs one scan of the BATCH (never the table) — the standard
     * price of indexing at write time. */
   def commitAppendBloom(spark: SparkSession, df: DataFrame, root: String,
@@ -3260,7 +3128,7 @@ object TableCommit {
       schema.fieldNames.toSeq ++
         (if (preserveRowIds) Seq(RowIdCol) else Nil),
       schema.fieldNames.toSet, assignments)
-    val staged0 = stageImages(images, root,
+    val staged0 = stageBatch(images, root, layoutOf(root),
       if (preserveRowIds) statsCols :+ RowIdCol else statsCols)
     val staged =
       if (!preserveRowIds) staged0
@@ -3367,12 +3235,10 @@ object TableCommit {
     if (es.isEmpty) {
       // bootstrap: insert-only into a virgin table
       if (!preserveRowIds)
-        return publish(root, stageImages(src, root, statsCols),
+        return publish(root, stageBatch(src, root, layoutOf(root),
+          statsCols),
           retain, expected = Some(base))
-      val staged = stageImages(src, root, statsCols,
-        collectRows = true)
-      require(staged.forall(_.rows.isDefined),
-        "row-id tracking needs per-file row counts (unreadable footer?)")
+      val staged = stageBatch(src, root, layoutOf(root), statsCols)
       var acc = 0L
       val eff = staged.map { e =>
         val b = acc; acc += e.rows.get; e.copy(baseRowId = Some(b))
@@ -3433,7 +3299,7 @@ object TableCommit {
             schema.fieldNames.toSeq ++
               (if (withIds) Seq(RowIdCol) else Nil),
             schema.fieldNames.toSet, assigns)
-          val staged = stageImages(upd, root,
+          val staged = stageBatch(upd, root, layoutOf(root),
             if (withIds) statsCols :+ RowIdCol else statsCols)
           if (withIds) staged.map(markRidStats) else staged
         case _ => Seq.empty
@@ -3443,7 +3309,7 @@ object TableCommit {
       val nmbs = nmbsRows(live)
       val encoded = dvEncodeDistributed(spark, root,
         allVictimPos(live), existingDvByLeaf(es), inlineDvMax)
-      val staged = stageImages(src, root, statsCols) ++
+      val staged = stageBatch(src, root, layoutOf(root), statsCols) ++
         nmbsImages(nmbs, withIds = false)
       publishRebasing(root, base,
         build = cur => applyEncodedDv(cur, encoded) ++ staged,
@@ -3468,13 +3334,11 @@ object TableCommit {
       val fresh = src.join(
         hinted(vicIds.select(keyCols.map(col): _*)), keyCols,
         "left_anti")
-      val stagedMatched = stageImages(matched, root,
+      val stagedMatched = stageBatch(matched, root, layoutOf(root),
         statsCols :+ RowIdCol).map(markRidStats) ++
         nmbsImages(nmbs, withIds = true)
-      val stagedFresh0 = stageImages(fresh, root, statsCols,
-        collectRows = true)
-      require(stagedFresh0.forall(_.rows.isDefined),
-        "row-id tracking needs per-file row counts (unreadable footer?)")
+      val stagedFresh0 = stageBatch(fresh, root, layoutOf(root),
+        statsCols)
       var acc = rowIdHighWaterAt(root, base)
       val stagedFresh = stagedFresh0.map { e =>
         val b = acc; acc += e.rows.get; e.copy(baseRowId = Some(b))
@@ -4375,8 +4239,8 @@ object TableCommit {
       n: Int): org.apache.spark.sql.Column = {
     // VERDICT r15 task 7: the codegen'd Invoke of the canonical bound
     // function — no boxed Scala UDF in the 100×-file rewrite path.
-    // NULL layout values propagate to a NULL bucket (→ the default
-    // partition dir, whose unparseable tag degrades the layout proof
+    // NULL layout values propagate to a NULL bucket (→ the
+    // `__HIVE_DEFAULT_PARTITION__` tag, which degrades the layout proof
     // losslessly) — a rewrite must never die mid-commit on data a
     // plain append would accept
     df.schema(c).dataType match {
@@ -4389,111 +4253,15 @@ object TableCommit {
     }
   }
 
-  /** X321: stage `df` rotated per BUCKET of `c` — the `_p` staging
-    * channel carries the computed id (partitionBy excludes it from
-    * the file data), and the entries republish with the namespaced
-    * `bucket=<id>` layout proof the clustered scan verifies. A file
-    * whose dir tag is not a bucket id (the NULL-key default
-    * partition) keeps its raw tag — the proof then fails for that
-    * file and the scan degrades losslessly, exactly the [[stageImages]]
-    * contract. */
-  private def stageBucketed(df: DataFrame, root: String, c: String,
-      n: Int, statsCols: Seq[String],
-      collectRows: Boolean = false): Seq[Entry] =
-    stageBatch(df.withColumn("_p", bucketExpr(df, c, n)), root,
-      Some("_p"), statsCols, collectRows = collectRows)
-      .map(e => e.copy(part = e.part.map(p =>
-        p.toIntOption.fold(p)(graft.sources.GraftBucketPart.render))))
-
   /** X327: the canonical time transform as a CODEGEN'D Column — an
     * `Invoke` of the catalog function's MAGIC overload, so maintenance
     * rewrites bin rows with the EXACT function the write rotation and
     * the SQL scalar compute (one definition, no drift) and stay inside
-    * whole-stage codegen. NULL timestamps propagate to a NULL key →
-    * the default staging dir → an unparseable tag → the layout proof
-    * fails for that file, losslessly. */
+    * whole-stage codegen. NULL timestamps propagate to a NULL bin,
+    * like the write rotation's NULL key. */
   private def timeCol(c: String,
       unit: String): org.apache.spark.sql.Column =
     graft.sources.GraftLayoutExprs.timeCol(unit, col(c))
-
-  /** X327: stage `df` rotated per TIME bin of `c` — the `_p` staging
-    * channel carries the transform value (ISO date for `days`, the
-    * int bin otherwise) and entries republish with the namespaced
-    * `<unit>=<key>` proof the clustered scan verifies; the TIMESTAMP
-    * column's stats ride so DML pruning and range drops keep working
-    * after a rewrite. */
-  private def stageTimeRotated(df: DataFrame, root: String, c: String,
-      unit: String, statsCols: Seq[String],
-      collectRows: Boolean = false): Seq[Entry] =
-    stageBatch(df.withColumn("_p", timeCol(c, unit)), root,
-      Some("_p"), (statsCols :+ c).distinct, collectRows = collectRows)
-      .map(e => e.copy(part = e.part.map(p =>
-        graft.sources.GraftTimePart.retag(unit, p))))
-
-  /** X328: stage `df` rotated per TUPLE of identity columns — one
-    * `_p<i>` staging channel per column (partitionBy excludes them
-    * from the file data; the real columns survive inside), entries
-    * re-tagged `c0=v0/c1=v1` from the dir segments, every layout
-    * column's stats carried (the per-column min == max witness the
-    * clustered scan proves). */
-  private def stageTuple(df: DataFrame, root: String,
-      cols: Seq[String], statsCols: Seq[String],
-      collectRows: Boolean = false): Seq[Entry] = {
-    require(statsCols.forall(c => !c.contains(":")),
-      s"stats column names may not contain ':' (reserved for engine " +
-        s"metadata channels): ${statsCols.filter(_.contains(":"))}")
-    val batch = s"data/b_${UUID.randomUUID().toString.replace("-", "")}"
-    val dest = s"$root/$batch"
-    val withP = cols.zipWithIndex.foldLeft(df) { case (d, (c, i)) =>
-      d.withColumn(s"_p$i", col(c)) }
-    withP.write.partitionBy(cols.indices.map(i => s"_p$i"): _*)
-      .parquet(dest)
-    val conf = df.sparkSession.sessionState.newHadoopConf()
-    val base = Paths.get(dest)
-    val allStats = (statsCols ++ cols).distinct
-    parFiles(walkFiles(base)
-      .filter(p => Files.isRegularFile(p) &&
-        p.getFileName.toString.endsWith(".parquet"))) { p =>
-        val rel = base.relativize(p).toString
-        val segs = rel.split('/').filter(_.startsWith("_p"))
-        val part =
-          if (segs.length == cols.size)
-            Some(segs.toSeq.map { s0 =>
-              val eq = s0.indexOf('=')
-              val i = s0.substring(2, eq).toInt
-              s"${cols(i)}=${s0.substring(eq + 1)}"
-            }.mkString("/"))
-          else None
-        val (stats, rows) = footerStats(conf, p, allStats)
-        Entry(s"$batch/$rel", part, stats,
-          rows.orElse(if (collectRows) footerRowCount(conf, p) else None))
-      }.sortBy(_.path)
-  }
-
-  /** X322: stage a DML/MERGE image batch honoring the table's DECLARED
-    * layout — identity partition (rotate per value, stats carry the
-    * min == max witness) or bucket (rotate per canonical id) — so an
-    * UPDATE or a daily MERGE on a partitioned table keeps the X314
-    * zero-shuffle-join proof instead of silently degrading it. Roots
-    * without a catalog layout stage exactly as before; a NULL or
-    * changed layout value lands the image in its correct (possibly
-    * unprovable) slice — degradation stays lossless. */
-  private def stageImages(df: DataFrame, root: String,
-      statsCols: Seq[String], collectRows: Boolean = false): Seq[Entry] =
-    graft.sources.GraftCatalog.partitionLayoutOf(root) match {
-      case Some((c, graft.sources.GraftRotate.Bucket(n))) =>
-        stageBucketed(df, root, c, n, statsCols, collectRows)
-      case Some((c, graft.sources.GraftRotate.Time(u))) =>
-        stageTimeRotated(df, root, c, u, statsCols, collectRows)
-      case Some((c, graft.sources.GraftRotate.Tuple(rest))) =>
-        stageTuple(df, root, c +: rest, statsCols, collectRows)
-      case Some((c, graft.sources.GraftRotate.Identity)) =>
-        // statsCols gains the layout column (min == max witness), so
-        // footer stats — and with them row counts — are always read
-        stageBatch(df, root, Some(c), (statsCols :+ c).distinct,
-          collectRows = collectRows)
-      case None => stageBatch(df, root, None, statsCols, collectRows)
-    }
 
   /** Shared whole-snapshot rewrite body behind [[commitCompact]] and
     * [[commitCluster]] — the two differ ONLY in `arrange` (the layout
@@ -4511,38 +4279,11 @@ object TableCommit {
     // X322 (review finding): EVERY whole-snapshot rewrite preserves a
     // declared layout, not just the verbs that thread it explicitly —
     // a z-order cluster on a partitioned table must not silently hand
-    // its joins the shuffle back. Caller-passed layout wins; absent
-    // one, the root's own declaration applies.
-    val (effPart, effBucket, effTime, effTuple) =
-      if (partCol.isDefined || bucketSpec.isDefined)
-        (partCol, bucketSpec, None, None)
-      else graft.sources.GraftCatalog.partitionLayoutOf(root) match {
-        case Some((c, graft.sources.GraftRotate.Bucket(n))) =>
-          (None, Some((c, n)), None, None)
-        case Some((c, graft.sources.GraftRotate.Time(u))) =>
-          (None, None, Some((c, u)), None)
-        case Some((c, graft.sources.GraftRotate.Tuple(rest))) =>
-          (None, None, None, Some(c +: rest))
-        case Some((c, graft.sources.GraftRotate.Identity)) =>
-          (Some(c), None, None, None)
-        case None => (None, None, None, None)
-      }
-    val effStats = (statsCols ++ effPart ++ effTime.map(_._1) ++
-      effTuple.toSeq.flatten).distinct
-    def stage(arranged: DataFrame, stats: Seq[String]): Seq[Entry] =
-      (effBucket, effTime, effTuple) match {
-        case (Some((c, n)), _, _) => stageBucketed(arranged, root, c,
-          n, stats, collectRows = true)
-        case (_, Some((c, u)), _) => stageTimeRotated(arranged, root,
-          c, u, stats, collectRows = true)
-        case (_, _, Some(cs)) => stageTuple(arranged, root, cs, stats,
-          collectRows = true)
-        case _ => stageBatch(arranged, root, effPart, stats,
-          collectRows = true)
-      }
+    // its joins the shuffle back
+    val layout = layoutOf(root, partCol, bucketSpec)
     if (!preserveRowIds) {
       val arranged = arrange(readLive(spark, root, None, es))
-      publish(root, stage(arranged, effStats),
+      publish(root, stageBatch(arranged, root, layout, statsCols),
         retain, expected = Some(base))
     } else {
       // X275: an id-preserving rewrite — read live rows WITH their
@@ -4554,7 +4295,7 @@ object TableCommit {
       val dataSchema = StructType(
         inferred.fields.filterNot(_.name == RowIdCol))
       val arranged = arrange(readWithRowIds(spark, root, dataSchema))
-      val staged = stage(arranged, effStats :+ RowIdCol)
+      val staged = stageBatch(arranged, root, layout, statsCols :+ RowIdCol)
       // pin the PRE-rewrite high-water into the durable header: the
       // born entries being melted still witness it (brid + rows covers
       // deleted positions), the materialized outputs may not (ADVICE
@@ -4619,37 +4360,10 @@ object TableCommit {
       preserveRowIds: Boolean = false,
       partCol: Option[String] = None,
       bucketSpec: Option[(String, Int)] = None): Long = {
-    // X318/X321/X322: a layout-preserving melt stages per partition
-    // value (or per bucket) so the rewritten files stay single-keyed
-    // (the X314 SPJ proof) and carries the column's stats; absent a
-    // caller-passed layout, the root's own declaration applies
-    val (effPart, effBucket, effTime, effTuple) =
-      if (partCol.isDefined || bucketSpec.isDefined)
-        (partCol, bucketSpec, None, None)
-      else graft.sources.GraftCatalog.partitionLayoutOf(root) match {
-        case Some((c, graft.sources.GraftRotate.Bucket(nb))) =>
-          (None, Some((c, nb)), None, None)
-        case Some((c, graft.sources.GraftRotate.Time(u))) =>
-          (None, None, Some((c, u)), None)
-        case Some((c, graft.sources.GraftRotate.Tuple(rest))) =>
-          (None, None, None, Some(c +: rest))
-        case Some((c, graft.sources.GraftRotate.Identity)) =>
-          (Some(c), None, None, None)
-        case None => (None, None, None, None)
-      }
-    val allStats = (statsCols ++ effPart ++ effBucket.map(_._1) ++
-      effTime.map(_._1) ++ effTuple.toSeq.flatten).distinct
-    def stage(df: DataFrame, stats: Seq[String]): Seq[Entry] =
-      (effBucket, effTime, effTuple) match {
-        case (Some((c, n)), _, _) => stageBucketed(df, root, c, n,
-          stats, collectRows = true)
-        case (_, Some((c, u)), _) => stageTimeRotated(df, root, c, u,
-          stats, collectRows = true)
-        case (_, _, Some(cs)) => stageTuple(df, root, cs, stats,
-          collectRows = true)
-        case _ => stageBatch(df, root, effPart, stats,
-          collectRows = true)
-      }
+    // X318/X321/X322: a layout-preserving melt stages per key so the
+    // rewritten files stay single-keyed (the X314 SPJ proof)
+    val layout = layoutOf(root, partCol, bucketSpec)
+    val stats = (statsCols ++ partCol).distinct
     require(maxDeadRatio >= 0.0 && maxDeadRatio < 1.0,
       s"bad maxDeadRatio $maxDeadRatio (want [0, 1))")
     val base = currentVersion(root).getOrElse(0L)
@@ -4672,7 +4386,7 @@ object TableCommit {
       val arranged =
         if (targetFiles > 0) live.coalesce(targetFiles) else live
       publish(root,
-        kept ++ stage(arranged, allStats),
+        kept ++ stageBatch(arranged, root, layout, stats),
         retain, expected = Some(base))
     } else {
       // X275: id-preserving melt — rewritten rows carry `_row_id`
@@ -4687,7 +4401,7 @@ object TableCommit {
         .select((dataSchema.fieldNames.toSeq :+ RowIdCol).map(col): _*)
       val arranged =
         if (targetFiles > 0) cur.coalesce(targetFiles) else cur
-      val staged = stage(arranged, allStats :+ RowIdCol)
+      val staged = stageBatch(arranged, root, layout, stats :+ RowIdCol)
         .map(markRidStats)
       publish(root, kept ++ staged, retain, expected = Some(base),
         ridHighWater = Some(rowIdHighWaterAt(root, base)))
@@ -4747,7 +4461,11 @@ object TableCommit {
           "could silently keep rows of an overwritten partition. Run " +
           "graft_compact('<root>', n) once to restore the proof")
       val keep = current.filter(e => !keyOf(e).exists(writtenKeys))
-      publish(root, keep ++ staged, retain, expected = Some(base))
+      // the txn rides the same publish as the data, exactly as in
+      // publishAppend, so a replay finds it applied
+      publish(root, keep ++ staged, retain, expected = Some(base),
+        txnId = if (txnApp.isEmpty) txnId else None,
+        txnApp = txnApp.flatMap(a => txnId.map(a -> _)))
     }
   }
 
@@ -4847,8 +4565,8 @@ object TableCommit {
     readLive(spark, root, None, es)
   }
 
-  /** Manifest-pruned read: keep only files whose partition-dir segment
-    * passes `keep` — file-listing-time pruning from table metadata, no
+  /** Manifest-pruned read: keep only files whose layout key tag passes
+    * `keep` — file-listing-time pruning from table metadata, no
     * directory walk, no post-scan filter. Unpartitioned files (part =
     * None) always survive. */
   def readPruned(spark: SparkSession, root: String, schema: StructType)(

@@ -2476,8 +2476,8 @@ object Relational {
     * metadata — the micro-partition pruning that makes the reference's
     * daily-date queries cheap on its warehouse
     * (/root/reference/src/snowflake_loader.py:125-160), done here from
-    * per-file min/max stats the commit wrote into the manifest
-    * (`engine/TableCommit.footerStats`): a `WHERE date BETWEEN …` over a
+    * per-file min/max stats the commit wrote into the manifest (the
+    * write tasks' stats, `sources/GraftDataWriter`): a `WHERE date BETWEEN …` over a
     * 100k-file table consults the manifest, not 100k footers and not a
     * directory listing. The fixture commits orders RANGE-PARTITIONED on
     * the ISO date string (tight, disjoint per-file ranges — what a

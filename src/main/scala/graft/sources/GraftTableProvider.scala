@@ -42,14 +42,13 @@ import graft.engine.TableCommit
   * is deliberately write-only — `spark.read.format("graft-table")` has
   * no capability, and `inferSchema` says so loudly.
   *
-  * Executor-side parquet writing emits each `InternalRow` straight into
-  * parquet-hadoop's column writers ([[GraftDataWriter]]; container
-  * writers ARE available to library code without Spark's private writer
-  * machinery), covering the primitive column types (long/int/double/
-  * string) the commit-layer gates use; richer logical types would
-  * extend `messageType`. Row counts ride the commit message into
-  * `Entry.rows`, so metadata-only COUNT(*) (X218) works on DSv2-written
-  * tables too. */
+  * The task writers ([[GraftDataWriter]], and [[GraftPartitionedDataWriter]]
+  * for a layout) are the only writers of table data files: the engine's
+  * commit verbs stage through them too ([[GraftDataWriter.stage]]).
+  * Rows go through Spark's own `ParquetWriteSupport`, so every Catalyst
+  * type is written. Row counts and canonical stats ride the commit
+  * message into `Entry.rows` and `Entry.stats`, so metadata-only
+  * COUNT(*) (X218) and stat pruning work on every table. */
 class GraftTableProvider extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
   override def shortName(): String = "graft-table"
@@ -151,15 +150,17 @@ private[graft] class GraftWriteTable(schema0: StructType,
         dynamicParts = true; this
       }
       override def build(): Write = {
-        val retain = Option(properties.get("retain")).map(_.toInt).getOrElse(1)
-        val failAt = Option(properties.get("failatpartition")).map(_.toInt)
-        val retries = Option(properties.get("conflictretries"))
-          .map(_.toInt).getOrElse(0)
-        val crashAfter = Option(properties.get("crashafterepoch"))
-          .map(_.toLong)
-        val txnId = Option(properties.get("txnid")).map(_.toLong)
-        val txnApp = Option(properties.get("txnappid"))
-        val txnMigrate = Option(properties.get("txnmigrate"))
+        // a path write's options are the table's properties; a catalog
+        // write (`writeTo(t).option(...)`) carries them in the write info
+        def opt(k: String): Option[String] =
+          Option(info.options().get(k)).orElse(Option(properties.get(k)))
+        val retain = opt("retain").map(_.toInt).getOrElse(1)
+        val failAt = opt("failatpartition").map(_.toInt)
+        val retries = opt("conflictretries").map(_.toInt).getOrElse(0)
+        val crashAfter = opt("crashafterepoch").map(_.toLong)
+        val txnId = opt("txnid").map(_.toLong)
+        val txnApp = opt("txnappid")
+        val txnMigrate = opt("txnmigrate")
         txnMigrate.foreach(m => require(m == "scalar" || m == "fresh",
           s"option 'txnmigrate' must be 'scalar' or 'fresh', got '$m'"))
         // the writer's field names are the PHYSICAL ones (rows are
@@ -235,10 +236,11 @@ private class GraftWrite(root: String, schema: StructType,
   }
 }
 
+/** One written file as its task describes it: path, row count, the
+  * canonical stats it tracked and its layout tag. */
 private final case class GraftCommitMessage(relPath: String, rows: Long,
     stats: Map[String, (String, String)] = Map.empty,
-    part: Option[String] = None)
-    extends WriterCommitMessage {
+    part: Option[String] = None) {
   def entry: TableCommit.Entry =
     TableCommit.Entry(relPath, part,
       stats = stats.map { case (c, (mn, mx)) =>
@@ -248,19 +250,34 @@ private final case class GraftCommitMessage(relPath: String, rows: Long,
 
 private object GraftCommitMessage {
   /** The manifest entries a job's (or epoch's) task messages carry,
-    * in path order. */
-  def entries(messages: Array[WriterCommitMessage]): Seq[TableCommit.Entry] =
-    messages.toSeq.flatMap {
-      case m: GraftCommitMessage => Seq(m.entry)
-      // X316/X323: a partitioned task commits one message per rotated file
+    * in path order. Only partition 0 writes a file without rows (see
+    * [[GraftDataWriter]]); that file is kept only when no task wrote
+    * a row, and deleted otherwise — an unpublished file, so a failed
+    * delete leaves an orphan for the aged vacuum. */
+  def entries(root: String,
+      messages: Array[WriterCommitMessage]): Seq[TableCommit.Entry] = {
+    val all = messages.toSeq.flatMap {
       case GraftMultiCommitMessage(fs) => fs.map(_.entry)
       case _ => Seq.empty
     }.sortBy(_.path)
+    val (empty, full) = all.partition(_.rows.contains(0L))
+    if (full.isEmpty) all
+    else {
+      // through the Hadoop file system, which drops the checksum too
+      empty.foreach { e =>
+        val p = new org.apache.hadoop.fs.Path(
+          java.nio.file.Paths.get(root, e.path).toUri)
+        try p.getFileSystem(GraftDataWriter.sharedConf).delete(p, false)
+        catch { case NonFatal(_) => () }
+      }
+      full
+    }
+  }
 }
 
-/** X316: one partitioned task's handshake — one payload per file the
-  * value rotation produced (each single-valued on the partition
-  * column by construction). */
+/** A task's handshake: one payload per file it wrote — none, one, or
+  * (X316, a partitioned task) one per rotated key, each single-valued
+  * on the layout by construction. */
 private final case class GraftMultiCommitMessage(
     files: Seq[GraftCommitMessage]) extends WriterCommitMessage
 
@@ -283,7 +300,8 @@ private class GraftBatchWrite(root: String, schema: StructType,
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
-    GraftWriterFactory(root, batch, schema, failAt, partIdx)
+    GraftWriterFactory(root, batch, schema, schema.fieldNames.toSet,
+      partIdx, failAt = failAt)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     // X288 idempotent BATCH write (`option("txnid", n)` — the Delta
@@ -296,7 +314,7 @@ private class GraftBatchWrite(root: String, schema: StructType,
     // legacy stream or a different pipeline that advanced it past this
     // job's id would silently swallow a genuinely fresh batch as a
     // replay. With an app id, only THIS app's own high-water gates.
-    val entries = GraftCommitMessage.entries(messages)
+    val entries = GraftCommitMessage.entries(root, messages)
     val published =
       if (dynamicParts)
         // X331: replace exactly the written layout keys
@@ -392,7 +410,8 @@ private class GraftStreamingWrite(root: String, schema: StructType,
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    GraftStreamWriterFactory(root, batch, schema, failAt, partIdx)
+    GraftWriterFactory(root, batch, schema, schema.fieldNames.toSet,
+      partIdx, failAt = failAt)
 
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
@@ -413,24 +432,15 @@ private class GraftStreamingWrite(root: String, schema: StructType,
          if scalarHw >= epochId) {
       txnMigrate match {
         case Some("scalar") =>
-          var expected = TableCommit.currentVersion(root).getOrElse(0L)
-          var seeded = false
-          while (!seeded) {
-            try {
-              TableCommit.publish(root,
-                if (expected == 0L) Seq.empty
-                else TableCommit.entriesAtVersion(root, expected),
-                retain, expected = Some(expected),
-                txnApp = Some(a -> scalarHw))
-              seeded = true
-            } catch {
-              case _: TableCommit.ConcurrentCommitException =>
-                expected = TableCommit.currentVersion(root).getOrElse(0L)
-                // a twin seeded/applied first
-                if (TableCommit.txnApplied(root, Some(epochId), txnApp)) {
-                  sweepEpoch(epochId); crashIfArmed(epochId); return
-                }
-            }
+          // the one bounded retry loop: a lost race re-reads the head,
+          // and a twin that seeded (or applied this epoch) first ends
+          // it as a no-op
+          TableCommit.publishLoop(root, Some(epochId), txnApp,
+              conflictRetries, pinnedBase = None) { base =>
+            TableCommit.publish(root,
+              if (base == 0L) Seq.empty
+              else TableCommit.entriesAtVersion(root, base),
+              retain, expected = Some(base), txnApp = Some(a -> scalarHw))
           }
           // the namespace now carries the scalar watermark — this
           // epoch (≤ scalarHw by the guard) is a replay
@@ -450,7 +460,8 @@ private class GraftStreamingWrite(root: String, schema: StructType,
     // per micro-batch, not O(table). The epoch id is the txn, so a
     // replayed epoch (or one a twin writer published first) lands
     // nothing and its staged files are swept as debris.
-    TableCommit.publishAppend(root, GraftCommitMessage.entries(messages),
+    TableCommit.publishAppend(root,
+        GraftCommitMessage.entries(root, messages),
         retain, txnId = Some(epochId), txnApp = txnApp,
         conflictRetries = conflictRetries) match {
       case Some(_) => published.add(epochId)
@@ -481,90 +492,140 @@ private class GraftStreamingWrite(root: String, schema: StructType,
     TableCommit.dropStaged(root, Seq(epochDir(epochId)))
 }
 
-private final case class GraftStreamWriterFactory(root: String,
-    batch: String, schema: StructType, failAt: Option[Int],
-    partIdx: Option[(Seq[Int], GraftRotate)] = None)
-    extends StreamingDataWriterFactory {
+/** What every task writer of one write shares: the staged directory,
+  * the row schema, the columns whose stats ride the commit messages,
+  * and the layout the writers rotate files on (positional indexes
+  * plus the [[GraftRotate]]). The connector's batch and streaming
+  * facets and the engine's commit verbs ([[GraftDataWriter.stage]])
+  * all write table data files through it. A streaming epoch writes
+  * under its own `e<epoch>` subdirectory. `refuseNullKeys` is the SQL
+  * facet's loud refusal of NULL layout values; the commit verbs tag
+  * them [[GraftPartitionedDataWriter.NullTag]] instead. Built on the
+  * driver, where `parquetConf` captures the session's parquet writer
+  * settings. */
+private final case class GraftWriterFactory(root: String, batch: String,
+    schema: StructType, tracked: Set[String],
+    layout: Option[(Seq[Int], GraftRotate)] = None,
+    refuseNullKeys: Boolean = true, failAt: Option[Int] = None,
+    parquetConf: Map[String, String] = GraftDataWriter.sessionParquetConf())
+    extends DataWriterFactory with StreamingDataWriterFactory {
+  override def createWriter(partitionId: Int,
+      taskId: Long): DataWriter[InternalRow] = {
+    val out = new GraftFileOut(schema, parquetConf)
+    if (layout.isDefined)
+      new GraftPartitionedDataWriter(this, partitionId, taskId, out)
+    else new GraftDataWriter(this, partitionId, taskId, out)
+  }
+  // X323: a streaming sink into a PARTITIONED/BUCKETED catalog table
+  // rotates per key exactly like the batch write — an unsorted epoch
+  // just costs extra files, never a multi-keyed one
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    partIdx match {
-      // X323: a streaming sink into a PARTITIONED/BUCKETED catalog
-      // table rotates per key exactly like the batch write — an
-      // unsorted epoch just costs extra files, never a multi-keyed
-      // one, so replication into a layout table keeps its SPJ proof
-      case Some((i, buckets)) =>
-        new GraftPartitionedDataWriter(root, s"$batch/e$epochId",
-          schema, partitionId, taskId, failAt, i, buckets)
-      case None =>
-        new GraftDataWriter(root, s"$batch/e$epochId", schema,
-          partitionId, taskId, failAt)
-    }
+    copy(batch = s"$batch/e$epochId").createWriter(partitionId, taskId)
 }
 
-private final case class GraftWriterFactory(root: String, batch: String,
-    schema: StructType, failAt: Option[Int],
-    partIdx: Option[(Seq[Int], GraftRotate)] = None)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int,
-      taskId: Long): DataWriter[InternalRow] =
-    partIdx match {
-      case Some((is, rotate)) =>
-        new GraftPartitionedDataWriter(root, batch, schema, partitionId,
-          taskId, failAt, is, rotate)
-      case None =>
-        new GraftDataWriter(root, batch, schema, partitionId, taskId,
-          failAt)
-    }
+/** The parquet output of one task: Spark's own `ParquetWriteSupport`
+  * (every Catalyst type, the row schema in the footer) over a
+  * task-local copy of [[GraftDataWriter.sharedConf]] plus the session's
+  * `parquet.*` settings. TIMESTAMP is always INT64 micros — the form
+  * the stats channel's micros text and the time layouts speak — and
+  * the codec and legacy-format flags come from the session (the SQL
+  * conf Spark propagates to tasks). */
+private final class GraftFileOut(schema: StructType,
+    parquetConf: Map[String, String]) {
+  import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetWriteSupport}
+  import org.apache.spark.sql.internal.SQLConf
+  private lazy val conf = {
+    val sql = SQLConf.get
+    val c = new org.apache.hadoop.conf.Configuration(
+      GraftDataWriter.sharedConf)
+    parquetConf.foreach { case (k, v) => c.set(k, v) }
+    ParquetWriteSupport.setSchema(schema, c)
+    // the session flags Spark's own parquet write copies into its conf
+    Seq(SQLConf.PARQUET_WRITE_LEGACY_FORMAT,
+      SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED,
+      SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE)
+      .foreach(e => c.set(e.key, sql.getConf(e).toString))
+    c.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key,
+      SQLConf.ParquetOutputTimestampType.TIMESTAMP_MICROS.toString)
+    c
+  }
+  private lazy val codec =
+    org.apache.parquet.hadoop.metadata.CompressionCodecName.fromConf(
+      ParquetOptions.getParquetCompressionCodecName(
+        SQLConf.get.parquetCompressionCodec))
+
+  def open(abs: java.nio.file.Path)
+      : org.apache.hadoop.mapreduce.RecordWriter[Void, InternalRow] =
+    new org.apache.parquet.hadoop.ParquetOutputFormat[InternalRow](
+      new ParquetWriteSupport()).getRecordWriter(conf,
+      new org.apache.hadoop.fs.Path(abs.toUri), codec,
+      org.apache.parquet.hadoop.ParquetFileWriter.Mode.CREATE)
 }
 
 /** One task attempt's writer: streams rows into an attempt-unique file
   * (partitionId × taskId — Spark's taskId is unique per ATTEMPT, so a
   * retry never truncates a file a zombie attempt still holds open, the
-  * ADVICE-r9 avro lesson applied from the start). */
-private class GraftDataWriter(root: String, batch: String,
-    schema: StructType, partitionId: Int, taskId: Long,
-    failAt: Option[Int], suffix: String = "")
+  * ADVICE-r9 avro lesson applied from the start). The file opens on
+  * the first row: a task that writes none leaves no file and sends no
+  * entry — except partition 0, which always writes one, Spark's own
+  * rule, so an all-empty write still leaves a schema-bearing file
+  * ([[GraftCommitMessage.entries]] drops it when any task wrote rows).
+  * Partition 0 opens its file at once, as Spark's writer does: a file
+  * that exists before the task asks to commit is one a job abort's
+  * sweep can see. */
+private class GraftDataWriter(f: GraftWriterFactory, partitionId: Int,
+    taskId: Long, out: GraftFileOut, suffix: String = "")
     extends DataWriter[InternalRow] {
-
-  private val relPath = s"$batch/part-$partitionId-$taskId$suffix.parquet"
-  private val msgType = GraftDataWriter.messageType(schema)
+  private val schema = f.schema
+  private val relPath =
+    s"${f.batch}/part-$partitionId-$taskId$suffix.parquet"
+  private var file: org.apache.hadoop.mapreduce.RecordWriter[
+    Void, InternalRow] = null
   private var rows = 0L
-  // X298: per-column min/max tracked AS WRITTEN (the footer-stats
-  // analogue), riding the commit message into the manifest's X207
-  // stats channel — so SQL-INSERTed tables get planning-time file
-  // pruning and X290 aggregate pushdown exactly like Scala-API
-  // appends with statsCols. Canonical string forms match the stats
-  // comparator (decimal text for integers, Double.toString for
-  // floats, raw text for strings). Colon-named columns are skipped
+  // X298: per-column min/max tracked AS WRITTEN, riding the commit
+  // message into the manifest's X207 stats channel, so every file
+  // gets planning-time pruning and X290 aggregate pushdown. Canonical
+  // string forms match the stats comparator (the ColStats contract):
+  // decimal text for integers and TIMESTAMP micros, ISO for DATE,
+  // Double.toString for floats (FLOAT widened first), raw text for
+  // strings. Types the comparator does not order (decimal, NTZ,
+  // boolean, binary, nested) carry no stats: pruning keeps such files,
+  // so omitting them is lossless. Colon-named columns are skipped
   // (the channel reserves ':' for engine keys).
   // ADVICE r15: min/max witness NON-NULL rows only — track whether any
   // null was written so commit() can mint the `nn:<col>` null-free
   // marker the all-rows consumers (X324 whole-file DML drop, X314
   // identity-cluster proof) require beside a min == max envelope
   private val statSawNull = new Array[Boolean](schema.fields.length)
+  // a NaN poisons the column's envelope: Spark orders NaN above every
+  // value, so an envelope that skipped it would let `x > v` prune a
+  // file holding NaN rows
+  private val statSawNaN = new Array[Boolean](schema.fields.length)
   // r16 write-path rewrite (guide §1.2 step 2): the per-row loop is the
-  // hottest code in every facet write (SQL INSERT/CTAS, DSv2 batch,
-  // streaming epochs, rotation files), so the type dispatch is resolved
-  // ONCE into an int tag and the per-row work is a branch on it — no
-  // per-row pattern match, no closure, no boxing. Tags: -1 unsupported,
-  // 0 long-kind (LongType/TimestampType), 1 int-kind (IntegerType/
-  // DateType), 2 double, 3 string.
-  private val typeTag: Array[Int] = schema.fields.map(_.dataType match {
-    case LongType | TimestampType => 0
-    case IntegerType | DateType   => 1
-    case DoubleType               => 2
-    case StringType               => 3
-    case _                        => -1
-  })
-  private val statable = schema.fields.zipWithIndex.map { case (f, i) =>
-    !f.name.contains(":") && typeTag(i) >= 0
-  }
-  // typed min/max slots (long-kind and int-kind share the long pair) so
-  // stat tracking never allocates on the row path; strings hold cloned
+  // hottest code in every write, so the type dispatch is resolved ONCE
+  // into an int tag and the per-row work is a branch on it — no
+  // per-row pattern match, no closure, no boxing. Tags: -1 untracked,
+  // 0-3 long-kind (LongType/TimestampType, IntegerType/DateType,
+  // ShortType, ByteType), 4-5 double-kind (DoubleType, FloatType),
+  // 6 string.
+  private val typeTag: Array[Int] = schema.fields.map(fd =>
+    if (!f.tracked(fd.name) || fd.name.contains(":")) -1
+    else fd.dataType match {
+      case LongType | TimestampType => 0
+      case IntegerType | DateType   => 1
+      case ShortType                => 2
+      case ByteType                 => 3
+      case DoubleType               => 4
+      case FloatType                => 5
+      case StringType               => 6
+      case _                        => -1
+    })
+  // typed min/max slots (all long-kinds share the long pair) so stat
+  // tracking never allocates on the row path; strings hold cloned
   // UTF8Strings (row buffers are reused by the caller) compared in
   // UTF-8 byte order — UTF8String.compareTo IS binary order, matching
-  // the prune side and parquet footer stats (ADVICE r14), never Java's
-  // UTF-16 code-unit order
+  // the prune side (ADVICE r14), never Java's UTF-16 code-unit order
   private val statSet = new Array[Boolean](schema.fields.length)
   private val statMinL = new Array[Long](schema.fields.length)
   private val statMaxL = new Array[Long](schema.fields.length)
@@ -573,99 +634,92 @@ private class GraftDataWriter(root: String, batch: String,
   private val statMinS = new Array[UTF8String](schema.fields.length)
   private val statMaxS = new Array[UTF8String](schema.fields.length)
 
-  private lazy val writer = {
-    val p = new org.apache.hadoop.fs.Path(
-      java.nio.file.Paths.get(root, relPath).toUri)
-    new GraftDataWriter.RowWriterBuilder(p, msgType, typeTag,
-      schema.fields.map(_.name))
-      // one shared read-only Configuration: constructing a fresh one
-      // loads the Hadoop XML defaults per FILE, which the rotation
-      // writer (one file per layout key) paid hundreds of times per
-      // INSERT
-      .withConf(GraftDataWriter.sharedConf)
-      .build()
-  }
+  private def open(): Unit =
+    if (file == null) file = out.open(java.nio.file.Paths.get(f.root, relPath))
+  if (partitionId == 0 && suffix.isEmpty) open()
 
   override def write(row: InternalRow): Unit = {
-    failAt.filter(_ == partitionId).foreach { p =>
+    f.failAt.filter(_ == partitionId).foreach { p =>
       throw new RuntimeException(s"injected task failure at partition $p")
     }
+    open()
     val n = typeTag.length
     var i = 0
     while (i < n) {
-      if (row.isNullAt(i)) statSawNull(i) = true
-      else if (statable(i)) typeTag(i) match {
-        case 0 | 1 =>
-          val v = if (typeTag(i) == 0) row.getLong(i) else row.getInt(i).toLong
-          if (!statSet(i)) { statMinL(i) = v; statMaxL(i) = v; statSet(i) = true }
-          else {
-            if (v < statMinL(i)) statMinL(i) = v
-            if (v > statMaxL(i)) statMaxL(i) = v
-          }
-        case 2 =>
-          val v = row.getDouble(i)
-          // NaN never enters the envelope (parquet's own rule): a NaN
-          // min/max would order as "less than nothing" at prune time
-          // and silently drop matching files
-          if (!v.isNaN) {
-            if (!statSet(i)) { statMinD(i) = v; statMaxD(i) = v; statSet(i) = true }
-            else {
-              if (v < statMinD(i)) statMinD(i) = v
-              if (v > statMaxD(i)) statMaxD(i) = v
-            }
-          }
-        case _ =>
-          val v = row.getUTF8String(i)
-          if (!statSet(i)) {
-            val c = v.clone(); statMinS(i) = c; statMaxS(i) = c
-            statSet(i) = true
-          } else {
-            if (v.compareTo(statMinS(i)) < 0) statMinS(i) = v.clone()
-            if (v.compareTo(statMaxS(i)) > 0) statMaxS(i) = v.clone()
-          }
+      val t = typeTag(i)
+      if (t < 0) ()
+      else if (row.isNullAt(i)) statSawNull(i) = true
+      else if (t <= 3) {
+        val v = t match {
+          case 0 => row.getLong(i)
+          case 1 => row.getInt(i).toLong
+          case 2 => row.getShort(i).toLong
+          case _ => row.getByte(i).toLong
+        }
+        if (!statSet(i)) { statMinL(i) = v; statMaxL(i) = v; statSet(i) = true }
+        else {
+          if (v < statMinL(i)) statMinL(i) = v
+          if (v > statMaxL(i)) statMaxL(i) = v
+        }
+      } else if (t <= 5) {
+        val v = if (t == 4) row.getDouble(i) else row.getFloat(i).toDouble
+        if (v.isNaN) statSawNaN(i) = true
+        else if (!statSet(i)) {
+          statMinD(i) = v; statMaxD(i) = v; statSet(i) = true
+        } else {
+          if (v < statMinD(i)) statMinD(i) = v
+          if (v > statMaxD(i)) statMaxD(i) = v
+        }
+      } else {
+        val v = row.getUTF8String(i)
+        if (!statSet(i)) {
+          val c = v.clone(); statMinS(i) = c; statMaxS(i) = c
+          statSet(i) = true
+        } else {
+          if (v.compareTo(statMinS(i)) < 0) statMinS(i) = v.clone()
+          if (v.compareTo(statMaxS(i)) > 0) statMaxS(i) = v.clone()
+        }
       }
       i += 1
     }
-    writer.write(row)
+    file.write(null, row)
     rows += 1
   }
 
-  override def commit(): WriterCommitMessage = {
-    writer.close()
-    // canonical stat text per ColStats' contract: ISO for DATE
-    // (lexical = chronological), decimal text otherwise
-    def canon(i: Int, maxSide: Boolean): String =
-      schema.fields(i).dataType match {
-        case DateType => java.time.LocalDate
-          .ofEpochDay(if (maxSide) statMaxL(i) else statMinL(i)).toString
-        case IntegerType =>
-          (if (maxSide) statMaxL(i) else statMinL(i)).toString
-        case LongType | TimestampType =>
-          (if (maxSide) statMaxL(i) else statMinL(i)).toString
-        case DoubleType =>
-          (if (maxSide) statMaxD(i) else statMinD(i)).toString
-        case _ =>
-          (if (maxSide) statMaxS(i) else statMinS(i)).toString
-      }
-    val stats = schema.fields.indices.collect {
-      case i if statSet(i) =>
-        schema.fields(i).name -> (canon(i, maxSide = false),
-          canon(i, maxSide = true))
-    }.toMap
-    val witnessed = schema.fields.indices.collect {
-      case i if statSet(i) && !statSawNull(i) =>
-        (graft.engine.TableCommit.NullFreePrefix +
-          schema.fields(i).name) -> ("0", "0")
-    }.toMap
-    GraftCommitMessage(relPath, rows, stats ++ witnessed)
+  /** Close the file and describe it; None when no row arrived and
+    * `keepEmpty` is false (then no file was ever opened). */
+  def finish(keepEmpty: Boolean): Option[GraftCommitMessage] = {
+    if (file == null && !keepEmpty) return None
+    open()
+    file.close(null)
+    def canon(i: Int, maxSide: Boolean): String = typeTag(i) match {
+      case t if t <= 3 =>
+        val v = if (maxSide) statMaxL(i) else statMinL(i)
+        if (schema.fields(i).dataType == DateType)
+          java.time.LocalDate.ofEpochDay(v).toString
+        else v.toString
+      case t if t <= 5 => (if (maxSide) statMaxD(i) else statMinD(i)).toString
+      case _ => (if (maxSide) statMaxS(i) else statMinS(i)).toString
+    }
+    val enveloped = schema.fields.indices.filter(i =>
+      statSet(i) && !statSawNaN(i))
+    val stats = enveloped.map(i =>
+      schema.fields(i).name -> (canon(i, maxSide = false),
+        canon(i, maxSide = true))).toMap
+    val witnessed = enveloped.filterNot(statSawNull).map(i =>
+      (TableCommit.NullFreePrefix + schema.fields(i).name) -> ("0", "0"))
+    Some(GraftCommitMessage(relPath, rows, stats ++ witnessed))
   }
+
+  override def commit(): WriterCommitMessage =
+    GraftMultiCommitMessage(finish(keepEmpty = partitionId == 0).toList)
 
   override def abort(): Unit = {
     // the task is already failing: its own error is the one to report
-    try writer.close() catch { case NonFatal(_) => () }
+    if (file != null) try file.close(null) catch { case NonFatal(_) => () }
     // unpublished; the job's or epoch's abort sweeps its directory again
     try java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(root, relPath))
+      java.nio.file.Paths.get(f.root, relPath))
     catch { case NonFatal(_) => () }
   }
 
@@ -673,38 +727,46 @@ private class GraftDataWriter(root: String, batch: String,
 }
 
 /** X316: the partitioned task writer — ROTATES to a fresh file
-  * whenever the partition column's value changes, so every written
-  * file is single-valued on it by construction (the layout the X314
-  * clustered scan proves back out of the manifest). The write plan's
-  * required clustering + in-task ordering make each value one
-  * contiguous run — one file per (task, value); an unsorted surprise
-  * only costs extra files, never a multi-valued one. NULL partition
-  * values refuse loudly (the stats channel cannot witness them). */
-private class GraftPartitionedDataWriter(root: String, batch: String,
-    schema: StructType, partitionId: Int, taskId: Long,
-    failAt: Option[Int], partIdxs: Seq[Int],
-    rotate: GraftRotate = GraftRotate.Identity)
+  * whenever the layout key changes, so every written file is
+  * single-keyed by construction (the layout the X314 clustered scan
+  * proves back out of the manifest). Writers sort each task's rows by
+  * the key (the SQL facet's required ordering, the commit verbs'
+  * `sortWithinPartitions`), making each key one contiguous run — one
+  * file per (task, key); an unsorted surprise only costs extra files,
+  * never a multi-keyed one. A NULL key refuses loudly on the SQL facet
+  * (the stats channel cannot witness it); the commit verbs write it to
+  * a [[GraftPartitionedDataWriter.NullTag]] file, whose layout proof
+  * fails losslessly. */
+private class GraftPartitionedDataWriter(f: GraftWriterFactory,
+    partitionId: Int, taskId: Long, out: GraftFileOut)
     extends DataWriter[InternalRow] {
+  private val schema = f.schema
+  private val (partIdxs, rotate) = f.layout.get
   private val partIdx = partIdxs.head
   private val dt = schema.fields(partIdx).dataType
+  partIdxs.foreach(i => schema.fields(i).dataType match {
+    case _: ArrayType | _: MapType | _: StructType | BinaryType =>
+      throw new IllegalArgumentException(
+        s"graft-table: unsupported partition column type " +
+          schema.fields(i).dataType)
+    case _ => ()
+  })
 
-  /** The identity value of column `i` — the tuple layout's per-column
-    * rotation key component. */
+  /** The identity value of column `i` (null for NULL) — the identity
+    * and tuple layouts' rotation key component. */
   private def valueAt(row: InternalRow, i: Int): Any =
-    schema.fields(i).dataType match {
-      case LongType    => row.getLong(i)
-      case IntegerType => row.getInt(i)
-      case StringType  => row.getUTF8String(i).toString
-      case DoubleType  => row.getDouble(i)
-      case DateType    => row.getInt(i)
-      case other => throw new IllegalArgumentException(
-        s"graft-table: unsupported partition column type $other")
+    if (row.isNullAt(i)) null
+    else row.get(i, schema.fields(i).dataType) match {
+      case s: UTF8String => s.toString
+      case v => v
     }
 
-  /** Canonical tag text for an identity value (ISO for DATE — the
-    * stats channel's text). */
+  /** Canonical tag text for an identity value: ISO for DATE (the
+    * stats channel's text), the raw value otherwise — never an
+    * escaped directory name. */
   private def tagText(i: Int, v: Any): String =
-    schema.fields(i).dataType match {
+    if (v == null) GraftPartitionedDataWriter.NullTag
+    else schema.fields(i).dataType match {
       case DateType => java.time.LocalDate
         .ofEpochDay(v.asInstanceOf[Int].toLong).toString
       case _ => String.valueOf(v)
@@ -715,11 +777,14 @@ private class GraftPartitionedDataWriter(root: String, batch: String,
   private val done =
     scala.collection.mutable.ListBuffer.empty[GraftCommitMessage]
 
-  /** The rotation key: the column's value (identity layout), or its
-    * canonical bucket id (X320 — MUST equal what the catalog's
-    * `bucket` ScalarFunction computes, which it does by sharing
-    * [[GraftBucketFn]]). */
+  /** The rotation key: the column's value (identity layout), the
+    * whole tuple (X328), its canonical bucket id (X320 — MUST equal
+    * what the catalog's `bucket` ScalarFunction computes, which it
+    * does by sharing [[GraftBucketFn]]) or its time bin (X327, the
+    * canonical [[GraftTimeFn]] over UTC micros). NULL keys are null. */
   private def keyOf(row: InternalRow): Any = rotate match {
+    case GraftRotate.Tuple(_) => partIdxs.map(valueAt(row, _))
+    case _ if row.isNullAt(partIdx) => null
     case GraftRotate.Bucket(n) => dt match {
       case LongType    => GraftBucketFn.bucketLong(n, row.getLong(partIdx))
       case IntegerType =>
@@ -729,50 +794,43 @@ private class GraftPartitionedDataWriter(root: String, batch: String,
       case other => throw new IllegalArgumentException(
         s"graft-table: unsupported bucket column type $other")
     }
-    // X327: time transforms floor the UTC-micros timestamp — the
-    // canonical GraftTimeFn, the SAME function the catalog's SQL
-    // scalar and the reported transform resolve to
-    case GraftRotate.Time(unit) =>
-      GraftTimeFn(unit, row.getLong(partIdx))
-    // X328: the whole tuple is the rotation key (Seq equality)
-    case GraftRotate.Tuple(_) => partIdxs.map(valueAt(row, _))
+    case GraftRotate.Time(unit) => GraftTimeFn(unit, row.getLong(partIdx))
     case GraftRotate.Identity => valueAt(row, partIdx)
   }
 
-  /** The manifest's layout-proof tag for the CURRENT file: bucket ids
-    * ride [[TableCommit.Entry.part]] namespaced (identity layouts
-    * prove through the stats channel instead, and carry the raw value
-    * for the X319 report). */
-  private def partTag: Option[String] = rotate match {
-    case GraftRotate.Bucket(_) => Some(GraftBucketPart.render(
-      currentKey.asInstanceOf[Int]))
-    case GraftRotate.Time(unit) => Some(GraftTimePart.render(unit,
-      currentKey.asInstanceOf[Int]))
+  /** The manifest's layout tag for the CURRENT file: bucket ids and
+    * time bins ride [[TableCommit.Entry.part]] namespaced; identity
+    * and tuple layouts prove through the stats channel instead and
+    * carry the raw values for the X319 report and the slice replace. */
+  private def partTag: String = rotate match {
+    case _ if currentKey == null => GraftPartitionedDataWriter.NullTag
+    case GraftRotate.Bucket(_) =>
+      GraftBucketPart.render(currentKey.asInstanceOf[Int])
+    case GraftRotate.Time(unit) =>
+      GraftTimePart.render(unit, currentKey.asInstanceOf[Int])
     // X328: tuple tags name every column — `d=2024-01-01/region=EU`
     case GraftRotate.Tuple(_) =>
-      Some(partIdxs.zip(currentKey.asInstanceOf[Seq[Any]])
-        .map { case (i, v) =>
-          s"${schema.fields(i).name}=${tagText(i, v)}" }.mkString("/"))
-    // DATE tags render ISO — the same canonical text the stats channel
-    // (and the X319 report) speaks for the column
-    case GraftRotate.Identity => dt match {
-      case DateType => Some(java.time.LocalDate
-        .ofEpochDay(currentKey.asInstanceOf[Int].toLong).toString)
-      case _ => Some(String.valueOf(currentKey))
-    }
+      partIdxs.zip(currentKey.asInstanceOf[Seq[Any]]).map { case (i, v) =>
+        s"${schema.fields(i).name}=${tagText(i, v)}" }.mkString("/")
+    case GraftRotate.Identity => tagText(partIdx, currentKey)
   }
 
+  private def rotateOut(): Unit =
+    if (current != null) {
+      done ++= current.finish(keepEmpty = false).map(_.copy(part = Some(partTag)))
+      current = null
+    }
+
   override def write(row: InternalRow): Unit = {
-    require(partIdxs.forall(i => !row.isNullAt(i)),
-      "graft partitioned table: NULL partition values are not " +
-        "supported — filter or default them before the write")
+    if (f.refuseNullKeys)
+      require(partIdxs.forall(i => !row.isNullAt(i)),
+        "graft partitioned table: NULL partition values are not " +
+          "supported — filter or default them before the write")
     val k = keyOf(row)
     if (current == null || k != currentKey) {
-      if (current != null)
-        done += current.commit().asInstanceOf[GraftCommitMessage]
-          .copy(part = partTag)
-      current = new GraftDataWriter(root, batch, schema, partitionId,
-        taskId, failAt, s"-$fileSeq")
+      rotateOut()
+      current = new GraftDataWriter(f, partitionId, taskId, out,
+        s"-$fileSeq")
       fileSeq += 1
       currentKey = k
     }
@@ -780,11 +838,7 @@ private class GraftPartitionedDataWriter(root: String, batch: String,
   }
 
   override def commit(): WriterCommitMessage = {
-    if (current != null) {
-      done += current.commit().asInstanceOf[GraftCommitMessage]
-        .copy(part = partTag)
-      current = null
-    }
+    rotateOut()
     GraftMultiCommitMessage(done.toList)
   }
 
@@ -795,12 +849,19 @@ private class GraftPartitionedDataWriter(root: String, batch: String,
     // unpublished; the job's or epoch's abort sweeps its directory again
     done.foreach(m =>
       try java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(root, m.relPath))
+        java.nio.file.Paths.get(f.root, m.relPath))
       catch { case NonFatal(_) => () })
   }
 
-  override def close(): Unit =
-    if (current != null) current.close()
+  override def close(): Unit = ()
+}
+
+private object GraftPartitionedDataWriter {
+  /** The tag of a NULL layout key on the commit verbs: never a valid
+    * bucket id, time bin or raw value of the column's proof, so the
+    * file stays unprovable (the layout degrades losslessly) while a
+    * slice replace still replaces it. */
+  val NullTag = "__HIVE_DEFAULT_PARTITION__"
 }
 
 /** Scan builder for the X289 read facet: collects the pruned column
@@ -1006,13 +1067,6 @@ private[graft] object GraftTimePart {
       try { java.time.LocalDate.parse(v); Some(v) }
       catch { case _: java.time.format.DateTimeParseException => None }
     else v.toIntOption.map(_.toString)
-
-  /** A staged `_p=` dir value re-tagged under the unit namespace when
-    * it parses as the unit's key; anything else (the NULL-key default
-    * partition) keeps its raw tag and the layout proof fails for that
-    * file — lossless degrade, the [[GraftBucketPart]] contract. */
-  def retag(unit: String, raw: String): String =
-    keyText(unit, raw).fold(raw)(k => s"$unit=$k")
 }
 
 /** X320: a bucketed split's proof rides [[TableCommit.Entry.part]] as
@@ -1181,7 +1235,7 @@ private[graft] object GraftBatchScan {
       case (x: java.lang.Short, _)   => Some(x)
       case (x: java.lang.Byte, _)    => Some(x)
       case (x: java.lang.Double, _)  => Some(x)
-      // widen exactly as footerStats canonicalizes FLOAT stats: the
+      // widen exactly as the write tasks canonicalize FLOAT stats: the
       // channel stores (double)v's shortest string, so an unwidened
       // Float literal ("0.1") would compare against
       // "0.10000000149011612" and wrongly prune the file holding the
@@ -1732,9 +1786,7 @@ private class GraftBatchScan(root: String, required: StructType,
     GraftCdfReaderFactory
 }
 
-private object GraftDataWriter {
-  import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
-  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+private[graft] object GraftDataWriter {
 
   /** One read-only Hadoop Configuration shared by every writer and
     * copied by every vectorized open ([[GraftVectorized.open]]): the
@@ -1750,103 +1802,56 @@ private object GraftDataWriter {
     * and parses the defaults) INSIDE the lazy-val initialization lock.
     * Every later access from task writer threads is a pure read of the
     * fully-populated `Properties` (a synchronized Hashtable) — no
-    * first-read race remains. Nothing calls `set(...)` on it: the
-    * writers only read it, and each vectorized open sets its read
-    * options on its own copy. */
+    * first-read race remains. Nothing calls `set(...)` on it: each
+    * task's [[GraftFileOut]] and each vectorized open set their
+    * options on their own copy. */
   lazy val sharedConf = {
     val c = new org.apache.hadoop.conf.Configuration()
     c.size() // force eager property resolution under the init lock
     c
   }
 
-  /** r16 write-path rewrite: direct InternalRow → RecordConsumer
-    * WriteSupport. The previous writer went through parquet's example
-    * Group API — per ROW one SimpleGroup allocation plus per VALUE a
-    * name→index lookup and a boxed Primitive append; this emits each
-    * value straight from the unsafe row into the column writers. The
-    * emitted file is logically identical (same MessageType, same
-    * optional-field skip for nulls, same UTF-8 string bytes — without
-    * the UTF-16 String round trip). */
-  private class InternalRowWriteSupport(msgType: MessageType,
-      names: Array[String], typeTag: Array[Int])
-      extends org.apache.parquet.hadoop.api.WriteSupport[InternalRow] {
-    import org.apache.parquet.io.api.{Binary, RecordConsumer}
-    private var consumer: RecordConsumer = _
-    override def init(conf: org.apache.hadoop.conf.Configuration)
-        : org.apache.parquet.hadoop.api.WriteSupport.WriteContext =
-      new org.apache.parquet.hadoop.api.WriteSupport.WriteContext(
-        msgType, java.util.Collections.emptyMap[String, String]())
-    override def prepareForWrite(rc: RecordConsumer): Unit = consumer = rc
-    override def write(row: InternalRow): Unit = {
-      val rc = consumer
-      rc.startMessage()
-      val n = typeTag.length
-      var i = 0
-      while (i < n) {
-        if (!row.isNullAt(i)) {
-          rc.startField(names(i), i)
-          typeTag(i) match {
-            case 0 => rc.addLong(row.getLong(i))
-            case 1 => rc.addInteger(row.getInt(i))
-            case 2 => rc.addDouble(row.getDouble(i))
-            case 3 =>
-              // fromReusedByteArray: parquet copies if it retains the
-              // bytes (dictionary/stats), so this stays correct even if
-              // a non-unsafe InternalRow ever hands back a live buffer —
-              // UTF8String.getBytes only copies when the string doesn't
-              // exactly span its backing array (ADVICE r16; Spark's own
-              // ParquetWriteSupport uses the same constructor).
-              rc.addBinary(
-                Binary.fromReusedByteArray(row.getUTF8String(i).getBytes))
-            case _ => throw new IllegalArgumentException(
-              s"graft-table: unsupported type for column ${names(i)}")
-          }
-          rc.endField(names(i), i)
+  /** The active session's Hadoop-conf `parquet.*` entries (row-group
+    * and page sizes, dictionary and bloom settings): what a session
+    * sets for its parquet writes reaches the task writers too. */
+  def sessionParquetConf(): Map[String, String] = {
+    import scala.jdk.CollectionConverters._
+    org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()
+      .iterator().asScala.map(e => e.getKey -> e.getValue)
+      .filter(_._1.startsWith("parquet.")).toMap
+  }
+
+  /** Write `df` as one SQL execution through the task writers — the
+    * engine's commit verbs stage here, the connector facets reach the
+    * same writers through Spark's DSv2 write. `layout` is the
+    * rotation (head column and [[GraftRotate]]), whose rows the caller
+    * has sorted within partitions by the key; `tracked` names the
+    * columns whose stats ride the entries. Returns the written files'
+    * entries in path order, every one with its row count. */
+  def stage(df: org.apache.spark.sql.DataFrame, root: String,
+      batch: String, layout: Option[(String, GraftRotate)],
+      tracked: Set[String]): Seq[TableCommit.Entry] = {
+    val schema = df.schema
+    val factory = GraftWriterFactory(root, batch, schema, tracked,
+      layout.map { case (c, r) =>
+        val cols = r match {
+          case GraftRotate.Tuple(rest) => c +: rest
+          case _                       => Seq(c)
         }
-        i += 1
+        (cols.map(schema.fieldIndex), r)
+      }, refuseNullKeys = false)
+    val qe = df.queryExecution
+    val messages = org.apache.spark.sql.execution.SQLExecution
+      .withNewExecutionId(qe, Some(s"graft stage $batch")) {
+        qe.toRdd.mapPartitionsWithIndex { (pid, rows) =>
+          val w = factory.createWriter(pid,
+            org.apache.spark.TaskContext.get().taskAttemptId())
+          try {
+            rows.foreach(w.write)
+            Iterator.single(w.commit())
+          } catch { case NonFatal(e) => w.abort(); throw e }
+        }.collect()
       }
-      rc.endMessage()
-    }
-  }
-
-  /** Standard ParquetWriter.Builder over [[InternalRowWriteSupport]] —
-    * identical writer defaults (codec, page/row-group sizing, writer
-    * version) to the example builder it replaces. */
-  class RowWriterBuilder(path: org.apache.hadoop.fs.Path,
-      msgType: MessageType, typeTag: Array[Int], names: Array[String])
-      extends org.apache.parquet.hadoop.ParquetWriter.Builder[
-        InternalRow, RowWriterBuilder](path) {
-    override def self(): RowWriterBuilder = this
-    override def getWriteSupport(conf: org.apache.hadoop.conf.Configuration)
-        : org.apache.parquet.hadoop.api.WriteSupport[InternalRow] =
-      new InternalRowWriteSupport(msgType, names, typeTag)
-  }
-
-  /** StructType → parquet MessageType for the primitive column types the
-    * commit-layer gates use. All fields optional (Spark nullability is
-    * advisory); Spark's vectorized reader maps these back losslessly. */
-  def messageType(schema: StructType): MessageType = {
-    val b = Types.buildMessage()
-    schema.fields.foreach { f =>
-      f.dataType match {
-        case LongType    => b.addField(Types.optional(INT64).named(f.name))
-        case IntegerType => b.addField(Types.optional(INT32).named(f.name))
-        case DoubleType  => b.addField(Types.optional(DOUBLE).named(f.name))
-        case StringType  => b.addField(Types.optional(BINARY)
-          .as(LogicalTypeAnnotation.stringType()).named(f.name))
-        // X327: DATE (epoch-day INT32) and TIMESTAMP (UTC-adjusted
-        // micros INT64) — the types every date-partitioned warehouse
-        // table carries; annotations match what Spark's own parquet
-        // writer emits, so both readers decode identically
-        case DateType => b.addField(Types.optional(INT32)
-          .as(LogicalTypeAnnotation.dateType()).named(f.name))
-        case TimestampType => b.addField(Types.optional(INT64)
-          .as(LogicalTypeAnnotation.timestampType(true,
-            LogicalTypeAnnotation.TimeUnit.MICROS)).named(f.name))
-        case other => throw new IllegalArgumentException(
-          s"graft-table: unsupported type $other for column ${f.name}")
-      }
-    }
-    b.named("graft")
+    GraftCommitMessage.entries(root, messages)
   }
 }

@@ -1396,4 +1396,62 @@ class CatalogSpec extends AnyFunSuite {
     assert(spark.sql(s"SELECT x FROM $cat.nw ORDER BY x").collect()
       .map(_.getLong(0)).toSeq === Seq(1L, 11L))
   }
+
+  test("a slice replace after a SQL INSERT swaps the INSERTed slices: tags are raw values, '/' and ':' included") {
+    val (cat, wh) = freshCatalog()
+    spark.sql(s"CREATE TABLE $cat.te (s STRING, v BIGINT) PARTITIONED BY (s)")
+    spark.sql(s"INSERT INTO $cat.te VALUES ('a/b', 1), ('c', 2), ('d:e', 3)")
+    val root = s"$wh/te"
+    TableCommit.commitReplacePartitions(
+      Seq(("a/b", 10L), ("c", 20L), ("d:e", 30L)).toDF("s", "v"), root, "s")
+    val got = spark.sql(s"SELECT s, v FROM $cat.te ORDER BY s, v").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(got === Seq(("a/b", 10L), ("c", 20L), ("d:e", 30L)))
+    assert(TableCommit.entries(root).flatMap(_.part).distinct.sorted ===
+      Seq("a/b", "c", "d:e"))
+  }
+
+  test("a task that wrote no rows publishes no file: a one-row INSERT over 8 partitions is one entry") {
+    val (cat, wh) = freshCatalog()
+    spark.sql(s"CREATE TABLE $cat.zr (k BIGINT, v STRING)")
+    spark.range(0L, 80L, 1L, 8).select(col("id").as("k"),
+      col("id").cast("string").as("v")).createOrReplaceTempView("cat_zr_src")
+    spark.sql(s"INSERT INTO $cat.zr SELECT k, v FROM cat_zr_src WHERE k = 45")
+    val root = s"$wh/zr"
+    assert(TableCommit.entries(root).map(_.rows) === Seq(Some(1L)))
+    // partition 0's schema file was dropped from disk, not just the log
+    assert(dataFingerprint(root).keys.count(_.endsWith(".parquet")) === 1)
+    // the commit verbs stage through the same writer
+    val r2 = Files.createTempDirectory("graft_cat_zr_").toString
+    TableCommit.commitAppend(
+      spark.table("cat_zr_src").where(col("k") === 45L), r2)
+    assert(TableCommit.entries(r2).map(_.rows) === Seq(Some(1L)))
+    // an all-empty write still leaves partition 0's one file, so the
+    // schema stays inferable
+    val r3 = Files.createTempDirectory("graft_cat_zr_").toString
+    TableCommit.commitOverwrite(
+      spark.table("cat_zr_src").where(col("k") < 0L), r3)
+    assert(TableCommit.entries(r3).map(_.rows) === Seq(Some(0L)))
+    assert(TableCommit.readCurrent(spark, r3).schema.fieldNames.toSeq ===
+      Seq("k", "v"))
+    spark.catalog.dropTempView("cat_zr_src")
+  }
+
+  test("a replayed dynamic partition overwrite with a txn id lands nothing") {
+    val (cat, wh) = freshCatalog()
+    spark.sql(s"CREATE TABLE $cat.dr (g BIGINT, x BIGINT) PARTITIONED BY (g)")
+    spark.sql(s"INSERT INTO $cat.dr VALUES (1, 1), (2, 2)")
+    val root = s"$wh/dr"
+    def overwrite(): Unit =
+      spark.range(3L).select(lit(1L).as("g"), (col("id") + 100L).as("x"))
+        .writeTo(s"$cat.dr").option("txnid", "7").overwritePartitions()
+    overwrite()
+    val v = TableCommit.currentVersion(root)
+    assert(TableCommit.lastTxnId(root) === Some(7L))
+    overwrite()
+    assert(TableCommit.currentVersion(root) === v, "the replay must not commit")
+    assert(spark.sql(s"SELECT g, x FROM $cat.dr ORDER BY g, x").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq ===
+      Seq((1L, 100L), (1L, 101L), (1L, 102L), (2L, 2L)))
+  }
 }

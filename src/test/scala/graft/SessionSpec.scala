@@ -45,13 +45,18 @@ class SessionSpec extends AnyFunSuite {
   }
 
   /** The files under src/main/scala whose source contains `pattern`. */
-  private def mainFilesContaining(pattern: String): Seq[String] = {
+  private def mainFilesContaining(pattern: String): Seq[String] =
+    mainFilesMatching(java.util.regex.Pattern.quote(pattern))
+
+  /** The files under src/main/scala whose source matches `regex`. */
+  private def mainFilesMatching(regex: String): Seq[String] = {
+    val re = regex.r
     val main = Paths.get("src/main/scala")
     assert(Files.isDirectory(main), s"run from the repo root: $main")
     val walk = Files.walk(main)
     try walk.iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
-      .filter(p => Files.readString(p).contains(pattern))
+      .filter(p => re.findFirstIn(Files.readString(p)).isDefined)
       .map((p: Path) => main.relativize(p).toString).toSeq.sorted
     finally walk.close()
   }
@@ -71,5 +76,14 @@ class SessionSpec extends AnyFunSuite {
     // connector growing its own loop again shows up as a second file
     assert(mainFilesContaining("ThreadLocalRandom") ===
       Seq("graft/engine/TableCommit.scala"))
+  }
+
+  test("table data files have one writer: TableCommit stages through the connector's task writers") {
+    // no DataFrameWriter in the commit layer, and no hand-rolled parquet
+    // WriteSupport anywhere (the task writers use Spark's own)
+    assert(!mainFilesContaining(".write.")
+      .contains("graft/engine/TableCommit.scala"))
+    assert(mainFilesMatching("""extends\s+[\w.]*WriteSupport\b""") ===
+      Seq.empty)
   }
 }

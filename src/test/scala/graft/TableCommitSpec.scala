@@ -104,8 +104,8 @@ class TableCommitSpec extends AnyFunSuite {
       Seq(("""quo"te""", 1L)).toDF("day", "n"), r, "day")
     val es = TableCommit.entries(r)
     assert(es.nonEmpty)
-    // value round-trips through the escaped manifest line (still in
-    // Spark's escaped dir-name form, but lossless)
+    // value round-trips through the escaped manifest line (the raw
+    // value as the tag, lossless)
     assert(es.head.part.isDefined)
     assert(TableCommit.readCurrent(spark, r).count() === 1L)
   }

@@ -791,7 +791,7 @@ class TableWriteSpec extends AnyFunSuite {
 
   test("FLOAT literals widen before stat pruning (ADVICE r15)") {
     // unit floor: the shared literal bridge widens exactly as
-    // footerStats canonicalizes FLOAT stats
+    // the write tasks canonicalize FLOAT stats
     assert(graft.sources.GraftBatchScan.externalLiteral(
       java.lang.Float.valueOf(0.1f), FloatType) ===
       Some(0.1f.toDouble))
