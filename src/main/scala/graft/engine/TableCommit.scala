@@ -367,10 +367,7 @@ object TableCommit {
     * NON-MONOTONICALLY, possibly between non-subset vectors). The
     * change-feed diff keys on it (ADVICE r13): ordinary DML grows DVs
     * by monotone union, so a non-restore version never needs the
-    * shrink leg's extra scan-and-decode partitions, and its
-    * `freshCount` (a count difference) is exact for sizing the
-    * broadcast-vs-bitmap decision; a restore version's legs are
-    * bounded by |after| instead. */
+    * shrink leg's extra scan-and-decode partitions. */
   private def parseRestoreHeader(line: String): Option[Boolean] = {
     val p = new LineParser(line)
     if (!p.lit("{\"restore\":")) return None
@@ -1258,7 +1255,7 @@ object TableCommit {
     * with '/' is ABSOLUTE — a shallow clone's manifest references the
     * SOURCE table's files in place ([[cloneTable]]); everything else
     * is root-relative, as every writer stages it. */
-  private def resolvePath(root: String, path: String): String =
+  private[graft] def resolvePath(root: String, path: String): String =
     if (path.startsWith("/")) path else s"$root/$path"
 
   /** SHALLOW CLONE: `dst`'s next version references `src`'s CURRENT
@@ -1839,7 +1836,7 @@ object TableCommit {
   /** Current LIVE rows with their stable `_row_id` — computed as
     * `brid + row_index` for files still in their birth position,
     * read from the materialized column for rewritten ones; deletion
-    * vectors anti-apply either way. Loud on any file without lineage:
+    * vectors apply either way. Loud on any file without lineage:
     * a tracked table must only be written through
     * [[commitAppend]]`(trackRowIds = true)` and id-preserving rewrites. */
   def readWithRowIds(spark: SparkSession, root: String,
@@ -1867,7 +1864,7 @@ object TableCommit {
     import org.apache.spark.sql.types.{LongType, StructField}
     import spark.implicits._
     if (es.isEmpty) return None
-    requireUniqueLeaves(root, es)
+    requireUniqueLeaves(root, es) // the birth-id join keys files by leaf
     val (mat, born) = es.partition(_.stats.contains(RidKey))
     val untracked = born.filterNot(_.baseRowId.isDefined)
     require(untracked.isEmpty,
@@ -2428,7 +2425,7 @@ object TableCommit {
     * This is the merge-on-read half of row-level DELETE (Iceberg
     * position deletes, Delta deletion vectors): a delete commit moves
     * ZERO data bytes — it republishes the same file list with fatter
-    * DVs — and reads anti-apply the positions. Copy-on-write rewrites
+    * DVs — and reads skip the positions in the row reader. Copy-on-write rewrites
     * (the only pre-X265 option) made a few-rows-per-file purge cost a
     * full file rewrite each — the scale-killer at 100 TB where a
     * right-to-be-forgotten purge touches a handful of rows in
@@ -2569,251 +2566,24 @@ object TableCommit {
         "write's UUID)")
   }
 
-  /** Above this many TOTAL deleted positions the read path stops
-    * building a (leaf, position)-tuple anti/semi join and switches to
-    * the per-file ROARING BITMAP scan filter. Measured on the 10× DV
-    * soak (150M rows): a 30M-position tuple broadcast read at 240×
-    * plain-scan cost, the shuffle-join alternative GC-thrashed a
-    * bounded heap under the 150M-row data shuffle, and even a 135k
-    * tuple build probed SLOWER than the bitmap at that scan size
-    * (32 s vs ~12 s) — the join's per-row cost tracks the DATA, the
-    * bitmap's probe is a map hit. Below the threshold the codegen'd
-    * broadcast join wins because the bitmap path pays a fixed extra
-    * Spark job (executor-side bitmap build) per read that a
-    * purge-sized delete never amortizes. Orthogonal to
-    * [[DvInlineMax]], which bounds PER-FILE manifest residency. */
-  val DvBroadcastMax = 100000L
-
-  /** Test seam (the publishRaceHook pattern): specs lower this to
-    * drive the bitmap path on small fixtures; production reads use the
-    * [[DvBroadcastMax]] default. */
-  @volatile private[graft] var dvBroadcastThreshold: Long = DvBroadcastMax
-
-  /** The fat-DV read path (what production DV readers do): ONE roaring
-    * bitmap per file, shipped SERIALIZED (bounded by roaring-compressed
-    * bytes — ~2 bytes/position worst case, far less on runs — never by
-    * row width), deserialized lazily once per executor, probed AT THE
-    * SCAN — no join, no shuffle, read cost independent of the delete
-    * fraction. The probe itself is the CODEGEN'D [[DvProbe]] native
-    * (X296) with a per-file deleted-span short-circuit — see
-    * DvProbe.scala. */
-  private def bitmapBytes(ps: Iterable[Long]): Array[Byte] = {
-    val bm = new org.roaringbitmap.longlong.Roaring64Bitmap()
-    ps.foreach(bm.addLong)
-    bm.runOptimize()
-    val bos = new java.io.ByteArrayOutputStream()
-    bm.serialize(new java.io.DataOutputStream(bos))
-    bos.toByteArray
-  }
-
-  /** Per-file deletion bitmaps, built EXECUTOR-side (one task per
-    * DV'd file decodes its own sidecar where it lives); the driver
-    * collects only the serialized bitmaps. */
-  private def dvBitmaps(spark: SparkSession, root: String,
-      dvs: Seq[Entry]): Map[String, Array[Byte]] = {
-    import spark.implicits._
-    val refs = dvs.map(e => (pathLeaf(e.path), e.stats(DvKey).min))
-    refs.toDF("_l", "_enc").repartition(math.min(dvs.size, 32))
-      .as[(String, String)]
-      .map { case (leaf, enc) =>
-        (leaf, bitmapBytes(dvDecodeEnc(root, enc)))
-      }.collect().toMap
-  }
-
-  /** Bitmaps of the FRESH positions (after − before) of a DV growth,
-    * built executor-side — the change feed's exactly-these-positions
-    * leg never materializes a delta on the driver. */
-  private def freshBitmaps(spark: SparkSession, root: String,
-      gs: Seq[DvGrowth]): Map[String, Array[Byte]] = {
-    import spark.implicits._
-    val refs = gs.map(g => (pathLeaf(g.entry.path),
-      g.before.map(_.min).getOrElse(""), g.after.min))
-    refs.toDF("_l", "_b", "_a").repartition(math.min(gs.size, 32))
-      .as[(String, String, String)]
-      .map { case (leaf, b, a) =>
-        val before = dvDecodeEnc(root, b).toSet
-        (leaf, bitmapBytes(dvDecodeEnc(root, a).filterNot(before)))
-      }.collect().toMap
-  }
-
-  /** The (leaf, position) pairs of `dvs`' deletion vectors as a
-    * DataFrame, decoded WHERE THEY LIVE: inline vectors (≤
-    * `DvInlineMax` each by construction) decode driver-side;
-    * sidecar-backed vectors decode EXECUTOR-side from their `_dv/`
-    * files — a fat-delete table's positions never transit the driver
-    * on the read path (the write path already keeps them out via
-    * [[dvEncodeDistributed]]). Sidecar refs spread across tasks so a
-    * many-fat-files table decodes in parallel. */
-  private def dvPositionsDf(spark: SparkSession, root: String,
-      dvs: Seq[Entry]): DataFrame = {
-    import spark.implicits._
-    val (side, inline) =
-      dvs.partition(e => e.stats(DvKey).min.startsWith("@"))
-    val inlineDf =
-      if (inline.isEmpty) None
-      else Some(inline.flatMap(e =>
-        dvDecode(root, e.stats(DvKey)).map(p => (pathLeaf(e.path), p)))
-        .toDF("_dv_leaf", "_dv_pos"))
-    val sideDf =
-      if (side.isEmpty) None
-      else {
-        val refs = side.map(e =>
-          (pathLeaf(e.path), e.stats(DvKey).min.drop(1)))
-        Some(refs.toDF("_dv_leaf", "_dv_ref")
-          .repartition(math.min(side.size, 32))
-          .as[(String, String)]
-          .flatMap { case (leaf, ref) =>
-            val p = Paths.get(resolvePath(root, ref))
-            dvParseDeltas(new String(Files.readAllBytes(p),
-              java.nio.charset.StandardCharsets.UTF_8).trim)
-              .map(pos => (leaf, pos))
-          }
-          .toDF("_dv_leaf", "_dv_pos"))
-      }
-    (inlineDf, sideDf) match {
-      case (Some(a), Some(b)) => a.unionByName(b)
-      case (a, b)             => a.orElse(b).get
-    }
-  }
-
-  /** Anti-apply `dvs`' deletion vectors to `tagged` (a scan already
-    * carrying `leafCol`/`posCol`): the codegen'd broadcast anti-join
-    * while the tuple build side is broadcast-sized, the bitmap scan
-    * filter past [[DvBroadcastMax]]. */
-  private def dvAntiApply(spark: SparkSession, root: String,
-      tagged: DataFrame, dvs: Seq[Entry], leafCol: String,
-      posCol: String): DataFrame =
-    if (dvs.map(deletedCount).sum <= dvBroadcastThreshold) {
-      import org.apache.spark.sql.functions.broadcast
-      val delDf = broadcast(dvPositionsDf(spark, root, dvs)
-        .toDF(leafCol, posCol))
-      tagged.join(delDf, Seq(leafCol, posCol), "left_anti")
-    } else {
-      // X296: codegen'd native probe with a per-file deleted-span
-      // fast path — the whole filter stays inside the scan's
-      // whole-stage codegen span, no boxing, no string conversion
-      val holder = new DvProbeHolder(dvBitmaps(spark, root, dvs),
-        keepInside = false)
-      tagged.filter(dvProbeCol(holder, leafCol, posCol))
-    }
-
-  /** [[DvProbe]] over two named columns, as a Column (the graftshim
-    * bridge is how a native expression enters a DataFrame program). */
-  private def dvProbeCol(holder: DvProbeHolder, leafCol: String,
-      posCol: String): org.apache.spark.sql.Column =
-    org.apache.spark.sql.graftshim.Shim.column(DvProbe(
-      org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(
-        Seq(leafCol)),
-      org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(
-        Seq(posCol)),
-      holder))
-
   /** DataFrame over `es`'s files with each file's deletion vector
-    * ANTI-APPLIED — the merge-on-read. DV-free entry lists take the
-    * plain scan (zero overhead; the common case and every pre-X265
-    * table); otherwise the scan gains `_metadata` (file leaf + row
-    * index) and anti-applies the deleted positions — a codegen'd
-    * broadcast anti-join while the tuple build side is broadcast-sized
-    * ([[DvBroadcastMax]]), the per-file roaring-bitmap SCAN FILTER
-    * past it (no join, no shuffle, read cost independent of the delete
-    * fraction — the codegen'd [[DvProbe]]). Sidecar vectors decode
-    * executor-side either way. */
-  /** Above the broadcast threshold, a scan over at most this many
-    * DV'd files takes the PER-FILE leg shape: one scan leg per file
-    * with a POSITION-ONLY codegen'd probe ([[DvProbeSingle]]) — no
-    * per-row file identity at all (no leaf column, no hash lookup),
-    * so the per-row cost is two long compares (span) plus a roaring
-    * `contains` only where damage lands. Past the cap the union plan
-    * would dominate planning, so the single-scan leaf-keyed
-    * [[DvProbe]] takes over — still codegen'd, still join-free. */
-  private val DvPerFileLegMax = 64
-
+    * skipped — the merge-on-read. Clean files take the plain parquet
+    * scan (zero overhead; the common case and every DV-free table);
+    * DV'd files are read by the connector's row reader
+    * ([[graft.sources.GraftBatchScan.live]]), which skips each file's
+    * dead positions inside the parquet decode. `schema = None` infers
+    * it from the files. */
   private def readLive(spark: SparkSession, root: String,
       schema: Option[StructType], es: Seq[Entry]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val paths = es.map(e => resolvePath(root, e.path))
-    val dvs = es.filter(_.stats.contains(DvKey))
-    if (dvs.isEmpty)
-      return schema.fold(spark.read)(s => spark.read.schema(s))
-        .parquet(paths: _*)
-    requireUniqueLeaves(root, es)
-    // only the DV'd files pay the tagged scan + probe; clean files
-    // (the common production mix — recent ingest beside old purged
-    // files) keep the plain fully-codegen'd scan
-    val sc = schema.getOrElse(spark.read.parquet(paths: _*).schema)
-    val overBroadcast =
-      dvs.map(deletedCount).sum > dvBroadcastThreshold
-    val dvPart =
-      if (overBroadcast && dvs.size <= DvPerFileLegMax) {
-        val bitmaps = dvBitmaps(spark, root, dvs)
-        dvs.map { e =>
-          val holder = new DvSingleHolder(bitmaps(pathLeaf(e.path)),
-            keepInside = false)
-          spark.read.schema(sc)
-            .parquet(resolvePath(root, e.path))
-            .select(col("*"), col("_metadata.row_index").as("_dv_pos"))
-            .filter(dvProbeSingleCol(holder, "_dv_pos"))
-            .drop("_dv_pos")
-        }.reduce(_ unionByName _)
-      } else {
-        val tagged = spark.read.schema(sc)
-          .parquet(dvs.map(e => resolvePath(root, e.path)): _*)
-          .select(col("*"),
-            col("_metadata.file_name").as("_dv_leaf"),
-            col("_metadata.row_index").as("_dv_pos"))
-        dvAntiApply(spark, root, tagged, dvs, "_dv_leaf", "_dv_pos")
-          .drop("_dv_leaf", "_dv_pos")
-      }
-    val clean = es.filterNot(_.stats.contains(DvKey))
-    if (clean.isEmpty) dvPart
-    else dvPart.unionByName(spark.read.schema(sc)
-      .parquet(clean.map(e => resolvePath(root, e.path)): _*))
-  }
-
-  private def dvProbeSingleCol(holder: DvSingleHolder,
-      posCol: String): org.apache.spark.sql.Column =
-    org.apache.spark.sql.graftshim.Shim.column(DvProbeSingle(
-      org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(
-        Seq(posCol)),
-      holder))
-
-  /** Rows of the grown files at EXACTLY the newly-dead positions — how
-    * the full change feed materializes "which rows did this DV delete"
-    * after the fact. Broadcast semi join on (leaf, row_index) while the
-    * delta is broadcast-sized (decoded on demand, delta-sized); the
-    * bitmap scan filter (kept = INSIDE the bitmap, built
-    * executor-side) past [[DvBroadcastMax]] — nothing position-sized
-    * ever visits the driver. */
-  private def readPositions(spark: SparkSession, root: String,
-      schema: StructType, sel: Seq[DvGrowth]): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, element_at, split, udf}
-    import spark.implicits._
-    val tagged = spark.read.schema(schema)
-      .parquet(sel.map(g => resolvePath(root, g.entry.path)): _*)
-      .select(col("*"),
-        col("_metadata.file_name")
-          .as("_dv_leaf"),
-        col("_metadata.row_index").as("_dv_pos"))
-    val out =
-      // Per-leg size bound for the broadcast decision
-      // ([[DvGrowth.boundCount]], ADVICE r13): the count delta is
-      // trusted only on monotone DML legs where it is exact; any
-      // restore leg — whose before/after need not be subsets, so a
-      // delta of +1 can hide a ~|after| true difference — is bounded
-      // by |after|, so no leg can sneak a huge position set into the
-      // driver-side broadcast path by cancelling or clamping
-      if (sel.map(_.boundCount).sum <= dvBroadcastThreshold) {
-        val posDf = sel.flatMap { g =>
-          freshOf(root, g).map(p => (pathLeaf(g.entry.path), p))
-        }.toDF("_dv_leaf", "_dv_pos")
-        tagged.join(broadcast(posDf), Seq("_dv_leaf", "_dv_pos"),
-          "left_semi")
-      } else {
-        val holder = new DvProbeHolder(freshBitmaps(spark, root, sel),
-          keepInside = true)
-        tagged.filter(dvProbeCol(holder, "_dv_leaf", "_dv_pos"))
-      }
-    out.drop("_dv_leaf", "_dv_pos")
+    def plain(s: Option[StructType], fs: Seq[Entry]): DataFrame =
+      s.fold(spark.read)(spark.read.schema(_))
+        .parquet(fs.map(e => resolvePath(root, e.path)): _*)
+    val (dvs, clean) = es.partition(_.stats.contains(DvKey))
+    if (dvs.isEmpty) return plain(schema, es)
+    val sc = schema.getOrElse(plain(None, es).schema)
+    val dvPart = graft.sources.GraftBatchScan.live(spark, root, sc, dvs,
+      positions = false)
+    if (clean.isEmpty) dvPart else dvPart.unionByName(plain(Some(sc), clean))
   }
 
   /** Row-level DELETE: mark every current row matching `predicate`
@@ -3024,23 +2794,23 @@ object TableCommit {
       retain, conflictRetries)
   }
 
-  /** LIVE rows of `es` with their (file leaf, row position) kept as
-    * `_g_leaf`/`_g_pos` columns — the internal scan UPDATE and MERGE
-    * build on: they must know WHERE each matching live row sits to
-    * DV-delete its old image. Same broadcast anti-join shape as
-    * [[readLive]]. */
+  /** LIVE rows of non-empty `es` with their (file leaf, row position)
+    * kept as `_g_leaf`/`_g_pos` columns — the internal scan UPDATE and
+    * MERGE build on: they must know WHERE each matching live row sits
+    * to DV-delete its old image. Split like [[readLive]]: clean files
+    * tag the plain scan with its `_metadata`, DV'd files get both
+    * columns from the connector's row reader. */
   private def liveWithPos(spark: SparkSession, root: String,
       schema: StructType, es: Seq[Entry]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, element_at, split}
-    val base = spark.read.schema(schema)
-      .parquet(es.map(e => resolvePath(root, e.path)): _*)
-      .select(col("*"),
-        col("_metadata.file_name")
-          .as("_g_leaf"),
-        col("_metadata.row_index").as("_g_pos"))
-    val dvs = es.filter(_.stats.contains(DvKey))
-    if (dvs.isEmpty) base
-    else dvAntiApply(spark, root, base, dvs, "_g_leaf", "_g_pos")
+    import org.apache.spark.sql.functions.col
+    val (dvs, clean) = es.partition(_.stats.contains(DvKey))
+    val cleanDf = if (clean.isEmpty) None else Some(spark.read.schema(schema)
+      .parquet(clean.map(e => resolvePath(root, e.path)): _*)
+      .select(col("*"), col("_metadata.file_name").as("_g_leaf"),
+        col("_metadata.row_index").as("_g_pos")))
+    val dvDf = if (dvs.isEmpty) None else Some(graft.sources.GraftBatchScan
+      .live(spark, root, schema, dvs, positions = true))
+    (cleanDf ++ dvDf).reduce(_ unionByName _)
   }
 
   /** Apply `assignments` SIMULTANEOUSLY — ANSI UPDATE semantics: every
@@ -3264,31 +3034,27 @@ object TableCommit {
             "the new rows miss its keys")
         else None
       }
-    // X306: the NOT-MATCHED-BY-SOURCE victim rows of `live` (anti-join
-    // on the keys, optional condition) — their positions ride the same
-    // DV fold as the matched victims; an UPDATE clause also stages
-    // their updated images
+    // Key matching is ONE join shape: `df` left-outer-joined to the
+    // (unique) keys `ks` marked `_g_matched`, which is non-null exactly
+    // on the rows whose key `ks` carries — null keys stay unmatched, as
+    // ANSI requires. Unique keys add no rows, and filtering on the
+    // marker is the semi or anti join (the optimizer plans the
+    // matched filter as an inner join).
+    def marked(df: DataFrame, ks: DataFrame): DataFrame =
+      df.join(hinted(ks.withColumn("_g_matched", lit(true))), keyCols,
+        "left_outer")
+    val isMatched = col("_g_matched").isNotNull
+    val nmbsCond = notMatchedBySource.map(_.condition.getOrElse(lit(true)))
+    // X306: the NOT-MATCHED-BY-SOURCE victim rows of `live` (optional
+    // condition) — their positions ride the same DV fold as the matched
+    // victims; an UPDATE clause also stages their updated images
     def nmbsRows(live: DataFrame): Option[DataFrame] =
-      notMatchedBySource.map(n =>
-        live.join(hinted(keys), keyCols, "left_anti")
-          .filter(n.condition.getOrElse(lit(true))))
-    // ONE scan feeds the DV fold even with an NMBS clause: a semi ∪
-    // anti union would read the (100 TB) target once per leg, but
-    // "matched ∨ (unmatched ∧ cond)" is a single filter over ONE
-    // left-outer join against the keys (null live keys stay unmatched
-    // under a join, exactly as under the semi/anti pair — ANSI)
+      nmbsCond.map(c => marked(live, keys).filter(!isMatched && c))
+    // ONE scan feeds the DV fold even with an NMBS clause: "matched ∨
+    // (unmatched ∧ cond)" is a single filter over the one marked join
     def allVictimPos(live: DataFrame): DataFrame =
-      notMatchedBySource match {
-        case None =>
-          live.join(hinted(keys), keyCols, "left_semi")
-            .select(col("_g_leaf"), col("_g_pos"))
-        case Some(n) =>
-          val marker = keys.withColumn("_g_matched", lit(true))
-          live.join(hinted(marker), keyCols, "left_outer")
-            .filter(col("_g_matched").isNotNull ||
-              n.condition.getOrElse(lit(true)))
-            .select(col("_g_leaf"), col("_g_pos"))
-      }
+      marked(live, keys).filter(isMatched || nmbsCond.getOrElse(lit(false)))
+        .select(col("_g_leaf"), col("_g_pos"))
     def nmbsImages(nmbs: Option[DataFrame],
         withIds: Boolean): Seq[Entry] =
       (notMatchedBySource, nmbs) match {
@@ -3320,7 +3086,7 @@ object TableCommit {
       val live = liveWithIdsAndPos(spark, root, schema, es)
         .getOrElse(throw new IllegalStateException("non-empty entry " +
           "list produced no live scan")) // es.nonEmpty ⇒ Some
-      val victims = live.join(hinted(keys), keyCols, "left_semi")
+      val victims = marked(live, keys).filter(isMatched)
       val nmbs = nmbsRows(live)
       val encoded = dvEncodeDistributed(spark, root,
         allVictimPos(live), existingDvByLeaf(es), inlineDvMax)
@@ -3331,9 +3097,9 @@ object TableCommit {
       val imageCols = (schema.fieldNames.toSeq :+ RowIdCol).map(col)
       val matched = src.join(hinted(vicIds), keyCols, "inner")
         .select(imageCols: _*)
-      val fresh = src.join(
-        hinted(vicIds.select(keyCols.map(col): _*)), keyCols,
-        "left_anti")
+      val fresh = marked(src, vicIds.select(keyCols.map(col): _*))
+        .filter(!isMatched)
+        .select(schema.fieldNames.map(col).toIndexedSeq: _*)
       val stagedMatched = stageBatch(matched, root, layoutOf(root),
         statsCols :+ RowIdCol).map(markRidStats) ++
         nmbsImages(nmbs, withIds = true)
@@ -3366,54 +3132,28 @@ object TableCommit {
     * deletion vector gained positions in this version — carried as the
     * before/after ENCODINGS, not materialized positions, so the diff
     * (and every planner over it) stays metadata-sized on the driver no
-    * matter how fat the delta; consumers derive the newly-dead
-    * positions where they read them (executor-side,
-    * [[freshBitmaps]] / the `graft-cdf` reader) or on demand for
-    * purge-sized deltas. Every feed consumer (batch append, batch
-    * full, the streaming source) derives its view from this one diff
-    * without re-resolving any manifest. */
+    * matter how fat the delta; the feed's row reader derives the
+    * newly-dead positions where it reads them. Every feed (batch or
+    * streamed, append or full) is planned from this one diff by
+    * [[graft.sources.GraftCdf.plan]] without re-resolving any
+    * manifest. */
   final case class VersionChange(version: Long, added: Seq[Entry],
       removedPaths: Seq[String], removed: Seq[Entry] = Seq.empty,
       dvGrown: Seq[DvGrowth] = Seq.empty,
       dvShrunk: Seq[DvGrowth] = Seq.empty)
 
   /** A persisting file whose DV gained positions: the before/after
-    * encodings (stat min slot — inline text or `@sidecar`), plus
-    * zero-cost counts for planning. The fresh positions are
-    * `decode(after) − decode(before)`.
+    * encodings (stat min slot — inline text or `@sidecar`). The fresh
+    * positions are `decode(after) − decode(before)`.
     *
     * Also the carrier for a DV SHRINK (X283 restore — the only way a
     * vector loses positions, since DML growth is monotone union): a
     * shrink is recorded as the SWAPPED encoding pair (`after` = the
-    * prior fat vector, `before` = the restored thin/absent one), so
-    * `freshCount`/the position difference mean "resurrected" and every
-    * consumer ([[readPositions]], [[freshBitmaps]]) works unchanged. */
+    * prior fat vector, `before` = the restored thin/absent one), so the
+    * position difference means "resurrected" and the feed reader works
+    * unchanged. */
   final case class DvGrowth(entry: Entry, before: Option[ColStats],
-      after: ColStats, monotone: Boolean = true) {
-    /** Newly-dead count ESTIMATE from the zero-cost count slots —
-      * exact for monotone-union DML growth, an upper-bound-ish
-      * heuristic (possibly ≤ 0) across a restore between non-subset
-      * vectors. Consumers use it only to size the broadcast-vs-bitmap
-      * path; the emitted positions are always the exact set
-      * difference ([[freshOf]] / the reader's `emitOnly`). */
-    def freshCount: Long =
-      after.max.toLong - before.map(_.max.toLong).getOrElse(0L)
-    /** Broadcast-decision size bound (ADVICE r13): the count delta is
-      * trusted only on a MONOTONE leg (ordinary DML union, where it is
-      * exact). A restore version's leg can transition between
-      * NON-SUBSET vectors — a count delta of +1 beside a true set
-      * difference of ~|after| — so it is bounded by |after| (the set
-      * difference is always ≤ |after|), never by the delta. */
-    def boundCount: Long =
-      if (monotone && freshCount > 0L) freshCount else after.max.toLong
-  }
-
-  /** Newly-dead positions of one growth, decoded ON DEMAND (driver- or
-    * executor-side; delta-sized). */
-  private def freshOf(root: String, g: DvGrowth): Seq[Long] = {
-    val b = g.before.map(dvDecode(root, _)).getOrElse(Seq.empty).toSet
-    dvDecode(root, g.after).filterNot(b)
-  }
+      after: ColStats)
 
   /** File-level diff per version over `(fromExclusive, toInclusive]`.
     * Every version in the range (and `fromExclusive` itself, unless 0)
@@ -3470,14 +3210,14 @@ object TableCommit {
           // count difference is zero or negative while both the
           // newly-dead and resurrected sets are non-empty. A leg whose
           // set difference turns out empty emits zero rows where it is
-          // read (freshOf/emitOnly are exact set differences) — a few
-          // wasted partitions, never a missed change.
+          // read (the reader's emitOnly is an exact set difference) — a
+          // few wasted partitions, never a missed change.
           // The restore MARKER (ADVICE r13) keys the legs' shape: only
           // a restore commit can shrink a vector or transition between
           // non-subset vectors, so ordinary DML versions (the common
           // path — every second-and-later delete on a file) skip the
           // shrink leg entirely (it was provably empty: monotone union
-          // ⇒ before ⊆ after) and keep exact freshCounts.
+          // ⇒ before ⊆ after).
           // LEGACY fallback (review finding): manifests written before
           // the marker existed can't carry it — a version where any
           // persisting file's DV count DECREASED or a DV vanished is
@@ -3504,8 +3244,7 @@ object TableCommit {
             curBy.get(e.path) match {
               case Some(pe) if pe.stats.get(DvKey) != e.stats.get(DvKey)
                   && e.stats.contains(DvKey) =>
-                Some(DvGrowth(e, pe.stats.get(DvKey), e.stats(DvKey),
-                  monotone = !isRestore))
+                Some(DvGrowth(e, pe.stats.get(DvKey), e.stats(DvKey)))
               case _ => None
             }
           }
@@ -3519,8 +3258,7 @@ object TableCommit {
               curBy.get(e.path) match {
                 case Some(pe) if pe.stats.get(DvKey) != e.stats.get(DvKey)
                     && pe.stats.contains(DvKey) =>
-                  Some(DvGrowth(e, e.stats.get(DvKey), pe.stats(DvKey),
-                    monotone = false))
+                  Some(DvGrowth(e, e.stats.get(DvKey), pe.stats(DvKey)))
                 case _ => None
               }
             }
@@ -3572,39 +3310,9 @@ object TableCommit {
     * the data read is exactly the appended files — feed cost is
     * proportional to the CHANGE, not the table. */
   def readChanges(spark: SparkSession, root: String, schema: StructType,
-      fromExclusive: Long, toInclusive: Long,
-      versionCol: String = "_commit_version"): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    val chs = changesBetween(root, fromExclusive, toInclusive)
-    val nonAppend = chs.filter(_.removedPaths.nonEmpty)
-    require(nonAppend.isEmpty,
-      s"non-append version(s) ${nonAppend.map(_.version).mkString(", ")} " +
-        s"in feed range ($fromExclusive, $toInclusive] at $root — the " +
-        "change feed is append-only; diff rewrites via readAt/commit-diff")
-    // A deletion-vector delta (X265) removes ROWS without removing
-    // files — also not expressible as insert rows; silently skipping it
-    // would let a feed-driven mirror diverge. Same loud contract as
-    // file removals: use the FULL feed for such versions. The diff
-    // already carries the per-version DV growth — no re-resolution.
-    val dvDelta = chs
-      .filter(c => c.dvGrown.nonEmpty || c.dvShrunk.nonEmpty)
-      .map(_.version)
-    require(dvDelta.isEmpty,
-      s"deletion-vector delta in version(s) ${dvDelta.mkString(", ")} " +
-        s"at $root — row deletes/restores aren't expressible in the " +
-        "append-only feed; consume them via readChangesFull")
-    val parts = chs.filter(_.added.nonEmpty).map { ch =>
-      // readLive: an added entry can CARRY a DV (a shallow-cloned file)
-      // — its dead rows were never part of this table's content
-      readLive(spark, root, Some(schema), ch.added)
-        .withColumn(versionCol, lit(ch.version))
-    }
-    if (parts.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        schema.add(versionCol, org.apache.spark.sql.types.LongType,
-          nullable = false))
-    else parts.reduce(_ unionByName _)
-  }
+      fromExclusive: Long, toInclusive: Long): DataFrame =
+    graft.sources.GraftCdf.batch(spark, root, schema, fromExclusive,
+      toInclusive, fullFeed = false, withIds = false)
 
   /** FULL change-data feed: like [[readChanges]] but rewrite versions
     * are expressible — a version that removed files emits their rows as
@@ -3617,50 +3325,10 @@ object TableCommit {
     * its removed files are what the delete rows read; that is the same
     * manifest [[changesBetween]] already demands. */
   def readChangesFull(spark: SparkSession, root: String,
-      schema: StructType, fromExclusive: Long, toInclusive: Long,
-      versionCol: String = "_commit_version",
-      typeCol: String = "_change_type"): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    val parts = changesBetween(root, fromExclusive, toInclusive)
-      .flatMap { ch =>
-        // inserts and whole-file deletes read LIVE rows as of their own
-        // side of the version boundary — a file's dead rows were never
-        // content, so they belong in neither stream
-        val ins =
-          if (ch.added.isEmpty) None
-          else Some(readLive(spark, root, Some(schema), ch.added)
-            .withColumn(versionCol, lit(ch.version))
-            .withColumn(typeCol, lit("insert")))
-        val del =
-          if (ch.removed.isEmpty) None
-          else Some(readLive(spark, root, Some(schema), ch.removed)
-            .withColumn(versionCol, lit(ch.version))
-            .withColumn(typeCol, lit("delete")))
-        // X265: a deletion-vector delta on a PERSISTING file is a
-        // row-level delete — emit exactly the newly-dead positions
-        val dvDel =
-          if (ch.dvGrown.isEmpty) None
-          else Some(readPositions(spark, root, schema, ch.dvGrown)
-            .withColumn(versionCol, lit(ch.version))
-            .withColumn(typeCol, lit("delete")))
-        // X283: a DV shrink (restore) resurrects rows — emit them as
-        // inserts, so a feed consumer's state converges to the
-        // restored snapshot without a re-sync
-        val dvIns =
-          if (ch.dvShrunk.isEmpty) None
-          else Some(readPositions(spark, root, schema, ch.dvShrunk)
-            .withColumn(versionCol, lit(ch.version))
-            .withColumn(typeCol, lit("insert")))
-        ins.toSeq ++ del.toSeq ++ dvDel.toSeq ++ dvIns.toSeq
-      }
-    if (parts.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        schema.add(versionCol, org.apache.spark.sql.types.LongType,
-          nullable = false)
-          .add(typeCol, org.apache.spark.sql.types.StringType,
-            nullable = false))
-    else parts.reduce(_ unionByName _)
-  }
+      schema: StructType, fromExclusive: Long,
+      toInclusive: Long): DataFrame =
+    graft.sources.GraftCdf.batch(spark, root, schema, fromExclusive,
+      toInclusive, fullFeed = true, withIds = false)
 
   /** The full CDC feed WITH ROW IDENTITY (X277): every emitted row
     * carries its stable `_row_id`, so a downstream consumer (an
@@ -3672,104 +3340,10 @@ object TableCommit {
     * TRACKED table ([[commitAppend]]`(trackRowIds = true)` / preserveRowIds rewrites)
     * and fails loudly on any file without lineage. */
   def readChangesFullIds(spark: SparkSession, root: String,
-      schema: StructType, fromExclusive: Long, toInclusive: Long,
-      versionCol: String = "_commit_version",
-      typeCol: String = "_change_type"): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    val outCols = (schema.fieldNames.toSeq :+ RowIdCol).map(col)
-    def withIds(es: Seq[Entry]): Option[DataFrame] =
-      liveWithIdsAndPos(spark, root, schema, es).map(_.select(outCols: _*))
-    val parts = changesBetween(root, fromExclusive, toInclusive)
-      .flatMap { ch =>
-        val ins = withIds(ch.added)
-          .map(_.withColumn(versionCol, lit(ch.version))
-            .withColumn(typeCol, lit("insert")))
-        val del = withIds(ch.removed)
-          .map(_.withColumn(versionCol, lit(ch.version))
-            .withColumn(typeCol, lit("delete")))
-        val dvDel =
-          if (ch.dvGrown.isEmpty) None
-          else Some(readPositionsWithIds(spark, root, schema, ch.dvGrown)
-            .withColumn(versionCol, lit(ch.version))
-            .withColumn(typeCol, lit("delete")))
-        // X283: resurrected rows (a restore's DV shrink) re-arrive as
-        // inserts UNDER THEIR ORIGINAL stable ids — identity-keyed
-        // consumers resurrect exactly the state they tombstoned
-        val dvIns =
-          if (ch.dvShrunk.isEmpty) None
-          else Some(readPositionsWithIds(spark, root, schema,
-            ch.dvShrunk)
-            .withColumn(versionCol, lit(ch.version))
-            .withColumn(typeCol, lit("insert")))
-        ins.toSeq ++ del.toSeq ++ dvDel.toSeq ++ dvIns.toSeq
-      }
-    if (parts.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        schema.add(RowIdCol, org.apache.spark.sql.types.LongType)
-          .add(versionCol, org.apache.spark.sql.types.LongType,
-            nullable = false)
-          .add(typeCol, org.apache.spark.sql.types.StringType,
-            nullable = false))
-    else parts.reduce(_ unionByName _)
-  }
-
-  /** Rows at exactly the given positions, WITH their stable ids —
-    * the DV-delta leg of [[readChangesFullIds]]: born files compute
-    * `brid + position`, rewritten files read the materialized column. */
-  private def readPositionsWithIds(spark: SparkSession, root: String,
-      schema: StructType, sel: Seq[DvGrowth]): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, element_at, split}
-    import org.apache.spark.sql.types.{LongType, StructField}
-    import spark.implicits._
-    val (mat, born) = sel.partition(_.entry.stats.contains(RidKey))
-    val untracked = born.filterNot(_.entry.baseRowId.isDefined)
-    require(untracked.isEmpty,
-      s"file(s) without row lineage at $root: " +
-        s"${untracked.map(_.entry.path).take(3)}")
-    val outCols = (schema.fieldNames.toSeq :+ RowIdCol).map(col)
-    def posScan(g: Seq[DvGrowth], sc: StructType): DataFrame = {
-      val tagged = spark.read.schema(sc)
-        .parquet(g.map(x => resolvePath(root, x.entry.path)): _*)
-        .select(col("*"),
-          col("_metadata.file_name")
-            .as("_dv_leaf"),
-          col("_metadata.row_index").as("_dv_pos"))
-      // bounded like readPositions ([[DvGrowth.boundCount]]): any
-      // non-monotone (restore) leg counts as |after| — never
-      // cancelled, never clamped to free
-      if (g.map(_.boundCount).sum <= dvBroadcastThreshold) {
-        val posDf = g.flatMap { x =>
-          freshOf(root, x).map(p => (pathLeaf(x.entry.path), p))
-        }.toDF("_dv_leaf", "_dv_pos")
-        tagged.join(broadcast(posDf), Seq("_dv_leaf", "_dv_pos"),
-          "left_semi")
-      } else {
-        val holder = new DvProbeHolder(freshBitmaps(spark, root, g),
-          keepInside = true)
-        tagged.filter(dvProbeCol(holder, "_dv_leaf", "_dv_pos"))
-      }
-    }
-    val bornDf =
-      if (born.isEmpty) None
-      else {
-        val brid = born.map(x =>
-          (pathLeaf(x.entry.path), x.entry.baseRowId.get))
-          .toDF("_dv_leaf", "_g_brid")
-        Some(posScan(born, schema)
-          .join(broadcast(brid), Seq("_dv_leaf"))
-          .withColumn(RowIdCol, col("_g_brid") + col("_dv_pos"))
-          .select(outCols: _*))
-      }
-    val matDf =
-      if (mat.isEmpty) None
-      else Some(posScan(mat,
-        StructType(schema.fields :+ StructField(RowIdCol, LongType)))
-        .select(outCols: _*))
-    (bornDf, matDf) match {
-      case (Some(a), Some(b)) => a.unionByName(b)
-      case (a, b) => a.orElse(b).get
-    }
-  }
+      schema: StructType, fromExclusive: Long,
+      toInclusive: Long): DataFrame =
+    graft.sources.GraftCdf.batch(spark, root, schema, fromExclusive,
+      toInclusive, fullFeed = true, withIds = true)
 
   /** One retained commit's summary, for [[history]] (X282, the
     * `DESCRIBE HISTORY` every production table format exposes): what
@@ -4500,49 +4074,17 @@ object TableCommit {
       case Some(v) => readSnapshot(spark, root, schema, v)
     }
 
-  /** One PINNED snapshot read (X296b): clean files keep the plain
-    * fully-codegen'd columnar parquet scan (splittable, the 100 TB
-    * shape), while DV'd files route through the CONNECTOR's vectorized
-    * row-view partitions (`dvonly` facet scan) — the per-file cursor
-    * whose deletion-vector skip measured at parity with a clean
-    * filtered scan, vs 6-10x for the tagged-probe shapes. Both legs
-    * resolve the SAME version (the facet leg re-reads the manifest, so
-    * the version is pinned explicitly — never a torn mix with a racing
-    * commit). X309's row-group splits keep in-file parallelism on
-    * DV'd files; commitMeltDeleted remains the repair that returns
-    * rewritten files to the splittable clean leg.
-    *
-    * Routing (X315, the SCALING round-15 re-tune): the facet leg is
-    * the DEFAULT for every schema its readers can decode — the old
-    * ≤-threshold detour through the (leaf, position)-tuple broadcast
-    * anti-join measured at 5× the facet cursor even well BELOW the
-    * threshold (1.3 s vs 0.25 s at 62k deleted positions on a decimal
-    * schema), and the big-file penalty that once justified it is gone
-    * (X309). The tuple/bitmap scan-filter path survives as the
-    * any-type fallback (arrays, structs, maps — ADVICE r14), never as
-    * a throughput choice; duplicate leaf names refuse loudly on every
-    * DV'd path (positions key by leaf). */
+  /** One PINNED snapshot read: [[readLive]] over the version's
+    * entries, so clean files keep the plain splittable parquet scan and
+    * DV'd files the connector's row reader (X309's row-group splits keep
+    * in-file parallelism on big DV'd files; commitMeltDeleted remains
+    * the repair that returns rewritten files to the clean scan). */
   private def readSnapshot(spark: SparkSession, root: String,
       schema: StructType, version: Long): DataFrame = {
     val es = entriesAtVersion(root, version)
     if (es.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        schema)
-    val dvs = es.filter(_.stats.contains(DvKey))
-    if (dvs.isEmpty) return readLive(spark, root, Some(schema), es)
-    if (!graft.sources.GraftVectorized.supportedSchema(schema))
-      return readLive(spark, root, Some(schema), es)
-    // duplicate leaves refuse LOUDLY either way (readLive's bitmap leg
-    // enforces the same invariant — DVs key positions by leaf name)
-    requireUniqueLeaves(root, es)
-    val dvPart = spark.read.format("graft-table").schema(schema)
-      .option("root", root)
-      .option("asofversion", version.toString)
-      .option("dvonly", "true").load()
-    val clean = es.filterNot(_.stats.contains(DvKey))
-    if (clean.isEmpty) dvPart
-    else dvPart.unionByName(spark.read.schema(schema)
-      .parquet(clean.map(e => resolvePath(root, e.path)): _*))
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else readLive(spark, root, Some(schema), es)
   }
 
   /** Time-travel read: the table AS OF `version`. The version must still

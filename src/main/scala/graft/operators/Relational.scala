@@ -3557,8 +3557,8 @@ object Relational {
     * few-rows-per-file purge forced whole-file copy-on-write rewrites
     * — the scale-killer at 100 TB. Now a delete commit writes per-file
     * POSITION SETS into the manifest's stats channel (zero data bytes
-    * move — spec-pinned), reads anti-apply them via a broadcast
-    * anti-join on (file, row_index), and OPTIMIZE compacts them away.
+    * move — spec-pinned), reads skip them in the connector's row
+    * reader, and OPTIMIZE compacts them away.
     *
     * Lifecycle under test: v1 append → v2 purge (mod-19 stripe) → v3
     * second purge (disjoint stripe; DVs must COMPOSE) → v4 OPTIMIZE

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -27,9 +27,9 @@ import graft.engine.TableCommit
   *
   * Two modes (X268, VERDICT r11 task 6):
   *   - default (append-only, the [[TableCommit.readChanges]]
-  *     contract): a version that removed files or grew a deletion
-  *     vector is not expressible as insert rows and fails the batch
-  *     LOUDLY at planning time;
+  *     contract): a version that removed files or changed a deletion
+  *     vector is not expressible as insert rows and fails LOUDLY at
+  *     planning time;
   *   - `option("mode", "full")`: the [[TableCommit.readChangesFull]]
   *     semantics STREAMED — rewrites emit whole-file delete+insert
   *     rows, a DV delta emits exactly the newly-dead positions as
@@ -55,17 +55,25 @@ import graft.engine.TableCommit
   * drain everything available). `TriggerAvailableNow` pins the
   * horizon at prepare time and drains to it.
   *
+  * ONE PLANNER for batch and stream: [[GraftCdf.plan]] turns
+  * [[TableCommit.changesBetween]]'s diff into per-file partitions, and
+  * both this source's micro-batches and the batch feeds
+  * ([[TableCommit.readChanges]], `readChangesFull`,
+  * `readChangesFullIds` — a [[GraftCdfBatchTable]] relation) read
+  * exactly those partitions through the same reader, so the two can
+  * not drift and the append-only and row-lineage refusals exist once.
+  *
   * Executor-side parquet reading is Spark's own vectorized decode
   * ([[GraftVectorized]]), the reader every `graft-table` scan uses, so
-  * the feed reads every type the batch feed and the facet read
-  * (primitives, dates, timestamps, decimals, arrays, structs, maps). A
-  * data column of any other type is refused when the stream starts,
-  * naming the column. Planning is manifest-only on the driver; row
-  * bytes never visit it.
+  * the feed reads every type the facet reads (primitives, dates,
+  * timestamps, decimals, arrays, structs, maps). A data column of any
+  * other type is refused when the stream starts or the batch feed is
+  * planned, naming the column. Planning is manifest-only on the driver;
+  * row bytes never visit it.
   *
-  * Scale: a batch plans one InputPartition per appended FILE, so read
+  * Scale: a feed plans one InputPartition per changed FILE, so read
   * parallelism tracks the change size, and a 100k-file table's feed
-  * still reads only what each version added — change-proportional
+  * still reads only what each version changed — change-proportional
   * cost, the entire point of consuming the log instead of diffing
   * snapshots. */
 class GraftCdfProvider extends TableProvider
@@ -81,51 +89,123 @@ class GraftCdfProvider extends TableProvider
     new GraftCdfTable(schema, properties)
 }
 
-private object GraftCdf {
+private[graft] object GraftCdf {
   val VersionCol = "_commit_version"
   val TypeCol = "_change_type"
 
-  /** Split the read schema into the data columns, checking the
-    * trailing metadata columns for the mode: append mode ends with
-    * `_commit_version LONG`; full mode with `_commit_version LONG,
-    * _change_type STRING` (the batch [[TableCommit.readChangesFull]]
-    * schema, streamed); full mode with row ids (X280) with `_row_id
-    * LONG, _commit_version LONG, _change_type STRING` (the batch
-    * [[TableCommit.readChangesFullIds]] schema, streamed). */
-  def dataSchema(full: StructType, fullFeed: Boolean,
-      withIds: Boolean): StructType =
-    if (withIds) {
-      require(fullFeed,
-        "graft-cdf withrowids=true requires mode=full — identity CDC " +
-          "must express deletes and rewrites")
-      require(full.fields.length >= 3 &&
-        full.fields(full.fields.length - 3).name ==
-          TableCommit.RowIdCol &&
-        full.fields(full.fields.length - 3).dataType == LongType &&
-        full.fields(full.fields.length - 2).name == VersionCol &&
-        full.fields(full.fields.length - 2).dataType == LongType &&
-        full.fields.last.name == TypeCol &&
-        full.fields.last.dataType == StringType,
-        s"graft-cdf withrowids schema must end with " +
-          s"`${TableCommit.RowIdCol} LONG, $VersionCol LONG, " +
-          s"$TypeCol STRING`; got $full")
-      StructType(full.fields.dropRight(3))
-    } else if (fullFeed) {
-      require(full.fields.length >= 2 &&
-        full.fields(full.fields.length - 2).name == VersionCol &&
-        full.fields(full.fields.length - 2).dataType == LongType &&
-        full.fields.last.name == TypeCol &&
-        full.fields.last.dataType == StringType,
-        s"graft-cdf mode=full schema must end with `$VersionCol LONG, " +
-          s"$TypeCol STRING`; got $full")
-      StructType(full.fields.dropRight(2))
-    } else {
-      require(full.fields.nonEmpty &&
-        full.fields.last.name == VersionCol &&
-        full.fields.last.dataType == LongType,
-        s"graft-cdf schema must end with `$VersionCol LONG`; got $full")
-      StructType(full.fields.init)
+  /** The feed's output schema over `data`: `_row_id` when `withIds`,
+    * then `_commit_version` and, in full mode, `_change_type`. */
+  def feedSchema(data: StructType, fullFeed: Boolean,
+      withIds: Boolean): StructType = {
+    val ids =
+      if (withIds) Seq(StructField(TableCommit.RowIdCol, LongType)) else Nil
+    val tpe =
+      if (fullFeed) Seq(StructField(TypeCol, StringType, nullable = false))
+      else Nil
+    StructType(data.fields.toSeq ++ ids ++
+      (StructField(VersionCol, LongType, nullable = false) +: tpe))
+  }
+
+  /** The ONE feed planner: the partitions of every version in `chs`.
+    *
+    * Append mode refuses, at planning time, a version that removed
+    * files or changed a deletion vector — neither is expressible as
+    * insert rows, and a rewrite version must kill the feed loudly, never
+    * serve a half-truth. Full mode (X268) expresses both: inserts read
+    * an added file's live rows; whole-file deletes read a removed file's
+    * live rows AS OF THE PREDECESSOR (the removed entry carries its own
+    * DV); a DV delta emits ONLY the newly-dead positions of the
+    * persisting file; a restore's DV shrink (X283) emits the
+    * resurrected rows as inserts — `dvShrunk` carries the SWAPPED
+    * encoding pair, so emitOnly's decode(encA) − decode(encB) is
+    * exactly the resurrected set.
+    *
+    * Positions never visit the driver: each partition carries the DV
+    * ENCODINGS (inline text or @sidecar ref) and the reader task
+    * decodes where it reads. */
+  private[sources] def plan(root: String,
+      chs: Seq[TableCommit.VersionChange], dataSchema: StructType,
+      fullFeed: Boolean,
+      withIds: Boolean): Seq[CdfFilePartition] = {
+    // X280: identity CDC needs each file's id source — `brid + position`
+    // for files in their birth layout, the materialized `_row_id`
+    // column for rewritten ones (marked by the `rid:` stats key). A
+    // file with neither has no lineage and is refused here.
+    def ridBase(e: TableCommit.Entry): Option[Long] =
+      if (!withIds) None
+      else e.baseRowId.orElse {
+        require(e.stats.contains(TableCommit.RidKey),
+          s"file ${e.path} at $root has no row lineage — a tracked " +
+            "table must only be written through " +
+            "commitAppend(trackRowIds = true) / preserveRowIds rewrites")
+        None // materialized: the reader pulls the _row_id column
+      }
+    def leg(e: TableCommit.Entry, v: Long, encA: Option[String],
+        encB: Option[String], emitOnly: Boolean,
+        changeType: Option[String]) =
+      CdfFilePartition(TableCommit.resolvePath(root, e.path), v,
+        dataSchema, root, encA, encB, emitOnly, changeType, withIds,
+        ridBase(e))
+    def dv(e: TableCommit.Entry) = e.stats.get(TableCommit.DvKey).map(_.min)
+    if (!fullFeed) {
+      val nonAppend = chs.filter(_.removedPaths.nonEmpty)
+      require(nonAppend.isEmpty,
+        s"non-append version(s) ${nonAppend.map(_.version).mkString(", ")} " +
+          s"at $root — the append-only change feed cannot express " +
+          "rewrites; read them through the full feed (readChangesFull, " +
+          "graft-cdf mode=full)")
+      val dvDelta = chs
+        .filter(c => c.dvGrown.nonEmpty || c.dvShrunk.nonEmpty)
+        .map(_.version)
+      require(dvDelta.isEmpty,
+        s"deletion-vector delta in version(s) ${dvDelta.mkString(", ")} " +
+          s"at $root — row deletes/restores aren't expressible in the " +
+          "append-only feed; read them through the full feed")
+      chs.flatMap(ch => ch.added.map(e =>
+        leg(e, ch.version, dv(e), None, emitOnly = false, None)))
+    } else chs.flatMap { ch =>
+      ch.added.map(e => leg(e, ch.version, dv(e), None,
+        emitOnly = false, Some("insert"))) ++
+        ch.removed.map(e => leg(e, ch.version, dv(e), None,
+          emitOnly = false, Some("delete"))) ++
+        ch.dvGrown.map(g => leg(g.entry, ch.version, Some(g.after.min),
+          g.before.map(_.min), emitOnly = true, Some("delete"))) ++
+        ch.dvShrunk.map(g => leg(g.entry, ch.version, Some(g.after.min),
+          g.before.map(_.min), emitOnly = true, Some("insert")))
     }
+  }
+
+  /** The BATCH feed over `(fromExclusive, toInclusive]` of `data`'s
+    * columns: planned now, so a refusal fires at the call, and read as
+    * a relation over exactly the partitions the stream would plan. */
+  def batch(spark: org.apache.spark.sql.SparkSession, root: String,
+      data: StructType, fromExclusive: Long, toInclusive: Long,
+      fullFeed: Boolean, withIds: Boolean): org.apache.spark.sql.DataFrame = {
+    GraftVectorized.requireSupported(data, s"graft-cdf($root)")
+    val parts = plan(root,
+      TableCommit.changesBetween(root, fromExclusive, toInclusive),
+      data, fullFeed, withIds)
+    GraftBatchScan.frame(spark, new GraftCdfBatchTable(root,
+      GraftBatchScan.nullable(data), parts, fullFeed, withIds))
+  }
+
+  /** Split the stream's read schema into the data columns, checking
+    * that it ends with exactly the trailing columns [[feedSchema]] adds
+    * for the mode. */
+  def dataSchema(full: StructType, fullFeed: Boolean,
+      withIds: Boolean): StructType = {
+    require(fullFeed || !withIds,
+      "graft-cdf withrowids=true requires mode=full — identity CDC " +
+        "must express deletes and rewrites")
+    val meta = feedSchema(new StructType(), fullFeed, withIds).fields
+    def shape(fs: Seq[StructField]) = fs.map(f => (f.name, f.dataType))
+    require(
+      shape(full.fields.toSeq.takeRight(meta.length)) == shape(meta.toSeq),
+      s"graft-cdf schema must end with " +
+        s"`${meta.map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")}`" +
+        s"; got $full")
+    StructType(full.fields.dropRight(meta.length))
+  }
 }
 
 private class GraftCdfTable(schema0: StructType,
@@ -205,94 +285,9 @@ private class GraftCdfStream(root: String, fullSchema: StructType,
       end: Offset): Array[InputPartition] = {
     val from = start.asInstanceOf[CdfOffset].version
     val until = end.asInstanceOf[CdfOffset].version
-    if (from >= until) return Array.empty
-    // ONE incremental diff pass (ADVICE r11): changesBetween rolls the
-    // file list forward version by version — a delta manifest is its
-    // own diff — and already carries removals and DV growth, so both
-    // the append-only contract checks and the full feed's partitions
-    // derive from this single walk with no per-version re-resolution.
-    val chs = TableCommit.changesBetween(root, from, until)
-    def abs(e: TableCommit.Entry): String =
-      if (e.path.startsWith("/")) e.path else s"$root/${e.path}"
-    // X280: identity CDC needs each file's id source — `brid + position`
-    // for files in their birth layout, the materialized `_row_id`
-    // column for rewritten ones (marked by the `rid:` stats key). A
-    // file with neither has no lineage: fail at PLANNING time, the
-    // same loud contract as the batch readChangesFullIds.
-    def ridBase(e: TableCommit.Entry): Option[Long] =
-      if (!withIds) None
-      else e.baseRowId.orElse {
-        require(e.stats.contains(TableCommit.RidKey),
-          s"file ${e.path} at $root has no row lineage — a tracked " +
-            "table must only be written through " +
-            "commitAppend(trackRowIds = true) / preserveRowIds rewrites")
-        None // materialized: the reader pulls the _row_id column
-      }
-    if (!fullFeed) {
-      // append-only contract, enforced at PLANNING time so a rewrite
-      // version kills the stream loudly, never feeds a half-truth
-      val nonAppend = chs.filter(_.removedPaths.nonEmpty)
-      require(nonAppend.isEmpty,
-        s"non-append version(s) ${nonAppend.map(_.version).mkString(", ")} " +
-          s"in stream range ($from, $until] at $root — graft-cdf streams " +
-          "the append-only feed; rewrites need mode=full")
-      val dvDelta = chs
-        .filter(c => c.dvGrown.nonEmpty || c.dvShrunk.nonEmpty)
-        .map(_.version)
-      require(dvDelta.isEmpty,
-        s"deletion-vector delta in version(s) ${dvDelta.mkString(", ")} " +
-          s"at $root — row deletes/restores aren't expressible in the " +
-          "append-only stream; use mode=full")
-      chs.flatMap { ch =>
-        ch.added.map { e =>
-          CdfFilePartition(abs(e), ch.version, dataSchema, root,
-            encA = e.stats.get(TableCommit.DvKey).map(_.min),
-            encB = None, emitOnly = false, changeType = None,
-            withIds = false, ridBase = None): InputPartition
-        }
-      }.toArray
-    } else {
-      // FULL feed (X268): rewrites and row deletes are expressible —
-      // exactly the batch readChangesFull semantics, streamed.
-      // Inserts read an added file's live rows; whole-file deletes
-      // read a removed file's live rows AS OF THE PREDECESSOR (the
-      // removed entry carries its own DV); a DV delta emits ONLY the
-      // newly-dead positions of the persisting file.
-      // positions never visit the driver: each partition carries the
-      // DV ENCODINGS (inline text or @sidecar ref) and the reader task
-      // decodes where it reads
-      chs.flatMap { ch =>
-        val ins = ch.added.map(e =>
-          CdfFilePartition(abs(e), ch.version, dataSchema, root,
-            encA = e.stats.get(TableCommit.DvKey).map(_.min),
-            encB = None, emitOnly = false, changeType = Some("insert"),
-            withIds = withIds, ridBase = ridBase(e)): InputPartition)
-        val del = ch.removed.map(e =>
-          CdfFilePartition(abs(e), ch.version, dataSchema, root,
-            encA = e.stats.get(TableCommit.DvKey).map(_.min),
-            encB = None, emitOnly = false, changeType = Some("delete"),
-            withIds = withIds, ridBase = ridBase(e)): InputPartition)
-        val dvd = ch.dvGrown.map { g =>
-          CdfFilePartition(abs(g.entry), ch.version, dataSchema, root,
-            encA = Some(g.after.min), encB = g.before.map(_.min),
-            emitOnly = true, changeType = Some("delete"),
-            withIds = withIds,
-            ridBase = ridBase(g.entry)): InputPartition
-        }
-        // X283: a restore's DV shrink streams the resurrected rows as
-        // inserts — dvShrunk already carries the SWAPPED encoding
-        // pair, so emitOnly's decode(encA) − decode(encB) is exactly
-        // the resurrected position set
-        val dvi = ch.dvShrunk.map { g =>
-          CdfFilePartition(abs(g.entry), ch.version, dataSchema, root,
-            encA = Some(g.after.min), encB = g.before.map(_.min),
-            emitOnly = true, changeType = Some("insert"),
-            withIds = withIds,
-            ridBase = ridBase(g.entry)): InputPartition
-        }
-        ins ++ del ++ dvd ++ dvi
-      }.toArray
-    }
+    if (from >= until) Array.empty
+    else GraftCdf.plan(root, TableCommit.changesBetween(root, from, until),
+      dataSchema, fullFeed, withIds).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -301,34 +296,35 @@ private class GraftCdfStream(root: String, fullSchema: StructType,
   override def stop(): Unit = ()
 }
 
-/** One file of one version. The marked positions arrive as DV
-  * ENCODINGS (decoded in the reader task, never on the driver),
-  * interpreted by `emitOnly`: false → SKIP `encA`'s positions (the
-  * file's deletion vector — its dead rows were never content and must
-  * not stream); true → emit ONLY `decode(encA) − decode(encB)` (a DV
-  * delta's newly-dead rows, streamed as delete records in the full
-  * feed). `changeType` present = full-feed mode, emitted as the
-  * trailing `_change_type` column. `withIds` (X280) adds a `_row_id`
-  * column before it: `ridBase + position` when the base is present (a
-  * born file), the file's materialized `_row_id` column otherwise. */
-/** `bare = true` (X289 batch read facet): emit ONLY the data columns
-  * (+ `_row_id` when `withIds`) — no trailing `_commit_version` /
-  * `_change_type`; the partition is a LIVE-rows file scan, not a feed
-  * leg. */
-/** `columnar = true` (X295, set at planning time only when EVERY
-  * partition of the scan is a DV-free bare read): the reader factory
-  * serves raw `ColumnarBatch`es and Spark plans its codegen'd
-  * ColumnarToRow on top — the same physical shape as its own parquet
-  * scans. Spark requires all of a scan's partitions to agree on
-  * columnar-ness, so the flag is all-or-nothing per scan. */
-/** `splitStart/splitEnd` (X309, VERDICT r14 task 5): a ROW-GROUP
-  * range — the partition decodes only the row groups whose bytes start
-  * in `[splitStart, splitEnd)` (parquet's midpoint rule keys off the
-  * group's own span, so group-start boundaries are exact), and
-  * `posBase`/`posEnd` carry the group range's absolute row-position
-  * window so the deletion-vector skip keys the FILE's position space,
-  * not the split's. `splitEnd = -1` = whole file (every feed leg; any
-  * file whose footer wasn't consulted). */
+/** One file (or row-group range) of one read. The marked positions
+  * arrive as DV ENCODINGS (decoded in the reader task, never on the
+  * driver), interpreted by `emitOnly`: false → SKIP `encA`'s positions
+  * (the file's deletion vector — its dead rows were never content);
+  * true → emit ONLY `decode(encA) − decode(encB)` (a DV delta's
+  * newly-dead rows, or a restore's resurrected ones).
+  *
+  * Tail columns after the data columns, in order:
+  *   - `_row_id` when `withIds` (X280): `ridBase + position` for a born
+  *     file, the file's materialized `_row_id` column otherwise;
+  *   - `_g_leaf`, `_g_pos` when `positions`: the file's leaf name and
+  *     each row's position in it — the coordinates the engine's UPDATE
+  *     and MERGE scans fold into new deletion vectors;
+  *   - `_commit_version` and, when `changeType` is set, `_change_type`,
+  *     unless `bare` (a live-rows scan, not a feed leg).
+  *
+  * `columnar = true` (X295, set at planning time only when EVERY
+  * partition of the scan is a DV-free bare read without a tail): the
+  * reader factory serves raw `ColumnarBatch`es and Spark plans its
+  * codegen'd ColumnarToRow on top. Spark requires all of a scan's
+  * partitions to agree on columnar-ness, so the flag is all-or-nothing
+  * per scan.
+  *
+  * `splitStart/splitEnd` (X309): a ROW-GROUP range — the partition
+  * decodes only the row groups whose bytes start in
+  * `[splitStart, splitEnd)`, and `posBase`/`posEnd` carry the range's
+  * absolute row-position window so the deletion-vector skip keys the
+  * FILE's position space, not the split's. `splitEnd = -1` = whole
+  * file. */
 private case class CdfFilePartition(absPath: String, version: Long,
     dataSchema: StructType, root: String,
     encA: Option[String], encB: Option[String],
@@ -336,8 +332,44 @@ private case class CdfFilePartition(absPath: String, version: Long,
     withIds: Boolean, ridBase: Option[Long],
     bare: Boolean = false, columnar: Boolean = false,
     splitStart: Long = 0L, splitEnd: Long = -1L,
-    posBase: Long = 0L, posEnd: Long = -1L)
+    posBase: Long = 0L, posEnd: Long = -1L,
+    positions: Boolean = false)
     extends InputPartition
+
+/** The batch change feed: the [[GraftCdf.plan]] partitions of one
+  * version range, read through the stream's reader factory. Column
+  * pruning narrows each partition's data columns; the feed's trailing
+  * columns are always emitted. */
+private class GraftCdfBatchTable(root: String, data: StructType,
+    parts: Seq[CdfFilePartition], fullFeed: Boolean, withIds: Boolean)
+    extends Table with SupportsRead {
+  override def name(): String = s"graft-cdf($root)"
+  override def schema(): StructType =
+    GraftCdf.feedSchema(data, fullFeed, withIds)
+  override def capabilities(): util.Set[TableCapability] =
+    util.EnumSet.of(TableCapability.BATCH_READ)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new ScanBuilder with SupportsPushDownRequiredColumns {
+      private var pruned = data
+      override def pruneColumns(required: StructType): Unit = {
+        val keep =
+          data.fields.filter(f => required.fieldNames.contains(f.name))
+        // COUNT(*) still needs one column to drive the row cursor
+        pruned = StructType(if (keep.nonEmpty) keep else data.fields.take(1))
+      }
+      override def build(): Scan = new Scan with Batch {
+        override def readSchema(): StructType =
+          GraftCdf.feedSchema(pruned, fullFeed, withIds)
+        override def toBatch: Batch = this
+        override def description(): String =
+          s"graft-cdf($root) legs=${parts.size}"
+        override def planInputPartitions(): Array[InputPartition] =
+          parts.map(p => p.copy(dataSchema = pruned): InputPartition).toArray
+        override def createReaderFactory(): PartitionReaderFactory =
+          GraftCdfReaderFactory
+      }
+    }
+}
 
 private object GraftCdfReaderFactory extends PartitionReaderFactory {
   /** X314: a clustered scan wraps its splits with their partition key;
@@ -375,22 +407,21 @@ private object GraftCdfReaderFactory extends PartitionReaderFactory {
     new GraftVectorizedRowReader(unwrap(p))
 }
 
-/** Every non-columnar partition — a DV'd bare scan and every feed leg —
+/** Every non-columnar partition — a DV'd scan and every feed leg —
   * decodes vectorized and is served row by row off the batch cursor.
   * Row position within the file is the cursor index (batches arrive in
   * file order; a row-group split starts at its absolute `posBase`), and
-  * the marked set keys on it: `emitOnly = false` skips the marked
-  * positions (a deletion vector), `emitOnly = true` emits only them (a
-  * DV delta). A feed leg's row is the data row joined with one reused
-  * tail row: `_row_id` when `withIds` (`ridBase + position` for a born
-  * file; a rewritten file's materialized column is projected right
-  * after the data columns instead), then the constant
-  * `_commit_version` and `_change_type`. */
+  * the marked positions key on it: `emitOnly = false` skips them (a
+  * deletion vector), `emitOnly = true` emits only them (a DV delta).
+  * The marked set is an ascending array walked by a cursor, since rows
+  * arrive in ascending position order. A row is the data row joined
+  * with one reused tail row (see [[CdfFilePartition]]). */
 private class GraftVectorizedRowReader(p: CdfFilePartition)
     extends PartitionReader[InternalRow] {
   // DV decode FIRST: if the sidecar read throws, no parquet reader has
   // been opened yet
-  private val marked = GraftVectorizedRowReader.markedSet(p)
+  private val marked = GraftVectorizedRowReader.marked(p)
+  private var mi = 0 // first marked position not yet passed
   private val readRid = p.withIds && p.ridBase.isEmpty
   private val rdr = GraftVectorized.open(p.absPath,
     if (readRid) p.dataSchema.add(TableCommit.RowIdCol, LongType)
@@ -400,16 +431,20 @@ private class GraftVectorizedRowReader(p: CdfFilePartition)
   private val ridBase = p.ridBase.getOrElse(0L)
   private val tail = {
     val id = if (bornRid) Seq(0L) else Nil // set per row in get()
+    val at = if (p.positions) Seq(UTF8String.fromString(
+      p.absPath.substring(p.absPath.lastIndexOf('/') + 1)), 0L) else Nil
     val feed = if (p.bare) Nil
       else p.version +: p.changeType.map(UTF8String.fromString).toSeq
-    new GenericInternalRow((id ++ feed).toArray[Any])
+    new GenericInternalRow((id ++ at ++ feed).toArray[Any])
   }
+  private val posSlot = if (bornRid) 2 else 1 // after _g_leaf
   private val joined = new JoinedRow
   private var pos = p.posBase - 1L
   override def next(): Boolean = {
     while (rdr.nextKeyValue()) {
       pos += 1
-      if ((!marked.isEmpty && marked.contains(pos)) == p.emitOnly)
+      while (mi < marked.length && marked(mi) < pos) mi += 1
+      if ((mi < marked.length && marked(mi) == pos) == p.emitOnly)
         return true
     }
     false
@@ -420,32 +455,38 @@ private class GraftVectorizedRowReader(p: CdfFilePartition)
       s"materialized ${TableCommit.RowIdCol} missing at position $pos " +
         s"of ${p.absPath}")
     if (bornRid) tail.setLong(0, ridBase + pos)
+    if (p.positions) tail.setLong(posSlot, pos)
     if (tail.numFields == 0) row else joined(row, tail)
   }
   override def close(): Unit = rdr.close()
 }
 
 private object GraftVectorizedRowReader {
-  /** The partition's marked position set, decoded EXECUTOR-side from
-    * the DV encodings (inline text or a sidecar on the shared FS):
+  /** The partition's marked positions, ascending, decoded EXECUTOR-side
+    * from the DV encodings (inline text or a sidecar on the shared FS):
     * `decode(encA) − decode(encB)` — a deletion vector to skip
     * (`emitOnly = false`) or a DV delta to emit (`emitOnly = true`). */
-  def markedSet(p: CdfFilePartition): java.util.HashSet[Long] = {
-    val a = p.encA.map(TableCommit.dvDecodeEnc(p.root, _))
-      .getOrElse(Seq.empty)
-    val vals0 = p.encB match {
-      case Some(b) =>
-        val before = TableCommit.dvDecodeEnc(p.root, b).toSet
-        a.filterNot(before)
+  def marked(p: CdfFilePartition): Array[Long] = {
+    def sorted(enc: String): Array[Long] = {
+      val a = TableCommit.dvDecodeEnc(p.root, enc).toArray
+      java.util.Arrays.sort(a)
+      a
+    }
+    val a = p.encA.map(sorted).getOrElse(Array.emptyLongArray)
+    val fresh = p.encB.map(sorted) match {
+      case Some(b) => // sorted-merge difference a − b
+        val out = Array.newBuilder[Long]
+        var j = 0
+        a.foreach { v =>
+          while (j < b.length && b(j) < v) j += 1
+          if (j >= b.length || b(j) != v) out += v
+        }
+        out.result()
       case None => a
     }
     // X309: a row-group split only ever visits its own position
-    // window — keep the probe set split-sized, not file-sized
-    val vals =
-      if (p.posEnd < 0L) vals0
-      else vals0.filter(v => v >= p.posBase && v < p.posEnd)
-    val s = new java.util.HashSet[Long](vals.length * 2 + 4)
-    vals.foreach(s.add(_))
-    s
+    // window — keep the marked set split-sized, not file-sized
+    if (p.posEnd < 0L) fresh
+    else fresh.filter(v => v >= p.posBase && v < p.posEnd)
   }
 }

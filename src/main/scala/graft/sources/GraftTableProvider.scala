@@ -76,7 +76,7 @@ private[graft] class GraftWriteTable(schema0: StructType,
       TableCapability.STREAMING_WRITE, TableCapability.BATCH_READ)
 
   /** X289: the BATCH READ facet — `spark.read.format("graft-table")`
-    * serves the CURRENT snapshot's live rows (DV anti-apply in the
+    * serves the CURRENT snapshot's live rows (DV skip in the
     * reader task), so graft tables are SQL-able through Spark's own
     * planner: register a temp view, join, aggregate. Column pruning
     * arrives via [[SupportsPushDownRequiredColumns]]; comparison
@@ -125,13 +125,7 @@ private[graft] class GraftWriteTable(schema0: StructType,
 
   override def newScanBuilder(
       options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(root, schema0,
-      // X296b: the engine's own snapshot reads pin their version and
-      // select the DV'd-files-only leg through reader options
-      asOfVersion.orElse(
-        Option(options.get("asofversion")).map(_.toLong)),
-      toPhysical,
-      Option(options.get("dvonly")).exists(_ == "true"),
+    new GraftScanBuilder(root, schema0, asOfVersion, toPhysical,
       // X314: declare a column every file is single-valued on (the
       // manifest verifies) → the scan reports KeyGroupedPartitioning;
       // X316/X320: a declared partition column is the standing default
@@ -872,8 +866,9 @@ private object GraftPartitionedDataWriter {
 private class GraftScanBuilder(root: String, full: StructType,
     asOf: Option[Long] = None,
     toPhys: Map[String, String] = Map.empty,
-    dvOnly: Boolean = false,
-    cluster: Option[GraftClusterSpec] = None)
+    cluster: Option[GraftClusterSpec] = None,
+    pinned: Option[Seq[TableCommit.Entry]] = None,
+    positions: Boolean = false)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters with SupportsPushDownAggregates {
   private var required: StructType = full
@@ -888,12 +883,14 @@ private class GraftScanBuilder(root: String, full: StructType,
     else StructType(s.fields.toIndexedSeq.map(f =>
       f.copy(name = phys(f.name))))
 
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    // empty pruning (e.g. COUNT(*)) still needs some column to drive
-    // the row cursor — keep the first
-    required =
-      if (requiredSchema.fields.nonEmpty) requiredSchema
-      else StructType(full.fields.take(1))
+  override def pruneColumns(requiredSchema: StructType): Unit = {
+    // only data columns prune (a positions scan's tail is always
+    // emitted); empty pruning (e.g. COUNT(*)) still needs some column
+    // to drive the row cursor — keep the first
+    val data =
+      requiredSchema.fields.filter(f => full.fieldNames.contains(f.name))
+    required = StructType(if (data.nonEmpty) data else full.fields.take(1))
+  }
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     anyFilter = filters.nonEmpty
@@ -958,11 +955,11 @@ private class GraftScanBuilder(root: String, full: StructType,
     * DV doesn't poison it (counts subtract exactly). */
   private def computeAgg(
       a: Aggregation): Option[(StructType, Seq[Any])] = {
-    // statsEnvelope/entries are head-version; a time-travel pin falls
-    // back to the real (versioned) scan rather than answering from
-    // the wrong snapshot's manifest
+    // statsEnvelope/entries are head-version; a time-travel or entry
+    // pin falls back to the real scan rather than answering from the
+    // wrong snapshot's manifest
     if (a.groupByExpressions.nonEmpty || anyFilter || asOf.isDefined ||
-        dvOnly)
+        pinned.isDefined)
       return None
     // ONE snapshot for every leg: a COUNT and a MAX in one result row
     // must describe the SAME version, never a torn mix of two racing
@@ -994,8 +991,8 @@ private class GraftScanBuilder(root: String, full: StructType,
     case Some((schema, row)) => new GraftAggScan(root, schema, row)
     case None => new GraftBatchScan(root, required,
       physSchema(required), physSchema(full),
-      usable.map(GraftBatchScan.mapFilter(phys)), asOf, dvOnly,
-      phys, cluster)
+      usable.map(GraftBatchScan.mapFilter(phys)), asOf, pinned,
+      positions, phys, cluster)
   }
 }
 
@@ -1145,6 +1142,36 @@ private object GraftAggReaderFactory extends PartitionReaderFactory {
 }
 
 private[graft] object GraftBatchScan {
+  /** The file coordinates a positions scan appends to each row. */
+  private[sources] val PosFields: Seq[StructField] = Seq(
+    StructField("_g_leaf", StringType, nullable = false),
+    StructField("_g_pos", LongType, nullable = false))
+
+  /** A DataFrame over `t`, handed to Spark in-process as a resolved
+    * DataSourceV2 relation — no provider lookup, no reader options. */
+  private[sources] def frame(spark: org.apache.spark.sql.SparkSession,
+      t: org.apache.spark.sql.connector.catalog.Table)
+      : org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.graftshim.Shim.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+        .create(t, None, None))
+
+  /** A file's columns read back may be NULL whatever a caller's schema
+    * says (a column missing from the file reads NULL), exactly as
+    * Spark's own file scans assume. */
+  private[sources] def nullable(s: StructType): StructType =
+    StructType(s.fields.map(_.copy(nullable = true)))
+
+  /** The engine's merge-on-read: the live rows of exactly `es`, each
+    * file's deletion vector skipped in the row reader. With `positions`
+    * every row also carries `_g_leaf`/`_g_pos`, its file coordinates.
+    * A column type the reader cannot decode is refused here, naming the
+    * column. */
+  def live(spark: org.apache.spark.sql.SparkSession, root: String,
+      schema: StructType, es: Seq[TableCommit.Entry],
+      positions: Boolean): org.apache.spark.sql.DataFrame =
+    frame(spark, new GraftPinnedTable(root, nullable(schema), es, positions))
+
   /** Files below this size skip the planning-time footer consult for
     * row-group splits (X309) — a file smaller than a row group can't
     * hold two. Volatile test seam: specs lower it to drive split
@@ -1494,15 +1521,33 @@ private[graft] object GraftBatchScan {
   }
 }
 
+/** An engine read over an explicit entry list ([[GraftBatchScan.live]]):
+  * the facet's scan, pinned to those entries, optionally with the
+  * `_g_leaf`/`_g_pos` tail. */
+private class GraftPinnedTable(root: String, data: StructType,
+    es: Seq[TableCommit.Entry], positions: Boolean)
+    extends Table with SupportsRead {
+  override def name(): String = s"graft-table($root)"
+  override def schema(): StructType =
+    if (positions) StructType(data.fields ++ GraftBatchScan.PosFields)
+    else data
+  override def capabilities(): util.Set[TableCapability] =
+    util.EnumSet.of(TableCapability.BATCH_READ)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new GraftScanBuilder(root, data, pinned = Some(es),
+      positions = positions)
+}
+
 /** One partition per live file (or row group) surviving the stat
   * prune; the feed's [[GraftCdfReaderFactory]] does the executor-side
-  * vectorized decode and DV anti-apply (`bare = true`: data columns
-  * only, no feed tail). A projection with a type that reader does not
-  * decode is refused here, when the scan is built. */
+  * vectorized decode and DV skip (`bare = true`: no feed tail). A
+  * projection with a type that reader does not decode is refused here,
+  * when the scan is built. */
 private class GraftBatchScan(root: String, required: StructType,
     physRequired: StructType, physFull: StructType,
     pushed: Array[Filter], asOf: Option[Long] = None,
-    dvOnly: Boolean = false, phys: String => String = identity,
+    pinned: Option[Seq[TableCommit.Entry]] = None,
+    positions: Boolean = false, phys: String => String = identity,
     cluster: Option[GraftClusterSpec] = None)
     extends Scan with Batch
     with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering
@@ -1512,7 +1557,9 @@ private class GraftBatchScan(root: String, required: StructType,
   // the partitions carry the physical-named twin for the file decode —
   // rows are positional, so only the parquet field lookup differs
   GraftVectorized.requireSupported(required, s"graft-table($root)")
-  override def readSchema(): StructType = required
+  override def readSchema(): StructType =
+    if (positions) StructType(required.fields ++ GraftBatchScan.PosFields)
+    else required
   override def toBatch: Batch = this
 
   // X313: dynamic file pruning — the DPP analogue for a manifest-
@@ -1552,9 +1599,8 @@ private class GraftBatchScan(root: String, required: StructType,
     * the same static-prune outcome), never a torn mix of two racing
     * commits' states. */
   private lazy val staticEntries: Seq[TableCommit.Entry] =
-    asOf.map(v => TableCommit.entriesAtVersion(root, v))
+    pinned.orElse(asOf.map(v => TableCommit.entriesAtVersion(root, v)))
       .getOrElse(TableCommit.entries(root))
-      .filter(e => !dvOnly || e.stats.contains(TableCommit.DvKey))
       .filter(e => pushed.forall(f =>
         GraftBatchScan.mightMatch(physFull, e, f)))
 
@@ -1676,9 +1722,7 @@ private class GraftBatchScan(root: String, required: StructType,
     var bytes = 0L
     var ok = true
     es.foreach { e =>
-      val abs =
-        if (e.path.startsWith("/")) e.path else s"$root/${e.path}"
-      GraftBatchScan.fileSize(abs) match {
+      GraftBatchScan.fileSize(TableCommit.resolvePath(root, e.path)) match {
         case Some(n) => bytes += n
         case None    => ok = false
       }
@@ -1692,12 +1736,10 @@ private class GraftBatchScan(root: String, required: StructType,
     }
   }
 
-  override def description(): String = {
-    val mode =
-      if (dvOnly) "mode=vectorized-row-view (dv)" else "mode=vectorized"
-    s"graft-table($root)${asOf.map(v => s" asOf=v$v").getOrElse("")} " +
-      s"pruned=[${pushed.mkString(", ")}] $mode"
-  }
+  override def description(): String =
+    s"graft-table($root)${asOf.map(v => s" asOf=v$v").getOrElse("")}" +
+      s"${pinned.map(es => s" files=${es.size}").getOrElse("")} " +
+      s"pruned=[${pushed.mkString(", ")}] mode=vectorized"
 
   override def planInputPartitions(): Array[InputPartition] = {
     def keep(e: TableCommit.Entry): Boolean =
@@ -1717,8 +1759,8 @@ private class GraftBatchScan(root: String, required: StructType,
             val kept = g.filter(keep)
             if (kept.nonEmpty) kept
             else Seq(g.minBy(e => GraftBatchScan.fileSize(
-              if (e.path.startsWith("/")) e.path
-              else s"$root/${e.path}").getOrElse(Long.MaxValue)))
+              TableCommit.resolvePath(root, e.path))
+              .getOrElse(Long.MaxValue)))
           }.toSeq
         case None => staticEntries.filter(keep)
       }
@@ -1726,11 +1768,11 @@ private class GraftBatchScan(root: String, required: StructType,
     // X295: serve raw ColumnarBatches when the WHOLE scan can — every
     // file DV-free. Spark forbids mixing columnar and row partitions in
     // one scan, so a single DV'd file demotes the scan to the
-    // vectorized row view.
-    val columnar = es.forall(e => !e.stats.contains(TableCommit.DvKey))
+    // vectorized row view (so does a positions tail).
+    val columnar = !positions &&
+      es.forall(e => !e.stats.contains(TableCommit.DvKey))
     es.flatMap { e =>
-      val abs =
-        if (e.path.startsWith("/")) e.path else s"$root/${e.path}"
+      val abs = TableCommit.resolvePath(root, e.path)
       val enc = e.stats.get(TableCommit.DvKey).map(_.min)
       def part(start: Long, end: Long, pBase: Long, pEnd: Long) =
         CdfFilePartition(abs, 0L, physRequired, root,
@@ -1738,7 +1780,8 @@ private class GraftBatchScan(root: String, required: StructType,
           emitOnly = false, changeType = None, withIds = false,
           ridBase = None, bare = true, columnar = columnar,
           splitStart = start, splitEnd = end,
-          posBase = pBase, posEnd = pEnd): InputPartition
+          posBase = pBase, posEnd = pEnd,
+          positions = positions): InputPartition
       // X309 (VERDICT r14 task 5): a multi-row-group file plans one
       // partition PER GROUP — a multi-GB DV'd file keeps in-file
       // parallelism instead of one task owning its whole position

@@ -4,9 +4,10 @@ import org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecor
 import org.apache.spark.sql.types._
 import scala.util.control.NonFatal
 
-/** X295 (VERDICT r13 task 1): Spark's VECTORIZED parquet decode, the
-  * one parquet reader of the connector read paths — `graft-table` scans
-  * and every `graft-cdf` feed leg.
+/** Spark's VECTORIZED parquet decode, the one parquet reader of the
+  * connector read paths: `graft-table` scans, every `graft-cdf` feed
+  * leg (streamed or batch), and every engine read of a file that carries
+  * a deletion vector — the engine's only merge-on-read.
   *
   * Each `CdfFilePartition` decodes through
   * [[VectorizedParquetRecordReader]], the exact reader Spark's own
@@ -17,13 +18,14 @@ import scala.util.control.NonFatal
   *     `supportColumnarReads` and hands Spark raw `ColumnarBatch`es —
   *     the planner inserts its codegen'd `ColumnarToRow`, so a facet
   *     scan runs the same physical shape as `spark.read.parquet`;
-  *   - ROW-VIEW: a DV'd bare scan and every feed leg serve rows off the
+  *   - ROW-VIEW: a DV'd scan and every feed leg serve rows off the
   *     batch cursor (`ColumnarBatchRow`), letting the position-keyed
   *     deletion-vector skip (or a DV delta's emit) ride the sequential
-  *     row index, with a feed leg's identity and metadata columns joined
-  *     on as a tail row. Spark requires a scan's partitions to agree on
-  *     columnar-ness, which is why one DV'd file demotes the whole scan
-  *     to row view rather than mixing.
+  *     row index, with a feed leg's identity and metadata columns (or a
+  *     DML scan's file coordinates) joined on as a tail row. Spark
+  *     requires a scan's partitions to agree on columnar-ness, which is
+  *     why one DV'd file demotes the whole scan to row view rather than
+  *     mixing.
   *
   * The reader is initialized through the standard `InputSplit` path
   * with the requested Catalyst schema in the Hadoop conf (the
@@ -47,14 +49,16 @@ private[graft] object GraftVectorized {
     * own scans use — VERDICT r14 task 4 widened them in; arrays/
     * structs/maps of supported types through the nested
     * ParquetColumnVector assembly Spark's own scans use since 3.3 —
-    * VERDICT r15 task 6 widened them in). A projection with any other
+    * VERDICT r15 task 6 widened them in; TIMESTAMP_NTZ through the
+    * INT64 micros updater, with `inferTimestampNTZ` pinned in
+    * [[open]]). A projection with any other
     * type is refused when its scan or stream is built
     * ([[requireSupported]]), never planned into a read that fails at
     * run time. */
   def supported(dt: DataType): Boolean = dt match {
     case LongType | IntegerType | ShortType | ByteType | DoubleType |
         FloatType | StringType | BooleanType | BinaryType | DateType |
-        TimestampType => true
+        TimestampType | TimestampNTZType => true
     case _: DecimalType => true
     case ArrayType(et, _) => supported(et)
     case st: StructType => st.fields.forall(f => supported(f.dataType))

@@ -12,11 +12,13 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   *   - [[column]]/[[expression]]: Column ⇄ Catalyst Expression. Spark 4
   *     made `Column` wrap a connect-portable `ColumnNode`, so a native
   *     [[org.apache.spark.sql.catalyst.expressions.Expression]] (the
-  *     engine's codegen'd probes) needs `ExpressionUtils` to enter a
-  *     DataFrame program;
+  *     engine's codegen'd string kernels) needs `ExpressionUtils` to
+  *     enter a DataFrame program;
   *   - [[ofRows]]: LogicalPlan → DataFrame, for SQL-facet commands
   *     (UPDATE/MERGE INTO) that must hand an analyzed source subtree
-  *     to the commit layer as a first-class DataFrame.
+  *     to the commit layer as a first-class DataFrame, and for the
+  *     engine's in-process connector reads (a resolved DataSourceV2
+  *     relation over an explicit entry list or feed range).
   *
   * Nothing else of Spark's internals is touched through here; every
   * caller cites this object so the bridge surface stays auditable. */

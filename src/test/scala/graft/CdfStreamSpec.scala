@@ -367,6 +367,84 @@ class CdfStreamSpec extends AnyFunSuite {
       "the streamed identity feed must equal readChangesFullIds")
   }
 
+  test("the full feed of every version is read(v) minus read(v-1)") {
+    val r = root()
+    val schemaKV = StructType(Seq(
+      StructField("k", LongType), StructField("v", LongType)))
+    // live row ids after each commit, read from the table, not the feed
+    val liveIds = scala.collection.mutable.Map(0L -> Set.empty[Long])
+    def note(v: Long): Long = {
+      liveIds(v) = TableCommit.readWithRowIds(spark, r, schemaKV)
+        .collect().map(_.getLong(2)).toSet
+      v
+    }
+    def sorted(lo: Long, hi: Long) = batch(lo, hi).sortWithinPartitions("k")
+    note(TableCommit.commitAppend(sorted(0L, 20L), r, retain = 16,
+      trackRowIds = true))                                             // v1
+    note(TableCommit.commitAppend(sorted(20L, 40L), r, retain = 16,
+      trackRowIds = true))                                             // v2
+    note(TableCommit.commitUpdateRows(spark, r, schemaKV,              // v3
+      col("k") === 5L, Seq("v" -> lit(555L)), retain = 16,
+      preserveRowIds = true))
+    val v4 = note(TableCommit.commitMergeRows(spark, r, schemaKV,      // v4
+      Seq((10L, 1010L), (100L, 1000L)).toDF("k", "v"), Seq("k"),
+      retain = 16, preserveRowIds = true))
+    note(TableCommit.commitDeleteRows(spark, r, schemaKV,              // v5
+      pmod(col("k"), lit(3L)) === 0L, retain = 16)) // inline DVs
+    val v6 = note(TableCommit.commitDeleteRows(spark, r, schemaKV,     // v6
+      pmod(col("k"), lit(5L)) === 1L, retain = 16, inlineDvMax = 1))
+    assert(TableCommit.entriesAtVersion(r, v6).exists(
+      _.stats.get(TableCommit.DvKey).exists(_.min.startsWith("@"))),
+      "v6 must write sidecar DVs")
+    note(TableCommit.commitRestore(r, v4, retain = 16))                // v7
+    val vLast = note(TableCommit.commitCompact(spark, r,               // v8
+      targetFiles = 1, sortCol = Some("k"), retain = 16,
+      preserveRowIds = true))
+    type Bag = Map[(Long, Long), Int]
+    def bag(rows: Seq[(Long, Long)]): Bag =
+      rows.groupBy(identity).map { case (x, xs) => x -> xs.size }
+    def minus(a: Bag, b: Bag): Bag = (a.keySet ++ b.keySet).toSeq
+      .map(x => x -> (a.getOrElse(x, 0) - b.getOrElse(x, 0)))
+      .filter(_._2 != 0).toMap
+    def snap(v: Long): Bag =
+      if (v == 0L) Map.empty
+      else bag(TableCommit.readAt(spark, r, schemaKV, v).collect()
+        .map(x => (x.getLong(0), x.getLong(1))).toSeq)
+    val expected = (1L to vLast).map(v => v -> minus(snap(v), snap(v - 1L)))
+    def kv(rs: Seq[org.apache.spark.sql.Row], tpe: String) =
+      rs.filter(_.getAs[String]("_change_type") == tpe)
+        .map(x => (x.getLong(0), x.getLong(1)))
+    def check(what: String, feed: Seq[org.apache.spark.sql.Row]): Unit = {
+      val byV = feed.groupBy(_.getAs[Long]("_commit_version"))
+      assert(byV.keySet.forall(v => v >= 1L && v <= vLast), what)
+      expected.foreach { case (v, want) =>
+        val rs = byV.getOrElse(v, Seq.empty)
+        assert(minus(bag(kv(rs, "insert")), bag(kv(rs, "delete"))) === want,
+          s"$what feed at v$v")
+      }
+    }
+    // each delete id was live before its version, each insert id after
+    def checkIds(what: String, feed: Seq[org.apache.spark.sql.Row]): Unit =
+      feed.foreach { x =>
+        val v = x.getAs[Long]("_commit_version")
+        val at = if (x.getAs[String]("_change_type") == "delete") v - 1L
+          else v
+        assert(liveIds(at).contains(x.getAs[Long](TableCommit.RowIdCol)),
+          s"$what: $x's id is not live at v$at")
+      }
+    check("batch", TableCommit.readChangesFull(spark, r, schemaKV, 0L,
+      vLast).collect().toIndexedSeq)
+    check("stream", drain(r, fullSchema, Map("mode" -> "full")))
+    val batchIds = TableCommit.readChangesFullIds(spark, r, schemaKV, 0L,
+      vLast).collect().toIndexedSeq
+    check("batch ids", batchIds)
+    checkIds("batch", batchIds)
+    val streamIds = drain(r, idsSchema,
+      Map("mode" -> "full", "withrowids" -> "true"))
+    check("stream ids", streamIds)
+    checkIds("stream", streamIds)
+  }
+
   test("withrowids refuses append mode and untracked tables loudly") {
     val r = root()
     TableCommit.commitAppend(batch(0L, 5L), r, retain = 4) // untracked

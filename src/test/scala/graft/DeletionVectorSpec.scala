@@ -520,7 +520,7 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(TableCommit.rowIdHighWater(r2) === 20L)
   }
 
-  test("the fat-DV bitmap read path returns exactly the broadcast path's rows (scan filter, no join)") {
+  test("every DV read rides the connector row reader, with no join") {
     val r = root()
     def one(lo: Long, hi: Long) = spark.range(lo, hi)
       .select(col("id").as("k"), (col("id") * 10L).as("v")).coalesce(1)
@@ -541,43 +541,31 @@ class DeletionVectorSpec extends AnyFunSuite {
     def feedDel() = TableCommit.readChangesFull(spark, r, schema,
       v3 - 1L, v3).filter(col("_change_type") === "delete")
       .collect().map(_.getLong(0)).sorted.toSeq
-    val (a1, i1, f1) = (readAll(), readIds(), feedDel())
-    assert(a1 === live)
-    val orig = TableCommit.dvBroadcastThreshold
-    try {
-      TableCommit.dvBroadcastThreshold = 1L // force the bitmap path
-      assert(readAll() === a1)
-      assert(readIds() === i1)
-      assert(feedDel() === f1)
-      // X296b: above the broadcast threshold a SNAPSHOT read routes
-      // its DV'd files through the connector's vectorized row-view
-      // partitions (the skip lives in the reader cursor) — join-free
-      // by construction, no tagged probe in the plan at all
-      val plan = TableCommit.read(spark, r, schema)
-        .queryExecution.executedPlan.toString
-      assert(!plan.contains("LeftAnti"),
-        s"bitmap path must not anti-join:\n$plan")
-      assert(plan.contains("graft-table"),
-        s"the DV'd leg must ride the connector row-view:\n$plan")
-      // X296: the FEED legs (which need per-row positions regardless)
-      // keep the codegen'd native probe — the Filter carrying it sits
-      // INSIDE a WholeStageCodegen span (the `*(n)` prefix), so the
-      // scan→filter pipeline never drops out of generated code
-      // the v2 delete (67 fresh positions > the forced threshold) —
-      // v3's single-position delta legitimately takes the broadcast leg
-      val feedPlan = TableCommit.readChangesFull(spark, r, schema,
-        v3 - 2L, v3 - 1L).filter(col("_change_type") === "delete")
-        .queryExecution.executedPlan.toString
-      assert(feedPlan.contains("graft_dv_probe"),
-        s"the feed's positions leg must use the native probe:\n$feedPlan")
-      assert(feedPlan.linesIterator.exists(l =>
-        l.contains("graft_dv_probe") && l.contains("Filter") &&
-          l.contains("*(")),
-        s"the probe filter must be whole-stage-codegen'd:\n$feedPlan")
-    } finally TableCommit.dvBroadcastThreshold = orig
+    assert(readAll() === live)
+    // ids are birth positions here (both files sorted on k): id == k
+    assert(readIds() === live.map(k => (k, k)))
+    assert(feedDel() === Seq(7L))
+    // a SNAPSHOT read routes its DV'd files through the connector's
+    // vectorized row-view partitions (the skip lives in the reader
+    // cursor) — join-free by construction
+    val plan = TableCommit.read(spark, r, schema)
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("LeftAnti"),
+      s"a DV'd snapshot read must not anti-join:\n$plan")
+    assert(plan.contains("graft-table"),
+      s"the DV'd leg must ride the connector row-view:\n$plan")
+    // the feed's DV-delta leg (v2's 67 fresh positions) plans as
+    // connector partitions: the reader emits only the marked positions
+    val feedPlan = TableCommit.readChangesFull(spark, r, schema,
+      v3 - 2L, v3 - 1L).filter(col("_change_type") === "delete")
+      .queryExecution.executedPlan.toString
+    assert(feedPlan.contains("BatchScan graft-cdf("),
+      s"the feed's delta leg must be connector partitions:\n$feedPlan")
+    assert(!feedPlan.contains("Join"),
+      s"the feed's delta leg must not join positions:\n$feedPlan")
   }
 
-  test("facet type gate (ADVICE r14): exotic types read past the DV threshold via the bitmap leg; decimals ride the facet") {
+  test("type gate: DV'd nested, decimal and NTZ reads ride the row reader") {
     val r = root()
     val df = spark.range(500L).select(col("id").as("k"),
       array(col("id"), col("id") * 2L).as("xs"),
@@ -586,63 +574,62 @@ class DeletionVectorSpec extends AnyFunSuite {
       StructField("xs", ArrayType(LongType)),
       StructField("d", DecimalType(18, 2))))
     TableCommit.commitAppend(df.repartition(2), r, retain = 8)
-    val orig = TableCommit.dvBroadcastThreshold
-    try {
-      TableCommit.dvBroadcastThreshold = 10L
-      TableCommit.commitDeleteRows(spark, r, sch, col("k") < 100L,
-        retain = 8)
-      // full schema carries an ARRAY column: since the VERDICT r16
-      // nested widening the facet row view decodes it directly — the
-      // snapshot read KEEPS the connector leg (and the right rows)
-      val full = TableCommit.read(spark, r, sch).collect()
-      assert(full.length === 400)
-      val byK = full.map(x => x.getLong(0) -> x).toMap
-      assert(byK.keySet === (100L until 500L).toSet)
-      assert(byK(250L).getSeq[Long](1) === Seq(250L, 500L))
-      assert(byK(250L).getDecimal(2).longValue === 250L)
-      val plan = TableCommit.read(spark, r, sch)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("graft-table"),
-        s"a nested-typed snapshot read now keeps the facet row view:\n$plan")
-      // a DECIMAL-bearing projection (no nested types) stays on the
-      // facet row-view leg — the r14 whitelist widening
-      val dSch = StructType(Seq(StructField("k", LongType),
-        StructField("d", DecimalType(18, 2))))
-      val dec = TableCommit.read(spark, r, dSch).collect()
-      assert(dec.length === 400)
-      assert(dec.map(_.getLong(0)).toSet === (100L until 500L).toSet)
-      assert(dec.find(_.getLong(0) == 499L).get
-        .getDecimal(1).longValue === 499L)
-      val dPlan = TableCommit.read(spark, r, dSch)
-        .queryExecution.executedPlan.toString
-      assert(dPlan.contains("graft-table"),
-        s"a decimal projection must keep the facet row-view leg:\n$dPlan")
-      // a GENUINELY unsupported type (TIMESTAMP_NTZ, outside the
-      // whitelist) still routes the bitmap path — and the connector
-      // refuses it when the scan is built, naming the column
-      val r2 = root()
-      val sch2 = StructType(Seq(StructField("k", LongType),
-        StructField("tn", TimestampNTZType)))
-      TableCommit.commitAppend(spark.range(100L).select(
-        col("id").as("k"),
-        expr("to_timestamp_ntz('2024-01-01 00:00:00')").as("tn"))
-        .coalesce(1), r2, retain = 8)
-      TableCommit.commitDeleteRows(spark, r2, sch2, col("k") < 10L,
-        retain = 8)
-      val full2 = TableCommit.read(spark, r2, sch2).collect()
-      assert(full2.length === 90)
-      val plan2 = TableCommit.read(spark, r2, sch2)
-        .queryExecution.executedPlan.toString
-      assert(!plan2.contains("graft-table"),
-        s"an NTZ snapshot read must route the bitmap leg:\n$plan2")
-      val exotic = intercept[IllegalArgumentException] {
-        spark.read.format("graft-table").schema(sch2)
-          .option("root", r2).load()
-          .queryExecution.executedPlan
-      }
-      assert(exotic.getMessage.contains("unsupported column type") &&
-        exotic.getMessage.contains("tn: timestamp_ntz"), exotic.getMessage)
-    } finally TableCommit.dvBroadcastThreshold = orig
+    TableCommit.commitDeleteRows(spark, r, sch, col("k") < 100L,
+      retain = 8)
+    // full schema carries an ARRAY column: since the VERDICT r16
+    // nested widening the facet row view decodes it directly — the
+    // snapshot read KEEPS the connector leg (and the right rows)
+    val full = TableCommit.read(spark, r, sch).collect()
+    assert(full.length === 400)
+    val byK = full.map(x => x.getLong(0) -> x).toMap
+    assert(byK.keySet === (100L until 500L).toSet)
+    assert(byK(250L).getSeq[Long](1) === Seq(250L, 500L))
+    assert(byK(250L).getDecimal(2).longValue === 250L)
+    val plan = TableCommit.read(spark, r, sch)
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("graft-table"),
+      s"a nested-typed snapshot read now keeps the facet row view:\n$plan")
+    // a DECIMAL-bearing projection (no nested types) stays on the
+    // facet row-view leg — the r14 whitelist widening
+    val dSch = StructType(Seq(StructField("k", LongType),
+      StructField("d", DecimalType(18, 2))))
+    val dec = TableCommit.read(spark, r, dSch).collect()
+    assert(dec.length === 400)
+    assert(dec.map(_.getLong(0)).toSet === (100L until 500L).toSet)
+    assert(dec.find(_.getLong(0) == 499L).get
+      .getDecimal(1).longValue === 499L)
+    val dPlan = TableCommit.read(spark, r, dSch)
+      .queryExecution.executedPlan.toString
+    assert(dPlan.contains("graft-table"),
+      s"a decimal projection must keep the facet row-view leg:\n$dPlan")
+    // TIMESTAMP_NTZ decodes through the row reader too
+    val r2 = root()
+    val sch2 = StructType(Seq(StructField("k", LongType),
+      StructField("tn", TimestampNTZType)))
+    TableCommit.commitAppend(spark.range(100L).select(
+      col("id").as("k"),
+      expr("to_timestamp_ntz('2024-01-01 00:00:00')").as("tn"))
+      .coalesce(1), r2, retain = 8)
+    TableCommit.commitDeleteRows(spark, r2, sch2, col("k") < 10L,
+      retain = 8)
+    val full2 = TableCommit.read(spark, r2, sch2).collect()
+    assert(full2.length === 90)
+    assert(full2.map(_.getLong(0)).toSet === (10L until 100L).toSet)
+    assert(full2.forall(_.get(1) ==
+      java.time.LocalDateTime.of(2024, 1, 1, 0, 0)))
+    val plan2 = TableCommit.read(spark, r2, sch2)
+      .queryExecution.executedPlan.toString
+    assert(plan2.contains("graft-table"),
+      s"a DV'd NTZ snapshot read must ride the row reader:\n$plan2")
+    // a read-schema type the reader cannot decode is refused when
+    // the scan is built, naming the column
+    val sch3 = StructType(Seq(StructField("k", LongType),
+      StructField("iv", CalendarIntervalType)))
+    val exotic = intercept[IllegalArgumentException] {
+      TableCommit.read(spark, r2, sch3).queryExecution.executedPlan
+    }
+    assert(exotic.getMessage.contains("unsupported column type") &&
+      exotic.getMessage.contains("iv: interval"), exotic.getMessage)
   }
 
   test("a delete encodes each sidecar exactly ONCE; a no-op re-delete writes nothing (ADVICE r12)") {

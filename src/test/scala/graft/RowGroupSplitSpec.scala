@@ -87,14 +87,9 @@ class RowGroupSplitSpec extends AnyFunSuite {
         "exactly the live keys, no split-boundary shift")
       assert(got.forall { case (k, v) => v == k * 10L },
         "values must stay attached to their keys")
-      // the engine snapshot read composes the same splits past the
-      // broadcast threshold
-      val orig = TableCommit.dvBroadcastThreshold
-      try {
-        TableCommit.dvBroadcastThreshold = 10L
-        val eng = TableCommit.read(spark, r, schema)
-        assert(eng.collect().map(_.getLong(0)).toSet === expect)
-      } finally TableCommit.dvBroadcastThreshold = orig
+      // the engine snapshot read composes the same splits
+      val eng = TableCommit.read(spark, r, schema)
+      assert(eng.collect().map(_.getLong(0)).toSet === expect)
     } finally graft.sources.GraftBatchScan.splitFooterMin = seam
   }
 }

@@ -86,4 +86,14 @@ class SessionSpec extends AnyFunSuite {
     assert(mainFilesMatching("""extends\s+[\w.]*WriteSupport\b""") ===
       Seq.empty)
   }
+
+  test("one merge-on-read: no DvProbe, no semi/anti joins in TableCommit") {
+    // every deletion-vector read goes through the connector's row
+    // reader; a position join or a native probe filter coming back to
+    // the commit layer shows up here
+    assert(mainFilesContaining("DvProbe") === Seq.empty)
+    Seq("left_anti", "left_semi", "Shim.column").foreach(p =>
+      assert(!mainFilesContaining(p)
+        .contains("graft/engine/TableCommit.scala"), p))
+  }
 }
