@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import java.util.UUID
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
@@ -732,7 +732,6 @@ object TableCommit {
     deltaBase.foreach(b => require(b == base && b >= 1L,
       s"delta base $b must be the current version $base"))
     val next = base + 1L
-    Files.createDirectories(logDir(root))
     // Minimal JSON writer. Escaping is LOAD-BEARING, not hygiene: stat
     // strings come verbatim from written UTF8 min/max values, and a raw
     // \n or \r in one would split this line-delimited manifest — publish
@@ -806,42 +805,11 @@ object TableCommit {
       :+ s"""{"n": ${newEntries.size}}""") // integrity terminator
       .mkString("", "\n", "\n")
     val bytes = body.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val tmp = logDir(root).resolve(s".tmp-${UUID.randomUUID()}")
-    // fsync the staged body BEFORE the link so "complete and durable
-    // before the commit point" holds under power loss, not just process
-    // crash (ADVICE r9) — then best-effort fsync the _log dir after the
-    // link so the new NAME itself survives too.
-    writeFsynced(tmp, bytes)
     publishRaceHook()
-    try {
-      try {
-        Files.createLink(manifestPath(root, next), tmp)
-        fsyncDir(logDir(root))
-      } catch { case _: UnsupportedOperationException =>
-        // No hard links on this FS: claim the name with O_CREAT|O_EXCL.
-        // The claim and the body are no longer one atomic step, so (a)
-        // readers tolerate the mid-write window via the terminator check
-        // + retry, and (b) a FAILED body write must not leave the claimed
-        // name as a permanently torn top manifest — delete it before
-        // rethrowing (only the EEXIST loss is a concurrent commit).
-        val claimed = manifestPath(root, next)
-        val ch = java.nio.channels.FileChannel.open(claimed,
-          java.nio.file.StandardOpenOption.CREATE_NEW,
-          java.nio.file.StandardOpenOption.WRITE)
-        try {
-          ch.write(java.nio.ByteBuffer.wrap(bytes))
-          ch.force(true)
-        } catch { case e: Throwable =>
-          try ch.close() catch { case _: Throwable => () }
-          try Files.deleteIfExists(claimed) catch { case _: Throwable => () }
-          throw e
-        }
-        ch.close()
-        fsyncDir(logDir(root))
-      }
-      Files.deleteIfExists(tmp)
-    } catch { case _: java.nio.file.FileAlreadyExistsException =>
-      Files.deleteIfExists(tmp)
+    // the commit point: the one atomic claim of the version's name
+    // ([[claimFile]]) — only the EEXIST loss is a concurrent commit
+    try claimFile(manifestPath(root, next), bytes)
+    catch { case _: java.nio.file.FileAlreadyExistsException =>
       throw new ConcurrentCommitException(
         s"concurrent commit detected at $root: another writer published " +
           s"v$next first — re-read and retry")
@@ -1551,17 +1519,12 @@ object TableCommit {
       // X275: the final `acc` becomes the durable {"rid"} header
       // (monotone; never rewinds even if the max-id rows are later
       // deleted and compacted away)
-      var hw: Option[Long] = None
-      val eff =
-        if (!trackRowIds) staged
+      val (eff, hw) =
+        if (!trackRowIds) (staged, None)
         else {
-          var acc = rowIdHighWaterAt(root, base)
-          val assigned = staged.map { e =>
-            val b = acc; acc += e.rows.getOrElse(0L)
-            e.copy(baseRowId = Some(b))
-          }
-          hw = Some(acc)
-          assigned
+          val (assigned, next) =
+            mintRowIds(staged, rowIdHighWaterAt(root, base))
+          (assigned, Some(next))
         }
       val (body, deltaBase) =
         if (base == 0L) (eff, None)
@@ -1690,17 +1653,19 @@ object TableCommit {
   /** Shared X274 conflict rule for the row-level DML family: a racing
     * commit conflicts iff it REMOVED (rewrote/compacted) or row-
     * modified (grew the DV of) a file this transaction's victims live
-    * in. Anything else — appends, DML on disjoint files, compaction of
+    * in (`victims` holds resolved paths, the deletion-vector maps'
+    * key). Anything else — appends, DML on disjoint files, compaction of
     * untouched files — composes: the rebase re-applies this
     * transaction's position deltas onto the new head, whose entries
     * for the victim files are provably unchanged. */
-  private def dmlConflict(victimLeaves: Set[String])(
+  private def dmlConflict(root: String, victims: Set[String])(
       c: VersionChange): Option[String] = {
-    val removedHit = c.removedPaths.filter(p => victimLeaves(pathLeaf(p)))
+    val removedHit =
+      c.removedPaths.filter(p => victims(resolvePath(root, p)))
     if (removedHit.nonEmpty)
       return Some(s"removed/rewrote victim file(s) ${removedHit.take(3)}")
     val dvHit = (c.dvGrown ++ c.dvShrunk).map(_.entry.path)
-      .filter(p => victimLeaves(pathLeaf(p)))
+      .filter(p => victims(resolvePath(root, p)))
     if (dvHit.nonEmpty)
       Some(s"row-level DML touched victim file(s) ${dvHit.take(3)}")
     else None
@@ -1821,6 +1786,18 @@ object TableCommit {
   def rowIdHighWater(root: String): Long =
     rowIdHighWaterAt(root, currentVersion(root).getOrElse(0L))
 
+  /** Give each staged file a birth base: consecutive id ranges from
+    * `from`, one row-count wide each. Returns the entries and the new
+    * high-water (the next unassigned id). */
+  private def mintRowIds(staged: Seq[Entry],
+      from: Long): (Seq[Entry], Long) = {
+    var acc = from
+    val assigned = staged.map { e =>
+      val b = acc; acc += e.rows.get; e.copy(baseRowId = Some(b))
+    }
+    (assigned, acc)
+  }
+
   /** Whether every current file carries row LINEAGE (a `brid` birth
     * base or materialized `rid:` stats) — i.e. id-preserving DML is
     * expressible. The X297 SQL DML commands key on this: a tracked
@@ -1834,68 +1811,16 @@ object TableCommit {
   }
 
   /** Current LIVE rows with their stable `_row_id` — computed as
-    * `brid + row_index` for files still in their birth position,
+    * `brid + position` for files still in their birth position,
     * read from the materialized column for rewritten ones; deletion
-    * vectors apply either way. Loud on any file without lineage:
-    * a tracked table must only be written through
+    * vectors apply either way (the connector's row reader does all
+    * three, [[graft.sources.GraftBatchScan.live]]). Loud on any file
+    * without lineage: a tracked table must only be written through
     * [[commitAppend]]`(trackRowIds = true)` and id-preserving rewrites. */
   def readWithRowIds(spark: SparkSession, root: String,
-      schema: StructType): DataFrame = {
-    val outCols = (schema.fieldNames.toSeq :+ RowIdCol).map(col)
-    liveWithIdsAndPos(spark, root, schema, entries(root))
-      .fold(emptyWithIds(spark, schema))(_.select(outCols: _*))
-  }
-
-  private def emptyWithIds(spark: SparkSession,
       schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-      org.apache.spark.sql.types.StructType(schema.fields :+
-        org.apache.spark.sql.types.StructField(RowIdCol,
-          org.apache.spark.sql.types.LongType)))
-
-  /** Live rows of a tracked table with stable `_row_id` AND the
-    * `_g_leaf`/`_g_pos` file coordinates — the shared scan behind
-    * [[readWithRowIds]] and id-preserving UPDATE (which must know both
-    * a victim's identity and where its old image sits). None for an
-    * empty entry list. */
-  private def liveWithIdsAndPos(spark: SparkSession, root: String,
-      schema: StructType, es: Seq[Entry]): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.broadcast
-    import org.apache.spark.sql.types.{LongType, StructField}
-    import spark.implicits._
-    if (es.isEmpty) return None
-    requireUniqueLeaves(root, es) // the birth-id join keys files by leaf
-    val (mat, born) = es.partition(_.stats.contains(RidKey))
-    val untracked = born.filterNot(_.baseRowId.isDefined)
-    require(untracked.isEmpty,
-      s"file(s) without row lineage at $root: " +
-        s"${untracked.map(_.path).take(3)} — a tracked table must only " +
-        "be written through commitAppend(trackRowIds = true) / " +
-        "preserveRowIds rewrites")
-    val cols = (schema.fieldNames.toSeq :+ RowIdCol
-      :+ "_g_leaf" :+ "_g_pos").map(col)
-    val bornDf =
-      if (born.isEmpty) None
-      else {
-        val brid = born.map(e => (pathLeaf(e.path), e.baseRowId.get))
-          .toDF("_g_leaf", "_g_brid")
-        Some(liveWithPos(spark, root, schema, born)
-          .join(broadcast(brid), Seq("_g_leaf"))
-          .withColumn(RowIdCol, col("_g_brid") + col("_g_pos"))
-          .select(cols: _*))
-      }
-    val matDf =
-      if (mat.isEmpty) None
-      else {
-        val widened = StructType(schema.fields :+
-          StructField(RowIdCol, LongType))
-        Some(liveWithPos(spark, root, widened, mat).select(cols: _*))
-      }
-    (bornDf, matDf) match {
-      case (Some(a), Some(b)) => Some(a.unionByName(b))
-      case (a, b)             => a.orElse(b)
-    }
-  }
+    graft.sources.GraftBatchScan.live(spark, root, schema, entries(root),
+      positions = false, withIds = true)
 
   // ------------------------------------------------------------------
   // Column mapping (X276)
@@ -2220,31 +2145,17 @@ object TableCommit {
       (java.lang.Long.parseLong(hex, 16) % m).toInt
     }
 
-  /** Last path segment — the join key between manifest entries and
-    * collected `_metadata.file_path`/`input_file_name` URIs. Part
-    * filenames carry the write's UUID, so leaves are unique per table
-    * in practice; callers that REQUIRE uniqueness (deletion vectors)
-    * assert it, callers that don't (bloom build) tiebreak inside a
-    * same-leaf group. */
-  private def pathLeaf(p: String): String =
-    p.substring(p.lastIndexOf('/') + 1)
-
-  /** One pass over `es`'s files computing each file's k bloom bit
-    * positions (executor-side, grouped by input file; the driver folds
-    * ≤ m positions per file into the bit map), returning the entries
-    * with the bloom added beside any existing stats. Shared by append
-    * and reindex.
-    *
-    * The collected-URI → manifest-entry join is keyed by the path LEAF
-    * (part filenames carry the write's UUID, so leaves are unique in
-    * practice) with an `endsWith` tiebreak ONLY inside a same-leaf
-    * group — O(files) total, replacing the r10 shape that linear-
-    * scanned the whole URI map per entry (O(files²) of driver
-    * `endsWith` at reindex scale; ~10¹⁰ calls at 100k files). */
+  /** One pass over `es`'s live rows computing each file's k bloom bit
+    * positions (executor-side, grouped by the file path the row reader
+    * tags each row with; each file's m-bit map is folded inside its
+    * reduce task), returning the entries with the bloom added beside
+    * any existing stats. `field` is the bloom column as the files store
+    * it. Shared by append and reindex. */
   private def withBloomStats(spark: SparkSession, root: String,
-      es: Seq[Entry], bloomCol: String, m: Int, k: Int): Seq[Entry] = {
+      es: Seq[Entry], field: StructField, m: Int, k: Int): Seq[Entry] = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
+    val bloomCol = field.name
     val pos = (0 until k).map(i =>
       pmod(conv(substring(md5(concat(lit(s"bf$i|"),
         col(bloomCol).cast("string"))), 1, 15), 16, 10).cast("long"),
@@ -2252,14 +2163,14 @@ object TableCommit {
     // fold-to-BITS executor-side (VERDICT r13 task 7, the
     // dvEncodeDistributed pattern): each file's position set becomes
     // its m-bit hex map INSIDE its reduce task, so the driver collects
-    // (uri → m/8-byte hex) — at a 100k-file, m=2^16 reindex that is
+    // (path → m/8-byte hex) — at a 100k-file, m=2^16 reindex that is
     // ~1.6 GB of boxed ints less driver residency than collecting the
     // raw position sets
     val mb = m
-    val hexByFile = spark.read
-      .parquet(es.map(e => resolvePath(root, e.path)): _*)
-      .select(input_file_name().as("f"), explode(array(pos: _*)).as("p"))
-      .groupBy(col("f")).agg(collect_set(col("p")).as("ps"))
+    val hexByFile = graft.sources.GraftBatchScan.live(spark, root,
+        StructType(Seq(field)), es, positions = true)
+      .select(col("_g_path"), explode(array(pos: _*)).as("p"))
+      .groupBy(col("_g_path")).agg(collect_set(col("p")).as("ps"))
       .as[(String, Seq[Int])]
       .map { case (f, ps) =>
         val bytes = new Array[Byte](mb / 8)
@@ -2267,18 +2178,9 @@ object TableCommit {
           (bytes(p >> 3) | (1 << (p & 7))).toByte)
         (f, bytes.map("%02x".format(_)).mkString)
       }
-      .collect()
-    val byLeaf: Map[String, Seq[(String, String)]] =
-      hexByFile.groupBy { case (uri, _) => pathLeaf(uri) }
-        .view.mapValues(_.toSeq).toMap
+      .collect().toMap
     es.map { e =>
-      val hit = byLeaf.getOrElse(pathLeaf(e.path), Seq.empty) match {
-        case Seq(only) => Some(only._2)
-        case several   =>
-          several.find { case (uri, _) => uri.endsWith("/" + e.path) }
-            .map(_._2)
-      }
-      hit match {
+      hexByFile.get(resolvePath(root, e.path)) match {
         case None => e // empty file: no rows, bloom absent → never pruned wrongly
         case Some(hex) =>
           e.copy(stats = e.stats +
@@ -2300,7 +2202,8 @@ object TableCommit {
     require(m % 8 == 0 && m > 0 && k > 0, s"bad bloom geometry $m/$k")
     val base = currentVersion(root).getOrElse(0L)
     val staged = stageBatch(df, root, None, statsCols)
-    val withBloom = withBloomStats(spark, root, staged, bloomCol, m, k)
+    val withBloom =
+      withBloomStats(spark, root, staged, df.schema(bloomCol), m, k)
     publishAppend(root, withBloom, retain, pinnedBase = Some(base))
       .get // no txn: never None
   }
@@ -2320,7 +2223,10 @@ object TableCommit {
     val base = currentVersion(root).getOrElse(0L)
     val es = entriesAt(root, base)
     require(es.nonEmpty, s"nothing to reindex at $root")
-    val reindexed = withBloomStats(spark, root, es, bloomCol, m, k)
+    // the column's stored type, from one file's footer
+    val field = spark.read.parquet(resolvePath(root, es.head.path))
+      .schema(bloomCol)
+    val reindexed = withBloomStats(spark, root, es, field, m, k)
     publish(root, reindexed, retain, expected = Some(base))
   }
 
@@ -2415,7 +2321,7 @@ object TableCommit {
   // ------------------------------------------------------------------
 
   /** Manifest stats-channel key for a file's DELETION VECTOR: the set
-    * of row positions (parquet `_metadata.row_index` order) this
+    * of row positions (each row's index in its file) this
     * snapshot considers deleted from the file. Rides the existing
     * stats channel like the bloom (X254) — min holds the positions
     * (sorted, delta-encoded, comma-joined decimal), max holds the
@@ -2493,21 +2399,25 @@ object TableCommit {
     }
   }
 
-  private def existingDvByLeaf(es: Seq[Entry]): Map[String, ColStats] =
-    es.flatMap(e => e.stats.get(DvKey).map(pathLeaf(e.path) -> _)).toMap
+  /** Every DV'd file's current vector, keyed by its resolved path —
+    * the key the row reader's `_g_path` carries. */
+  private def existingDv(root: String,
+      es: Seq[Entry]): Map[String, ColStats] =
+    es.flatMap(e =>
+      e.stats.get(DvKey).map(resolvePath(root, e.path) -> _)).toMap
 
   /** Fold freshly-deleted positions into each victim file's deletion
     * vector and encode, DISTRIBUTED (VERDICT r12: the driver-side
     * position fold was the last DML scale cliff — at true 100-TB scale
     * a 1% delete is ~10⁹ positions, OOMing the one JVM that must never
-    * OOM). `victims` carries `_g_leaf`/`_g_pos`; positions group BY
+    * OOM). `victims` carries `_g_path`/`_g_pos`; positions group BY
     * FILE executor-side (per-file sets are bounded by rows-per-file, a
     * task-sized amount), each task merges its files' fresh positions
     * into the existing vector (broadcast stat, sidecars decoded where
     * the task runs) and encodes — writing any over-threshold sidecar
     * FROM THE EXECUTOR under `root/_dv/`, the same shared-filesystem
     * contract every data-file write already assumes. The driver
-    * receives only (leaf → encoded stat): file-count–sized, never the
+    * receives only (path → encoded stat): file-count–sized, never the
     * positions.
     *
     * Encoding happens ONCE, before the publish retry loop (ADVICE r12:
@@ -2527,18 +2437,16 @@ object TableCommit {
     import spark.implicits._
     val exB = spark.sparkContext.broadcast(existing)
     val folded = victims
-      .select(col("_g_leaf").cast("string").as("_g_leaf"),
-        col("_g_pos").cast("long").as("_g_pos"))
-      .groupBy(col("_g_leaf"))
+      .groupBy(col("_g_path"))
       .agg(sort_array(collect_list(col("_g_pos"))).as("ps"))
       .as[(String, Seq[Long])]
       .mapPartitions { it =>
-        it.flatMap { case (leaf, ps) =>
-          val prior = exB.value.get(leaf)
+        it.flatMap { case (path, ps) =>
+          val prior = exB.value.get(path)
             .map(cs => dvDecode(root, cs)).getOrElse(Seq.empty)
           val merged = (prior ++ ps).distinct
           if (merged.size == prior.size) None // all already dead: no-op
-          else Some((leaf, dvEncode(root, merged, inlineMax)))
+          else Some((path, dvEncode(root, merged, inlineMax)))
         }
       }
       .collect()
@@ -2546,9 +2454,9 @@ object TableCommit {
     folded.toMap
   }
 
-  private def applyEncodedDv(es: Seq[Entry],
+  private def applyEncodedDv(root: String, es: Seq[Entry],
       encoded: Map[String, ColStats]): Seq[Entry] =
-    es.map(e => encoded.get(pathLeaf(e.path))
+    es.map(e => encoded.get(resolvePath(root, e.path))
       .fold(e)(cs => e.copy(stats = e.stats + (DvKey -> cs))))
 
   /** Number of deleted positions WITHOUT decoding the vector (the
@@ -2556,15 +2464,6 @@ object TableCommit {
     * should use; zero-cost even for sidecar DVs. */
   def deletedCount(e: Entry): Long =
     e.stats.get(DvKey).map(_.max.toLong).getOrElse(0L)
-
-  private def requireUniqueLeaves(root: String, es: Seq[Entry]): Unit = {
-    val leaves = es.map(e => pathLeaf(e.path))
-    require(leaves.distinct.size == leaves.size,
-      s"duplicate file leaf names at $root — deletion vectors key " +
-        "row positions by leaf and need them unique (they are, for " +
-        "every writer in this engine: part filenames carry the " +
-        "write's UUID)")
-  }
 
   /** DataFrame over `es`'s files with each file's deletion vector
     * skipped — the merge-on-read. Clean files take the plain parquet
@@ -2699,10 +2598,14 @@ object TableCommit {
     } catch { case scala.util.control.NonFatal(_) => (Seq.empty, false) }
   }
 
-  private def pruneDmlCandidates(spark: SparkSession,
-      schema: StructType, predicate: org.apache.spark.sql.Column,
+  /** X317: damage-proportional planning — files whose manifest stats
+    * PROVE no row can match the translated predicate `fs` contribute
+    * no victims, so the DML scan skips them entirely (a date-scoped
+    * DELETE on a 100 TB table plans the day's files, not the table).
+    * Lossless: an untranslatable predicate keeps everything. */
+  private def pruneDmlCandidates(schema: StructType,
+      fs: Seq[org.apache.spark.sql.sources.Filter],
       es: Seq[Entry]): Seq[Entry] = {
-    val (fs, _) = translateDml(spark, schema, predicate)
     val kept =
       if (fs.isEmpty) es
       else es.filter(e => fs.forall(f =>
@@ -2715,22 +2618,11 @@ object TableCommit {
       schema: StructType, predicate: org.apache.spark.sql.Column,
       retain: Int = 1, inlineDvMax: Int = DvInlineMax,
       conflictRetries: Int = 0): Long = {
-    import org.apache.spark.sql.functions.{col, element_at, split}
     val base = currentVersion(root).getOrElse(0L)
     val es = entriesAt(root, base)
     require(es.nonEmpty, s"nothing to delete at $root")
-    requireUniqueLeaves(root, es)
-    // X317: damage-proportional planning — files whose manifest stats
-    // PROVE no row can match contribute no victims, so the scan skips
-    // them entirely (a date-scoped DELETE on a 100 TB table plans the
-    // day's files, not the table). Lossless: untranslatable predicates
-    // keep everything.
     val (fs, complete) = translateDml(spark, schema, predicate)
-    val cands =
-      if (fs.isEmpty) es
-      else es.filter(e => fs.forall(f =>
-        graft.sources.GraftBatchScan.mightMatch(schema, e, f)))
-    DmlPruneProbe.last = Some((cands.size, es.size))
+    val cands = pruneDmlCandidates(schema, fs, es)
     if (cands.isEmpty) { DmlPruneProbe.lastDropped = Some(0); return base }
     // X324: METADATA-ONLY partition delete — on a table with a
     // declared identity partition column, a predicate made ENTIRELY
@@ -2770,15 +2662,11 @@ object TableCommit {
     DmlPruneProbe.lastDropped = Some(dropped.size)
     val droppedPaths = dropped.map(_.path).toSet
     val scanCands = cands.filterNot(e => droppedPaths(e.path))
-    val victims = spark.read.schema(schema)
-      .parquet(scanCands.map(e => resolvePath(root, e.path)): _*)
-      .filter(predicate)
-      .select(col("_metadata.file_name")
-        .as("_g_leaf"), col("_metadata.row_index").as("_g_pos"))
     val encoded =
       if (scanCands.isEmpty) Map.empty[String, ColStats]
-      else dvEncodeDistributed(spark, root, victims,
-        existingDvByLeaf(es), inlineDvMax)
+      else dvEncodeDistributed(spark, root,
+        liveWithPos(spark, root, schema, scanCands).filter(predicate),
+        existingDv(root, es), inlineDvMax)
     // nothing matched, or everything matched was already dead —
     // idempotent no-op, no empty snapshot churn
     if (encoded.isEmpty && dropped.isEmpty) return base
@@ -2787,31 +2675,24 @@ object TableCommit {
     // the victim entries unchanged); a racing commit that touched a
     // victim (or dropped) file conflicts loudly
     publishRebasing(root, base,
-      build = cur => applyEncodedDv(
+      build = cur => applyEncodedDv(root,
         cur.filterNot(e => droppedPaths(e.path)), encoded),
-      conflictsWith = dmlConflict(
-        encoded.keySet ++ dropped.map(e => pathLeaf(e.path))),
+      conflictsWith = dmlConflict(root,
+        encoded.keySet ++ dropped.map(e => resolvePath(root, e.path))),
       retain, conflictRetries)
   }
 
-  /** LIVE rows of non-empty `es` with their (file leaf, row position)
-    * kept as `_g_leaf`/`_g_pos` columns — the internal scan UPDATE and
-    * MERGE build on: they must know WHERE each matching live row sits
-    * to DV-delete its old image. Split like [[readLive]]: clean files
-    * tag the plain scan with its `_metadata`, DV'd files get both
-    * columns from the connector's row reader. */
+  /** LIVE rows of `es` with their file coordinates — the resolved path
+    * and row position as `_g_path`/`_g_pos`, and with `withIds` the
+    * stable `_row_id` — the one scan every DML verb finds its victims
+    * with: it must know WHERE each matching live row sits to DV-delete
+    * it. One connector row-reader scan over clean and DV'd files
+    * alike ([[graft.sources.GraftBatchScan.live]]). */
   private def liveWithPos(spark: SparkSession, root: String,
-      schema: StructType, es: Seq[Entry]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val (dvs, clean) = es.partition(_.stats.contains(DvKey))
-    val cleanDf = if (clean.isEmpty) None else Some(spark.read.schema(schema)
-      .parquet(clean.map(e => resolvePath(root, e.path)): _*)
-      .select(col("*"), col("_metadata.file_name").as("_g_leaf"),
-        col("_metadata.row_index").as("_g_pos")))
-    val dvDf = if (dvs.isEmpty) None else Some(graft.sources.GraftBatchScan
-      .live(spark, root, schema, dvs, positions = true))
-    (cleanDf ++ dvDf).reduce(_ unionByName _)
-  }
+      schema: StructType, es: Seq[Entry],
+      withIds: Boolean = false): DataFrame =
+    graft.sources.GraftBatchScan.live(spark, root, schema, es,
+      positions = true, withIds = withIds)
 
   /** Apply `assignments` SIMULTANEOUSLY — ANSI UPDATE semantics: every
     * RHS sees the OLD row, so `SET a = b, b = a` swaps (a sequential
@@ -2854,22 +2735,21 @@ object TableCommit {
       retain: Int = 1, inlineDvMax: Int = DvInlineMax,
       statsCols: Seq[String] = Nil, conflictRetries: Int = 0,
       preserveRowIds: Boolean = false): Long = {
-    import org.apache.spark.sql.functions.col
     val base = currentVersion(root).getOrElse(0L)
     val es = entriesAt(root, base)
     require(es.nonEmpty, s"nothing to update at $root")
-    requireUniqueLeaves(root, es)
     // X275: with preserveRowIds the victims are scanned WITH their
     // stable ids, and the updated images keep them — a row's identity
     // survives the update (Delta row-tracking semantics). The images
     // land as materialized-id files (rid: stats), exactly like an
-    // id-preserving compaction's output.
-    // X317: predicate-pruned candidate files for the victims scan (the
-    // id-preserving leg keeps the full list: its tracked-coverage
-    // refusal must judge the WHOLE table, not the pruned subset)
-    val cands =
-      if (preserveRowIds) es
-      else pruneDmlCandidates(spark, schema, predicate, es)
+    // id-preserving compaction's output. The lineage refusal judges
+    // the WHOLE table on metadata (as [[isTracked]] does), not just the
+    // pruned candidates.
+    if (preserveRowIds)
+      es.foreach(graft.sources.GraftCdf.ridBase(root, _, withIds = true))
+    // X317: predicate-pruned candidate files for the victims scan
+    val cands = pruneDmlCandidates(schema,
+      translateDml(spark, schema, predicate)._1, es)
     if (cands.isEmpty) return base
     // Victims are consumed TWICE (the DV position fold and the updated
     // images) — unfenced, each consumer re-ran the full live scan +
@@ -2877,19 +2757,14 @@ object TableCommit {
     // costliest verb in the CDC fixture). The matched set is
     // damage-sized, so a spill-safe persist is right-sized at any table
     // size; it also pins ONE evaluation for both consumers.
-    val victims =
-      (if (preserveRowIds)
-         liveWithIdsAndPos(spark, root, schema, es)
-           .getOrElse(return base)
-       else liveWithPos(spark, root, schema, cands))
-        .filter(predicate)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val victims = liveWithPos(spark, root, schema, cands, preserveRowIds)
+      .filter(predicate)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
     // distributed fold+encode (victims are LIVE rows, so a non-empty
     // match always changes at least one vector; empty = no-op)
-    val encoded = dvEncodeDistributed(spark, root,
-      victims.select(col("_g_leaf"), col("_g_pos")),
-      existingDvByLeaf(es), inlineDvMax)
+    val encoded = dvEncodeDistributed(spark, root, victims,
+      existingDv(root, es), inlineDvMax)
     if (encoded.isEmpty) return base
     // updated images: assignments applied SIMULTANEOUSLY (ANSI — every
     // RHS sees the old row), engine columns dropped, column order
@@ -2906,8 +2781,8 @@ object TableCommit {
     // X274: same rebase/conflict rule as DELETE — the staged updated
     // images carry over verbatim (appends never conflict)
     publishRebasing(root, base,
-      build = cur => applyEncodedDv(cur, encoded) ++ staged,
-      conflictsWith = dmlConflict(encoded.keySet),
+      build = cur => applyEncodedDv(root, cur, encoded) ++ staged,
+      conflictsWith = dmlConflict(root, encoded.keySet),
       retain, conflictRetries,
       ridHighWater =
         if (preserveRowIds) Some(rowIdHighWaterAt(root, base)) else None)
@@ -3008,15 +2883,11 @@ object TableCommit {
         return publish(root, stageBatch(src, root, layoutOf(root),
           statsCols),
           retain, expected = Some(base))
-      val staged = stageBatch(src, root, layoutOf(root), statsCols)
-      var acc = 0L
-      val eff = staged.map { e =>
-        val b = acc; acc += e.rows.get; e.copy(baseRowId = Some(b))
-      }
+      val (eff, hw) =
+        mintRowIds(stageBatch(src, root, layoutOf(root), statsCols), 0L)
       return publish(root, eff, retain, expected = Some(base),
-        ridHighWater = Some(acc))
+        ridHighWater = Some(hw))
     }
-    requireUniqueLeaves(root, es)
     // X274: MERGE is stricter than DELETE/UPDATE — its upsert
     // invariant (one live row per key) reads the WHOLE live table, so
     // a racing commit that ADDED rows anywhere could smuggle in a key
@@ -3025,9 +2896,9 @@ object TableCommit {
     // non-victim files (a disjoint delete) rebases. This strictness is
     // also what makes pre-loop id assignment sound below: no
     // interleaving this merge survives can raise the id high-water.
-    def strict(victimLeaves: Set[String])(
+    def strict(victims: Set[String])(
         c: VersionChange): Option[String] =
-      dmlConflict(victimLeaves)(c).orElse {
+      dmlConflict(root, victims)(c).orElse {
         if (c.added.nonEmpty)
           Some(s"added file(s) ${c.added.map(_.path).take(3)} — the " +
             "merge's key-match read the whole table and cannot prove " +
@@ -3054,7 +2925,7 @@ object TableCommit {
     // (unmatched ∧ cond)" is a single filter over the one marked join
     def allVictimPos(live: DataFrame): DataFrame =
       marked(live, keys).filter(isMatched || nmbsCond.getOrElse(lit(false)))
-        .select(col("_g_leaf"), col("_g_pos"))
+        .select(col("_g_path"), col("_g_pos"))
     def nmbsImages(nmbs: Option[DataFrame],
         withIds: Boolean): Seq[Entry] =
       (notMatchedBySource, nmbs) match {
@@ -3074,22 +2945,20 @@ object TableCommit {
       val live = liveWithPos(spark, root, schema, es)
       val nmbs = nmbsRows(live)
       val encoded = dvEncodeDistributed(spark, root,
-        allVictimPos(live), existingDvByLeaf(es), inlineDvMax)
+        allVictimPos(live), existingDv(root, es), inlineDvMax)
       val staged = stageBatch(src, root, layoutOf(root), statsCols) ++
         nmbsImages(nmbs, withIds = false)
       publishRebasing(root, base,
-        build = cur => applyEncodedDv(cur, encoded) ++ staged,
+        build = cur => applyEncodedDv(root, cur, encoded) ++ staged,
         conflictsWith = strict(encoded.keySet),
         retain, conflictRetries)
     } else {
       // X278: lineage-preserving MERGE on a tracked table
-      val live = liveWithIdsAndPos(spark, root, schema, es)
-        .getOrElse(throw new IllegalStateException("non-empty entry " +
-          "list produced no live scan")) // es.nonEmpty ⇒ Some
+      val live = liveWithPos(spark, root, schema, es, withIds = true)
       val victims = marked(live, keys).filter(isMatched)
       val nmbs = nmbsRows(live)
       val encoded = dvEncodeDistributed(spark, root,
-        allVictimPos(live), existingDvByLeaf(es), inlineDvMax)
+        allVictimPos(live), existingDv(root, es), inlineDvMax)
       // one inherited id per matched key (smallest, if duplicated)
       val vicIds = victims
         .groupBy(keyCols.map(col): _*)
@@ -3103,17 +2972,14 @@ object TableCommit {
       val stagedMatched = stageBatch(matched, root, layoutOf(root),
         statsCols :+ RowIdCol).map(markRidStats) ++
         nmbsImages(nmbs, withIds = true)
-      val stagedFresh0 = stageBatch(fresh, root, layoutOf(root),
-        statsCols)
-      var acc = rowIdHighWaterAt(root, base)
-      val stagedFresh = stagedFresh0.map { e =>
-        val b = acc; acc += e.rows.get; e.copy(baseRowId = Some(b))
-      }
+      val (stagedFresh, hw) = mintRowIds(
+        stageBatch(fresh, root, layoutOf(root), statsCols),
+        rowIdHighWaterAt(root, base))
       publishRebasing(root, base,
         build = cur =>
-          applyEncodedDv(cur, encoded) ++ stagedMatched ++ stagedFresh,
+          applyEncodedDv(root, cur, encoded) ++ stagedMatched ++ stagedFresh,
         conflictsWith = strict(encoded.keySet),
-        retain, conflictRetries, ridHighWater = Some(acc))
+        retain, conflictRetries, ridHighWater = Some(hw))
     }
     } finally if (!alreadyCached) src.unpersist(blocking = false)
   }
@@ -3746,19 +3612,26 @@ object TableCommit {
     else 0L
   }
 
-  /** Atomic checkpoint advance: fsynced tmp, then rename OVER the old
-    * ledger (REPLACE_EXISTING is wanted here — unlike the commit
-    * arbiter, the ledger has a single owner and last-write-wins is its
-    * semantic; a crash leaves either the old or the new version, never
-    * a torn file). */
-  def writeConsumerLedger(path: String, version: Long): Unit = {
-    val p = Paths.get(path)
-    val tmp = p.resolveSibling(s"${p.getFileName}.tmp-${UUID.randomUUID()}")
-    writeFsynced(tmp,
+  /** Atomic checkpoint advance: [[replaceFile]] over the old ledger. */
+  def writeConsumerLedger(path: String, version: Long): Unit =
+    replaceFile(Paths.get(path),
       version.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Files.move(tmp, p, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+
+  /** Durable last-write-wins replace of a small single-owner file (the
+    * consumer ledger, a catalog table's `_schema.json`): fsynced tmp,
+    * then rename OVER the old file (REPLACE_EXISTING is wanted here —
+    * unlike the commit arbiter's [[claimFile]], the file has a single
+    * owner), then fsync the directory so the new name survives power
+    * loss. A crash leaves either the old or the new body, never a torn
+    * or empty one. */
+  private[graft] def replaceFile(target: Path, bytes: Array[Byte]): Unit = {
+    val tmp = target.resolveSibling(
+      s"${target.getFileName}.tmp-${UUID.randomUUID()}")
+    writeFsynced(tmp, bytes)
+    try Files.move(tmp, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    fsyncDir(p.getParent)
+    finally Files.deleteIfExists(tmp)
+    fsyncDir(target.getParent)
   }
 
   /** OPTIMIZE: rewrite the current snapshot's files into `targetFiles`
@@ -3868,7 +3741,8 @@ object TableCommit {
         .parquet(es.map(e => resolvePath(root, e.path)): _*).schema
       val dataSchema = StructType(
         inferred.fields.filterNot(_.name == RowIdCol))
-      val arranged = arrange(readWithRowIds(spark, root, dataSchema))
+      val arranged = arrange(graft.sources.GraftBatchScan.live(spark, root,
+        dataSchema, es, positions = false, withIds = true))
       val staged = stageBatch(arranged, root, layout, statsCols :+ RowIdCol)
       // pin the PRE-rewrite high-water into the durable header: the
       // born entries being melted still witness it (brid + rows covers
@@ -3970,9 +3844,8 @@ object TableCommit {
         .parquet(fat.map(e => resolvePath(root, e.path)): _*).schema
       val dataSchema = StructType(
         inferred.fields.filterNot(_.name == RowIdCol))
-      val cur = liveWithIdsAndPos(spark, root, dataSchema, fat)
-        .getOrElse(return base)
-        .select((dataSchema.fieldNames.toSeq :+ RowIdCol).map(col): _*)
+      val cur = graft.sources.GraftBatchScan.live(spark, root, dataSchema,
+        fat, positions = false, withIds = true)
       val arranged =
         if (targetFiles > 0) cur.coalesce(targetFiles) else cur
       val staged = stageBatch(arranged, root, layout, stats :+ RowIdCol)

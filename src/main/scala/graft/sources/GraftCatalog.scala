@@ -593,14 +593,8 @@ class GraftCatalog extends TableCatalog
       }
     }
     try {
-      val next = f(baseSchema(root))
-      val tmp = Paths.get(root, s".tmp-schema-${java.util.UUID.randomUUID()}")
-      Files.write(tmp, next.json.getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      try Files.move(tmp, schemaPath(root),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      finally Files.deleteIfExists(tmp)
+      TableCommit.replaceFile(schemaPath(root), f(baseSchema(root)).json
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } finally Files.deleteIfExists(lock)
   }
 

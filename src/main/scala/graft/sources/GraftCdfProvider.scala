@@ -106,6 +106,24 @@ private[graft] object GraftCdf {
       (StructField(VersionCol, LongType, nullable = false) +: tpe))
   }
 
+  /** The id source of `e`'s rows when a read carries `_row_id` (X280),
+    * the one rule of every id-carrying read (feeds, `readWithRowIds`,
+    * id-preserving DML): `brid + position` for a file in its birth
+    * layout (`Some(brid)`), the materialized `_row_id` column for a
+    * rewritten one, marked by the `rid:` stats key (None). A file with
+    * neither has no lineage and is refused. None when `withIds` is off. */
+  def ridBase(root: String, e: TableCommit.Entry,
+      withIds: Boolean): Option[Long] =
+    if (!withIds) None
+    else e.baseRowId.orElse {
+      require(e.stats.contains(TableCommit.RidKey),
+        s"file ${e.path} at $root has no row lineage — row ids can " +
+          "not be read from a file without row lineage; a tracked " +
+          "table must only be written through " +
+          "commitAppend(trackRowIds = true) / preserveRowIds rewrites")
+      None // materialized: the reader pulls the _row_id column
+    }
+
   /** The ONE feed planner: the partitions of every version in `chs`.
     *
     * Append mode refuses, at planning time, a version that removed
@@ -127,25 +145,12 @@ private[graft] object GraftCdf {
       chs: Seq[TableCommit.VersionChange], dataSchema: StructType,
       fullFeed: Boolean,
       withIds: Boolean): Seq[CdfFilePartition] = {
-    // X280: identity CDC needs each file's id source — `brid + position`
-    // for files in their birth layout, the materialized `_row_id`
-    // column for rewritten ones (marked by the `rid:` stats key). A
-    // file with neither has no lineage and is refused here.
-    def ridBase(e: TableCommit.Entry): Option[Long] =
-      if (!withIds) None
-      else e.baseRowId.orElse {
-        require(e.stats.contains(TableCommit.RidKey),
-          s"file ${e.path} at $root has no row lineage — a tracked " +
-            "table must only be written through " +
-            "commitAppend(trackRowIds = true) / preserveRowIds rewrites")
-        None // materialized: the reader pulls the _row_id column
-      }
     def leg(e: TableCommit.Entry, v: Long, encA: Option[String],
         encB: Option[String], emitOnly: Boolean,
         changeType: Option[String]) =
       CdfFilePartition(TableCommit.resolvePath(root, e.path), v,
         dataSchema, root, encA, encB, emitOnly, changeType, withIds,
-        ridBase(e))
+        ridBase(root, e, withIds))
     def dv(e: TableCommit.Entry) = e.stats.get(TableCommit.DvKey).map(_.min)
     if (!fullFeed) {
       val nonAppend = chs.filter(_.removedPaths.nonEmpty)
@@ -306,9 +311,9 @@ private class GraftCdfStream(root: String, fullSchema: StructType,
   * Tail columns after the data columns, in order:
   *   - `_row_id` when `withIds` (X280): `ridBase + position` for a born
   *     file, the file's materialized `_row_id` column otherwise;
-  *   - `_g_leaf`, `_g_pos` when `positions`: the file's leaf name and
-  *     each row's position in it — the coordinates the engine's UPDATE
-  *     and MERGE scans fold into new deletion vectors;
+  *   - `_g_path`, `_g_pos` when `positions`: the file's resolved path
+  *     and each row's position in it — the coordinates every engine DML
+  *     scan folds into new deletion vectors, keyed by that path;
   *   - `_commit_version` and, when `changeType` is set, `_change_type`,
   *     unless `bare` (a live-rows scan, not a feed leg).
   *
@@ -431,13 +436,13 @@ private class GraftVectorizedRowReader(p: CdfFilePartition)
   private val ridBase = p.ridBase.getOrElse(0L)
   private val tail = {
     val id = if (bornRid) Seq(0L) else Nil // set per row in get()
-    val at = if (p.positions) Seq(UTF8String.fromString(
-      p.absPath.substring(p.absPath.lastIndexOf('/') + 1)), 0L) else Nil
+    val at =
+      if (p.positions) Seq(UTF8String.fromString(p.absPath), 0L) else Nil
     val feed = if (p.bare) Nil
       else p.version +: p.changeType.map(UTF8String.fromString).toSeq
     new GenericInternalRow((id ++ at ++ feed).toArray[Any])
   }
-  private val posSlot = if (bornRid) 2 else 1 // after _g_leaf
+  private val posSlot = if (bornRid) 2 else 1 // after _g_path
   private val joined = new JoinedRow
   private var pos = p.posBase - 1L
   override def next(): Boolean = {

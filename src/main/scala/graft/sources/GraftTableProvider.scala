@@ -37,10 +37,13 @@ import graft.engine.TableCommit
   *     them (the same invisibility [[TableCommit.stageForAudit]] rides).
   *
   * `mode("overwrite")` arrives as [[SupportsTruncate]] and swaps the
-  * whole manifest to exactly this batch. Reading back goes through
-  * `TableCommit.read` (schema-explicit, manifest-pinned); the provider
-  * is deliberately write-only — `spark.read.format("graft-table")` has
-  * no capability, and `inferSchema` says so loudly.
+  * whole manifest to exactly this batch. The same table is also the
+  * BATCH READ facet (X289, [[TableCapability.BATCH_READ]]):
+  * `spark.read.format("graft-table")` serves the current snapshot's
+  * live rows, each file's deletion vector skipped in the connector's
+  * row reader — the reader the engine's own reads of DV'd files and
+  * every DML scan ride too ([[GraftBatchScan.live]]). Read and write
+  * schemas are always the caller's: `inferSchema` refuses loudly.
   *
   * The task writers ([[GraftDataWriter]], and [[GraftPartitionedDataWriter]]
   * for a layout) are the only writers of table data files: the engine's
@@ -868,7 +871,7 @@ private class GraftScanBuilder(root: String, full: StructType,
     toPhys: Map[String, String] = Map.empty,
     cluster: Option[GraftClusterSpec] = None,
     pinned: Option[Seq[TableCommit.Entry]] = None,
-    positions: Boolean = false)
+    positions: Boolean = false, withIds: Boolean = false)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters with SupportsPushDownAggregates {
   private var required: StructType = full
@@ -884,7 +887,7 @@ private class GraftScanBuilder(root: String, full: StructType,
       f.copy(name = phys(f.name))))
 
   override def pruneColumns(requiredSchema: StructType): Unit = {
-    // only data columns prune (a positions scan's tail is always
+    // only data columns prune (an id or positions tail is always
     // emitted); empty pruning (e.g. COUNT(*)) still needs some column
     // to drive the row cursor — keep the first
     val data =
@@ -992,7 +995,7 @@ private class GraftScanBuilder(root: String, full: StructType,
     case None => new GraftBatchScan(root, required,
       physSchema(required), physSchema(full),
       usable.map(GraftBatchScan.mapFilter(phys)), asOf, pinned,
-      positions, phys, cluster)
+      positions, withIds, phys, cluster)
   }
 }
 
@@ -1142,10 +1145,17 @@ private object GraftAggReaderFactory extends PartitionReaderFactory {
 }
 
 private[graft] object GraftBatchScan {
-  /** The file coordinates a positions scan appends to each row. */
-  private[sources] val PosFields: Seq[StructField] = Seq(
-    StructField("_g_leaf", StringType, nullable = false),
-    StructField("_g_pos", LongType, nullable = false))
+  /** The tail a pinned scan appends to each row: the stable row id
+    * when `withIds`, then the file coordinates when `positions` — the
+    * file's resolved path (the key of every deletion-vector map) and
+    * the row's position in it. */
+  private[sources] def tail(withIds: Boolean,
+      positions: Boolean): Seq[StructField] =
+    (if (withIds) Seq(StructField(TableCommit.RowIdCol, LongType)) else Nil) ++
+      (if (positions) Seq(
+        StructField("_g_path", StringType, nullable = false),
+        StructField("_g_pos", LongType, nullable = false))
+      else Nil)
 
   /** A DataFrame over `t`, handed to Spark in-process as a resolved
     * DataSourceV2 relation — no provider lookup, no reader options. */
@@ -1162,15 +1172,20 @@ private[graft] object GraftBatchScan {
   private[sources] def nullable(s: StructType): StructType =
     StructType(s.fields.map(_.copy(nullable = true)))
 
-  /** The engine's merge-on-read: the live rows of exactly `es`, each
-    * file's deletion vector skipped in the row reader. With `positions`
-    * every row also carries `_g_leaf`/`_g_pos`, its file coordinates.
-    * A column type the reader cannot decode is refused here, naming the
-    * column. */
+  /** The engine's merge-on-read and its one source of file
+    * coordinates and row ids: the live rows of exactly `es`, each
+    * file's deletion vector skipped in the row reader. With `withIds`
+    * every row also carries its stable `_row_id` ([[GraftCdf.ridBase]]),
+    * with `positions` its `_g_path`/`_g_pos` file coordinates. A column
+    * type the reader cannot decode, or (with `withIds`) a file without
+    * row lineage, is refused here. */
   def live(spark: org.apache.spark.sql.SparkSession, root: String,
-      schema: StructType, es: Seq[TableCommit.Entry],
-      positions: Boolean): org.apache.spark.sql.DataFrame =
-    frame(spark, new GraftPinnedTable(root, nullable(schema), es, positions))
+      schema: StructType, es: Seq[TableCommit.Entry], positions: Boolean,
+      withIds: Boolean = false): org.apache.spark.sql.DataFrame = {
+    es.foreach(GraftCdf.ridBase(root, _, withIds))
+    frame(spark, new GraftPinnedTable(root, nullable(schema), es,
+      positions, withIds))
+  }
 
   /** Files below this size skip the planning-time footer consult for
     * row-group splits (X309) — a file smaller than a row group can't
@@ -1424,6 +1439,16 @@ private[graft] object GraftBatchScan {
       !bloomSafeTypes(fld.dataType) ||
         TableCommit.bloomKeeps(e, c, v.toString))
 
+  /** A filter literal's stats-channel text. FLOAT widens exactly as
+    * the write tasks canonicalize FLOAT stats ([[externalLiteral]]): a
+    * Float that arrives straight from Spark's filter pushdown ("0.1")
+    * would otherwise compare against "0.10000000149011612" and prune
+    * the file holding the matching rows. */
+  private def statText(v: Any): String = v match {
+    case x: java.lang.Float => x.toDouble.toString
+    case x                  => x.toString
+  }
+
   /** TRUE only when the file's stats PROVE every row matches `f` — the
     * X324 whole-file DML-drop predicate, by ENVELOPE CONTAINMENT: an
     * equality/IN needs the file single-valued on the column (min ==
@@ -1453,7 +1478,7 @@ private[graft] object GraftBatchScan {
       } yield (lt(fld.dataType), cs)
     def eqAll(c: String, v: Any): Boolean = v != null &&
       env(c).exists { case (less, cs) =>
-        val s = v.toString
+        val s = statText(v)
         cs.min == cs.max && !less(s, cs.min) && !less(cs.min, s)
       }
     def proves(f: Filter): Boolean = f match {
@@ -1461,13 +1486,13 @@ private[graft] object GraftBatchScan {
       case EqualTo(c, v) => eqAll(c, v)
       case In(c, vs)     => vs.exists(eqAll(c, _))
       case GreaterThan(c, v) => v != null && env(c).exists {
-        case (less, cs) => less(v.toString, cs.min) } // v < min
+        case (less, cs) => less(statText(v), cs.min) } // v < min
       case GreaterThanOrEqual(c, v) => v != null && env(c).exists {
-        case (less, cs) => !less(cs.min, v.toString) } // min >= v
+        case (less, cs) => !less(cs.min, statText(v)) } // min >= v
       case LessThan(c, v) => v != null && env(c).exists {
-        case (less, cs) => less(cs.max, v.toString) } // max < v
+        case (less, cs) => less(cs.max, statText(v)) } // max < v
       case LessThanOrEqual(c, v) => v != null && env(c).exists {
-        case (less, cs) => !less(v.toString, cs.max) } // max <= v
+        case (less, cs) => !less(statText(v), cs.max) } // max <= v
       case _ => false
     }
     f.references.nonEmpty && proves(f)
@@ -1489,7 +1514,7 @@ private[graft] object GraftBatchScan {
         val less = lt(fld.dataType)
         vs.exists { v =>
           v != null && {
-            val s = v.toString
+            val s = statText(v)
             !less(s, cs.min) && !less(cs.max, s)
           } && bloomKeeps(full, e, c, v)
         }
@@ -1500,7 +1525,7 @@ private[graft] object GraftBatchScan {
         fld <- full.fields.find(_.name == c)
       } yield {
         val less = lt(fld.dataType)
-        val s = v.toString
+        val s = statText(v)
         other match {
           case _: EqualTo            => (!less(s, cs.min) && !less(cs.max, s)) &&
             bloomKeeps(full, e, c, v)
@@ -1523,19 +1548,18 @@ private[graft] object GraftBatchScan {
 
 /** An engine read over an explicit entry list ([[GraftBatchScan.live]]):
   * the facet's scan, pinned to those entries, optionally with the
-  * `_g_leaf`/`_g_pos` tail. */
+  * `_row_id` and `_g_path`/`_g_pos` tail. */
 private class GraftPinnedTable(root: String, data: StructType,
-    es: Seq[TableCommit.Entry], positions: Boolean)
+    es: Seq[TableCommit.Entry], positions: Boolean, withIds: Boolean)
     extends Table with SupportsRead {
   override def name(): String = s"graft-table($root)"
   override def schema(): StructType =
-    if (positions) StructType(data.fields ++ GraftBatchScan.PosFields)
-    else data
+    StructType(data.fields ++ GraftBatchScan.tail(withIds, positions))
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftScanBuilder(root, data, pinned = Some(es),
-      positions = positions)
+      positions = positions, withIds = withIds)
 }
 
 /** One partition per live file (or row group) surviving the stat
@@ -1547,7 +1571,8 @@ private class GraftBatchScan(root: String, required: StructType,
     physRequired: StructType, physFull: StructType,
     pushed: Array[Filter], asOf: Option[Long] = None,
     pinned: Option[Seq[TableCommit.Entry]] = None,
-    positions: Boolean = false, phys: String => String = identity,
+    positions: Boolean = false, withIds: Boolean = false,
+    phys: String => String = identity,
     cluster: Option[GraftClusterSpec] = None)
     extends Scan with Batch
     with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering
@@ -1558,8 +1583,7 @@ private class GraftBatchScan(root: String, required: StructType,
   // rows are positional, so only the parquet field lookup differs
   GraftVectorized.requireSupported(required, s"graft-table($root)")
   override def readSchema(): StructType =
-    if (positions) StructType(required.fields ++ GraftBatchScan.PosFields)
-    else required
+    StructType(required.fields ++ GraftBatchScan.tail(withIds, positions))
   override def toBatch: Batch = this
 
   // X313: dynamic file pruning — the DPP analogue for a manifest-
@@ -1768,17 +1792,18 @@ private class GraftBatchScan(root: String, required: StructType,
     // X295: serve raw ColumnarBatches when the WHOLE scan can — every
     // file DV-free. Spark forbids mixing columnar and row partitions in
     // one scan, so a single DV'd file demotes the scan to the
-    // vectorized row view (so does a positions tail).
-    val columnar = !positions &&
+    // vectorized row view (so does an id or positions tail).
+    val columnar = !positions && !withIds &&
       es.forall(e => !e.stats.contains(TableCommit.DvKey))
     es.flatMap { e =>
       val abs = TableCommit.resolvePath(root, e.path)
       val enc = e.stats.get(TableCommit.DvKey).map(_.min)
+      val rid = GraftCdf.ridBase(root, e, withIds)
       def part(start: Long, end: Long, pBase: Long, pEnd: Long) =
         CdfFilePartition(abs, 0L, physRequired, root,
           encA = enc, encB = None,
-          emitOnly = false, changeType = None, withIds = false,
-          ridBase = None, bare = true, columnar = columnar,
+          emitOnly = false, changeType = None, withIds = withIds,
+          ridBase = rid, bare = true, columnar = columnar,
           splitStart = start, splitEnd = end,
           posBase = pBase, posEnd = pEnd,
           positions = positions): InputPartition

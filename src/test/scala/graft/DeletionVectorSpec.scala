@@ -697,5 +697,72 @@ class DeletionVectorSpec extends AnyFunSuite {
     // and the delete itself was exact across all files
     assert(TableCommit.read(spark, r, schema)
       .filter(pmod(col("k"), lit(97L)) === 1L).count() === 0L)
+    // an id-preserving UPDATE prunes the same way: its lineage check
+    // reads the manifest, not the whole table
+    val t = root()
+    TableCommit.commitAppend(src, t, retain = 8, statsCols = Seq("k"),
+      trackRowIds = true)
+    assert(TableCommit.entries(t).size === 4)
+    def idsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(x => x.getLong(0) -> x.getLong(2)).toMap
+    val before = idsOf(TableCommit.readWithRowIds(spark, t, schema))
+    TableCommit.DmlPruneProbe.last = None
+    TableCommit.commitUpdateRows(spark, t, schema, col("k") >= 350L,
+      Seq("v" -> lit(-1L)), retain = 8, preserveRowIds = true)
+    assert(TableCommit.DmlPruneProbe.last === Some((1, 4)),
+      s"expected 1-of-4 candidates, got ${TableCommit.DmlPruneProbe.last}")
+    val after = TableCommit.readWithRowIds(spark, t, schema)
+    assert(idsOf(after) === before, "every row keeps its id")
+    assert(after.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap ===
+      (0L until 400L).map(k => k -> (if (k >= 350L) -1L else k * 10L)).toMap)
+  }
+
+  test("DML keys deletion vectors by file path: two files may share a leaf name") {
+    val r = root()
+    // two files with the same leaf under different directories,
+    // published as they are (the engine's own writers never mint this,
+    // but a manifest may carry it)
+    def place(rel: String, rows: Seq[(Long, Long)]): TableCommit.Entry = {
+      val out = Files.createTempDirectory("graft_dv_leaf_").resolve("o")
+      rows.toDF("k", "v").coalesce(1).write.parquet(out.toString)
+      val s = Files.list(out)
+      val part = try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala.find(_.toString.endsWith(".parquet")).get
+      } finally s.close()
+      val dst = Paths.get(r, rel)
+      Files.createDirectories(dst.getParent)
+      Files.copy(part, dst)
+      TableCommit.Entry(rel, None, rows = Some(rows.size.toLong))
+    }
+    val v1 = TableCommit.publish(r, Seq(
+      place("a/part-0.parquet", Seq((1L, 10L), (2L, 20L), (3L, 30L))),
+      place("b/part-0.parquet", Seq((4L, 40L), (5L, 50L), (6L, 60L)))),
+      retain = 8)
+    def rows(): Set[(Long, Long)] = TableCommit.read(spark, r, schema)
+      .collect().map(x => (x.getLong(0), x.getLong(1))).toSet
+    def feed(from: Long): Set[(Long, Long, Long, String)] =
+      TableCommit.readChangesFull(spark, r, schema, from, from + 1L)
+        .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2),
+          x.getString(3))).toSet
+    // DELETE position 1 of a/part-0 only — not position 1 of b/part-0
+    val v2 = TableCommit.commitDeleteRows(spark, r, schema,
+      col("k") === 2L, retain = 8)
+    assert(rows() === Set((1L, 10L), (3L, 30L), (4L, 40L), (5L, 50L),
+      (6L, 60L)))
+    assert(feed(v1) === Set((2L, 20L, v2, "delete")))
+    // UPDATE position 1 of b/part-0, whose a/ twin is already dead
+    val v3 = TableCommit.commitUpdateRows(spark, r, schema,
+      col("k") === 5L, Seq("v" -> lit(-1L)), retain = 8)
+    assert(rows() === Set((1L, 10L), (3L, 30L), (4L, 40L), (5L, -1L),
+      (6L, 60L)))
+    assert(feed(v2) === Set((5L, 50L, v3, "delete"), (5L, -1L, v3, "insert")))
+    // MERGE replaces position 2 of b/part-0 and inserts a fresh key
+    val v4 = TableCommit.commitMergeRows(spark, r, schema,
+      Seq((6L, 600L), (7L, 700L)).toDF("k", "v"), Seq("k"), retain = 8)
+    assert(rows() === Set((1L, 10L), (3L, 30L), (4L, 40L), (5L, -1L),
+      (6L, 600L), (7L, 700L)))
+    assert(feed(v3) === Set((6L, 60L, v4, "delete"),
+      (6L, 600L, v4, "insert"), (7L, 700L, v4, "insert")))
   }
 }

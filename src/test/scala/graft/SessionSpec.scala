@@ -96,4 +96,21 @@ class SessionSpec extends AnyFunSuite {
       assert(!mainFilesContaining(p)
         .contains("graft/engine/TableCommit.scala"), p))
   }
+
+  test("one file-coordinate source: TableCommit takes file and row position only from the row reader") {
+    // DML victim scans, row-id reads and the bloom build read file
+    // coordinates from the connector's row reader, keyed by resolved
+    // path; a `_metadata` tag, an `input_file_name` join or a leaf key
+    // coming back to the commit layer shows up here
+    val hits = mainFilesMatching(
+      "_metadata|input_file_name|pathLeaf|requireUniqueLeaves")
+    assert(!hits.contains("graft/engine/TableCommit.scala"))
+  }
+
+  test("GraftCatalog writes the table schema only through the fsynced replace") {
+    // a plain Files.write tmp renamed over `_schema.json` can leave an
+    // empty schema after a power loss; TableCommit.replaceFile fsyncs
+    assert(!mainFilesContaining("Files.write(")
+      .contains("graft/sources/GraftCatalog.scala"))
+  }
 }

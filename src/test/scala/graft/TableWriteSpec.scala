@@ -805,6 +805,12 @@ class TableWriteSpec extends AnyFunSuite {
       org.apache.spark.sql.Row(0.1f, 1L),
       org.apache.spark.sql.Row(0.2f, 2L)), sch).coalesce(1)
     TableCommit.commitAppend(df, r, statsCols = Seq("f"))
+    // the read facet prunes on Spark's own pushed filter, whose FLOAT
+    // literal arrives unwidened: the matching file must survive there
+    assert(spark.read.format("graft-table").schema(sch).option("root", r)
+      .load().filter(col("f") === lit(0.1f)).collect()
+      .map(_.getLong(1)).toSeq === Seq(1L),
+      "the facet pruned the file holding f=0.1")
     TableCommit.commitDeleteRows(spark, r, sch, col("f") === lit(0.1f))
     assert(TableCommit.read(spark, r, sch).collect()
       .map(_.getLong(1)).toSeq === Seq(2L),
