@@ -837,7 +837,11 @@ object TableCommit {
       val ch = java.nio.channels.FileChannel.open(dir,
         java.nio.file.StandardOpenOption.READ)
       try ch.force(true) finally ch.close()
-    } catch { case _: Throwable => () }
+    } catch {
+      // the name's durability degrades to the FS's own ordering; a fatal
+      // VM error is not that and must surface
+      case NonFatal(_) => ()
+    }
 
   /** Delete manifests older than the retention window, plus every data
     * file those RETIRED manifests reference that no retained manifest
@@ -1515,7 +1519,7 @@ object TableCommit {
       pinnedBase: Option[Long] = None): Option[Long] = {
     if (trackRowIds) require(staged.forall(_.rows.isDefined),
       "row-id tracking needs per-file row counts")
-    publishLoop(root, txnId, txnApp, conflictRetries, pinnedBase) { base =>
+    publishLoop(root, conflictRetries, pinnedBase, txnId, txnApp) { base =>
       // X275: the final `acc` becomes the durable {"rid"} header
       // (monotone; never rewinds even if the max-id rows are later
       // deleted and compacted away)
@@ -1540,10 +1544,11 @@ object TableCommit {
     }
   }
 
-  /** The optimistic publish loop of the commits that extend whatever
-    * base they find — appends and the dynamic partition overwrite. Each
-    * attempt reads its base, checks the txn, then runs `attempt(base)`,
-    * which must publish with `expected = Some(base)`; a lost race
+  /** The ONE optimistic publish loop: every commit that can lose a race
+    * and retry — appends, row-level DML and the partition replace —
+    * reaches the log here. Each attempt reads its base (the pinned base
+    * on the first), checks the txn, then runs `attempt(base)`, which
+    * must publish with `expected = Some(base)`; a lost race
     * ([[ConcurrentCommitException]]) retries up to `conflictRetries`
     * times after a jittered backoff.
     *
@@ -1564,26 +1569,56 @@ object TableCommit {
     * caller's transaction started from. A commit that landed since
     * fails fast, before anything reads the base chain — under retain=1
     * the old base may already be retired, which would surface
-    * NoSuchFile instead of the conflict; retries rebase onto the
-    * then-current version. */
-  private[graft] def publishLoop(root: String, txnId: Option[Long],
-      txnApp: Option[String], conflictRetries: Int,
-      pinnedBase: Option[Long])(attempt: Long => Long): Option[Long] = {
+    * NoSuchFile instead of the conflict.
+    *
+    * RACES (X274). A blind append passes no `conflictsWith`: it only
+    * adds files, so every retry simply rebases onto the then-current
+    * head. A commit that REWRITES existing entries (DML, partition
+    * replace) passes its logical conflict rule: after a lost race the
+    * interleaved versions are diffed ([[changesBetween]], one
+    * incremental pass) and
+    *   - a version the rule flags aborts loudly with
+    *     [[DmlConflictException]] — retrying cannot help, the caller
+    *     must re-run the operation;
+    *   - otherwise the next attempt rebases onto exactly the diffed
+    *     head (a commit landing after the diff is one more lost race);
+    *   - a diff that cannot be computed (the old base already retired
+    *     under a tiny retention window) rethrows the original
+    *     [[ConcurrentCommitException]] — never guess. */
+  private[graft] def publishLoop(root: String, conflictRetries: Int,
+      pinnedBase: Option[Long], txnId: Option[Long] = None,
+      txnApp: Option[String] = None,
+      conflictsWith: Option[VersionChange => Option[String]] = None)(
+      attempt: Long => Long): Option[Long] = {
+    var base = pinnedBase // None: whatever is current
     var n = 0
     while (true) {
+      val cur = currentVersion(root).getOrElse(0L)
+      val b = base.getOrElse(cur)
       try {
-        val cur = currentVersion(root).getOrElse(0L)
-        val base = pinnedBase.filter(_ => n == 0).getOrElse(cur)
-        if (base != cur) throw new ConcurrentCommitException(
-          s"concurrent commit detected at $root: transaction read v$base " +
+        if (b != cur) throw new ConcurrentCommitException(
+          s"concurrent commit detected at $root: transaction read v$b " +
             s"but the table is at v$cur — re-read and retry")
         if (txnApplied(root, txnId, txnApp)) return None
-        return Some(attempt(base))
+        return Some(attempt(b))
       } catch {
         case e: ConcurrentCommitException =>
           n += 1
           if (n > conflictRetries) throw e
           conflictBackoff(n)
+          base = conflictsWith.map { rule =>
+            val head = currentVersion(root).getOrElse(0L)
+            val interleaved =
+              try changesBetween(root, b, head)
+              catch { case NonFatal(_) => throw e }
+            interleaved.foreach(c => rule(c).foreach { why =>
+              throw new DmlConflictException(
+                s"commit v${c.version} at $root conflicts with this " +
+                  s"transaction (read snapshot v$b): $why — re-run " +
+                  "the operation against the new head")
+            })
+            head
+          }
       }
     }
     None // unreachable: the loop exits only via return/throw
@@ -1595,60 +1630,6 @@ object TableCommit {
   private def conflictBackoff(attempt: Int): Unit =
     Thread.sleep(java.util.concurrent.ThreadLocalRandom.current()
       .nextLong(2L, 20L) * attempt)
-
-  /** Optimistic DML publish with LOGICAL conflict detection (X274) —
-    * the Delta/Iceberg conflict-resolution model for commits that
-    * REWRITE existing entries (row-level delete/update/merge, partition
-    * replace), where "someone committed first" is not automatically
-    * safe the way it is for a blind append. On a commit race the
-    * interleaved versions are diffed ([[changesBetween]], one
-    * incremental pass) and checked by `conflictsWith`:
-    *
-    *   - a COMPATIBLE interleaving (e.g. an append into files this
-    *     transaction never touched) REBASES: `build` re-derives the
-    *     manifest from the new head's entries — manifest-sized work,
-    *     the staged data files (if any) carry over verbatim;
-    *   - a LOGICAL conflict (the diff touched this transaction's
-    *     victim files) aborts loudly with [[DmlConflictException]] —
-    *     retrying cannot help, the caller must re-run the operation;
-    *   - a diff that cannot be computed (the old base already retired
-    *     under a tiny retention window) rethrows the original
-    *     [[ConcurrentCommitException]] — never guess. */
-  private def publishRebasing(root: String, base0: Long,
-      build: Seq[Entry] => Seq[Entry],
-      conflictsWith: VersionChange => Option[String],
-      retain: Int, conflictRetries: Int,
-      ridHighWater: Option[Long] = None): Long = {
-    var base = base0
-    var attempt = 0
-    while (true) {
-      try {
-        return publish(root, build(entriesAt(root, base)), retain,
-          expected = Some(base), ridHighWater = ridHighWater)
-      } catch {
-        case e: ConcurrentCommitException =>
-          attempt += 1
-          if (attempt > conflictRetries) throw e
-          val newBase = currentVersion(root).getOrElse(0L)
-          // an undiffable race (the old base already retired) rethrows
-          // the conflict itself — never guess
-          val interleaved =
-            try changesBetween(root, base, newBase)
-            catch { case NonFatal(_) => throw e }
-          interleaved.foreach { c =>
-            conflictsWith(c).foreach { why =>
-              throw new DmlConflictException(
-                s"commit v${c.version} at $root conflicts with this " +
-                  s"transaction (read snapshot v$base): $why — re-run " +
-                  "the operation against the new head")
-            }
-          }
-          base = newBase
-          conflictBackoff(attempt)
-      }
-    }
-    0L // unreachable: the loop exits only via return/throw
-  }
 
   /** Shared X274 conflict rule for the row-level DML family: a racing
     * commit conflicts iff it REMOVED (rewrote/compacted) or row-
@@ -1696,41 +1677,35 @@ object TableCommit {
           try Files.deleteIfExists(p) catch { case NonFatal(_) => () })
       }
 
-  /** Retained version numbers, newest first — the watermark readers'
-    * shared walk. */
-  private def versionsDesc(root: String): Seq[Long] = {
-    val dir = logDir(root)
-    if (!Files.isDirectory(dir)) return Seq.empty
-    listDir(dir).flatMap(p => p.getFileName.toString match {
-      case VersionRe(d) => Some(d.toLong)
-      case _            => None
-    }).sorted.reverse
+  /** The head manifest's headers, which alone carry the exactly-once
+    * high-waters: the `{"txn"}`/`{"txna"}` headers self-propagate into
+    * every publish (ADVICE r12), so an older manifest never holds a
+    * higher one. A head that vanished under a concurrent retire
+    * re-resolves the head; a head still torn after the torn-retry
+    * throws [[TornManifestException]] — falling back to an older
+    * manifest would under-report the high-water and let a sink
+    * re-apply a batch. None for a never-committed root. */
+  private def headRaw(root: String): Option[RawManifest] = {
+    while (true) {
+      val v = currentVersion(root).getOrElse(return None)
+      try return Some(readRawChecked(root, v))
+      catch { case _: java.nio.file.NoSuchFileException => () }
+    }
+    None // unreachable: the loop exits only via return/throw
   }
 
-  /** Highest txn id any still-present manifest carries (walking down
-    * from the newest) — the idempotence high-water an exactly-once
-    * sink checks before applying a batch. Bounded by the retention
-    * window; maintenance commits without a txn stamp are skipped over
-    * rather than erasing the high-water. */
-  def lastTxnId(root: String): Option[Long] =
-    versionsDesc(root).iterator.map(v =>
-      try readRawChecked(root, v).txn catch { case _: Throwable => None })
-      .collectFirst { case Some(t) => t }
+  /** The scalar `{"txn"}` high-water at the head — the idempotence
+    * mark an exactly-once sink checks before applying a batch. */
+  def lastTxnId(root: String): Option[Long] = headRaw(root).flatMap(_.txn)
 
   /** X291: the exactly-once high-water of ONE writer app's namespace
-    * (`{"txna"}` header). Self-propagating, so the TOP manifest is
-    * authoritative; older manifests are consulted only when the top
-    * is unreadable mid-publish. */
+    * (`{"txna"}` header). */
   def lastTxnIdFor(root: String, app: String): Option[Long] =
     txnHighWaters(root).get(app)
 
   /** All per-app exactly-once watermarks at the current version. */
   def txnHighWaters(root: String): Map[String, Long] =
-    versionsDesc(root).iterator.map(v =>
-      try Some(readRawChecked(root, v).txna)
-      catch { case _: Throwable => None })
-      .collectFirst { case Some(m) => m }
-      .getOrElse(Map.empty)
+    headRaw(root).fold(Map.empty[String, Long])(_.txna)
 
   /** Whether transaction `txnId` already landed: against app `txnApp`'s
     * namespaced high-water (X291) when given, else the scalar one. */
@@ -1963,44 +1938,99 @@ object TableCommit {
   }
 
   /** D1 partition-slice replace: slices present in `df` swap wholesale,
-    * untouched slices carry their existing files forward. The replaced
-    * set is the staged batch's own layout key tags (the raw `partCol`
-    * values, ISO for DATE, `__HIVE_DEFAULT_PARTITION__` for NULL — the
-    * same tags a SQL INSERT writes), so "which slices does this load
-    * touch" is data-driven, never guessed.
-    * Same read-modify-write discipline as [[commitAppend]]: the carried-
-    * forward files come from the transaction-start version, verified
-    * still current at publish. */
+    * untouched slices carry their existing files forward. `df` stages
+    * under the `partCol` identity layout and [[publishReplace]] swaps
+    * the slices it wrote — the same key and race rule as SQL's dynamic
+    * `INSERT OVERWRITE`. */
   def commitReplacePartitions(df: DataFrame, root: String,
       partCol: String, statsCols: Seq[String] = Nil,
       retain: Int = 1, conflictRetries: Int = 0): Long = {
+    val layout = partCol -> graft.sources.GraftRotate.Identity
     val base = currentVersion(root).getOrElse(0L)
-    val staged = stageBatch(df, root,
-      Some(partCol -> graft.sources.GraftRotate.Identity), statsCols)
-    val replaced = staged.flatMap(_.part).toSet
-    // X274: racing commits compose iff they never touch a replaced
-    // slice — a racing write INTO one (append, delete, or another
-    // replace of the same slice) conflicts, because this replace's
-    // semantics ("the slice becomes exactly df") would silently erase
-    // it. Disjoint-slice replaces and appends elsewhere rebase.
-    val conflict = (c: VersionChange) => {
-      val addedHit = c.added.filter(_.part.exists(replaced))
-      val removedHit = c.removed.filter(_.part.exists(replaced))
-      val dvHit = (c.dvGrown ++ c.dvShrunk).map(_.entry)
-        .filter(_.part.exists(replaced))
-      if (addedHit.nonEmpty)
-        Some(s"wrote into replaced slice(s) ${addedHit.flatMap(_.part).distinct.take(3)}")
-      else if (removedHit.nonEmpty)
-        Some(s"removed files from replaced slice(s) ${removedHit.flatMap(_.part).distinct.take(3)}")
-      else if (dvHit.nonEmpty)
-        Some(s"row-deleted inside replaced slice(s) ${dvHit.flatMap(_.part).distinct.take(3)}")
-      else None
+    publishReplace(root, base, stageBatch(df, root, Some(layout), statsCols),
+      layout, retain, conflictRetries).get
+  }
+
+  /** The ONE partition replace (X331, D1): `staged` replaces exactly
+    * the slices it carries and every other file survives byte-identical
+    * — the engine's [[commitReplacePartitions]] and SQL `INSERT
+    * OVERWRITE … partitionOverwriteMode=dynamic` (the daily-reload
+    * idiom; Iceberg's dynamic overwrite) both publish here.
+    *
+    * KEY RULE: a file's slice is PROVEN per `layout`'s own column(s) —
+    * witnessed single-valued stats (`min == max` plus the `nn:` null
+    * witness) for identity and tuple layouts, the namespaced tag for
+    * bucket and time layouts. A bare `part` tag proves nothing: a plain
+    * compaction drops it, and a table laid out by another column
+    * carries that column's values in it. A zero-row file holds no
+    * slice's rows. An unprovable file refuses LOUDLY (replacing
+    * "around" it could silently keep rows of a replaced slice); the
+    * message names the layout-preserving compaction that restores the
+    * proof. An empty batch replaces nothing, so no key matters.
+    *
+    * RACE RULE (X274): a racing commit conflicts when it added, removed
+    * or changed the deletion vector of a file in a replaced slice or
+    * without a proof — the replace ("the slice becomes exactly the
+    * batch") would silently erase its rows. Disjoint slices rebase
+    * ([[publishLoop]]).
+    *
+    * The txn rides the same publish as the data, exactly as in
+    * [[publishAppend]], so a replay finds it applied; the result is
+    * None when `txnId` already landed. */
+  private[graft] def publishReplace(root: String, pinnedBase: Long,
+      staged: Seq[Entry], layout: (String, graft.sources.GraftRotate),
+      retain: Int, conflictRetries: Int, txnId: Option[Long] = None,
+      txnApp: Option[String] = None): Option[Long] = {
+    import graft.sources.{GraftBucketPart, GraftRotate, GraftTimePart}
+    val (pc, rot) = layout
+    def single(e: Entry, c: String): Option[String] =
+      e.stats.get(c).filter(cs => cs.min == cs.max && nullFree(e, c))
+        .map(_.min)
+    def keyOf(e: Entry): Option[Seq[String]] = rot match {
+      case GraftRotate.Bucket(_) =>
+        e.part.flatMap(GraftBucketPart.parse).map(i => Seq(i.toString))
+      case GraftRotate.Time(u) =>
+        e.part.flatMap(GraftTimePart.parse(u, _)).map(Seq(_))
+      case GraftRotate.Tuple(rest) =>
+        val vs = (pc +: rest).map(single(e, _))
+        if (vs.forall(_.isDefined)) Some(vs.flatten) else None
+      case GraftRotate.Identity => single(e, pc).map(Seq(_))
     }
-    publishRebasing(root, base,
-      build = cur =>
-        cur.filterNot(_.part.exists(replaced)) ++ staged,
-      conflictsWith = conflict,
-      retain, conflictRetries)
+    def unproven(e: Entry) = keyOf(e).isEmpty && !e.rows.contains(0L)
+    def refuse(what: String, es: Seq[Entry]): Nothing =
+      throw new IllegalArgumentException(
+        s"partition replace refused: ${es.size} $what file(s) carry no " +
+          s"layout proof for $pc (e.g. ${es.head.path}) — their slices " +
+          "are unknown, so replacing around them could silently keep " +
+          "rows of a replaced slice. Restore the proof with one " +
+          "layout-preserving compaction: graft_compact('<root>', n) on " +
+          "a PARTITIONED BY table, commitCompact(…, partCol = " +
+          s"Some(\"$pc\")) on an engine table (a plain compaction drops " +
+          "the layout)")
+    val badStaged = staged.filter(unproven)
+    if (badStaged.nonEmpty) refuse("staged", badStaged)
+    val replaced = staged.flatMap(keyOf).toSet
+    // an empty batch replaces nothing, so no file's key matters
+    def touches(e: Entry) =
+      replaced.nonEmpty && (unproven(e) || keyOf(e).exists(replaced))
+    val conflict = (c: VersionChange) => {
+      val hit = (c.added ++ c.removed ++
+        (c.dvGrown ++ c.dvShrunk).map(_.entry)).filter(touches)
+      if (hit.isEmpty) None
+      else Some(s"wrote, removed or row-deleted file(s) " +
+        s"${hit.map(_.path).distinct.take(3)} in a replaced slice or " +
+        "without a layout proof")
+    }
+    publishLoop(root, conflictRetries, Some(pinnedBase), txnId, txnApp,
+        Some(conflict)) { base =>
+      val current = entriesAt(root, base)
+      val bad = current.filter(e => replaced.nonEmpty && unproven(e))
+      if (bad.nonEmpty) refuse("existing", bad)
+      publish(root, current.filterNot(touches) ++ staged, retain,
+        expected = Some(base),
+        txnId = if (txnApp.isEmpty) txnId else None,
+        txnApp = txnApp.flatMap(a => txnId.map(a -> _)))
+    }
   }
 
   // ------------------------------------------------------------------
@@ -2674,12 +2704,14 @@ object TableCommit {
     // re-apply onto the new head verbatim — the conflict rule proves
     // the victim entries unchanged); a racing commit that touched a
     // victim (or dropped) file conflicts loudly
-    publishRebasing(root, base,
-      build = cur => applyEncodedDv(root,
-        cur.filterNot(e => droppedPaths(e.path)), encoded),
-      conflictsWith = dmlConflict(root,
-        encoded.keySet ++ dropped.map(e => resolvePath(root, e.path))),
-      retain, conflictRetries)
+    val victims =
+      encoded.keySet ++ dropped.map(e => resolvePath(root, e.path))
+    publishLoop(root, conflictRetries, Some(base),
+        conflictsWith = Some(dmlConflict(root, victims))) { b =>
+      publish(root, applyEncodedDv(root,
+        entriesAt(root, b).filterNot(e => droppedPaths(e.path)), encoded),
+        retain, expected = Some(b))
+    }.get
   }
 
   /** LIVE rows of `es` with their file coordinates — the resolved path
@@ -2780,12 +2812,12 @@ object TableCommit {
       else staged0.map(markRidStats)
     // X274: same rebase/conflict rule as DELETE — the staged updated
     // images carry over verbatim (appends never conflict)
-    publishRebasing(root, base,
-      build = cur => applyEncodedDv(root, cur, encoded) ++ staged,
-      conflictsWith = dmlConflict(root, encoded.keySet),
-      retain, conflictRetries,
-      ridHighWater =
-        if (preserveRowIds) Some(rowIdHighWaterAt(root, base)) else None)
+    val hw = if (preserveRowIds) Some(rowIdHighWaterAt(root, base)) else None
+    publishLoop(root, conflictRetries, Some(base),
+        conflictsWith = Some(dmlConflict(root, encoded.keySet))) { b =>
+      publish(root, applyEncodedDv(root, entriesAt(root, b), encoded) ++
+        staged, retain, expected = Some(b), ridHighWater = hw)
+    }.get
     } finally victims.unpersist(blocking = false)
   }
 
@@ -2948,10 +2980,11 @@ object TableCommit {
         allVictimPos(live), existingDv(root, es), inlineDvMax)
       val staged = stageBatch(src, root, layoutOf(root), statsCols) ++
         nmbsImages(nmbs, withIds = false)
-      publishRebasing(root, base,
-        build = cur => applyEncodedDv(root, cur, encoded) ++ staged,
-        conflictsWith = strict(encoded.keySet),
-        retain, conflictRetries)
+      publishLoop(root, conflictRetries, Some(base),
+          conflictsWith = Some(strict(encoded.keySet))) { b =>
+        publish(root, applyEncodedDv(root, entriesAt(root, b), encoded) ++
+          staged, retain, expected = Some(b))
+      }.get
     } else {
       // X278: lineage-preserving MERGE on a tracked table
       val live = liveWithPos(spark, root, schema, es, withIds = true)
@@ -2975,11 +3008,12 @@ object TableCommit {
       val (stagedFresh, hw) = mintRowIds(
         stageBatch(fresh, root, layoutOf(root), statsCols),
         rowIdHighWaterAt(root, base))
-      publishRebasing(root, base,
-        build = cur =>
-          applyEncodedDv(root, cur, encoded) ++ stagedMatched ++ stagedFresh,
-        conflictsWith = strict(encoded.keySet),
-        retain, conflictRetries, ridHighWater = Some(hw))
+      publishLoop(root, conflictRetries, Some(base),
+          conflictsWith = Some(strict(encoded.keySet))) { b =>
+        publish(root, applyEncodedDv(root, entriesAt(root, b), encoded) ++
+          stagedMatched ++ stagedFresh, retain, expected = Some(b),
+          ridHighWater = Some(hw))
+      }.get
     }
     } finally if (!alreadyCached) src.unpersist(blocking = false)
   }
@@ -3388,8 +3422,11 @@ object TableCommit {
           java.nio.file.StandardOpenOption.WRITE)
         try { ch.write(java.nio.ByteBuffer.wrap(bytes)); ch.force(true) }
         catch { case e: Throwable =>
-          try ch.close() catch { case _: Throwable => () }
-          try Files.deleteIfExists(target) catch { case _: Throwable => () }
+          // cleanup of a failed claim: the write's own error is the one
+          // to report, so a failed close or delete is dropped (an orphan
+          // claimed name reads as torn until vacuum reclaims it)
+          try ch.close() catch { case NonFatal(_) => () }
+          try Files.deleteIfExists(target) catch { case NonFatal(_) => () }
           throw e
         }
         ch.close()
@@ -3852,67 +3889,6 @@ object TableCommit {
         .map(markRidStats)
       publish(root, kept ++ staged, retain, expected = Some(base),
         ridHighWater = Some(rowIdHighWaterAt(root, base)))
-    }
-  }
-
-  /** X331: publish a DYNAMIC PARTITION OVERWRITE — the written files
-    * replace exactly the layout keys they carry, every other partition
-    * survives byte-identical (the `INSERT OVERWRITE … partitionOverwriteMode=dynamic`
-    * daily-reload idiom; Iceberg's dynamic overwrite). Correctness
-    * stands on the layout PROOF: each staged file names its key (the
-    * rotating writer guarantees it), and every EXISTING entry must be
-    * provably keyed too — witnessed single-valued stats for identity/
-    * tuple layouts, namespaced tags for bucket/time. An unprovable
-    * existing file refuses LOUDLY (replacing "around" a file whose
-    * keys are unknown could silently keep rows of an overwritten
-    * partition): compact the table once and the proof holds from then
-    * on. A commit race recomputes the keep-set against the new head
-    * ([[publishLoop]]: the overwrite's semantics are per-partition, so
-    * a racing commit to an UNTOUCHED partition composes cleanly).
-    * Returns the published version, or None when `txnId` already
-    * landed. */
-  private[graft] def publishDynamicOverwrite(root: String,
-      pinnedBase: Long, staged: Seq[Entry], retain: Int,
-      conflictRetries: Int = 0, txnId: Option[Long] = None,
-      txnApp: Option[String] = None): Option[Long] = {
-    import graft.sources.{GraftBucketPart, GraftRotate, GraftTimePart}
-    val (pc, rot) = graft.sources.GraftCatalog.partitionLayoutOf(root)
-      .getOrElse(throw new UnsupportedOperationException(
-        "dynamic partition overwrite requires a PARTITIONED BY table"))
-    def keyOf(e: Entry): Option[Seq[String]] = rot match {
-      case GraftRotate.Bucket(_) =>
-        e.part.flatMap(GraftBucketPart.parse).map(i => Seq(i.toString))
-      case GraftRotate.Time(u) =>
-        e.part.flatMap(GraftTimePart.parse(u, _)).map(Seq(_))
-      case GraftRotate.Tuple(rest) =>
-        val vs = (pc +: rest).map(c =>
-          e.stats.get(c).filter(cs => cs.min == cs.max).map(_.min)
-            .filter(_ => nullFree(e, c)))
-        if (vs.forall(_.isDefined)) Some(vs.map(_.get)) else None
-      case GraftRotate.Identity =>
-        e.stats.get(pc).filter(cs => cs.min == cs.max).map(_.min)
-          .filter(_ => nullFree(e, pc)).map(Seq(_))
-    }
-    lazy val writtenKeys = staged.map(e => keyOf(e).getOrElse(
-      throw new IllegalStateException(
-        s"dynamic overwrite staged a file without a layout proof: $e")))
-      .toSet
-    publishLoop(root, txnId, txnApp, conflictRetries,
-        Some(pinnedBase)) { base =>
-      val current = entriesAt(root, base)
-      val unproven = current.filter(e => keyOf(e).isEmpty)
-      require(unproven.isEmpty,
-        s"dynamic partition overwrite refused: ${unproven.size} existing " +
-          s"file(s) carry no layout proof (e.g. ${unproven.head.path}) — " +
-          "their partition keys are unknown, so replacing around them " +
-          "could silently keep rows of an overwritten partition. Run " +
-          "graft_compact('<root>', n) once to restore the proof")
-      val keep = current.filter(e => !keyOf(e).exists(writtenKeys))
-      // the txn rides the same publish as the data, exactly as in
-      // publishAppend, so a replay finds it applied
-      publish(root, keep ++ staged, retain, expected = Some(base),
-        txnId = if (txnApp.isEmpty) txnId else None,
-        txnApp = txnApp.flatMap(a => txnId.map(a -> _)))
     }
   }
 

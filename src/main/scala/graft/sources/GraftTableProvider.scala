@@ -315,8 +315,11 @@ private class GraftBatchWrite(root: String, schema: StructType,
     val published =
       if (dynamicParts)
         // X331: replace exactly the written layout keys
-        TableCommit.publishDynamicOverwrite(root, base, entries, retain,
-          conflictRetries, txnId, txnApp)
+        TableCommit.publishReplace(root, base, entries,
+          GraftCatalog.partitionLayoutOf(root).getOrElse(
+            throw new UnsupportedOperationException("dynamic partition " +
+              "overwrite requires a PARTITIONED BY table")),
+          retain, conflictRetries, txnId, txnApp)
       else if (replaceAll) {
         // mode("overwrite") stays strict: "the table becomes exactly
         // this batch" read the old state by definition, so a racing
@@ -432,8 +435,8 @@ private class GraftStreamingWrite(root: String, schema: StructType,
           // the one bounded retry loop: a lost race re-reads the head,
           // and a twin that seeded (or applied this epoch) first ends
           // it as a no-op
-          TableCommit.publishLoop(root, Some(epochId), txnApp,
-              conflictRetries, pinnedBase = None) { base =>
+          TableCommit.publishLoop(root, conflictRetries, pinnedBase = None,
+              Some(epochId), txnApp) { base =>
             TableCommit.publish(root,
               if (base == 0L) Seq.empty
               else TableCommit.entriesAtVersion(root, base),

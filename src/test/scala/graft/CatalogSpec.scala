@@ -1454,4 +1454,42 @@ class CatalogSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1))).toSeq ===
       Seq((1L, 100L), (1L, 101L), (1L, 102L), (2L, 2L)))
   }
+
+  test("a racing INSERT into a dynamically overwritten partition aborts the overwrite (X274)") {
+    val (cat, wh) = freshCatalog()
+    spark.sql(s"CREATE TABLE $cat.dz (g BIGINT, x BIGINT) PARTITIONED BY (g)")
+    spark.sql(s"INSERT INTO $cat.dz VALUES (1, 1), (2, 2)")
+    val root = s"$wh/dz"
+    val prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
+    // the racing INSERT lands between the overwrite's base read and its
+    // publish; the catalog's default retries would otherwise rebase the
+    // overwrite over it and erase the racing row
+    TableCommit.publishRaceHook = () => {
+      TableCommit.publishRaceHook = () => ()
+      spark.sql(s"INSERT INTO $cat.dz VALUES (1, 555)")
+      ()
+    }
+    val v0 = TableCommit.currentVersion(root).get
+    try {
+      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      val e = intercept[Exception] {
+        spark.sql(s"INSERT OVERWRITE $cat.dz VALUES (1, 100)")
+      }
+      def conflictOf(t: Throwable): Option[Throwable] =
+        Option(t).flatMap {
+          case c: TableCommit.DmlConflictException => Some(c)
+          case o => conflictOf(o.getCause)
+        }
+      assert(conflictOf(e).exists(_.getMessage.contains("replaced slice")),
+        s"expected the X274 conflict: $e")
+    } finally {
+      TableCommit.publishRaceHook = () => ()
+      spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    }
+    assert(TableCommit.currentVersion(root) === Some(v0 + 1L),
+      "only the racing INSERT may publish")
+    assert(spark.sql(s"SELECT g, x FROM $cat.dz ORDER BY g, x").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq ===
+      Seq((1L, 1L), (1L, 555L), (2L, 2L)))
+  }
 }

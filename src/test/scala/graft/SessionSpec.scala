@@ -113,4 +113,16 @@ class SessionSpec extends AnyFunSuite {
     assert(!mainFilesContaining("Files.write(")
       .contains("graft/sources/GraftCatalog.scala"))
   }
+
+  test("one commit loop and one partition replace") {
+    // every retrying commit goes through publishLoop and both partition
+    // replaces through publishReplace; a second loop or replace body
+    // coming back shows up here
+    assert(mainFilesMatching("publishRebasing|publishDynamicOverwrite") ===
+      Seq.empty)
+    val src = Files.readString(
+      Paths.get("src/main/scala/graft/engine/TableCommit.scala"))
+    assert("""(?<!def )conflictBackoff\(""".r.findAllMatchIn(src).size ===
+      1, "TableCommit must back off from exactly one retry loop")
+  }
 }

@@ -857,6 +857,23 @@ class TableCommitSpec extends AnyFunSuite {
     assert(TableCommit.lastTxnId(r) === Some(8L))
   }
 
+  test("an unreadable head manifest fails the txn high-water read instead of falling back") {
+    val r = root()
+    TableCommit.commitAppend(Seq((1L, "a")).toDF("k", "v"), r,
+      txnId = Some(1L), retain = 4)
+    TableCommit.commitAppend(Seq((2L, "b")).toDF("k", "v"), r,
+      txnId = Some(2L), retain = 4)
+    assert(TableCommit.lastTxnId(r) === Some(2L))
+    // truncate the head: the older manifest still reads txn 1, and
+    // reporting it would let a replay of batch 2 apply twice
+    val head = Paths.get(r, "_log",
+      f"v${TableCommit.currentVersion(r).get}%020d.json")
+    Files.write(head, Array.emptyByteArray)
+    intercept[TableCommit.TornManifestException](TableCommit.lastTxnId(r))
+    intercept[TableCommit.TornManifestException](
+      TableCommit.txnHighWaters(r))
+  }
+
   test("history introspection (X282): kinds, counts and headers per retained version; retired-baseline fallback") {
     val r = root()
     def one(rows: Seq[(Long, String)]) =
@@ -1150,6 +1167,40 @@ class TableCommitSpec extends AnyFunSuite {
       .collect().map(x => x.getString(0) -> x.getLong(1)).toSet
       === Set("d1" -> 10L, "d1" -> 11L, "d2" -> 20L),
       "the conflicted replace must have applied nothing")
+    // (3) a plain compaction drops the layout: the replace cannot tell
+    // which rows of the compacted file are slice d2, so it refuses
+    // rather than keep the stale d2 row
+    val rB = root()
+    TableCommit.commitReplacePartitions(
+      Seq(("d1", 1L), ("d2", 2L)).toDF("day", "n"), rB, "day")
+    TableCommit.commitCompact(spark, rB, targetFiles = 1)
+    val vB = TableCommit.currentVersion(rB)
+    val eB = intercept[IllegalArgumentException] {
+      TableCommit.commitReplacePartitions(
+        Seq(("d2", 20L)).toDF("day", "n"), rB, "day")
+    }
+    assert(eB.getMessage.contains("no layout proof"), eB.getMessage)
+    assert(TableCommit.currentVersion(rB) === vB)
+    assert(TableCommit.read(spark, rB, pSchema)
+      .collect().map(x => x.getString(0) -> x.getLong(1)).toSet
+      === Set("d1" -> 1L, "d2" -> 2L))
+    // (4) a table laid out by column a, replaced by column b: a file's
+    // part tag names an a value, never a b slice, so the replace refuses
+    val rC = root()
+    val abSchema = StructType(Seq(StructField("a", StringType),
+      StructField("b", StringType), StructField("n", LongType)))
+    TableCommit.commitReplacePartitions(
+      Seq(("x", "y", 1L), ("z", "x", 2L)).toDF("a", "b", "n"), rC, "a")
+    val vC = TableCommit.currentVersion(rC)
+    val eC = intercept[IllegalArgumentException] {
+      TableCommit.commitReplacePartitions(
+        Seq(("q", "x", 3L)).toDF("a", "b", "n"), rC, "b")
+    }
+    assert(eC.getMessage.contains("no layout proof"), eC.getMessage)
+    assert(TableCommit.currentVersion(rC) === vC)
+    assert(TableCommit.read(spark, rC, abSchema).collect()
+      .map(x => (x.getString(0), x.getString(1), x.getLong(2))).toSet
+      === Set(("x", "y", 1L), ("z", "x", 2L)))
   }
 
   test("a vacuum(0) racing retire's trash window never sweeps a restored manifest's files (ADVICE r13)") {
