@@ -2,7 +2,7 @@ package graft.engine
 
 import java.nio.file.{Files, Path, Paths}
 import java.util.UUID
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import scala.jdk.CollectionConverters._
@@ -39,10 +39,10 @@ import scala.util.control.NonFatal
   *
   * Partitioned tables keep the partition column IN the data files and
   * tag each file's manifest entry with its slice's key (the rotating
-  * writer gives every file exactly one) — manifest pruning happens at
-  * file-LISTING time ([[readPruned]]), the table-format analogue of the
-  * S2 filename predicate, and reads never depend on Hive directory
-  * inference.
+  * writer gives every file exactly one) and its column stats — manifest
+  * pruning happens at file-LISTING time ([[pruneAt]], a [[read]]'s
+  * `where`), the table-format analogue of the S2 filename predicate,
+  * and reads never depend on Hive directory inference.
   *
   * Scale/portability notes (the 100 TB design point):
   *   - The manifest is one small line per FILE, listed once per commit —
@@ -110,8 +110,9 @@ object TableCommit {
     * ISO dates for DATE columns (lexical order = date order), decimal
     * text for integer columns, the value itself for UTF8 strings,
     * `Double.toString` for floating point. The canonical form is what
-    * [[pruneEntries]] predicates compare against; which comparator is
-    * right is the CALLER's knowledge (they declared the column). */
+    * the connector's pruning rule
+    * ([[graft.sources.GraftBatchScan.mightMatch]]) compares against,
+    * under the comparator of the column's type. */
   final case class ColStats(min: String, max: String)
 
   /** ADVICE r15: the colon-namespaced marker stat `nn:<col>` witnessing
@@ -389,6 +390,8 @@ object TableCommit {
       renames.getOrElse(logical, logical)
   }
 
+  private val NoMapping = ColMapping(Map.empty, Seq.empty)
+
   /** Header line: `{"cols": {"logical": "physical", …}, "dead": […]}`. */
   private def parseColsHeader(line: String): Option[ColMapping] = {
     val p = new LineParser(line)
@@ -498,7 +501,12 @@ object TableCommit {
     * the `prior ++ staged` order the append wrote). Chain length is
     * bounded by the checkpoint interval, so this stays a handful of
     * metadata-sized reads. */
-  private def readManifest(root: String, v: Long): Seq[Entry] = {
+  private def readManifest(root: String, v: Long): Seq[Entry] =
+    readChain(root, v).flatMap(_.own)
+
+  /** Version `v`'s manifests, its full ancestor first and `v`'s own
+    * (the one carrying the headers) last. */
+  private def readChain(root: String, v: Long): List[RawManifest] = {
     var chain = List.empty[RawManifest]
     var cur = v
     var done = false
@@ -510,8 +518,16 @@ object TableCommit {
         case None    => done = true
       }
     }
-    chain.flatMap(_.own)
+    chain
   }
+
+  /** Version `v`'s file list and the column mapping its top manifest
+    * carries — one chain walk, what a snapshot read resolves. */
+  private def snapshotAt(root: String, v: Long): (Seq[Entry], ColMapping) =
+    withTornRetry {
+      val chain = readChain(root, v)
+      (chain.flatMap(_.own), chain.last.cols.getOrElse(NoMapping))
+    }
 
   /** Memo for [[chainOf]]: a committed manifest's base pointer is
     * immutable, so a version's chain never changes while it exists —
@@ -644,18 +660,20 @@ object TableCommit {
     * answer `COUNT(*)` and `MIN/MAX(clustered_col)` instantly at any
     * table size). Returns None unless EVERY current entry carries both a
     * row count and stats for the column — a partial answer would be a
-    * wrong answer, so the caller falls back to a scan. `lt` is the
-    * caller's ordering over the canonical stat strings. */
+    * wrong answer, so the caller falls back to a scan. The canonical
+    * stat strings order under `dataType`'s comparator, the one the
+    * connector prunes with. */
   def statsEnvelope(root: String, column: String,
-      lt: (String, String) => Boolean): Option[(Long, String, String)] =
-    statsEnvelopeOf(entries(root), column, lt)
+      dataType: DataType): Option[(Long, String, String)] =
+    statsEnvelopeOf(entries(root), column, dataType)
 
   /** [[statsEnvelope]] over an ALREADY-RESOLVED entry snapshot — the
     * form a multi-aggregate consumer (X290) uses so every leg of one
     * result row derives from ONE version, never a torn mix of two
     * racing commits' snapshots. */
   def statsEnvelopeOf(es: Seq[Entry], column: String,
-      lt: (String, String) => Boolean): Option[(Long, String, String)] = {
+      dataType: DataType): Option[(Long, String, String)] = {
+    val lt = graft.sources.GraftBatchScan.lt(dataType)
     // A deletion vector (X265) poisons the metadata-only answer: the
     // count would overstate and the true live min/max may be exactly
     // the deleted rows. Stats stay SUPERSET (fine for pruning), but an
@@ -1282,8 +1300,7 @@ object TableCommit {
     // publish self-propagates from the DESTINATION's base, which for a
     // fresh clone is version 0 and carries nothing
     try publish(dst, abs, retain, expected = Some(base),
-      colsOverride = Some(colMapping(src)
-        .getOrElse(ColMapping(Map.empty, Seq.empty))))
+      colsOverride = Some(colMapping(src).getOrElse(NoMapping)))
     catch { case e: Throwable =>
       created.foreach(owner => unregisterClone(owner, dst))
       throw e
@@ -1430,11 +1447,13 @@ object TableCommit {
     * `retain` > 1 keeps that many trailing snapshots readable via
     * [[readAt]]. Pins the version observed at transaction start — a
     * commit landing while the batch stages aborts this one with
-    * [[ConcurrentCommitException]] rather than silently burying it. */
+    * [[ConcurrentCommitException]] rather than silently burying it.
+    * `df` and `statsCols` name LOGICAL columns ([[physicalBatch]]). */
   def commitOverwrite(df: DataFrame, root: String, retain: Int = 1,
       statsCols: Seq[String] = Nil): Long = {
     val base = currentVersion(root).getOrElse(0L)
-    publish(root, stageBatch(df, root, None, statsCols), retain,
+    val (batch, stats, _) = physicalBatch(df, root, statsCols)
+    publish(root, stageBatch(batch, root, None, stats), retain,
       expected = Some(base))
   }
 
@@ -1443,7 +1462,8 @@ object TableCommit {
     * live table while the batch stages — the files it reads are immutable
     * and stay referenced. Publishes through [[publishAppend]], so the
     * manifest is batch-sized and a commit race rebases (X273) up to
-    * `conflictRetries` times.
+    * `conflictRetries` times. `df`, `statsCols` and `partCol` name
+    * LOGICAL columns ([[physicalBatch]]).
     *
     * `txnId` makes the append EXACTLY-ONCE (X271): a no-op returning the
     * current version if the log already carries a txn id ≥ this one.
@@ -1478,8 +1498,9 @@ object TableCommit {
     // a replay skips the stage; the publish loop re-checks per attempt
     if (txnApplied(root, txnId, None))
       return currentVersion(root).getOrElse(0L)
-    val staged = stageBatch(df, root,
-      partCol.map(_ -> graft.sources.GraftRotate.Identity), statsCols)
+    val (batch, stats, part) = physicalBatch(df, root, statsCols, partCol)
+    val staged = stageBatch(batch, root,
+      part.map(_ -> graft.sources.GraftRotate.Identity), stats)
     publishAppend(root, staged, retain, checkpointEvery, txnId = txnId,
       conflictRetries = conflictRetries, trackRowIds = trackRowIds)
       .getOrElse {
@@ -1488,9 +1509,9 @@ object TableCommit {
       }
   }
 
-  /** The ONE append publish: every append route — [[commitAppend]] and
-    * its mapped form, write–audit–publish, the bloom append and both
-    * connector facets — reaches the log here.
+  /** The ONE append publish: every append route — [[commitAppend]],
+    * write–audit–publish, the bloom append and both connector facets —
+    * reaches the log here.
     *
     * MANIFEST COST (X303): the manifest is a DELTA — a `{"base": prev}`
     * header plus only this batch's entries — so an append to a
@@ -1677,6 +1698,24 @@ object TableCommit {
           try Files.deleteIfExists(p) catch { case NonFatal(_) => () })
       }
 
+  /** A rewrite verb's publish of its `staged` entries. The refusals
+    * and lost races it can end in — a "no layout proof"
+    * [[IllegalArgumentException]], a [[DmlConflictException]], a
+    * [[ConcurrentCommitException]] after the retries — are all raised
+    * before the version claim, so no manifest references the staging
+    * and it is dropped. Any other failure keeps it: it may come after
+    * the claim, when the version is published, and the aged [[vacuum]]
+    * reclaims a true orphan. */
+  private def dropStagedOnRefusal[T](root: String, staged: Seq[Entry])(
+      commit: => T): T =
+    try commit
+    catch {
+      case e @ (_: IllegalArgumentException | _: DmlConflictException |
+          _: ConcurrentCommitException) =>
+        dropStaged(root, stagedDirs(staged))
+        throw e
+    }
+
   /** The head manifest's headers, which alone carry the exactly-once
     * high-waters: the `{"txn"}`/`{"txna"}` headers self-propagate into
     * every publish (ADVICE r12), so an older manifest never holds a
@@ -1817,12 +1856,14 @@ object TableCommit {
         if (c < ' ') f"\\u${c.toInt}%04x" else c.toString).mkString}")
 
   private def colMappingOrEmpty(root: String): ColMapping =
-    colMapping(root).getOrElse(ColMapping(Map.empty, Seq.empty))
+    colMapping(root).getOrElse(NoMapping)
 
   /** RENAME a column WITHOUT rewriting a byte of data (X276, the Delta
     * column-mapping move): the files keep their physical column name
-    * forever; one metadata commit re-points the logical name. Reads go
-    * through [[readMapped]], writes through [[commitAppendMapped]]. */
+    * forever; one metadata commit re-points the logical name. Reads
+    * ([[read]], [[readAt]]) and the frame writers ([[commitAppend]],
+    * [[commitOverwrite]], [[commitReplacePartitions]]) resolve the
+    * mapping themselves. */
   def commitRenameColumn(root: String, from: String, to: String,
       retain: Int = 1): Long = {
     val base = currentVersion(root).getOrElse(0L)
@@ -1890,65 +1931,39 @@ object TableCommit {
   def colMappingAt(root: String, version: Long): Option[ColMapping] =
     readRawChecked(root, version).cols
 
-  /** Time-travel read under the LOGICAL names of that era: version
-    * `v`'s file list read under version `v`'s mapping — a column
-    * renamed after `v` still answers to its old name, exactly like
-    * every other piece of v's snapshot. */
-  def readMappedAt(spark: SparkSession, root: String, version: Long,
-      logical: StructType): DataFrame = {
-    val es = entriesAtVersion(root, version)
-    if (es.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        logical)
-    val cm = colMappingAt(root, version)
-      .getOrElse(ColMapping(Map.empty, Seq.empty))
-    val phys = StructType(logical.fields.map(f =>
-      f.copy(name = cm.physical(f.name))))
-    readLive(spark, root, Some(phys), es)
-      .toDF(logical.fieldNames.toIndexedSeq: _*)
-  }
-
-  /** Read under LOGICAL column names: the schema the caller passes is
-    * logical; the scan runs under the mapped physical names and the
-    * result is aliased back. Files that predate a column (including
-    * every file, for a freshly re-added name) read NULL for it. */
-  def readMapped(spark: SparkSession, root: String,
-      logical: StructType): DataFrame = {
-    val es = entries(root)
-    if (es.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        logical)
+  /** `df` and the `statsCols`/`partCol` naming its columns, renamed
+    * from logical to the head mapping's physical names — what every
+    * frame writer stages, so files written after a rename, a drop or a
+    * re-add stay physically consistent with the old ones. An unmapped
+    * table stages `df` as it is. */
+  private def physicalBatch(df: DataFrame, root: String,
+      statsCols: Seq[String], partCol: Option[String] = None)
+      : (DataFrame, Seq[String], Option[String]) = {
     val cm = colMappingOrEmpty(root)
-    val phys = StructType(logical.fields.map(f =>
-      f.copy(name = cm.physical(f.name))))
-    readLive(spark, root, Some(phys), es).toDF(logical.fieldNames.toIndexedSeq: _*)
-  }
-
-  /** Append a batch whose DataFrame carries LOGICAL names — translated
-    * to the mapped physical names before staging, so files written
-    * after a rename stay physically consistent with the old ones. */
-  def commitAppendMapped(df: DataFrame, root: String, retain: Int = 1,
-      statsCols: Seq[String] = Nil, checkpointEvery: Int = 16,
-      conflictRetries: Int = 0): Long = {
-    val cm = colMappingOrEmpty(root)
-    val physDf = df.select(df.columns.toIndexedSeq.map(c =>
-      col(c).as(cm.physical(c))): _*)
-    commitAppend(physDf, root, retain, statsCols.map(cm.physical),
-      checkpointEvery = checkpointEvery, conflictRetries = conflictRetries)
+    if (df.columns.forall(c => cm.physical(c) == c)) (df, statsCols, partCol)
+    else (df.select(df.columns.toIndexedSeq.map(c =>
+        col(c).as(cm.physical(c))): _*),
+      statsCols.map(cm.physical), partCol.map(cm.physical))
   }
 
   /** D1 partition-slice replace: slices present in `df` swap wholesale,
     * untouched slices carry their existing files forward. `df` stages
     * under the `partCol` identity layout and [[publishReplace]] swaps
     * the slices it wrote — the same key and race rule as SQL's dynamic
-    * `INSERT OVERWRITE`. */
+    * `INSERT OVERWRITE`. `df`, `partCol` and `statsCols` name LOGICAL
+    * columns ([[physicalBatch]]); a refused or lost replace drops its
+    * staging ([[dropStagedOnRefusal]]). */
   def commitReplacePartitions(df: DataFrame, root: String,
       partCol: String, statsCols: Seq[String] = Nil,
       retain: Int = 1, conflictRetries: Int = 0): Long = {
-    val layout = partCol -> graft.sources.GraftRotate.Identity
     val base = currentVersion(root).getOrElse(0L)
-    publishReplace(root, base, stageBatch(df, root, Some(layout), statsCols),
-      layout, retain, conflictRetries).get
+    val (batch, stats, part) = physicalBatch(df, root, statsCols,
+      Some(partCol))
+    val layout = part.get -> graft.sources.GraftRotate.Identity
+    val staged = stageBatch(batch, root, Some(layout), stats)
+    dropStagedOnRefusal(root, staged) {
+      publishReplace(root, base, staged, layout, retain, conflictRetries).get
+    }
   }
 
   /** The ONE partition replace (X331, D1): `staged` replaces exactly
@@ -2260,16 +2275,11 @@ object TableCommit {
     publish(root, reindexed, retain, expected = Some(base))
   }
 
-  /** Equality-probe file pruning from the manifest blooms: keep a file
-    * iff its bloom says the value MIGHT be present (all k bits set) —
-    * or it carries no bloom for the column (lossless by construction,
-    * the X207 missing-stat rule). False positives cost a read; false
-    * negatives are impossible, which the spec proves against every key
-    * in the table. */
-  def pruneEntriesBloom(root: String, column: String,
-      value: String): Seq[Entry] =
-    entries(root).filter(bloomKeeps(_, column, value))
-
+  /** A bloom's verdict on `value` in `e` (the X207 missing-stat rule:
+    * no bloom for the column keeps the file) — the probe
+    * [[graft.sources.GraftBatchScan.mightMatch]] consults beside
+    * [min, max]. False positives cost a read; false negatives are
+    * impossible, which the spec proves against every key in the table. */
   private[graft] def bloomKeeps(e: Entry, physColumn: String,
       value: String): Boolean =
     e.stats.get(s"$BloomPrefix$physColumn") match {
@@ -2283,67 +2293,6 @@ object TableCommit {
             hexBits.substring((p >> 3) * 2, (p >> 3) * 2 + 2), 16)
           (byte & (1 << (p & 7))) != 0
         }
-    }
-
-  /** Column-mapping bridge for the pruners (X281, VERDICT r12 task 5):
-    * manifest stats are keyed by PHYSICAL column name (the write side
-    * translates — [[commitAppendMapped]]), so pruning a RENAMED column
-    * by its logical name silently kept everything (lossless but
-    * useless). These overloads translate through the table's mapping
-    * first. A rename is metadata-only — every file ever written stores
-    * the column under ONE physical name — so pruning by the new
-    * logical name keeps EXACTLY the file set pruning by the old name
-    * kept (spec-pinned law). `asOf` translates under THAT version's
-    * mapping over that version's file list: the era-correct companion
-    * to [[readMappedAt]]. */
-  def pruneEntriesMapped(root: String, column: String,
-      asOf: Option[Long] = None)(
-      mightMatch: ColStats => Boolean): Seq[Entry] = {
-    val (es, cm) = asOf match {
-      case None => (entries(root), colMappingOrEmpty(root))
-      case Some(v) => (entriesAtVersion(root, v),
-        colMappingAt(root, v).getOrElse(ColMapping(Map.empty, Seq.empty)))
-    }
-    val phys = cm.physical(column)
-    es.filter(_.stats.get(phys).forall(mightMatch))
-  }
-
-  /** Bloom point-lookup pruning under the LOGICAL column name — the
-    * [[pruneEntriesBloom]] half of the X281 mapping bridge. */
-  def pruneEntriesBloomMapped(root: String, column: String,
-      value: String): Seq[Entry] = {
-    val phys = colMappingOrEmpty(root).physical(column)
-    entries(root).filter(bloomKeeps(_, phys, value))
-  }
-
-  /** Stats-pruned read under LOGICAL names: plan the scan from the
-    * mapped-pruned file set, read under physical names, alias back —
-    * [[readPrunedStats]] for mapped tables. The caller still applies
-    * the row-level filter. */
-  def readPrunedStatsMapped(spark: SparkSession, root: String,
-      logical: StructType, column: String)(
-      mightMatch: ColStats => Boolean): DataFrame = {
-    val es = pruneEntriesMapped(root, column)(mightMatch)
-    if (es.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        logical)
-    val cm = colMappingOrEmpty(root)
-    val phys = StructType(logical.fields.map(f =>
-      f.copy(name = cm.physical(f.name))))
-    readLive(spark, root, Some(phys), es)
-      .toDF(logical.fieldNames.toIndexedSeq: _*)
-  }
-
-  /** Point-lookup read planned from the manifest blooms. The caller
-    * still applies the equality predicate — the bloom only bounds WHICH
-    * FILES can contain it (false positives read, then filter out). */
-  def readPrunedBloom(spark: SparkSession, root: String,
-      schema: StructType, column: String, value: String): DataFrame =
-    pruneEntriesBloom(root, column, value) match {
-      case Seq() =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      case es =>
-        readLive(spark, root, Some(schema), es)
     }
 
   // ------------------------------------------------------------------
@@ -2547,11 +2496,12 @@ object TableCommit {
     @volatile var lastDropped: Option[Int] = None
   }
 
-  /** X317/X324: the DML predicate's conjuncts as source filters —
-    * (usable filters, complete). `complete` means EVERY conjunct
+  /** X317/X324: a predicate's conjuncts as source filters — (usable
+    * filters, complete) — what a snapshot read's `where` and a DML
+    * statement both prune with. `complete` means EVERY conjunct
     * translated, so the filter list IS the predicate; only then can a
     * file's stats prove "all rows match" for the whole statement. */
-  private def translateDml(spark: SparkSession, schema: StructType,
+  private def sourceFilters(spark: SparkSession, schema: StructType,
       predicate: org.apache.spark.sql.Column)
       : (Seq[org.apache.spark.sql.sources.Filter], Boolean) = {
     import org.apache.spark.sql.catalyst.{expressions => cx}
@@ -2636,13 +2586,22 @@ object TableCommit {
   private def pruneDmlCandidates(schema: StructType,
       fs: Seq[org.apache.spark.sql.sources.Filter],
       es: Seq[Entry]): Seq[Entry] = {
-    val kept =
-      if (fs.isEmpty) es
-      else es.filter(e => fs.forall(f =>
-        graft.sources.GraftBatchScan.mightMatch(schema, e, f)))
+    val kept = mightMatchAll(schema, fs, es)
     DmlPruneProbe.last = Some((kept.size, es.size))
     kept
   }
+
+  /** The entries of `es` every filter of `fs` might match under the
+    * connector's one stats-and-bloom rule
+    * ([[graft.sources.GraftBatchScan.mightMatch]]: type-ordered
+    * [min, max], widened FLOAT literals, blooms beside equalities, a
+    * missing stat keeps the file). */
+  private def mightMatchAll(schema: StructType,
+      fs: Seq[org.apache.spark.sql.sources.Filter],
+      es: Seq[Entry]): Seq[Entry] =
+    if (fs.isEmpty) es
+    else es.filter(e => fs.forall(f =>
+      graft.sources.GraftBatchScan.mightMatch(schema, e, f)))
 
   def commitDeleteRows(spark: SparkSession, root: String,
       schema: StructType, predicate: org.apache.spark.sql.Column,
@@ -2651,7 +2610,7 @@ object TableCommit {
     val base = currentVersion(root).getOrElse(0L)
     val es = entriesAt(root, base)
     require(es.nonEmpty, s"nothing to delete at $root")
-    val (fs, complete) = translateDml(spark, schema, predicate)
+    val (fs, complete) = sourceFilters(spark, schema, predicate)
     val cands = pruneDmlCandidates(schema, fs, es)
     if (cands.isEmpty) { DmlPruneProbe.lastDropped = Some(0); return base }
     // X324: METADATA-ONLY partition delete — on a table with a
@@ -2781,7 +2740,7 @@ object TableCommit {
       es.foreach(graft.sources.GraftCdf.ridBase(root, _, withIds = true))
     // X317: predicate-pruned candidate files for the victims scan
     val cands = pruneDmlCandidates(schema,
-      translateDml(spark, schema, predicate)._1, es)
+      sourceFilters(spark, schema, predicate)._1, es)
     if (cands.isEmpty) return base
     // Victims are consumed TWICE (the DV position fold and the updated
     // images) — unfenced, each consumer re-ran the full live scan +
@@ -2813,11 +2772,13 @@ object TableCommit {
     // X274: same rebase/conflict rule as DELETE — the staged updated
     // images carry over verbatim (appends never conflict)
     val hw = if (preserveRowIds) Some(rowIdHighWaterAt(root, base)) else None
-    publishLoop(root, conflictRetries, Some(base),
-        conflictsWith = Some(dmlConflict(root, encoded.keySet))) { b =>
-      publish(root, applyEncodedDv(root, entriesAt(root, b), encoded) ++
-        staged, retain, expected = Some(b), ridHighWater = hw)
-    }.get
+    dropStagedOnRefusal(root, staged) {
+      publishLoop(root, conflictRetries, Some(base),
+          conflictsWith = Some(dmlConflict(root, encoded.keySet))) { b =>
+        publish(root, applyEncodedDv(root, entriesAt(root, b), encoded) ++
+          staged, retain, expected = Some(b), ridHighWater = hw)
+      }.get
+    }
     } finally victims.unpersist(blocking = false)
   }
 
@@ -2911,14 +2872,16 @@ object TableCommit {
     def hinted(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
     if (es.isEmpty) {
       // bootstrap: insert-only into a virgin table
-      if (!preserveRowIds)
-        return publish(root, stageBatch(src, root, layoutOf(root),
-          statsCols),
-          retain, expected = Some(base))
-      val (eff, hw) =
-        mintRowIds(stageBatch(src, root, layoutOf(root), statsCols), 0L)
-      return publish(root, eff, retain, expected = Some(base),
-        ridHighWater = Some(hw))
+      val staged = stageBatch(src, root, layoutOf(root), statsCols)
+      return dropStagedOnRefusal(root, staged) {
+        if (!preserveRowIds) publish(root, staged, retain,
+          expected = Some(base))
+        else {
+          val (eff, hw) = mintRowIds(staged, 0L)
+          publish(root, eff, retain, expected = Some(base),
+            ridHighWater = Some(hw))
+        }
+      }
     }
     // X274: MERGE is stricter than DELETE/UPDATE — its upsert
     // invariant (one live row per key) reads the WHOLE live table, so
@@ -2980,11 +2943,13 @@ object TableCommit {
         allVictimPos(live), existingDv(root, es), inlineDvMax)
       val staged = stageBatch(src, root, layoutOf(root), statsCols) ++
         nmbsImages(nmbs, withIds = false)
-      publishLoop(root, conflictRetries, Some(base),
-          conflictsWith = Some(strict(encoded.keySet))) { b =>
-        publish(root, applyEncodedDv(root, entriesAt(root, b), encoded) ++
-          staged, retain, expected = Some(b))
-      }.get
+      dropStagedOnRefusal(root, staged) {
+        publishLoop(root, conflictRetries, Some(base),
+            conflictsWith = Some(strict(encoded.keySet))) { b =>
+          publish(root, applyEncodedDv(root, entriesAt(root, b), encoded) ++
+            staged, retain, expected = Some(b))
+        }.get
+      }
     } else {
       // X278: lineage-preserving MERGE on a tracked table
       val live = liveWithPos(spark, root, schema, es, withIds = true)
@@ -3008,12 +2973,14 @@ object TableCommit {
       val (stagedFresh, hw) = mintRowIds(
         stageBatch(fresh, root, layoutOf(root), statsCols),
         rowIdHighWaterAt(root, base))
-      publishLoop(root, conflictRetries, Some(base),
-          conflictsWith = Some(strict(encoded.keySet))) { b =>
-        publish(root, applyEncodedDv(root, entriesAt(root, b), encoded) ++
-          stagedMatched ++ stagedFresh, retain, expected = Some(b),
-          ridHighWater = Some(hw))
-      }.get
+      dropStagedOnRefusal(root, stagedMatched ++ stagedFresh) {
+        publishLoop(root, conflictRetries, Some(base),
+            conflictsWith = Some(strict(encoded.keySet))) { b =>
+          publish(root, applyEncodedDv(root, entriesAt(root, b), encoded) ++
+            stagedMatched ++ stagedFresh, retain, expected = Some(b),
+            ridHighWater = Some(hw))
+        }.get
+      }
     }
     } finally if (!alreadyCached) src.unpersist(blocking = false)
   }
@@ -3340,8 +3307,7 @@ object TableCommit {
         s"file(s) no longer exist (vacuumed after a later rewrite " +
         s"unreferenced them): ${missing.take(3).mkString(", ")}")
     publish(root, es, retain, expected = Some(cur),
-      colsOverride = Some(raw.cols
-        .getOrElse(ColMapping(Map.empty, Seq.empty))),
+      colsOverride = Some(raw.cols.getOrElse(NoMapping)),
       restoreMark = true)
   }
 
@@ -3361,8 +3327,9 @@ object TableCommit {
     require(Files.isDirectory(dir), s"no commits at $root")
     val at = listDir(dir).flatMap(p => p.getFileName.toString match {
       case VersionRe(d) =>
+        // the manifest was retired concurrently: not a candidate
         try Some(d.toLong -> Files.getLastModifiedTime(p).toMillis)
-        catch { case _: Throwable => None }
+        catch { case NonFatal(_) => None }
       case _ => None
     })
     require(at.nonEmpty, s"no commits at $root")
@@ -3914,38 +3881,94 @@ object TableCommit {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Read the current version; empty-with-schema for a virgin root (the
-    * readOrEmpty idiom the MERGE bootstrap needs). */
-  def read(spark: SparkSession, root: String, schema: StructType): DataFrame =
+  /** THE snapshot read: the current version under `schema`'s LOGICAL
+    * column names; empty-with-schema for a virgin root (the readOrEmpty
+    * idiom the MERGE bootstrap needs). `where` prunes files from the
+    * manifest and filters rows ([[readSnapshot]]). */
+  def read(spark: SparkSession, root: String, schema: StructType,
+      where: Option[Column] = None): DataFrame =
     currentVersion(root) match {
-      case None => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], schema)
-      case Some(v) => readSnapshot(spark, root, schema, v)
+      case None => emptyFrame(spark, schema, where)
+      case Some(v) => readSnapshot(spark, root, schema, v, where)
     }
 
-  /** One PINNED snapshot read: [[readLive]] over the version's
-    * entries, so clean files keep the plain splittable parquet scan and
-    * DV'd files the connector's row reader (X309's row-group splits keep
-    * in-file parallelism on big DV'd files; commitMeltDeleted remains
-    * the repair that returns rewritten files to the clean scan). */
-  private def readSnapshot(spark: SparkSession, root: String,
-      schema: StructType, version: Long): DataFrame = {
-    val es = entriesAtVersion(root, version)
-    if (es.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    else readLive(spark, root, Some(schema), es)
+  private def emptyFrame(spark: SparkSession, schema: StructType,
+      where: Option[Column]): DataFrame = {
+    val df = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    where.fold(df)(w => df.filter(w))
   }
 
-  /** Time-travel read: the table AS OF `version`. The version must still
-    * be inside the retention window its commits were made with —
-    * manifests outside it are gone (that is what retention means), and
-    * the error says so rather than returning an empty frame. */
-  def readAt(spark: SparkSession, root: String, schema: StructType,
-      version: Long): DataFrame = {
+  /** One PINNED snapshot read. One chain walk resolves the version's
+    * entries and its column mapping ([[snapshotAt]]); `where` keeps
+    * only the files the connector's stats-and-bloom rule says might
+    * match ([[pruneSnapshot]] — micro-partition pruning from the
+    * manifest, where the reference leans on Snowflake's,
+    * snowflake_loader.py:125-160); [[readLive]]
+    * scans them under the physical names — clean files keep the plain
+    * splittable parquet scan, DV'd files the connector's row reader —
+    * and the result is aliased back to the logical names, then
+    * filtered by `where`. Files that predate a column (every file, for
+    * a freshly re-added name) read NULL for it. An unmapped schema
+    * plans exactly the plain scan, with no alias step. */
+  private def readSnapshot(spark: SparkSession, root: String,
+      schema: StructType, version: Long, where: Option[Column]): DataFrame = {
+    val (all, cm) = snapshotAt(root, version)
+    val es = where.fold(all)(pruneSnapshot(spark, schema, cm, _, all))
+    if (es.isEmpty) return emptyFrame(spark, schema, where)
+    val phys = physicalSchema(schema, cm)
+    val df =
+      if (phys == schema) readLive(spark, root, Some(schema), es)
+      else readLive(spark, root, Some(phys), es)
+        .toDF(schema.fieldNames.toIndexedSeq: _*)
+    where.fold(df)(w => df.filter(w))
+  }
+
+  private def physicalSchema(logical: StructType, cm: ColMapping): StructType =
+    StructType(logical.fields.map(f => f.copy(name = cm.physical(f.name))))
+
+  /** The entries of `es` that `where` (over `schema`'s logical names)
+    * might match: its conjuncts translate to source filters
+    * ([[sourceFilters]]), rename to physical names through `cm` — the
+    * manifest's stats and blooms are keyed by physical name — and keep
+    * a file unless the connector's rule proves no row can match
+    * ([[mightMatchAll]]). Lossless: an untranslatable conjunct keeps
+    * everything it would have judged. */
+  private def pruneSnapshot(spark: SparkSession, schema: StructType,
+      cm: ColMapping, where: Column, es: Seq[Entry]): Seq[Entry] = {
+    val fs = sourceFilters(spark, schema, where)._1
+      .map(graft.sources.GraftBatchScan.mapFilter(cm.physical))
+    mightMatchAll(physicalSchema(schema, cm), fs, es)
+  }
+
+  /** The files a [[read]] (or, with `version`, a [[readAt]]) with
+    * `where` would scan — exposed so specs, planners and tools can count
+    * exactly which files a predicate keeps without building a scan. */
+  def pruneAt(spark: SparkSession, root: String, schema: StructType,
+      where: Column, version: Option[Long] = None): Seq[Entry] = {
+    val v = version match {
+      case Some(x) => requireRetained(root, x); x
+      case None => currentVersion(root).getOrElse(return Seq.empty)
+    }
+    val (es, cm) = snapshotAt(root, v)
+    pruneSnapshot(spark, schema, cm, where, es)
+  }
+
+  private def requireRetained(root: String, version: Long): Unit =
     require(Files.exists(manifestPath(root, version)),
       s"version $version not retained at $root " +
         s"(current: ${currentVersion(root).getOrElse(-1L)})")
-    readSnapshot(spark, root, schema, version)
+
+  /** Time-travel read: the table AS OF `version`, under THAT version's
+    * column mapping — a column renamed later still answers to its old
+    * name, exactly like every other piece of the snapshot. The version
+    * must still be inside the retention window its commits were made
+    * with — manifests outside it are gone (that is what retention
+    * means), and the error says so rather than returning an empty
+    * frame. */
+  def readAt(spark: SparkSession, root: String, schema: StructType,
+      version: Long, where: Option[Column] = None): DataFrame = {
+    requireRetained(root, version)
+    readSnapshot(spark, root, schema, version, where)
   }
 
   /** Read the current version, inferring the schema (requires at least one
@@ -3955,54 +3978,4 @@ object TableCommit {
     require(es.nonEmpty, s"no committed version at $root")
     readLive(spark, root, None, es)
   }
-
-  /** Manifest-pruned read: keep only files whose layout key tag passes
-    * `keep` — file-listing-time pruning from table metadata, no
-    * directory walk, no post-scan filter. Unpartitioned files (part =
-    * None) always survive. */
-  def readPruned(spark: SparkSession, root: String, schema: StructType)(
-      keep: String => Boolean): DataFrame = {
-    val es = entries(root).filter(_.part.forall(keep))
-    if (es.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    else
-      readLive(spark, root, Some(schema), es)
-  }
-
-  /** The manifest-stats analogue of [[readPruned]]'s listing decision:
-    * current entries whose `column` stats CANNOT rule the file out under
-    * `mightMatch` (a predicate over the file's [[ColStats]] range —
-    * return true to keep). Files with no stats for `column` always
-    * survive, so pruning is LOSSLESS by construction: it may read too
-    * much, never too little. Exposed (not just the read wrapper) so
-    * specs and planners can count exactly which files a predicate keeps
-    * without building a scan. */
-  def pruneEntries(root: String, column: String)(
-      mightMatch: ColStats => Boolean): Seq[Entry] =
-    entries(root).filter(_.stats.get(column).forall(mightMatch))
-
-  /** Manifest-stats pruned read: plan the scan from ONLY the files whose
-    * per-file min/max admit the predicate — `WHERE date = X` over a
-    * 100k-file table then reads the manifest, not 100k footers (the
-    * micro-partition pruning every warehouse table format does; the
-    * reference leans on Snowflake's at
-    * /root/reference/src/snowflake_loader.py:125-160). The caller still
-    * applies the ROW-level filter on the result — file stats bound what
-    * the files might contain, they don't filter rows. */
-  def readPrunedStats(spark: SparkSession, root: String, schema: StructType,
-      column: String)(mightMatch: ColStats => Boolean): DataFrame = {
-    val es = pruneEntries(root, column)(mightMatch)
-    if (es.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    else
-      readLive(spark, root, Some(schema), es)
-  }
-
-  /** Range overlap helper for [[pruneEntries]] predicates over the
-    * canonical-string stats: keep the file iff [min,max] ∩ [lo,hi] ≠ ∅
-    * under the caller-chosen ordering (lexical for ISO dates/strings,
-    * numeric-after-parse for integer columns). */
-  def rangeOverlaps(cs: ColStats, lo: String, hi: String,
-      lt: (String, String) => Boolean): Boolean =
-    !(lt(cs.max, lo) || lt(hi, cs.min))
 }

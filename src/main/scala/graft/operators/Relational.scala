@@ -332,7 +332,7 @@ object Relational {
     * (customer, date) without storing it twice. Fixture: an
     * unclustered append, then the cluster commit. Gated legs: the full
     * table rollup (a rewrite that lost/duplicated rows breaks it) and
-    * a stats-PRUNED read per dimension (`readPrunedStats` keeps only
+    * a stats-PRUNED read per dimension (`read`'s `where` keeps only
     * manifest-overlapping files; a pruning bug that drops a matching
     * file breaks the hash — lossless by construction, CompactionSpec
     * measures the actual file skipping on both dimensions). */
@@ -352,21 +352,16 @@ object Relational {
       xCol = "x", yCol = "y", retain = 4)
     val schema = StructType(Seq(StructField("x", LongType),
       StructField("y", LongType), StructField("c", LongType)))
-    val numLt = (a: String, b: String) => a.toLong < b.toLong
     def leg(kind: String, d: DataFrame) = d
       .agg(Num.countStar.as("n_rows"), sum(col("c")).as("cents_sum"),
         sum(col("x")).as("x_sum"), sum(col("y")).as("y_sum"))
       .select(lit(kind).as("kind"), col("n_rows"), col("cents_sum"),
         col("x_sum"), col("y_sum"))
     val table = leg("table", TableCommit.read(spark, root, schema))
-    val px = leg("prune_x",
-      TableCommit.readPrunedStats(spark, root, schema, "x")(
-        cs => TableCommit.rangeOverlaps(cs, "16", "31", numLt))
-        .filter(col("x") >= 16L && col("x") <= 31L))
-    val py = leg("prune_y",
-      TableCommit.readPrunedStats(spark, root, schema, "y")(
-        cs => TableCommit.rangeOverlaps(cs, "2", "4", numLt))
-        .filter(col("y") >= 2L && col("y") <= 4L))
+    val px = leg("prune_x", TableCommit.read(spark, root, schema,
+      Some(col("x") >= 16L && col("x") <= 31L)))
+    val py = leg("prune_y", TableCommit.read(spark, root, schema,
+      Some(col("y") >= 2L && col("y") <= 4L)))
     table.unionByName(px).unionByName(py).orderBy(col("kind"))
   }
 
@@ -2482,8 +2477,8 @@ object Relational {
     * directory listing. The fixture commits orders RANGE-PARTITIONED on
     * the ISO date string (tight, disjoint per-file ranges — what a
     * clustered/Z-ordered layout gives stats naturally), reads back
-    * through `readPrunedStats` with a one-year window, then applies the
-    * exact row filter and aggregates. The oracle runs the same
+    * through `read` with a one-year `where` (file pruning plus the
+    * exact row filter) and aggregates. The oracle runs the same
     * filter+rollup over the RAW table, so a pruning decision that drops
     * one matching file breaks rows/hash — the gate proves pruning is
     * LOSSLESS, while ManifestStatsSpec asserts the mechanical half the
@@ -2510,9 +2505,8 @@ object Relational {
       StructField("o_orderstatus", StringType),
       StructField("cents", LongType),
       StructField("od", StringType)))
-    TableCommit.readPrunedStats(spark, root, schema, "od")(
-        cs => TableCommit.rangeOverlaps(cs, MpLo, MpHi, _ < _))
-      .filter(col("od") >= MpLo && col("od") <= MpHi)
+    TableCommit.read(spark, root, schema,
+        Some(col("od") >= MpLo && col("od") <= MpHi))
       .groupBy(col("o_orderstatus"))
       .agg(Num.countStar.as("n"), sum(col("cents")).as("cents"),
         min(col("od")).as("first_day"), max(col("od")).as("last_day"))
@@ -2554,13 +2548,14 @@ object Relational {
     // statsEnvelope is None when any current file lacks rows/stats — for
     // a query whose CONTRACT is metadata-only, the correct response is a
     // loud error naming the fallback, never a silent scan or a MatchError
-    def env(c: String, lt: (String, String) => Boolean) =
-      TableCommit.statsEnvelope(root, c, lt).getOrElse(
+    def env(c: String, dt: org.apache.spark.sql.types.DataType) =
+      TableCommit.statsEnvelope(root, c, dt).getOrElse(
         throw new IllegalStateException(
           s"manifest stats incomplete for '$c' at $root — " +
             "fall back to a scan-based aggregate"))
-    val (n, odMin, odMax) = env("od", _ < _)
-    val (_, kMin, kMax) = env("o_orderkey", (a, b) => a.toLong < b.toLong)
+    import org.apache.spark.sql.types.{LongType, StringType}
+    val (n, odMin, odMax) = env("od", StringType)
+    val (_, kMin, kMax) = env("o_orderkey", LongType)
     import spark.implicits._
     Seq((n, odMin, odMax, kMin.toLong, kMax.toLong))
       .toDF("n_rows", "first_day", "last_day", "min_key", "max_key")
@@ -2850,7 +2845,7 @@ object Relational {
     * month-partitioned appends — the "we partitioned wrong at the start"
     * fix every long-lived table eventually needs) WITHOUT rewriting old
     * files, and reads stay correct AND pruned across both generations.
-    * The mechanism is the X207 manifest stats: `readPrunedStats` skips
+    * The mechanism is the X207 manifest stats: `read`'s `where` skips
     * files by per-file min/max of the QUERY column, so the directory
     * scheme a file happened to be written under is irrelevant to pruning
     * — exactly how Iceberg makes spec evolution a metadata operation.
@@ -2882,9 +2877,8 @@ object Relational {
       StructField("cents", LongType),
       StructField("od", StringType),
       StructField("month", StringType)))
-    TableCommit.readPrunedStats(spark, root, schema, "od")(
-        cs => TableCommit.rangeOverlaps(cs, EvoLo, EvoHi, _ < _))
-      .filter(col("od") >= EvoLo && col("od") <= EvoHi)
+    TableCommit.read(spark, root, schema,
+        Some(col("od") >= EvoLo && col("od") <= EvoHi))
       .groupBy(col("o_orderstatus"))
       .agg(Num.countStar.as("n"), sum(col("cents")).as("cents"),
         min(col("od")).as("first_day"), max(col("od")).as("last_day"))
@@ -3027,11 +3021,9 @@ object Relational {
       StructField("c_custkey", LongType),
       StructField("c_mktsegment", StringType),
       StructField("cents", LongType)))
-    BloomProbeKeys.map { key =>
-      TableCommit.readPrunedBloom(spark, root, schema,
-        "c_custkey", key.toString)
-        .filter(col("c_custkey") === key)
-    }.reduce(_ unionByName _)
+    BloomProbeKeys.map(key => TableCommit.read(spark, root, schema,
+        Some(col("c_custkey") === key)))
+      .reduce(_ unionByName _)
       .orderBy(col("c_custkey"))
   }
 
@@ -4015,17 +4007,17 @@ object Relational {
     TableCommit.commitAppend(slice(0), root, retain = 8)
     TableCommit.commitRenameColumn(root, "cents", "price_cents",
       retain = 8)
-    TableCommit.commitAppendMapped(
+    TableCommit.commitAppend(
       slice(1).withColumnRenamed("cents", "price_cents"), root,
       retain = 8)
     TableCommit.commitDropColumn(root, "st", retain = 8)
     TableCommit.commitAddColumn(root, "st", retain = 8)
-    TableCommit.commitAppendMapped(
+    TableCommit.commitAppend(
       slice(2).withColumnRenamed("cents", "price_cents"), root,
       retain = 8)
     val logical = StructType(Seq(StructField("k", LongType),
       StructField("price_cents", LongType), StructField("st", StringType)))
-    TableCommit.readMapped(spark, root, logical)
+    TableCommit.read(spark, root, logical)
       .groupBy(coalesce(col("st"), lit("(dropped)")).as("st"))
       .agg(Num.countStar.as("n_rows"),
         sum(col("price_cents")).as("cents_sum"), sum(col("k")).as("key_sum"))
@@ -4380,13 +4372,14 @@ object Relational {
       |ORDER BY kind, key""".stripMargin
 
   /** `q_pruned_mapped` (X281, VERDICT r12 task 5): stats pruning UNDER
-    * COLUMN MAPPING. Manifest stats are keyed by PHYSICAL name; before
-    * the bridge, pruning a renamed column by its logical name silently
-    * kept every file (lossless but useless — the 100k-file table reads
-    * 100k footers again). Fixture: three range-sliced single-file
-    * appends with `k` stats → RENAME k→order_k → three more mapped
-    * appends (stats translate to the physical name on the write side)
-    * → prune by the NEW logical name over a mid-range probe. The meta
+    * COLUMN MAPPING. Manifest stats are keyed by PHYSICAL name, so the
+    * snapshot read translates its `where` through the mapping — unmapped,
+    * pruning a renamed column by its logical name kept every file
+    * (lossless but useless — the 100k-file table reads 100k footers
+    * again). Fixture: three range-sliced single-file appends with `k`
+    * stats → RENAME k→order_k → three more appends under the new name
+    * (stats translate to the physical name on the write side) → prune
+    * by the NEW logical name over a mid-range probe (`pruneAt`). The meta
     * row pins that exactly the 2 mid-range files (one per era) survive
     * pruning; the rollup reads only those files and applies the row
     * filter. The rename-invariance law (same file set as pruning by
@@ -4413,20 +4406,17 @@ object Relational {
     }
     TableCommit.commitRenameColumn(root, "k", "order_k", retain = 16)
     cuts.foreach { case (lo, hi) =>
-      TableCommit.commitAppendMapped(
+      TableCommit.commitAppend(
         slice(lo, hi).withColumnRenamed("k", "order_k"), root,
         retain = 16, statsCols = Seq("order_k"))
     }
     val logical = StructType(Seq(StructField("order_k", LongType),
       StructField("st", StringType), StructField("c", LongType)))
-    val might = (cs: TableCommit.ColStats) =>
-      !(cs.max.toLong < 500L || cs.min.toLong > 999L)
-    val keptFiles = TableCommit.pruneEntriesMapped(root, "order_k")(might)
+    val mid = col("order_k") >= 500L && col("order_k") < 1000L
+    val keptFiles = TableCommit.pruneAt(spark, root, logical, mid)
       .size.toLong
     val totalFiles = TableCommit.entries(root).size.toLong
-    val table = TableCommit
-      .readPrunedStatsMapped(spark, root, logical, "order_k")(might)
-      .filter(col("order_k") >= 500L && col("order_k") < 1000L)
+    val table = TableCommit.read(spark, root, logical, Some(mid))
       .groupBy(col("st"))
       .agg(Num.countStar.as("n_rows"), sum(col("c")).as("cents_sum"),
         sum(col("order_k")).as("key_sum"))

@@ -87,7 +87,8 @@ private[graft] class GraftWriteTable(schema0: StructType,
     * the manifest's min/max stats (the X207 channel — lossless: Spark
     * still evaluates every filter row-level; a file without stats for
     * the column is kept). Reads serve PHYSICAL column names — mapped
-    * tables (X276) go through `TableCommit.readMapped`. */
+    * tables (X276) read under logical names through the catalog or
+    * `TableCommit.read`, which resolves the mapping itself. */
   /** X293: a TIME-TRAVEL pin — when set, scans serve this version's
     * snapshot (`entriesAtVersion`) instead of the head; the SQL
     * catalog's `VERSION AS OF` / `TIMESTAMP AS OF` loads set it. */
@@ -974,9 +975,8 @@ private class GraftScanBuilder(root: String, full: StructType,
     def envelope(c: org.apache.spark.sql.connector.expressions
         .Expression): Option[(StructField, Any, Any)] =
       aggCol(c).filter(f => statTypes(f.dataType)).flatMap { f =>
-        TableCommit.statsEnvelopeOf(es, phys(f.name),
-          GraftBatchScan.lt(f.dataType)).map { case (_, mn, mx) =>
-          (f.copy(nullable = true),
+        TableCommit.statsEnvelopeOf(es, phys(f.name), f.dataType).map {
+          case (_, mn, mx) => (f.copy(nullable = true),
             statVal(f.dataType, mn), statVal(f.dataType, mx))
         }
       }
@@ -1366,13 +1366,13 @@ private[graft] object GraftBatchScan {
     * numeric parse for numeric columns, UTF-8 byte order for strings,
     * lexical for ISO dates (pure ASCII, where the orders coincide)
     * (the [[TableCommit.ColStats]] contract). */
-  private[sources] def lt(dt: DataType): (String, String) => Boolean = dt match {
+  private[graft] def lt(dt: DataType): (String, String) => Boolean = dt match {
     case LongType | IntegerType | ShortType | ByteType =>
       (a, b) => a.toLong < b.toLong
     case DoubleType | FloatType => (a, b) => a.toDouble < b.toDouble
     case StringType => utf8Lt
     // X327: TIMESTAMP stats are raw-micros decimal text; only filters
-    // whose literal arrived CATALYST-side (a raw Long — translateDml
+    // whose literal arrived CATALYST-side (a raw Long — sourceFilters
     // and the V2 runtime-filter bridge) are admitted by translatable,
     // so both sides here are always micros text
     case TimestampType => (a, b) => a.toLong < b.toLong
@@ -1407,7 +1407,7 @@ private[graft] object GraftBatchScan {
     // an In prunes losslessly whatever its value list holds (nulls
     // match nothing), so only the column's TYPE gates it. TIMESTAMP
     // columns (X327) are admitted ONLY when every literal is a raw
-    // micros Long (catalyst form — translateDml and the V2 bridge):
+    // micros Long (catalyst form — sourceFilters and the V2 bridge):
     // an external java.sql.Timestamp's ISO toString would compare
     // garbage against the channel's micros text and silently
     // mis-prune, so it refuses here.

@@ -336,7 +336,9 @@ object ManifestSoak {
       retain = 4)
     val dt = (System.nanoTime() - t0) / 1e9
     val heap1 = usedHeap()
-    val kept = TableCommit.pruneEntriesBloom(root, "tag", "42").size
+    val kept = TableCommit.pruneAt(spark, root,
+      StructType(Seq(StructField("tag", StringType))), col("tag") === "42")
+      .size
     val total = TableCommit.entries(root).size
     println(f"[bsoak] files=$files rowsPerFile=$rows m=$m " +
       f"reindex=$dt%.1f s heapDelta=${(heap1 - heap0) / 1048576}%,d MB " +

@@ -31,22 +31,16 @@ class ClusterSpec extends AnyFunSuite {
       (col("id") * 7L).as("v"))
       .repartition(8)
 
-  private val numLt = (a: String, b: String) => a.toLong < b.toLong
-
-  private def filesKept(r: String, c: String, lo: String,
-      hi: String): Int = {
-    val all = TableCommit.entries(r)
-    all.count(e => e.stats.get(c)
-      .forall(cs => TableCommit.rangeOverlaps(cs, lo, hi, numLt)))
-  }
+  private def filesKept(r: String, c: String, lo: Long, hi: Long): Int =
+    TableCommit.pruneAt(spark, r, schema, col(c).between(lo, hi)).size
 
   test("cluster makes stats selective on BOTH dimensions") {
     val r = root()
     TableCommit.commitAppend(grid(), r, retain = 4,
       statsCols = Seq("x", "y"))
     // shuffled layout: an 1/8-wide slice on either dim keeps ~all files
-    assert(filesKept(r, "x", "0", "7") === 8)
-    assert(filesKept(r, "y", "0", "7") === 8)
+    assert(filesKept(r, "x", 0L, 7L) === 8)
+    assert(filesKept(r, "y", 0L, 7L) === 8)
     val before = TableCommit.read(spark, r, schema)
       .agg(sum(col("v"))).collect()(0).getLong(0)
     TableCommit.commitCluster(spark, r, targetFiles = 8, "x", "y",
@@ -57,8 +51,8 @@ class ClusterSpec extends AnyFunSuite {
     // because repartitionByRange SAMPLES its boundaries
     // (RDD-id-seeded) — a boundary can split one extra file into the
     // slice on any given run. 8/8 (unclustered) must never pass.
-    val kx = filesKept(r, "x", "0", "7")
-    val ky = filesKept(r, "y", "0", "7")
+    val kx = filesKept(r, "x", 0L, 7L)
+    val ky = filesKept(r, "y", 0L, 7L)
     assert(kx <= 5, s"x-slice kept $kx of 8 files — not clustered on x")
     assert(ky <= 5, s"y-slice kept $ky of 8 files — not clustered on y")
     // content untouched
@@ -66,9 +60,8 @@ class ClusterSpec extends AnyFunSuite {
       .agg(sum(col("v"))).collect()(0).getLong(0)
     assert(after === before)
     // pruned reads stay lossless
-    val got = TableCommit.readPrunedStats(spark, r, schema, "x")(
-        cs => TableCommit.rangeOverlaps(cs, "0", "7", numLt))
-      .filter(col("x") <= 7L).count()
+    val got = TableCommit.read(spark, r, schema,
+      Some(col("x").between(0L, 7L))).count()
     assert(got === 512L)
   }
 

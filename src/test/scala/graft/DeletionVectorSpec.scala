@@ -99,18 +99,18 @@ class DeletionVectorSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet
     assert(live === (0L until 120L).filterNot(_ % 5 == 2).toSet)
     live.foreach { key =>
-      // min/max prune: keep files whose [min,max] admits the key
-      val kept = TableCommit.pruneEntries(r, "k")(cs =>
-        !(cs.max.toLong < key || cs.min.toLong > key))
+      // min/max + bloom prune: keep files whose [min,max] and bloom
+      // admit the key
+      val kept = TableCommit.pruneAt(spark, r, schema, col("k") === key)
       assert(kept.nonEmpty, s"stats prune lost live key $key")
-      // bloom prune THEN read: the row itself must come back
-      val hit = TableCommit.readPrunedBloom(spark, r, schema,
-        "k", key.toString).filter(col("k") === key).count()
+      // prune THEN read: the row itself must come back
+      val hit = TableCommit.read(spark, r, schema,
+        Some(col("k") === key)).count()
       assert(hit === 1L, s"bloom prune lost live key $key")
     }
     // and dead rows are really gone from the bloom-pruned read too
-    val dead = TableCommit.readPrunedBloom(spark, r, schema, "k", "2")
-      .filter(col("k") === 2L).count()
+    val dead = TableCommit.read(spark, r, schema,
+      Some(col("k") === 2L)).count()
     assert(dead === 0L)
   }
 
@@ -137,14 +137,12 @@ class DeletionVectorSpec extends AnyFunSuite {
     val df = spark.range(100).select(col("id").as("k"),
       (col("id") * 10L).as("v")).repartition(2)
     TableCommit.commitAppend(df, r, retain = 8, statsCols = Seq("k"))
-    val before = TableCommit.statsEnvelope(r, "k",
-      (a, b) => a.toLong < b.toLong)
+    val before = TableCommit.statsEnvelope(r, "k", LongType)
     assert(before === Some((100L, "0", "99")))
     // delete the row holding the global max — the envelope would lie
     TableCommit.commitDeleteRows(spark, r, schema, col("k") === 99L,
       retain = 8)
-    assert(TableCommit.statsEnvelope(r, "k",
-      (a, b) => a.toLong < b.toLong).isEmpty,
+    assert(TableCommit.statsEnvelope(r, "k", LongType).isEmpty,
       "an exact envelope over a DV'd table must fall back to a scan")
   }
 

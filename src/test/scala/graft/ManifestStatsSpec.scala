@@ -64,27 +64,39 @@ class ManifestStatsSpec extends AnyFunSuite {
     val schema = StructType(Seq(StructField("k", LongType),
       StructField("day", StringType), StructField("v", StringType)))
     // one day out of four: range-clustered files make most skippable
-    val kept = TableCommit.pruneEntries(r, "day")(
-      cs => TableCommit.rangeOverlaps(cs, "2024-01-02", "2024-01-02", _ < _))
+    val day2 = col("day") === "2024-01-02"
+    val kept = TableCommit.pruneAt(spark, r, schema, day2)
     assert(kept.nonEmpty && kept.size < all.size,
       s"expected a strict subset, got ${kept.size} of ${all.size}")
     // LOSSLESS: pruned-scan + row filter == full-scan + row filter
-    val pruned = TableCommit.readPrunedStats(spark, r, schema, "day")(
-        cs => TableCommit.rangeOverlaps(cs, "2024-01-02", "2024-01-02", _ < _))
-      .filter(col("day") === "2024-01-02")
+    val pruned = TableCommit.read(spark, r, schema, Some(day2))
       .select("k").as[Long].collect().sorted
     val full = TableCommit.read(spark, r, schema)
       .filter(col("day") === "2024-01-02")
       .select("k").as[Long].collect().sorted
     assert(pruned.toSeq === full.toSeq && full.length === 10)
     // numeric column prunes on Long order, not string order
-    val keptK = TableCommit.pruneEntries(r, "k")(
-      cs => TableCommit.rangeOverlaps(cs, "5", "9", (a, b) => a.toLong < b.toLong))
+    val k5to9 = col("k").between(5L, 9L)
+    val keptK = TableCommit.pruneAt(spark, r, schema, k5to9)
     assert(keptK.nonEmpty && keptK.size < all.size)
-    val prunedK = TableCommit.readPrunedStats(spark, r, schema, "k")(
-        cs => TableCommit.rangeOverlaps(cs, "5", "9", (a, b) => a.toLong < b.toLong))
-      .filter(col("k").between(5, 9)).count()
+    val prunedK = TableCommit.read(spark, r, schema, Some(k5to9)).count()
     assert(prunedK === 5L)
+  }
+
+  test("a FLOAT equality `where` keeps the file holding the match: the read prunes by the connector's widening rule") {
+    // the stats channel stores (double)0.1f = "0.10000000149011612"; a
+    // comparison against the unwidened text "0.1" would prune the file
+    val r = root()
+    val df = Seq(0.1f, 0.5f).toDF("f")
+      .select(col("f").cast("float").as("f")).coalesce(1)
+    TableCommit.commitAppend(df, r, statsCols = Seq("f"))
+    assert(TableCommit.entries(r).head.stats("f").min ===
+      "0.10000000149011612")
+    val schema = StructType(Seq(StructField("f", FloatType)))
+    val eq = col("f") === 0.1f
+    assert(TableCommit.pruneAt(spark, r, schema, eq).size === 1)
+    assert(TableCommit.read(spark, r, schema, Some(eq)).count() === 1L)
+    assert(TableCommit.read(spark, r, schema).count() === 2L)
   }
 
   test("string stats order by UTF-8 bytes, not UTF-16 code units (ADVICE r14): supplementary chars never prune a matching file") {
@@ -150,7 +162,8 @@ class ManifestStatsSpec extends AnyFunSuite {
     val r = root()
     clusteredCommit(r)
     // 'v' was not in statsCols — every file must survive a predicate on it
-    val kept = TableCommit.pruneEntries(r, "v")(_ => false)
+    val kept = TableCommit.pruneAt(spark, r, kvSchema,
+      col("v") === "no such value")
     assert(kept.size === TableCommit.entries(r).size)
   }
 
@@ -239,14 +252,12 @@ class ManifestStatsSpec extends AnyFunSuite {
       partVals.exists(_.startsWith("b")),
       s"both layout generations must be present, got $partVals")
     // a key window straddling the generation cut prunes files from BOTH
-    val kept = TableCommit.pruneEntries(r, "kd")(
-      cs => TableCommit.rangeOverlaps(cs, "k015", "k025", _ < _))
-    assert(kept.nonEmpty && kept.size < es.size)
     val schema = StructType(Seq(StructField("k", LongType),
       StructField("cat", StringType), StructField("kd", StringType)))
-    val rows = TableCommit.readPrunedStats(spark, r, schema, "kd")(
-        cs => TableCommit.rangeOverlaps(cs, "k015", "k025", _ < _))
-      .filter(col("kd") >= "k015" && col("kd") <= "k025")
+    val window = col("kd") >= "k015" && col("kd") <= "k025"
+    val kept = TableCommit.pruneAt(spark, r, schema, window)
+    assert(kept.nonEmpty && kept.size < es.size)
+    val rows = TableCommit.read(spark, r, schema, Some(window))
       .select("k").as[Long].collect().sorted.toSeq
     assert(rows === (15L to 25L).toSeq)
   }
@@ -268,9 +279,8 @@ class ManifestStatsSpec extends AnyFunSuite {
     assert(TableCommit.read(spark, r, kvSchema)
       .select("k").as[Long].collect().sorted.toSeq === (0L until 50L))
     // range-sorted rewrite leaves tight stats: a narrow window prunes
-    val kept = TableCommit.pruneEntries(r, "k")(
-      cs => TableCommit.rangeOverlaps(cs, "0", "5",
-        (a, b) => a.toLong < b.toLong))
+    val kept = TableCommit.pruneAt(spark, r, kvSchema,
+      col("k").between(0L, 5L))
     assert(kept.size < after.size || after.size == 1)
     assert(kept.size == 1)
   }
@@ -301,8 +311,7 @@ class ManifestStatsSpec extends AnyFunSuite {
   test("statsEnvelope answers COUNT/MIN/MAX with every data file DELETED (metadata-only)") {
     val r = root()
     clusteredCommit(r)
-    val expected = TableCommit.statsEnvelope(r, "k",
-      (a, b) => a.toLong < b.toLong)
+    val expected = TableCommit.statsEnvelope(r, "k", LongType)
     assert(expected === Some((40L, "0", "39")))
     // the strong zero-read proof: remove every data file; the manifest
     // alone must still answer, while an actual scan now CANNOT
@@ -311,12 +320,11 @@ class ManifestStatsSpec extends AnyFunSuite {
     val s = Files.walk(dataDir)
     try s.iterator().asScala.toSeq.reverse.foreach(p =>
       Files.deleteIfExists(p)) finally s.close()
-    assert(TableCommit.statsEnvelope(r, "k",
-      (a, b) => a.toLong < b.toLong) === expected)
-    assert(TableCommit.statsEnvelope(r, "day", _ < _)
+    assert(TableCommit.statsEnvelope(r, "k", LongType) === expected)
+    assert(TableCommit.statsEnvelope(r, "day", StringType)
       === Some((40L, "2024-01-01", "2024-01-04")))
     // a column without stats refuses rather than answering partially
-    assert(TableCommit.statsEnvelope(r, "v", _ < _).isEmpty)
+    assert(TableCommit.statsEnvelope(r, "v", StringType).isEmpty)
   }
 
   test("stable surrogate ids: a second run never moves or recycles an assigned id") {
@@ -379,10 +387,10 @@ class ManifestStatsSpec extends AnyFunSuite {
     // LOSSLESS: every key's row survives its own pruned read
     var prunedSum = 0L
     (1L to n).foreach { key =>
-      val kept = TableCommit.pruneEntriesBloom(r, "k", key.toString)
+      val kept = TableCommit.pruneAt(spark, r, schema, col("k") === key)
       prunedSum += kept.size
-      val row = TableCommit.readPrunedBloom(spark, r, schema, "k",
-        key.toString).filter(col("k") === key).collect()
+      val row = TableCommit.read(spark, r, schema, Some(col("k") === key))
+        .collect()
       assert(row.length === 1 && row.head.getLong(1) === key * 7L,
         s"key $key dropped by bloom pruning")
     }
@@ -392,13 +400,13 @@ class ManifestStatsSpec extends AnyFunSuite {
     assert(prunedSum < n * 3, s"bloom barely prunes: avg ${prunedSum / n.toDouble}")
     // a value absent from the data usually prunes to zero files; at
     // minimum it never errors and the read returns nothing
-    val ghost = TableCommit.readPrunedBloom(spark, r, schema, "k", "999999")
-      .filter(col("k") === 999999L)
+    val ghost = TableCommit.read(spark, r, schema,
+      Some(col("k") === 999999L))
     assert(ghost.count() === 0L)
     // a bloom-less table keeps everything (missing index = might match)
     val r2 = Files.createTempDirectory("graft_bloom_spec_").toString + "/t2"
     TableCommit.commitAppend(df, r2)
-    assert(TableCommit.pruneEntriesBloom(r2, "k", "5").size ===
+    assert(TableCommit.pruneAt(spark, r2, schema, col("k") === 5L).size ===
       TableCommit.entries(r2).size)
   }
 
@@ -414,7 +422,9 @@ class ManifestStatsSpec extends AnyFunSuite {
     TableCommit.commitCompact(spark, r, targetFiles = 3)
     val afterCompact = TableCommit.entries(r)
     assert(afterCompact.forall(!_.stats.contains("bloom:k")))
-    assert(TableCommit.pruneEntriesBloom(r, "k", "7").size ===
+    val schema = StructType(Seq(
+      StructField("k", LongType), StructField("v", LongType)))
+    assert(TableCommit.pruneAt(spark, r, schema, col("k") === 7L).size ===
       afterCompact.size)
     // REINDEX: one metadata transaction — the file list is byte-identical
     // (zero data movement), only the stats channel changed
@@ -424,15 +434,13 @@ class ManifestStatsSpec extends AnyFunSuite {
       "reindex must not move data")
     assert(afterReindex.forall(_.stats.contains("bloom:k")))
     // and the restored index is lossless + effective again
-    val schema = StructType(Seq(
-      StructField("k", LongType), StructField("v", LongType)))
     (1L to n).foreach { key =>
-      val row = TableCommit.readPrunedBloom(spark, r, schema, "k",
-        key.toString).filter(col("k") === key).collect()
+      val row = TableCommit.read(spark, r, schema,
+        Some(col("k") === key)).collect()
       assert(row.length === 1 && row.head.getLong(1) === key * 3L)
     }
     val prunedSum = (1L to n).map(key =>
-      TableCommit.pruneEntriesBloom(r, "k", key.toString).size.toLong).sum
+      TableCommit.pruneAt(spark, r, schema, col("k") === key).size.toLong).sum
     assert(prunedSum < n * 3, "restored index barely prunes")
   }
 }

@@ -183,12 +183,12 @@ class RestoreSpec extends AnyFunSuite {
     TableCommit.commitRenameColumn(r, "v", "val", retain = 10)
     val renamed = StructType(Seq(StructField("k", LongType),
       StructField("val", LongType)))
-    assert(TableCommit.readMapped(spark, r, renamed)
+    assert(TableCommit.read(spark, r, renamed)
       .agg(sum(col("val"))).collect()(0).getLong(0) === 1900L)
     TableCommit.commitRestore(r, vPre, retain = 10)
     assert(TableCommit.colMapping(r) === None,
       "restore to the pre-mapping era must clear the mapping")
-    assert(TableCommit.readMapped(spark, r, schema).columns.toSeq ===
+    assert(TableCommit.read(spark, r, schema).columns.toSeq ===
       Seq("k", "v"))
   }
 

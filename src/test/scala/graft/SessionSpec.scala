@@ -125,4 +125,18 @@ class SessionSpec extends AnyFunSuite {
     assert("""(?<!def )conflictBackoff\(""".r.findAllMatchIn(src).size ===
       1, "TableCommit must back off from exactly one retry loop")
   }
+
+  test("one snapshot read: no pruned or mapped read variant, no stats closure") {
+    // engine reads resolve the column mapping and prune through
+    // `read`/`readAt`'s `where` and `pruneAt`; a caller-written
+    // ColStats closure coming back shows up here
+    Seq("readMapped", "readMappedAt", "readPruned", "readPrunedStats",
+      "readPrunedStatsMapped", "readPrunedBloom", "pruneEntries",
+      "pruneEntriesMapped", "pruneEntriesBloom", "pruneEntriesBloomMapped",
+      "rangeOverlaps", "commitAppendMapped").foreach(n =>
+      assert(mainFilesMatching(s"\\b$n\\b") === Seq.empty, n))
+    val src = Files.readString(
+      Paths.get("src/main/scala/graft/engine/TableCommit.scala"))
+    assert("""mightMatch:\s*ColStats""".r.findFirstIn(src).isEmpty)
+  }
 }

@@ -67,11 +67,42 @@ class TableCommitSpec extends AnyFunSuite {
     assert(got === Map("d1" -> 1L, "d2" -> 20L))
     assert(TableCommit.entries(r)
       .filter(_.part.contains("d1")).map(_.path).toSet === d1Files)
-    // manifest-pruned read: listing-time file pruning, no post-scan filter
-    val pruned = TableCommit.readPruned(spark, r,
-      StructType(Seq(StructField("day", StringType),
-        StructField("n", LongType))))(_ == "d2")
+    // manifest-pruned read: listing-time file pruning keeps exactly the
+    // d2 files (their single-valued `day` stats prove the slice)
+    val dayN = StructType(Seq(StructField("day", StringType),
+      StructField("n", LongType)))
+    val d2 = col("day") === "d2"
+    assert(TableCommit.pruneAt(spark, r, dayN, d2).map(_.path).toSet ===
+      TableCommit.entries(r).filter(_.part.contains("d2")).map(_.path).toSet)
+    val pruned = TableCommit.read(spark, r, dayN, Some(d2))
     assert(pruned.collect().map(_.getAs[Long]("n")).toSet === Set(20L))
+  }
+
+  test("a refused partition replace drops its staged files") {
+    val r = root()
+    TableCommit.commitReplacePartitions(
+      Seq(("d1", 1L), ("d2", 2L)).toDF("day", "n"), r, "day", retain = 8)
+    // a plain compaction drops the layout proof, so the next replace
+    // is refused before it claims a version
+    TableCommit.commitCompact(spark, r, targetFiles = 1, retain = 8)
+    val v = TableCommit.currentVersion(r)
+    val e = intercept[IllegalArgumentException](
+      TableCommit.commitReplacePartitions(Seq(("d2", 20L)).toDF("day", "n"),
+        r, "day", retain = 8))
+    assert(e.getMessage.contains("no layout proof"))
+    assert(TableCommit.currentVersion(r) === v)
+    import scala.jdk.CollectionConverters._
+    val s = Files.walk(Paths.get(r, "data"))
+    val onDisk = try s.iterator().asScala
+      .filter(_.toString.endsWith(".parquet"))
+      .map(p => Paths.get(r).relativize(p).toString).toSet
+    finally s.close()
+    // exactly the retained v1 files and the live compacted one
+    val referenced = (TableCommit.entriesAtVersion(r, 1L) ++
+      TableCommit.entries(r)).map(_.path).toSet
+    assert(TableCommit.entries(r).size === 1)
+    assert(onDisk === referenced && referenced.size === 3,
+      s"on disk $onDisk, referenced $referenced")
   }
 
   test("a staged-but-unpublished batch is invisible; vacuum sweeps it, commits leave it alone") {
@@ -615,8 +646,6 @@ class TableCommitSpec extends AnyFunSuite {
         TableCommit.commitAppend(batch(10L), r, retain = 8, txnId = Some(1L))),
       "commitAppend(trackRowIds)" -> (r =>
         TableCommit.commitAppend(batch(10L), r, retain = 8, trackRowIds = true)),
-      "commitAppendMapped" -> (r =>
-        TableCommit.commitAppendMapped(batch(10L), r, retain = 8)),
       "publishStaged" -> (r => TableCommit.publishStaged(
         TableCommit.stageForAudit(batch(10L), r), retain = 8)),
       "commitAppendChecked" -> (r => TableCommit.commitAppendChecked(spark,
@@ -797,8 +826,8 @@ class TableCommitSpec extends AnyFunSuite {
       assert(c.max.toDouble === trueMax,
         s"canonical max '${c.max}' must parse to the widened $trueMax")
       // the boundary predicate that used to prune wrongly now keeps it
-      val kept = TableCommit.pruneEntries(r, "x")(s =>
-        !(s.max.toDouble < trueMax || s.min.toDouble > trueMax))
+      val kept = TableCommit.pruneAt(spark, r,
+        StructType(Seq(StructField("x", FloatType))), col("x") === 0.1f)
       assert(kept.nonEmpty, "boundary prune must keep the file")
     }
   }
